@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -7,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * (guide §7.1 without the UI, which the bench sessions disable): run the
   * named registry queries once each and report the number of Spark JOBS,
   * stages and tasks they launched plus the per-job wall time — the
-  * quantity that prices a "round" of an iterative operator. The bench's
+  * quantity that prices a "round" of an iterative operator — and the
+  * Janino compilations each query paid (one per codegen-cache miss; a
+  * second pass should pay almost none). The bench's
   * plan dumps can't show this (the iterative entries return a
   * localCheckpoint snapshot whose final plan is a scan), so this is the
   * committed evidence for round-shape claims in OPTIMIZATION_r15.md.
@@ -22,9 +25,8 @@ object JobAudit {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(GraftSession.baseConf)
       .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -63,16 +65,18 @@ object JobAudit {
     for (pass <- 1 to 2; name <- args) {
       val c = new Counter
       spark.sparkContext.addSparkListener(c)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       // drain the async listener bus so the counts are complete
       // (listenerBus is private[spark]; a short sleep suffices for a tool)
       Thread.sleep(500)
       spark.sparkContext.removeSparkListener(c)
       println(f"AUDIT pass=$pass $name wall=$wall%.3f s jobs=${c.jobs.get} " +
-        f"stages=${c.stages.get} tasks=${c.tasks.get}")
+        f"stages=${c.stages.get} tasks=${c.tasks.get} compiles=$compiles")
       if (sys.env.contains("SPARK_GRAFT_JOB_DETAIL")) {
         import scala.jdk.CollectionConverters._
         c.jobLines.asScala.toSeq.sorted.foreach(println)

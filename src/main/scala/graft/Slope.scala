@@ -37,9 +37,8 @@ object Slope {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(GraftSession.baseConf)
       .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

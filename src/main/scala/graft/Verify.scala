@@ -24,7 +24,7 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(GraftSession.baseConf)
       .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -377,7 +377,6 @@ object Graph {
           .map { case (l, h) => l.select(col("node"), lit(h).as("dist")) }
           .reduce(_.unionByName(_))
           .groupBy("node").agg(min(col("dist")).as("dist"))
-          .orderBy("node")
       } else {
         val hop0 = seed0.select(col("node"), lit(0).as("dist")).persist()
         val (visited, _) = (1 to maxHops).foldLeft((hop0, hop0)) {
@@ -517,10 +516,9 @@ object Graph {
     val seeds = edges.select(col("s1").as("node"))
       .union(edges.select(col("s2").as("node")))
       .distinct().orderBy("node").limit(5)
-    val out = bfsLayers(edges, seeds, maxHops = 3).orderBy("dist", "node")
-    out.persist().count()
+    val out = bfsLayers(edges, seeds, maxHops = 3)
     edges.unpersist()
-    out
+    out.orderBy("dist", "node")
   }
 
   /** Same 5-lowest-id seed set as [[bfsQ]]; 3 relax rounds; same
@@ -531,10 +529,9 @@ object Graph {
     val seeds = edges.select(col("s1").as("node"))
       .union(edges.select(col("s2").as("node")))
       .distinct().orderBy("node").limit(5)
-    val out = ssspBounded(edges, seeds, maxHops = 3).orderBy("node")
-    out.persist().count()
+    val out = ssspBounded(edges, seeds, maxHops = 3)
     edges.unpersist()
-    out
+    out.orderBy("node")
   }
 
   val entries: Map[String, Q] = Map(

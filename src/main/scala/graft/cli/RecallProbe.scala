@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ object RecallProbe {
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(GraftSession.baseConf)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

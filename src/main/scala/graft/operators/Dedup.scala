@@ -1020,12 +1020,18 @@ object Dedup {
 
   /** Duplicate clusters from the exact-Jaccard pair list: (doc, component)
     * where component = min reachable doc id. Only docs that appear in some
-    * pair are labeled (singletons are trivially their own cluster). */
-  private val componentsQ: Q = (s, dir) =>
-    connectedComponents(
-      jaccardPairs(shingleIndex(Tables(s, dir).documents, "doc_id", "text").persist(), 0.8))
-      .select(col("id").as("doc_id"), col("label").as("component"))
+    * pair are labeled (singletons are trivially their own cluster).
+    *
+    * The persisted shingle index is released once the labels exist: they
+    * are an eager localCheckpoint, so they no longer read it, and a kept
+    * index would be reused by the next call (a cross-query cache hit). */
+  private val componentsQ: Q = (s, dir) => {
+    val index = shingleIndex(Tables(s, dir).documents, "doc_id", "text").persist()
+    val labels = try connectedComponents(jaccardPairs(index, 0.8))
+      finally index.unpersist()
+    labels.select(col("id").as("doc_id"), col("label").as("component"))
       .orderBy("doc_id")
+  }
 
   /** Canonical-keeper selection — the step that turns cluster labels into a
     * cleaned corpus: for every doc, the id of the doc that SURVIVES

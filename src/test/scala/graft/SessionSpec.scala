@@ -6,6 +6,33 @@ import org.scalatest.funsuite.AnyFunSuite
   * the builders are validated through their option maps). */
 class SessionSpec extends AnyFunSuite {
 
+  /** The options a builder will apply (read reflectively: the field is
+    * Spark-internal, and reading it builds no session). */
+  private def options(b: org.apache.spark.sql.SparkSession.Builder): Map[String, String] =
+    b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.Map[String, String]].toMap
+
+  test("base, local and cluster configs all size the codegen class cache") {
+    // Spark's default of 100 is below one curation pass's ~145 generated
+    // classes, so every pass recompiled everything; the size is JVM-wide
+    // and fixed by the first session, so every builder must carry it
+    assert(GraftSession.baseConf("spark.sql.codegen.cache.maxEntries").toInt >= 2 * 3853,
+      "must hold a full registry sweep's 3,853 classes with headroom")
+    val local = options(GraftSession.localBuilder(4, 4))
+    val cluster = options(GraftSession.clusterBuilder(3000))
+    val objectStore = options(GraftSession.objectStoreBuilder(3000))
+    for ((name, conf) <- Seq("local" -> local, "cluster" -> cluster,
+                             "objectStore" -> objectStore)) {
+      GraftSession.baseConf.foreach { case (k, v) =>
+        assert(conf.get(k).contains(v), s"$name builder: $k")
+      }
+    }
+    assert(local("spark.sql.shuffle.partitions") === "4")
+    assert(local("spark.master") === "local[4]")
+    assert(cluster("spark.sql.shuffle.partitions") === "3000")
+    assert(!cluster.contains("spark.master"))
+  }
+
   test("object-store profile carries the S3A deployment block") {
     val conf = GraftSession.objectStoreConf(
       endpoint = Some("http://minio:9000"),

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session per suite (lazy, reused across suites in one JVM). */
+/** Shared local session per suite (lazy, reused across suites in one JVM).
+  * It carries [[GraftSession.baseConf]], so the suites run the session
+  * config the engine ships, codegen cache size included. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf001 = "/root/testdata/sf0.001"
@@ -16,7 +18,7 @@ object SparkSpec {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(GraftSession.baseConf)
       .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
