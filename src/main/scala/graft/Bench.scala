@@ -1,9 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line for the driver.
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import Verify.q
+
+/** Benchmark main, in two modes.
+  *
+  * `runMain graft.Bench` is the graded run: the headline queries on
+  * SPARK_GRAFT_SF_DIR, then TWO JSON lines, the summary last.
+  * `runMain graft.Bench <query> [more…]` is the probe: only the named
+  * queries, each split into query phases and scheduler work (see
+  * [[probe]]); it never writes `bench_baselines/`, so a dev measurement
+  * cannot clobber the whole-suite baseline the round comparison reads.
+  * Both run `SPARK_GRAFT_BENCH_REPEATS` whole-suite passes.
   *
   * Materialization: `write.format("noop")` — a full pipeline execution with
   * no sink cost, so Catalyst cannot prune the query's projections the way a
@@ -171,42 +192,23 @@ object Bench {
     env.orElse(own).orElse(driver).getOrElse(("", "min", Map.empty))
   }
 
-  /** Single-thread CPU calibration probe: a fixed multiply-rotate-xor loop
-    * whose wall time depends only on host CPU speed. Benches run on a
+  /** CPU calibration probe: `threads` concurrent copies of a fixed
+    * multiply-rotate-xor loop, timed wall-clock until all join. At one
+    * thread its time depends only on host CPU speed. Benches run on a
     * FRESH VM each session, and two sessions' hosts can differ by ~20% in
     * single-core speed — which reads as a uniform "regression" across
     * every query if compared raw. The probe's time rides along in the
     * artifact and the per-sf baseline, so the comparison can report a
     * host-speed ratio and a host-adjusted regression list next to the raw
-    * one. First pass warms the JIT and is discarded. */
-  private def calibrate(): Double = {
-    def pass(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < 200000000) {
-        x = java.lang.Long.rotateLeft(x * 0x100000001B3L, 31) ^ i
-        i += 1
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (x == 42L) System.err.println("") // defeat dead-code elimination
-      dt
-    }
-    pass()
-    math.min(pass(), pass())
-  }
-
-  /** MULTI-thread calibration probe (VERDICT r10 wrong-item 3): `threads`
-    * concurrent copies of the same spin loop, timed wall-clock until all
-    * join. The r10 sessions documented a host mode the single-thread probe
-    * is BLIND to — hypervisor contention that inflates 32-thread work
-    * 15-20% while single-core speed reads 1.01-1.09 — so the host-adjusted
-    * regression list divides by THIS probe's ratio when the baseline
-    * carries one. Per-thread work is the same 200M-iteration loop as the
-    * single-thread probe: on a healthy 32-vCPU host wall ≈ the
-    * single-thread time; under multi-thread contention it stretches by
-    * exactly the factor the bench queries feel. */
-  private def calibrateMt(threads: Int): Double = {
+    * one. The session-width run (VERDICT r10 wrong-item 3) catches a host
+    * mode the single-thread run is BLIND to — hypervisor contention that
+    * inflates 32-thread work 15-20% while single-core speed reads
+    * 1.01-1.09 — so the host-adjusted regression list divides by ITS
+    * ratio when the baseline carries one: on a healthy 32-vCPU host its
+    * wall ≈ the single-thread time; under multi-thread contention it
+    * stretches by exactly the factor the bench queries feel. First pass
+    * warms the JIT and is discarded. */
+  private def calibrate(threads: Int): Double = {
     def pass(): Double = {
       val sink = new java.util.concurrent.atomic.AtomicLong
       val t0 = System.nanoTime()
@@ -229,30 +231,122 @@ object Bench {
     math.min(pass(), pass())
   }
 
+  /** Untimed warm-up: JVM, codegen and parquet-footer costs land here
+    * instead of inflating the first timed query. A failure is logged and
+    * the run goes on; nothing here is measured. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      SparkEntry.queries.get("a7_distinct_list").foreach(_(spark, sfDir).collect())
+    } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up on $sfDir failed: $e") }
+
+  /** One probed run of one query, times in ms. `build` is the query
+    * function: Tables and Column work, eager rounds (whose jobs `buildJobs`
+    * counts) and the returned frame's `analyze`. `exec` is the noop write:
+    * its `optimize` and `plan`, then execution, where AQE re-plans per
+    * stage. `jobs`, `stages` and `tasks` cover both; `compiles` counts
+    * Janino compilations, one per codegen-cache miss. */
+  private[graft] final case class ProbeRecord(
+      pass: Int, query: String, wall: Double, build: Double, buildJobs: Int,
+      analyze: Double, optimize: Double, plan: Double, exec: Double,
+      jobs: Int, stages: Int, tasks: Int, compiles: Long)
+
+  /** Scheduler counts, and the noop write's [[QueryExecution]]: a V2
+    * overwrite reaches listeners as "overwrite"; the last is the probe's. */
+  private final class ProbeListener extends SparkListener with QueryExecutionListener {
+    val jobs, stages, tasks = new AtomicInteger
+    val stageLines = new ConcurrentLinkedQueue[String]
+    @volatile var write: Option[QueryExecution] = None
+    def reset(): Unit = {
+      Seq(jobs, stages, tasks).foreach(_.set(0)); stageLines.clear(); write = None
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      stages.incrementAndGet(); tasks.addAndGet(si.numTasks)
+      val wall = (for (a <- si.completionTime; b <- si.submissionTime) yield a - b).getOrElse(-1L)
+      val rdds = si.rddInfos.flatMap(r => Option(r.name)).map(_.takeWhile(_ != '\n'))
+        .distinct.mkString("[", " ", "]")
+      stageLines.add(f"id=${si.stageId}%d wall_ms=$wall%d run_ms=${si.taskMetrics.executorRunTime}%d " +
+        f"tasks=${si.numTasks}%d ${si.name.take(60)} ${rdds.take(160)}")
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (funcName == "overwrite") write = Some(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  /** Probe mode: runs `names` for `repeats` passes on `spark` with the
+    * graded run's noop sink and per-query cache release, and prints one
+    * `PROBE` line per pass and query, then a `STAGE` line per completed
+    * stage. Phase times are Spark's own `QueryExecution.tracker` phases,
+    * analysis from the built frame and optimization and planning from the
+    * noop write, so each query is planned once. The session stays up. */
+  private[graft] def probe(spark: SparkSession, sfDir: String, names: Seq[String],
+                           repeats: Int): Seq[ProbeRecord] = {
+    val l = new ProbeListener
+    spark.sparkContext.addSparkListener(l)
+    spark.listenerManager.register(l)
+    def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
+    def phase(qe: QueryExecution, p: String): Double =
+      qe.tracker.phases.get(p).map(_.durationMs.toDouble).getOrElse(0.0)
+    try for (pass <- 1 to repeats; name <- names) yield {
+      PlanBridge.drainListeners(spark)
+      l.reset()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val build = ms(t0)
+      // jobs of eager rounds are counted here; the drain is outside both
+      // phase timers and costs milliseconds
+      PlanBridge.drainListeners(spark)
+      val buildJobs = l.jobs.get
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val exec = ms(t1)
+      val wall = ms(t0)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      PlanBridge.drainListeners(spark)
+      val write = l.write.getOrElse(sys.error(s"$name: the noop write reported no QueryExecution"))
+      val r = ProbeRecord(pass, name, wall, build, buildJobs,
+        phase(df.queryExecution, QueryPlanningTracker.ANALYSIS),
+        phase(write, QueryPlanningTracker.OPTIMIZATION), phase(write, QueryPlanningTracker.PLANNING),
+        exec, l.jobs.get, l.stages.get, l.tasks.get, compiles)
+      println(f"PROBE pass=$pass $name wall_ms=${r.wall}%.1f build_ms=${r.build}%.1f " +
+        f"build_jobs=${r.buildJobs} analyze_ms=${r.analyze}%.0f optimize_ms=${r.optimize}%.0f " +
+        f"plan_ms=${r.plan}%.0f exec_ms=${r.exec}%.1f jobs=${r.jobs} stages=${r.stages} " +
+        f"tasks=${r.tasks} compiles=${r.compiles}")
+      l.stageLines.asScala.foreach(s => println(s"STAGE pass=$pass $name $s"))
+      spark.catalog.clearCache()
+      r
+    } finally {
+      spark.listenerManager.unregister(l)
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  private[graft] def cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  private def repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val calibration = calibrate()
-    val calibrationMt = calibrateMt(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(GraftSession.baseConf)
-      .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (args.isEmpty) graded(sfDir) else {
+      val unknown = args.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      val spark = GraftSession.local(cpus, cpus)
+      try { warmUp(spark, sfDir); probe(spark, sfDir, args.toSeq, repeats) }
+      finally QuietShutdown(spark)
+    }
+  }
+
+  private def graded(sfDir: String): Unit = {
+    val calibration = calibrate(1)
+    val calibrationMt = calibrate(cpus)
+    val spark = GraftSession.local(cpus, cpus)
 
     val available = SparkEntry.queries
     val names = headline.filter(available.contains) ++
       (if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) available.keys.toSeq.sorted.diff(headline) else Nil)
-
-    // Untimed warm-up: JVM/codegen/parquet-footer costs land here instead of
-    // inflating the first timed query.
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      available.get("a7_distinct_list").foreach(_(spark, sfDir).collect())
-    } catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
 
     // Repeat-and-aggregate (VERDICT r3 item 1), contention-hardened after
     // BENCH_r04: that run's queries were fast until ~2 min in, then
@@ -265,7 +359,6 @@ object Bench {
     // demonstrated time — the standard host-noise-robust aggregation);
     // medians and per-pass loadavg are emitted alongside so a reader can
     // see both the aggregation and the host state it was taken under.
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
     var errors = Map.empty[String, String]
     // per-query samples as (seconds, EXTERNAL CPU share over the query's own
     // run interval). VERDICT r7 item 9 wanted samples taken under external
@@ -319,10 +412,8 @@ object Bench {
       }
     }
     val ok = names.filterNot(errors.contains).map(n => n -> samples(n))
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
     def jmap(m: Seq[(String, Double)]) =
-      m.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+      m.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
     // Headline per-query number: min over CLEAN samples (external CPU share
     // during the sample below the taint threshold); a query with no clean
     // sample falls back to the overall min and is listed in "tainted".
@@ -338,7 +429,7 @@ object Bench {
       // value — never the max
       n -> ts((ts.length - 1) / 2)
     }
-    val es = errors.toSeq.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val es = errors.toSeq.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val total = mins.map(_._2).sum
     val loads = passLoad.result().mkString("[", ",", "]")
     // Mechanical shared-set comparison vs the previous round's numbers
@@ -404,9 +495,9 @@ object Bench {
           s""","host_speed_ratio_mt":${math.round(r * 1000.0) / 1000.0}""").getOrElse("") +
         (if (hostRatio.isDefined || hostRatioMt.isDefined)
           s""","regressions_gt_25pct_hostadj":${jmap(moversAdj)}""" else "")
-      s""","prev_artifact":${jstr(prevName)},"prev_kind":${jstr(prevKind)},"shared_n":${shared.size},"shared_sum_prev":$sumPrev,"shared_sum_now":$sumNow,"regressions_gt_25pct":${jmap(movers)}$host"""
+      s""","prev_artifact":${q(prevName)},"prev_kind":${q(prevKind)},"shared_n":${shared.size},"shared_sum_prev":$sumPrev,"shared_sum_now":$sumNow,"regressions_gt_25pct":${jmap(movers)}$host"""
     }
-    val taintedJson = tainted.map(jstr).mkString("[", ",", "]")
+    val taintedJson = tainted.map(q).mkString("[", ",", "]")
     // Baseline refresh decision (computed now, WRITTEN after shutdown):
     // tainted or erroring runs never overwrite, and — the r10 lesson
     // (wrong-item 2: a taint-free run on a DEGRADED host silently raised

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Plan auditor: prints formatted physical plans for selected queries so the
   * scale-critical properties can be checked (and are asserted in PlanSpec):
@@ -58,11 +59,8 @@ object ExplainAudit {
     }
     spark.sparkContext.addSparkListener(listener)
     val finalPlan =
-      try {
-        val p = plan(spark, dir, name)
-        Thread.sleep(500) // drain the async listener bus (census tool)
-        p
-      } finally spark.sparkContext.removeSparkListener(listener)
+      try plan(spark, dir, name)
+      finally { PlanBridge.drainListeners(spark); spark.sparkContext.removeSparkListener(listener) }
     import scala.jdk.CollectionConverters._
     (executed.asScala.toVector :+ finalPlan)
       .flatMap(parseScans).distinct.toList
@@ -99,14 +97,14 @@ object ExplainAudit {
     out.distinct.toList
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("lineage")) {
-      val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-      val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
-      val names =
-        if (args.length > 2) args.drop(2).toSeq
-        else SparkEntry.queries.keys.toSeq.sorted
-      names.foreach { n =>
+  /** `runMain graft.ExplainAudit [lineage|counts] [sfDir] [query…]`:
+    * plans (default), scan lineage or shuffle counts for each query. */
+  def main(argv: Array[String]): Unit = {
+    val mode = argv.headOption.filter(Set("lineage", "counts"))
+    val args = argv.drop(mode.size)
+    val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
+    def show(dir: String, n: String): Unit = mode match {
+      case Some("lineage") =>
         try {
           val cols = lineage(spark, dir, n)
             .map { case (t, c) => s"$t.$c" }.sorted.mkString(" ")
@@ -114,49 +112,40 @@ object ExplainAudit {
         } catch { case e: Throwable =>
           println(s"LINEAGE $n\tERROR ${e.getClass.getSimpleName}")
         }
-      }
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("counts")) {
-      val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-      val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
-      val names =
-        if (args.length > 2) args.drop(2).toSeq
-        else SparkEntry.queries.keys.toSeq.sorted
-      names.foreach { n =>
+      case Some(_) => // counts
         try {
           val (ex, bc) = shuffleCounts(spark, dir, n)
           println(f"$n%-34s shuffles=$ex broadcasts=$bc")
         } catch { case e: Throwable =>
           println(f"$n%-34s ERROR ${e.getClass.getSimpleName}")
         }
-      }
-      spark.stop()
-      return
+      case None =>
+        println(s"\n########## $n ##########")
+        println(plan(spark, dir, n))
     }
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val names = if (args.length > 1) args.drop(1).toSeq else Seq(
-      "p9_range_limit", "j1_broadcast_dim", "j4_star_join", "t3_topk_rank",
-      "a5_two_key_group", "dedup_minhash_pairs", "ann_cosine_topk",
-      "dedup_jaccard_pairs", "w2_running_sum",
-      "asof_join_native", "j9_bucketed_join", "range_join_binned",
-      "text_tfidf_topk", "dedup_jaccard_incremental", "emb_label_centroids",
-      "f6_variant_agg",
-      "dedup_levenshtein", "dedup_canonical_keep", "b1_funnel_steps",
-      "text_quality_prune", "emb_centroid_assign", "b7_stickiness",
-      // round-7 heavy entries
-      "ann_cosine_filtered", "ann_euclidean_topk", "layout_zorder",
-      "b9_interval_union", "inc_snapshot_diff", "text_oov_ratio",
-      "dedup_split_leakage", "dedup_semantic",
-      // round-8 entries
-      "ann_lsh_incremental", "text_bm25_topk", "ann_hybrid_rerank",
-      "dedup_seen_sharded")
-    val spark = GraftSession.local(cores = 4, shufflePartitions = 4)
-    names.foreach { n =>
-      println(s"\n########## $n ##########")
-      println(plan(spark, dir, n))
-    }
+    val names =
+      if (args.length > 1) args.drop(1).toSeq
+      else if (mode.isDefined) SparkEntry.queries.keys.toSeq.sorted
+      else planned
+    names.foreach(show(dir, _))
     spark.stop()
   }
+
+  private val planned = Seq(
+    "p9_range_limit", "j1_broadcast_dim", "j4_star_join", "t3_topk_rank",
+    "a5_two_key_group", "dedup_minhash_pairs", "ann_cosine_topk",
+    "dedup_jaccard_pairs", "w2_running_sum",
+    "asof_join_native", "j9_bucketed_join", "range_join_binned",
+    "text_tfidf_topk", "dedup_jaccard_incremental", "emb_label_centroids",
+    "f6_variant_agg",
+    "dedup_levenshtein", "dedup_canonical_keep", "b1_funnel_steps",
+    "text_quality_prune", "emb_centroid_assign", "b7_stickiness",
+    // round-7 heavy entries
+    "ann_cosine_filtered", "ann_euclidean_topk", "layout_zorder",
+    "b9_interval_union", "inc_snapshot_diff", "text_oov_ratio",
+    "dedup_split_leakage", "dedup_semantic",
+    // round-8 entries
+    "ann_lsh_incremental", "text_bm25_topk", "ann_hybrid_rerank",
+    "dedup_seen_sharded")
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import Verify.q
 
 /** Scaling-slope gate (VERDICT r7 missing-item 2): every 100-TB claim in
   * this library rests on plan shape; this main MEASURES the shape instead.
@@ -33,25 +33,14 @@ object Slope {
     val sfBig = sys.env.getOrElse("SPARK_GRAFT_SF_BIG", "/root/testdata/sf0.1")
     val gate = sys.env.getOrElse("SPARK_GRAFT_SLOPE_GATE", "20.0").toDouble
     val repeats = sys.env.getOrElse("SPARK_GRAFT_SLOPE_REPEATS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(GraftSession.baseConf)
-      .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(Bench.cpus, Bench.cpus)
 
     val available = SparkEntry.queries
     val names = Bench.headline.filter(available.contains)
     var errors = Map.empty[String, String]
     val samples = scala.collection.mutable.Map.empty[(String, String), List[Double]]
     for (sf <- Seq(sfSmall, sfBig)) {
-      try { // untimed warm-up per scale factor
-        spark.read.parquet(s"$sf/lineitem.parquet").count()
-        available.get("a7_distinct_list").foreach(_(spark, sf).collect())
-      } catch { case _: Throwable => () }
+      Bench.warmUp(spark, sf) // untimed, per scale factor
       for (_ <- 1 to repeats; name <- names if !errors.contains(name)) {
         val t0 = System.nanoTime()
         try {
@@ -64,8 +53,6 @@ object Slope {
         spark.catalog.clearCache()
       }
     }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
     def r4(v: Double) = math.round(v * 10000.0) / 10000.0
     val rows = names.filterNot(errors.contains).map { n =>
       val tS = samples((n, sfSmall)).min
@@ -74,14 +61,14 @@ object Slope {
     }
     val flagged = rows.collect { case (n, _, tB, ratio) if ratio > gate && tB > 1.0 => n -> ratio }
     val qJson = rows.map { case (n, tS, tB, ratio) =>
-      s"${jstr(n)}:{\"t_small\":$tS,\"t_big\":$tB,\"ratio\":$ratio}"
+      s"${q(n)}:{\"t_small\":$tS,\"t_big\":$tB,\"ratio\":$ratio}"
     }.mkString("{", ",", "}")
-    val fJson = flagged.map { case (n, r) => s"${jstr(n)}:$r" }.mkString("{", ",", "}")
-    val es = errors.toSeq.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val fJson = flagged.map { case (n, r) => s"${q(n)}:$r" }.mkString("{", ",", "}")
+    val es = errors.toSeq.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     // teardown BEFORE the result lines so streaming shutdown noise cannot
     // push them out of a tail-capture window (VERDICT r10 wrong-item 1)
     QuietShutdown(spark)
-    println(s"""{"metric":"slope","sf_small":${jstr(sfSmall)},"sf_big":${jstr(sfBig)},"gate":$gate,"runs":$repeats,"n_queries":${rows.length},"queries":$qJson,"flagged":$fJson,"errors":$es}""")
+    println(s"""{"metric":"slope","sf_small":${q(sfSmall)},"sf_big":${q(sfBig)},"gate":$gate,"runs":$repeats,"n_queries":${rows.length},"queries":$qJson,"flagged":$fJson,"errors":$es}""")
     println(s"""{"metric":"slope","n_queries":${rows.length},"n_flagged":${flagged.length},"n_errors":${errors.size},"detail":"per-query map on previous line"}""")
     if (flagged.nonEmpty || errors.nonEmpty) sys.exit(1)
   }

@@ -23,8 +23,8 @@ final case class Tables(spark: SparkSession, dir: String) {
   // the path, re-reads the parquet footer (a one-task Spark job) and
   // rebuilds the relation on EVERY call, so each of the ~340 registry
   // queries paid a fixed ~50–100 ms of schema-plumbing per build — the
-  // single largest slice of the per-query floor (FloorAudit: build
-  // 80–135 ms/query warm, 1–2 footer jobs each). A production engine
+  // single largest slice of the per-query floor (r15 FloorAudit, now the
+  // `Bench` probe: build 80–135 ms/query warm, 1–2 footer jobs each). A production engine
   // reads tables through a catalog whose schemas are resolved once per
   // session; memoizing the base frames is exactly that (plan/metadata
   // reuse only — every query still scans the parquet files; nothing about

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -15,20 +14,26 @@ import java.nio.file.{Files, Paths}
   * checker reads back), columns sorted by name, rows sorted by their
   * rendered form — the same canonicalization the oracle compare uses. */
 object Verify {
+  /** JSON string for the harness mains, escaping backslash, quote and ALL
+    * control chars (<0x20): a tab or CR in builder-authored SQL would
+    * otherwise fail the checker's json.load and zero the round's correctness. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // dev-loop only: an optional 3rd arg regex restricts which queries run
     // (the driver always passes exactly 2 args => full sweep)
     val nameFilter = args.drop(2).headOption.map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(GraftSession.baseConf)
-      .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus)
     // Stale-output guard (ADVICE r3): a query that throws must not leave the
     // PREVIOUS run's parquet dump behind for the checker to validate — wipe
     // the whole outDir so absence == failure. Scoped to full sweeps only:
@@ -63,13 +68,12 @@ object Verify {
       val n = back.count()
       if (n > 200000L) (n, "rows_only") // dumps are aggregates; cap the collect
       else {
-        // Cells are joined with \u0001 (invisible in most viewers — ADVICE
-        // r12 misread it as ""): a real separator, so ("ab","c") and
-        // ("a","bc") hash differently. \u0001 never appears in render's
-        // own output (null is \u2400); keeping it keeps the committed
-        // 334-hash baseline valid.
+        // Cells are joined with \u0001: a real separator, so ("ab","c")
+        // and ("a","bc") hash differently. \u0001 never appears in
+        // render's own output (null is \u2400); keeping it keeps the
+        // committed baseline hashes valid.
         val lines = back.select(cols.map(org.apache.spark.sql.functions.col): _*)
-          .collect().map(_.toSeq.map(render).mkString("")).sorted
+          .collect().map(_.toSeq.map(render).mkString("\u0001")).sorted
         val md = java.security.MessageDigest.getInstance("MD5")
         lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
         (n, md.digest().map(b => f"$b%02x").mkString)
@@ -90,18 +94,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

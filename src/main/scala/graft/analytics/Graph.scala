@@ -110,8 +110,8 @@ object Graph {
     // sides to ONE task — but the work ABOVE them (the per-(et,h) window
     // fan and especially the ≤cap² pair generation feeding the count
     // aggregate's map side) is invisible to the advisory byte sizing, and
-    // ran single-threaded on a 32-core session (JobAudit: 0.3–1.2 s
-    // single-task stages in every g-entry). The pinned repartitions
+    // ran single-threaded on a 32-core session (r15 JobAudit, now the
+    // `Bench` probe: 0.3–1.2 s single-task stages in every g-entry). The pinned repartitions
     // SATISFY the distinct's and the window's required clustering, so the
     // Exchange count is unchanged — only the width stops being
     // byte-coalesced. Keys are content-derived (retry-deterministic).

@@ -2,7 +2,7 @@ package graft.cli
 
 import graft.{GraftSession, Tables}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measured recall@10 of each graded ANN variant against the
@@ -11,13 +11,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config(GraftSession.baseConf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, 32)
     val e = Tables(spark, sfDir).embeddings
     val q = e.filter(col("vec_id") < 10)
     val exact = Similarity.cosineTopK(e, q, "vec_id", "embedding", 10)

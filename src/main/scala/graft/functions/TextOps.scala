@@ -25,8 +25,8 @@ object TextOps {
     * per-row text work (r15, guide §2.5 — the mm_video_frames r14 form):
     * the tokenize/regex/n-gram projections inherit the SCAN SPLIT count,
     * which is one task for a single small file, so a 32-core session ran
-    * the whole text family single-threaded (JobAudit: 3–14 tasks across
-    * 3–12 stages per entry). One narrow exchange of (id, text) buys
+    * the whole text family single-threaded (r15 JobAudit, now the `Bench`
+    * probe: 3–14 tasks across 3–12 stages per entry). One narrow exchange of (id, text) buys
     * session-width parallelism for every consumer of the frame — exactly
     * how a production featurizer spreads tokenizer CPU. Width pinned
     * (REPARTITION_BY_NUM — an unpinned keyed repartition is

@@ -58,8 +58,8 @@ object Linkage {
     // (r15, guide §2.5/§1.2): the clean master broadcasts, so the
     // block-quadratic scoring runs entirely in the probe side's partitions
     // — which are SCAN SPLITS, i.e. ONE task when the dirty batch arrives
-    // as a single small file (JobAudit: 3.16 s of the 3.6 s entry in one
-    // single-task stage on a 32-core session). One narrow exchange of the
+    // as a single small file (r15 JobAudit, now the `Bench` probe: 3.16 s
+    // of the 3.6 s entry in one single-task stage on a 32-core session). One narrow exchange of the
     // dirty projection spreads the Σ|d_b|·|c_b| per-pair CPU across the
     // session width — the standard distribute-before-score shape of a
     // production ER deployment (the scoring grows block-quadratically,

@@ -569,13 +569,14 @@ object EventStream {
     // streaming runtime): a stateful micro-batch runs its aggregation at
     // `spark.sql.shuffle.partitions` and OPENS/COMMITS ONE STATE STORE PER
     // PARTITION PER BATCH — at the session-wide width that was 32 store
-    // lifecycles per stage for KB-sized state (JobAudit:
-    // stream_late_data_drop burned 43 s of CPU across three 32-task
-    // StateStoreRDD stages for ~24 windows of state). The width is pinned
-    // into the checkpoint at first start, so it must be derived, never a
-    // constant: rows/4M like IterState — 1 partition at bench scale,
-    // hundreds at 100 TB/day feeds. Restarts re-read the width from the
-    // offset log, so both drains of a two-lifecycle entry stay consistent.
+    // lifecycles per stage for KB-sized state (r15 JobAudit, now the
+    // `Bench` probe: stream_late_data_drop burned 43 s of CPU across
+    // three 32-task StateStoreRDD stages for ~24 windows of state). The
+    // width is pinned into the checkpoint at first start, so it must be
+    // derived, never a constant: rows/4M like IterState — 1 partition at
+    // bench scale, hundreds at 100 TB/day feeds. Restarts re-read the
+    // width from the offset log, so both drains of a two-lifecycle entry
+    // stay consistent.
     val feedRows = Tables(s, dir).events.count()
     graft.operators.IterState.withStateShuffle(s, feedRows) {
     val agg = eventsStream(s, dir)

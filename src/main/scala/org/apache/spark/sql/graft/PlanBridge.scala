@@ -6,11 +6,12 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession, Dataset => 
 import org.apache.spark.sql.execution.SparkStrategy
 
 /** The one `private[sql]` doorway the engine needs: turning a custom
-  * [[LogicalPlan]] node into a DataFrame, and installing a planner strategy
-  * on a live session. Spark deliberately keeps `Dataset.ofRows` internal —
-  * library extensions (Delta, Iceberg, spark-rapids all do the same) place a
-  * small bridge inside the `org.apache.spark.sql` package namespace rather
-  * than forking the planner. Everything else in graft uses only public API.
+  * [[LogicalPlan]] node into a DataFrame, installing a planner strategy
+  * on a live session, and draining the listener bus. Spark deliberately
+  * keeps `Dataset.ofRows` internal — library extensions (Delta, Iceberg,
+  * spark-rapids all do the same) place a small bridge inside the
+  * `org.apache.spark.sql` package namespace rather than forking the
+  * planner. Everything else in graft uses only public API.
   */
 object PlanBridge {
 
@@ -26,4 +27,9 @@ object PlanBridge {
     if (!exp.extraStrategies.contains(strategy))
       exp.extraStrategies = exp.extraStrategies :+ strategy
   }
+
+  /** Blocks until every listener event posted so far has been delivered,
+    * so counts a listener keeps are complete right after an action. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,0 +1,27 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The `Bench` probe on the shared session: one record per query and
+  * pass, phases that nest inside the measured wall time, eager rounds
+  * counted as build jobs, and a session left running for the next suite. */
+class HarnessSpec extends SparkSpec {
+
+  test("the probe splits each query into phases and scheduler work") {
+    val names = Seq("a5_two_key_group", "g6_bfs_layers")
+    val records = Bench.probe(spark, sf001, names, repeats = 1)
+    assert(records.map(_.query) === names)
+    assert(records.forall(_.pass == 1))
+    for (r <- records) {
+      val phases = Seq(r.wall, r.build, r.analyze, r.optimize, r.plan, r.exec)
+      assert(phases.forall(_ >= 0), s"negative phase in $r")
+      assert(r.build + r.exec <= r.wall + 1.0, s"build + exec exceeds wall in $r")
+      assert(r.optimize + r.plan <= r.exec + 2.0, s"write phases exceed exec in $r")
+      assert(r.jobs >= r.buildJobs && r.jobs > 0 && r.stages > 0 && r.tasks >= r.stages, r)
+    }
+    val g6 = records.find(_.query == "g6_bfs_layers").get
+    assert(g6.buildJobs > 0, "g6_bfs_layers runs its rounds while it builds")
+    assert(!spark.sparkContext.isStopped)
+    assert(SparkSession.getActiveSession.contains(spark))
+  }
+}

@@ -33,6 +33,18 @@ class SessionSpec extends AnyFunSuite {
     assert(!cluster.contains("spark.master"))
   }
 
+  test("every session is built by GraftSession") {
+    // one factory: a main or suite with its own builder would run a config
+    // the engine does not ship (and could size the JVM-wide codegen cache)
+    val builder = "SparkSession" + ".builder()"
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".scala"))
+    assert(sources.length > 50, "scan found no sources; is the working directory the repo root?")
+    val offenders = sources.filter(p => p.getFileName.toString != "GraftSession.scala" &&
+      java.nio.file.Files.readString(p).contains(builder))
+    assert(offenders.isEmpty, s"${offenders.mkString(", ")} build their own session")
+  }
+
   test("object-store profile carries the S3A deployment block") {
     val conf = GraftSession.objectStoreConf(
       endpoint = Some("http://minio:9000"),

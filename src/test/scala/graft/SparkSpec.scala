@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite (lazy, reused across suites in one JVM).
-  * It carries [[GraftSession.baseConf]], so the suites run the session
+  * It is built by [[GraftSession.local]], so the suites run the session
   * config the engine ships, codegen cache size included. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,15 +14,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config(GraftSession.baseConf)
-      .config("spark.sql.warehouse.dir", "target/tmp/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local(4, 4, "graft-test")
     // Silence WindowExec's single-partition warning for the suite run
     // (VERDICT r8 item 8): every empty-partitionSpec window in this repo is
     // a deliberately GLOBAL window over an already-small frame — audited
