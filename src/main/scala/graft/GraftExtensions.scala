@@ -2,94 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{DecSumAgg, GraftContainsAny, GraftDot, GraftPqCode, GraftPqEncode, GraftPqTable, GraftJaroWinkler, GraftPqAdc, GraftRollingHash, GraftShingles, GraftSimHash, GraftSqDistDec, GraftVocabHits, MinHashAgg, PercentileAgg, TopKAgg}
 
-/** SparkSessionExtensions entry point: installs the engine's native
-  * functions at session build time, so a deployment can enable the whole
-  * graft surface with
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (no code changes).
-  * In-process callers get the same registrations lazily via
-  * [[MinHashAgg.register]] / [[GraftDot.register]]. */
+/** SparkSessionExtensions entry point and the only way the engine's
+  * native surface gets into a session: the `graft_*` functions, the as-of
+  * join planner strategy and the HOF dot / vocab-count optimizer rules.
+  * Every [[GraftSession]] session installs it through
+  * [[GraftSession.baseConf]]; a session built any other way needs
+  * `--conf spark.sql.extensions=graft.GraftExtensions`, or its graft
+  * queries fail at analysis with an unresolved-routine error. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "graft_minhash"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b, Literal(w: Int, IntegerType)) => MinHashAgg(a, b, w)
-        case _ => throw new IllegalArgumentException(
-          "graft_minhash(h1, h2, intLiteral)")
-      }))
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"), GraftDot.info, GraftDot.builder))
-    // ADVICE r3: without this, the --conf deployment path was missing part
-    // of the native surface (Dedup.simhash64 failed with undefined function)
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[GraftSimHash].getName, "graft_simhash"),
-      GraftSimHash.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[GraftRollingHash].getName, "graft_rolling_hash"),
-      GraftRollingHash.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[GraftShingles].getName, "graft_shingles"),
-      GraftShingles.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_vocab_hits"),
-      new ExpressionInfo(classOf[GraftVocabHits].getName, "graft_vocab_hits"),
-      GraftVocabHits.builder))
-    // r10 completeness pass (the ADVICE r3 lesson recurred): the --conf
-    // deployment path must install the ENTIRE native surface, not just the
-    // functions that existed when the entry point was written
-    e.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[GraftJaroWinkler].getName, "graft_jaro_winkler"),
-      GraftJaroWinkler.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_pq_adc"), GraftPqAdc.info, GraftPqAdc.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "graft_topk"),
-      TopKAgg.builder))
-    // r14 native exact aggregates (bit-identical to the builtin decimal-sum
-    // / percentile chains — NativeAggEqualitySpec)
-    e.injectFunction((
-      FunctionIdentifier("graft_dec_sum"),
-      new ExpressionInfo(classOf[DecSumAgg].getName, "graft_dec_sum"),
-      DecSumAgg.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_percentile"),
-      new ExpressionInfo(classOf[PercentileAgg].getName, "graft_percentile"),
-      PercentileAgg.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[GraftPqEncode].getName, "graft_pq_encode"),
-      GraftPqCode.encodeBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_pq_table"),
-      new ExpressionInfo(classOf[GraftPqTable].getName, "graft_pq_table"),
-      GraftPqCode.tableBuilder))
-    e.injectFunction((
-      FunctionIdentifier("graft_sqdist_dec"),
-      new ExpressionInfo(classOf[GraftSqDistDec].getName, "graft_sqdist_dec"),
-      GraftSqDistDec.builder))
-    e.injectFunction((
-      FunctionIdentifier("graft_contains_any"),
-      new ExpressionInfo(classOf[GraftContainsAny].getName, "graft_contains_any"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text, arr) if arr.foldable =>
-          val data = arr.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          val needles = (0 until data.numElements())
-            .map(i => data.getUTF8String(i).toString)
-          GraftContainsAny(text, needles)
-        case _ => throw new IllegalArgumentException(
-          "graft_contains_any(text, literalStringArray)")
-      }))
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     // tier (c): the native as-of join operator (AsOfJoinPlan -> AsOfJoinExec)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // Rule[LogicalPlan]: HOF dot-product / vocab-count shapes silently
@@ -97,4 +26,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.NativeDotRule)
     e.injectOptimizerRule(_ => graft.plans.NativeVocabHitsRule)
   }
+}
+
+object GraftExtensions {
+  /** Every native function: SQL name, expression class, builder. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_minhash", classOf[MinHashAgg], MinHashAgg.builder),
+    ("graft_dot", classOf[GraftDot], GraftDot.builder),
+    ("graft_simhash", classOf[GraftSimHash], GraftSimHash.builder),
+    ("graft_rolling_hash", classOf[GraftRollingHash], GraftRollingHash.builder),
+    ("graft_shingles", classOf[GraftShingles], GraftShingles.builder),
+    ("graft_vocab_hits", classOf[GraftVocabHits], GraftVocabHits.builder),
+    ("graft_jaro_winkler", classOf[GraftJaroWinkler], GraftJaroWinkler.builder),
+    ("graft_pq_adc", classOf[GraftPqAdc], GraftPqAdc.builder),
+    ("graft_topk", classOf[TopKAgg], TopKAgg.builder),
+    ("graft_dec_sum", classOf[DecSumAgg], DecSumAgg.builder),
+    ("graft_percentile", classOf[PercentileAgg], PercentileAgg.builder),
+    ("graft_pq_encode", classOf[GraftPqEncode], GraftPqCode.encodeBuilder),
+    ("graft_pq_table", classOf[GraftPqTable], GraftPqCode.tableBuilder),
+    ("graft_sqdist_dec", classOf[GraftSqDistDec], GraftSqDistDec.builder),
+    ("graft_contains_any", classOf[GraftContainsAny], GraftContainsAny.builder),
+  )
 }

@@ -24,31 +24,17 @@ object Ops {
     * ([[graft.functions.DecSumAgg]] / [[graft.functions.PercentileAgg]]) —
     * bit-identical to the builtin `sum(cast(… as decimal))` / `percentile`
     * chains (pinned in NativeAggEqualitySpec), 3-5× cheaper per row, same
-    * state and shuffle bytes at scale. They resolve via the session
-    * function registry; registration is idempotent and wired here, in
-    * [[Tables]], and in [[GraftExtensions]]. */
-  private def registered(c: Column): Column = {
-    // ADVICE r14: a Column can be built on a thread with no ACTIVE session
-    // (only a default one) — register against both, or the kernel call
-    // fails resolution where the old sum(cast(...)) always worked.
-    // Registration is a once-per-session no-op after the first call
-    // ([[graft.functions.RegisterOnce]]).
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(graft.functions.GraftNativeAggs.register)
-    c
-  }
+    * state and shuffle bytes at scale. */
 
   /** Order-independent exact sum of a money-ish double column
     * (= `sum(cast(c as decimal(18, scale))).cast(double)`, bit-exact). */
   def dsum(c: Column, scale: Int = 2): Column =
-    registered(call_function("graft_dec_sum", c, lit(18), lit(scale))
-      .cast(DoubleType))
+    call_function("graft_dec_sum", c, lit(18), lit(scale)).cast(DoubleType)
 
   /** Exact sum for wide products (x*y style) needing more integer digits
     * (= `sum(cast(c as decimal(30, scale))).cast(double)`, bit-exact). */
   def dsumWide(c: Column, scale: Int = 6): Column =
-    registered(call_function("graft_dec_sum", c, lit(30), lit(scale))
-      .cast(DoubleType))
+    call_function("graft_dec_sum", c, lit(30), lit(scale)).cast(DoubleType)
 
   /** Deterministic mean: exact decimal sum divided by count, rounded. */
   def dmean(c: Column, scale: Int = 4): Column =
@@ -57,5 +43,5 @@ object Ops {
   /** Exact interpolated percentile (matches DuckDB quantile_cont;
     * = the builtin `percentile(c, p)`, bit-exact). */
   def pct(c: Column, p: Double): Column =
-    registered(call_function("graft_percentile", c.cast(DoubleType), lit(p)))
+    call_function("graft_percentile", c.cast(DoubleType), lit(p))
 }

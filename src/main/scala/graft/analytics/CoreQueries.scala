@@ -778,7 +778,6 @@ object CoreQueries {
     * of the WHOLE stratum, one packed k-row state per (partition,
     * stratum) across the Exchange. Output is bit-identical. */
   private val r4GroupSample: Q = (s, dir) => {
-    graft.functions.TopKAgg.register(s)
     val draw = pmod(graft.functions.TextOps.md5Hash64Hof(
       col("o_orderkey").cast(StringType)), lit(1048576L))
     Tables(s, dir).orders
@@ -810,8 +809,7 @@ object CoreQueries {
     * PlanSpec/TopKAggSpec). At 100 TB that is one fact scan and one
     * metadata-sized shuffle versus two scans (or a window sort) plus a
     * re-join. */
-  private val t6TopkGroupNative: Q = (s, dir) => {
-    graft.functions.TopKAgg.register(s)
+  private val t6TopkGroupNative: Q = (s, dir) =>
     Tables(s, dir).orders
       .groupBy("o_orderpriority")
       .agg(
@@ -828,7 +826,6 @@ object CoreQueries {
         col("col.tag").as("o_orderkey"),
         col("col.score").as("o_totalprice"))
       .orderBy("o_orderpriority", "rank")
-  }
 
   // ---------------------------------------------------------------- registry
 

@@ -42,7 +42,6 @@ object RobustStats {
     * runtime error, and the oracle carries the identical CASE.) */
   def zscoreOutliers(df: DataFrame, groupCol: String, valCol: String,
                      zThresh: Double): DataFrame = {
-    graft.functions.GraftNativeAggs.register(df.sparkSession)
     val x = col(valCol)
     val st = df.groupBy(groupCol).agg(
         count(lit(1)).as("n"),
@@ -86,7 +85,6 @@ object RobustStats {
     * through DECIMAL so the mean is row-order independent. */
   def winsorizedMean(df: DataFrame, groupCol: String, valCol: String,
                      pLo: Double, pHi: Double): DataFrame = {
-    graft.functions.GraftNativeAggs.register(df.sparkSession)
     val x = col(valCol)
     val bounds = df.groupBy(groupCol).agg(
       round(pct(x, pLo), 6).as("lo"),
@@ -157,7 +155,6 @@ object RobustStats {
     * engines run downstream starts from identical inputs;
     * `corr = (n·Σxy − Σx·Σy) / sqrt((n·Σx²−Σx²)(n·Σy²−Σy²))`, rounded. */
   def corrMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
-    graft.functions.GraftNativeAggs.register(df.sparkSession)
     require(cols.size >= 2, "need at least two columns")
     val pairs = for { i <- cols.indices; j <- i + 1 until cols.size }
       yield (cols(i), cols(j))
@@ -221,7 +218,6 @@ object RobustStats {
     * artifact. Degenerate designs (zero determinant) emit NULL betas. */
   def olsClosedForm(df: DataFrame, yCol: String, x1Col: String,
                     x2Col: String): DataFrame = {
-    graft.functions.GraftNativeAggs.register(df.sparkSession)
     val (y, x1, x2) = (col(yCol), col(x1Col), col(x2Col))
     def dsum(c: org.apache.spark.sql.Column) =
       call_function("graft_dec_sum", c, lit(32), lit(8)).cast(DoubleType)
@@ -273,7 +269,6 @@ object RobustStats {
     * replay. */
   def kFoldOls(df: DataFrame, yCol: String, x1Col: String, x2Col: String,
                foldExpr: org.apache.spark.sql.Column): DataFrame = {
-    graft.functions.GraftNativeAggs.register(df.sparkSession)
     val (y, x1, x2) = (col(yCol), col(x1Col), col(x2Col))
     def dsum(c: org.apache.spark.sql.Column) =
       call_function("graft_dec_sum", c, lit(32), lit(8))

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -388,8 +387,4 @@ object DecSumAgg {
     case args => throw new IllegalArgumentException(
       s"graft_dec_sum(x, precision, scale): expected 3 args, got ${args.length}")
   }
-
-  /** Register `graft_dec_sum(x, p, s)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_dec_sum", builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -21,7 +20,7 @@ import java.nio.ByteBuffer
   * a primitive long[] buffer with a tight JVM loop; map-side partial merge
   * means the shuffle carries one signature per (partition, doc).
   *
-  * Registered per-session as `graft_minhash(h1, h2, width)`.
+  * Installed by [[graft.GraftExtensions]] as `graft_minhash(h1, h2, width)`.
   */
 case class MinHashAgg(
     h1: Expression,
@@ -86,12 +85,10 @@ case class MinHashAgg(
 }
 
 object MinHashAgg {
-  /** Register `graft_minhash(h1, h2, width)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_minhash",
-      {
-        case Seq(a, b, Literal(w: Int, IntegerType)) => MinHashAgg(a, b, w)
-        case args => throw new IllegalArgumentException(
-          s"graft_minhash(h1, h2, intLiteral), got ${args.length} args")
-      })
+  /** `graft_minhash(h1, h2, width)`: the width must be an int literal. */
+  val builder: Seq[Expression] => Expression = {
+    case Seq(a, b, Literal(w: Int, IntegerType)) => MinHashAgg(a, b, w)
+    case args => throw new IllegalArgumentException(
+      s"graft_minhash(h1, h2, intLiteral), got ${args.length} args")
+  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -104,16 +103,15 @@ final class AhoCorasick(patterns: Array[Array[Byte]])
 }
 
 object GraftContainsAny {
-  /** Register `graft_contains_any(text, array('n1', 'n2', ...))` — the
-    * needle array must be a foldable literal. */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_contains_any", {
-        case Seq(text, arr) if arr.foldable =>
-          val data = arr.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          val needles = (0 until data.numElements())
-            .map(i => data.getUTF8String(i).toString)
-          GraftContainsAny(text, needles)
-        case _ => throw new IllegalArgumentException(
-          "graft_contains_any(text, literalStringArray)")
-      })
+  /** `graft_contains_any(text, array('n1', 'n2', ...))`: the needle array
+    * must be a foldable literal. */
+  val builder: Seq[Expression] => Expression = {
+    case Seq(text, arr) if arr.foldable =>
+      val data = arr.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val needles = (0 until data.numElements())
+        .map(i => data.getUTF8String(i).toString)
+      GraftContainsAny(text, needles)
+    case _ => throw new IllegalArgumentException(
+      "graft_contains_any(text, literalStringArray)")
+  }
 }

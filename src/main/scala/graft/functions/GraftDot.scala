@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -79,10 +78,4 @@ object GraftDot {
     case args => throw new IllegalArgumentException(
       s"graft_dot(arrayDouble, arrayDouble), got ${args.length} args")
   }
-
-  val info: ExpressionInfo = new ExpressionInfo(classOf[GraftDot].getName, "graft_dot")
-
-  /** Register `graft_dot` in the session function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_dot", builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -23,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One JVM loop pair per row (same kernel style as [[GraftRollingHash]]);
   * O(l1·window) time, two small boolean scratch arrays, no UDF/encoder
-  * overhead. Registered per-session as `graft_jaro_winkler(l, r)`.
+  * overhead. Installed by [[graft.GraftExtensions]] as `graft_jaro_winkler(l, r)`.
   */
 case class GraftJaroWinkler(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -62,9 +61,6 @@ object GraftJaroWinkler {
     case args => throw new IllegalArgumentException(
       s"graft_jaro_winkler(left, right), got ${args.length} args")
   }
-
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_jaro_winkler", builder)
 }
 
 /** The scoring loop itself — deliberately a plain object with NO companion

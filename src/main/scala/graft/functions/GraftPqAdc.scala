@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -90,10 +89,4 @@ object GraftPqAdc {
     case args => throw new IllegalArgumentException(
       s"graft_pq_adc(arrayArrayDouble, arrayInt), got ${args.length} args")
   }
-
-  val info: ExpressionInfo = new ExpressionInfo(classOf[GraftPqAdc].getName, "graft_pq_adc")
-
-  /** Register `graft_pq_adc` in the session function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_pq_adc", builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -159,11 +158,5 @@ object GraftPqCode {
     case Seq(v, cbE) => GraftPqTable(v, parseCb(cbE))
     case args => throw new IllegalArgumentException(
       s"graft_pq_table(v, codebooksLiteral): got ${args.length} args")
-  }
-
-  /** Register both kernels (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    RegisterOnce(spark, "graft_pq_encode", encodeBuilder)
-    RegisterOnce(spark, "graft_pq_table", tableBuilder)
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -22,7 +21,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * this evaluates the whole fold in one JVM loop per row, the same pattern
   * as [[GraftSimHash]]. A null token poisons the fold to NULL (md5(null)
   * is NULL in SQL and null propagates through XOR), keeping the kernel and
-  * the twin bit-equal on every input. Registered per-session as
+  * the twin bit-equal on every input. Installed by [[graft.GraftExtensions]] as
   * `graft_rolling_hash(tokens)`.
   */
 case class GraftRollingHash(child: Expression)
@@ -57,7 +56,4 @@ object GraftRollingHash {
     case args => throw new IllegalArgumentException(
       s"graft_rolling_hash(tokensArray), got ${args.length} args")
   }
-
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_rolling_hash", builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -21,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * One opaque kernel per row => CodegenFallback is fine (no per-element
   * lambda dispatch to eliminate, same reasoning as [[GraftSimHash]]).
   *
-  * Registered per-session as `graft_shingles(tokens, n)`.
+  * Installed by [[graft.GraftExtensions]] as `graft_shingles(tokens, n)`.
   */
 case class GraftShingles(child: Expression, n: Int)
   extends UnaryExpression with CodegenFallback {
@@ -66,7 +65,4 @@ object GraftShingles {
     case args => throw new IllegalArgumentException(
       s"graft_shingles(tokensArray, intLiteral), got ${args.length} args")
   }
-
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_shingles", builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * seed was engine-local). Bit p of the signature is set iff the (+1/-1)
   * vote sum of the tokens' p-th hash bits is strictly positive.
   *
-  * Registered per-session as `graft_simhash(tokens)`.
+  * Installed by [[graft.GraftExtensions]] as `graft_simhash(tokens)`.
   */
 case class GraftSimHash(child: Expression)
   extends UnaryExpression with CodegenFallback {
@@ -88,7 +87,4 @@ object GraftSimHash {
     case args => throw new IllegalArgumentException(
       s"graft_simhash(tokensArray), got ${args.length} args")
   }
-
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_simhash", builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -121,8 +120,4 @@ object GraftSqDistDec {
     case args => throw new IllegalArgumentException(
       s"graft_sqdist_dec(a, b): expected 2 args, got ${args.length}")
   }
-
-  /** Register `graft_sqdist_dec(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_sqdist_dec", builder)
 }

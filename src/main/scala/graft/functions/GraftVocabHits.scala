@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -17,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop. NULL tokens never match (same as `In` returning NULL under the
   * filter). Bit-equality with the HOF form is asserted in TextOpsSpec.
   *
-  * Registered per-session as `graft_vocab_hits(tokens, array('w', ...))` —
+  * Installed by [[graft.GraftExtensions]] as `graft_vocab_hits(tokens, array('w', ...))` —
   * the vocabulary argument must be foldable; it is evaluated once at
   * resolution time, not per row.
   */
@@ -62,7 +61,4 @@ object GraftVocabHits {
       "graft_vocab_hits(tokensArray, foldableStringArray), got " +
         args.map(_.dataType).mkString(", "))
   }
-
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_vocab_hits", builder)
 }

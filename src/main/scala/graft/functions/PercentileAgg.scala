@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -242,8 +241,4 @@ object PercentileAgg {
     case args => throw new IllegalArgumentException(
       s"graft_percentile(x, pConstant): expected 2 args, got ${args.length}")
   }
-
-  /** Register `graft_percentile(x, p)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_percentile", builder)
 }

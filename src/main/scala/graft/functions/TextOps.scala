@@ -59,10 +59,8 @@ object TextOps {
   def vocabHits(text: Column, vocab: Seq[String]): Column =
     vocabHitsOf(tokens(text), vocab)
 
-  private def vocabHitsOf(toks: Column, vocab: Seq[String]): Column = {
-    GraftVocabHits.register(org.apache.spark.sql.SparkSession.active)
+  private def vocabHitsOf(toks: Column, vocab: Seq[String]): Column =
     call_function("graft_vocab_hits", toks, typedLit(vocab))
-  }
 
   /** The built-ins-only twin of [[vocabHits]], kept as the executable spec
     * the native kernel is tested against. */
@@ -192,10 +190,8 @@ object TextOps {
     * [[GraftRollingHash]] kernel — one JVM loop per row instead of an
     * interpreted lambda frame per token; bit-equality with the HOF form is
     * asserted in DedupSpec. */
-  def rollingHash(text: Column): Column = {
-    GraftRollingHash.register(org.apache.spark.sql.SparkSession.active)
+  def rollingHash(text: Column): Column =
     call_function("graft_rolling_hash", tokens(text))
-  }
 
   /** Built-ins-only md5 little-endian 64-bit hash of a string column: the
     * md5 hex pairs for bytes 7..0 concatenated give the big-endian hex of

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -199,8 +198,4 @@ object TopKAgg {
     case args => throw new IllegalArgumentException(
       s"graft_topk(score, tag, intConstant), got ${args.length} args")
   }
-
-  /** Register `graft_topk(score, tag, k)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "graft_topk", builder)
 }

@@ -226,7 +226,6 @@ object AsOfJoin {
                          broadcastRight: Boolean = false,
                          tolerance: Option[Long] = None): DataFrame = {
     val spark = left.sparkSession
-    org.apache.spark.sql.graft.PlanBridge.addStrategy(spark, graft.plans.AsOfJoinStrategy)
     // re-alias every right column: left and right often derive from the SAME
     // cached scan (self-as-of), and a custom binary node gets no
     // DeduplicateRelations help from the analyzer — fresh exprIds make the

@@ -31,12 +31,10 @@ object Dedup {
     * lambda frame + n element_at calls per shingle + a second array_distinct
     * pass for the HOF form (bit-equality with that form is pinned in
     * DedupSpec; [[shingleIndexHof]] remains as the executable spec). */
-  def shingleIndex(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    graft.functions.GraftShingles.register(df.sparkSession)
+  def shingleIndex(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     df.select(col(idCol).as("id"),
       explode(call_function("graft_shingles", split(col(textCol), " "), lit(n)))
         .as("shingle"))
-  }
 
   /** The built-ins-only twin of [[shingleIndex]], kept as the executable
     * spec the native kernel is tested against. The token array is
@@ -192,14 +190,12 @@ object Dedup {
     * explode(j)+groupBy, or a higher-order array fold — cost 64× shuffle
     * volume resp. interpreted-lambda eval; this path measured 17.9s -> 3.4s
     * for the whole dedup pipeline at sf0.1.) */
-  def minhashSignatures(index: DataFrame, numHashes: Int): DataFrame = {
-    graft.functions.MinHashAgg.register(index.sparkSession)
+  def minhashSignatures(index: DataFrame, numHashes: Int): DataFrame =
     index
       .withColumn("__h1", xxhash64(col("shingle")))
       .withColumn("__h2", xxhash64(col("shingle"), lit(1)))
       .groupBy("id")
       .agg(expr(s"graft_minhash(__h1, __h2, $numHashes)").as("sig"))
-  }
 
   /** LSH banding: (id, band, band_hash) bucket keys from a signature. */
   def lshBands(signatures: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
@@ -551,7 +547,6 @@ object Dedup {
   def substringProbeMulti(corpus: DataFrame, bench: DataFrame, idCol: String,
                           textCol: String, needleLen: Int = 40,
                           minLen: Int = 20): DataFrame = {
-    graft.functions.GraftContainsAny.register(corpus.sparkSession)
     val rows = bench.select(col(idCol).cast(LongType),
         substring(col(textCol), 1, needleLen))
       .filter(length(col(textCol).substr(1, needleLen)) >= minLen)
@@ -775,7 +770,6 @@ object Dedup {
     * key is (segment_idx, segment_value) — no all-pairs scan. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3): DataFrame = {
-    graft.functions.GraftSimHash.register(df.sparkSession)
     val sigs = df.select(col(idCol).as("id"), simhash64(textCol).as("sh"))
     val seg = sigs.withColumn("seg", explode(sequence(lit(0), lit(3))))
       .withColumn("seg_val", expr("shiftright(sh, seg * 16) & 65535"))
@@ -1007,12 +1001,10 @@ object Dedup {
       col("id") % 5 === 0, 0.8)
       .orderBy("id_a", "id_b")
 
-  private val simhashQ: Q = (s, dir) => {
-    graft.functions.GraftSimHash.register(s)
+  private val simhashQ: Q = (s, dir) =>
     Tables(s, dir).documents
       .select(col("doc_id"), simhash64("text").as("simhash"))
       .orderBy("doc_id")
-  }
 
   private val simhashPairsQ: Q = (s, dir) =>
     simhashPairs(Tables(s, dir).documents, "doc_id", "text", 3)

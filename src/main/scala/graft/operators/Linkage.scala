@@ -190,7 +190,6 @@ object Linkage {
     * (prefix-weighted, transposition-tolerant). Threshold applies to the
     * ROUNDED score so the cut is reproducible across engines. */
   private val jaroScoredQ: Q = (s, dir) => {
-    graft.functions.GraftJaroWinkler.register(s)
     val t = Tables(s, dir)
     dirtyCustomers(t)
       // spread the probe side before the broadcast block join — same

@@ -45,7 +45,6 @@ object Similarity {
     * the ANN path is measured against. */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                  vecCol: String, k: Int): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
       .withColumn("cn", expr("nullif(sqrt(graft_dot(cv, cv)), 0d)"))
     val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
@@ -69,7 +68,6 @@ object Similarity {
     * which needs k·overfetch and still can't guarantee k survivors). */
   def cosineTopKFiltered(corpus: DataFrame, queries: DataFrame, idCol: String,
                          vecCol: String, labelCol: String, k: Int): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(labelCol).as("__cl"),
         toDouble(col(vecCol)).as("cv"))
       .withColumn("cn", expr("nullif(sqrt(graft_dot(cv, cv)), 0d)"))
@@ -128,15 +126,13 @@ object Similarity {
     * "project before the window" lesson, taken to its end point). Output
     * rows, ranks and tie-breaks are bit-identical to the window form
     * (TopKAggSpec pins the equality on the same (desc, asc) comparator). */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    graft.functions.TopKAgg.register(scored.sparkSession)
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
     scored
       .groupBy("query_id")
       .agg(expr(s"graft_topk(sim, neighbor_id, $k)").as("top"))
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).as("rank"),
         col("col.tag").as("neighbor_id"), round(col("col.score"), 4).as("sim"))
-  }
 
   /** Hyperplane normal matrix for [[lshBucket]]: component (p, d) is
     * xxhash64(p, d) scaled to [-1, 1), evaluated ONCE driver-side with the
@@ -160,7 +156,6 @@ object Similarity {
     * sets per table from the same seeded stream. */
   def lshBucket(vec: Column, dim: Int, planes: Int,
                 planeOffset: Int = 0): Column = {
-    graft.functions.GraftDot.register(SparkSession.active)
     val normals = lshNormals(dim, planeOffset + planes)
     val bits = (0 until planes).map { p =>
       val proj = call_function("graft_dot", vec,
@@ -182,7 +177,6 @@ object Similarity {
     * probe touches only its buckets' partitions. */
   def lshIndexMulti(corpus: DataFrame, idCol: String, vecCol: String,
                     dim: Int, planes: Int = 2, tables: Int = 16): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
       .withColumn("cn", expr("nullif(sqrt(graft_dot(cv, cv)), 0d)"))
       .select(col("neighbor_id"), col("cv"), col("cn"),
@@ -206,7 +200,6 @@ object Similarity {
                                idCol: String, vecCol: String, k: Int,
                                dim: Int, planes: Int = 2,
                                tables: Int = 16): DataFrame = {
-    graft.functions.GraftDot.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
       .withColumn("qn", expr("nullif(sqrt(graft_dot(qv, qv)), 0d)"))
       .select(col("query_id"), col("qv"), col("qn"),
@@ -229,7 +222,6 @@ object Similarity {
     * partition key so a probe touches one partition. */
   def cosineTopKLsh(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, k: Int, dim: Int, planes: Int = 4): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("cv"))
       .withColumn("bucket", lshBucket(col("cv"), dim, planes))
       .withColumn("cn", expr("nullif(sqrt(graft_dot(cv, cv)), 0d)"))
@@ -252,7 +244,6 @@ object Similarity {
     * generation never shuffles the corpus twice. */
   def cosinePairsLsh(corpus: DataFrame, idCol: String, vecCol: String,
                      threshold: Double, dim: Int, planes: Int = 4): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
       .withColumn("bucket", lshBucket(col("v"), dim, planes))
       .withColumn("nrm", expr("nullif(sqrt(graft_dot(v, v)), 0d)"))
@@ -282,7 +273,6 @@ object Similarity {
   def cosinePairsLshMulti(corpus: DataFrame, idCol: String, vecCol: String,
                           threshold: Double, dim: Int, planes: Int = 2,
                           tables: Int = 8): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
       .withColumn("nrm", expr("nullif(sqrt(graft_dot(v, v)), 0d)"))
       .select(col("id"), col("v"), col("nrm"),
@@ -309,7 +299,6 @@ object Similarity {
     * slices), so no shuffle carries the vectors. */
   def cosinePairsExact(corpus: DataFrame, idCol: String, vecCol: String,
                        threshold: Double): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
       .withColumn("nrm", expr("nullif(sqrt(graft_dot(v, v)), 0d)"))
     val a = c.select(col("id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
@@ -392,7 +381,6 @@ object Similarity {
     // halve the fit cost with no recall change
     val km = new KMeans().setK(nCentroids).setSeed(seed).setMaxIter(10)
       .setFeaturesCol("fv").setPredictionCol("bucket").fit(fitSet)
-    graft.functions.GraftDot.register(spark)
     val bucketed = km.transform(c).select(col("neighbor_id"), col("cv"),
       col("bucket")).withColumn("cn", expr("nullif(sqrt(graft_dot(cv, cv)), 0d)"))
     (bucketed, km.clusterCenters.map(_.toArray))
@@ -412,7 +400,6 @@ object Similarity {
                                nProbe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    graft.functions.GraftDot.register(spark)
     val qRows = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
       .collect()
     val probes = qRows.flatMap { r =>
@@ -525,8 +512,6 @@ object Similarity {
   def mmrRerank(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, kCand: Int, kSel: Int,
                 lam: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftDot.register(spark)
     // Contract (ADVICE r12): ids must be integral — the greedy kernel
     // keys its pair map on Long (the same domain TopKAgg's Long tag
     // covered in the r10 distributed form). Narrower integrals are
@@ -620,7 +605,6 @@ object Similarity {
                    textCol: String, vecIdCol: String, vecCol: String,
                    queryTerms: Seq[String], queryVecId: Long,
                    kCand: Int, k: Int): DataFrame = {
-    graft.functions.GraftDot.register(docs.sparkSession)
     val cand = graft.functions.TextOps
       .bm25TopK(docs, docIdCol, textCol, queryTerms, kCand)
       .select(col("doc_id"), col("score").as("bm25"))
@@ -668,8 +652,6 @@ object Similarity {
     * audit. */
   def centroidAssign(corpus: DataFrame, idCol: String, labelCol: String,
                      vecCol: String): DataFrame = {
-    graft.functions.GraftNativeAggs.register(corpus.sparkSession)
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val cvecs = labelCentroids(corpus, labelCol, vecCol)
       .groupBy(col("label").as("cand"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
@@ -706,9 +688,7 @@ object Similarity {
     * all-pairs anything. */
   def centroidSilhouette(corpus: DataFrame, idCol: String, labelCol: String,
                          vecCol: String): DataFrame = {
-    graft.functions.GraftNativeAggs.register(corpus.sparkSession)
     import org.apache.spark.sql.types.DecimalType
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val cvecs = labelCentroids(corpus, labelCol, vecCol)
       .groupBy(col("label").as("cand"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
@@ -760,7 +740,6 @@ object Similarity {
                   k: Int = 4, iters: Int = 3): DataFrame = {
     require(k >= 1 && iters >= 1)
     val spark = corpus.sparkSession
-    graft.functions.GraftNativeAggs.register(spark)
     import spark.implicits._
     // Spread by a content-derived key before caching (r15, guide §2.5 —
     // the blockedCandidates form): the persisted frame inherits the SCAN
@@ -845,7 +824,6 @@ object Similarity {
     * banded candidates. */
   def semanticDedupPairs(corpus: DataFrame, idCol: String, labelCol: String,
                          vecCol: String, threshold: Double): DataFrame = {
-    graft.functions.GraftDot.register(corpus.sparkSession)
     val assign = centroidAssign(corpus, idCol, labelCol, vecCol)
       .select(col("vec_id").as("id"), col("assigned_label").as("cluster"))
     // the assigned+normed frame feeds BOTH self-join sides: persist it, or
@@ -1049,8 +1027,6 @@ object Similarity {
     val m = codebooks.length
     val sub = codebooks(0)(0).length
     require(sub > 0, s"pqIndex: degenerate codebooks (m=$m)")
-    graft.functions.GraftDot.register(corpus.sparkSession)
-    graft.functions.GraftPqCode.register(corpus.sparkSession)
     val cb = typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     corpus
       .select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("__v"))
@@ -1090,10 +1066,6 @@ object Similarity {
   def cosineTopKPqRefined(index: DataFrame, codebooks: Array[Array[Array[Double]]],
                           corpus: DataFrame, queries: DataFrame, idCol: String,
                           vecCol: String, k: Int, overfetch: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftDot.register(spark)
-    graft.functions.GraftPqAdc.register(spark)
-    graft.functions.GraftPqCode.register(spark)
     val m = codebooks.length
     val sub = codebooks(0)(0).length
     val cb = typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)
@@ -1144,9 +1116,6 @@ object Similarity {
                       overfetch: Int = 8, fitSampleRows: Long = 10000L): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.functions.GraftDot.register(spark)
-    graft.functions.GraftPqAdc.register(spark)
-    graft.functions.GraftPqCode.register(spark)
     val (ivf, centers) =
       ivfIndex(corpus, idCol, vecCol, nCentroids, fitSampleRows = fitSampleRows)
     val codebooks = pqCodebooks(corpus, idCol, vecCol, m, nCodes,
@@ -1229,9 +1198,6 @@ object Similarity {
                               fitSampleRows: Long = 10000L): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.functions.GraftDot.register(spark)
-    graft.functions.GraftPqAdc.register(spark)
-    graft.functions.GraftPqCode.register(spark)
     val (ivf, centers) =
       ivfIndex(corpus, idCol, vecCol, nCentroids, fitSampleRows = fitSampleRows)
     val codebooks = pqCodebooksResidualFor(corpus, idCol, vecCol, centers,

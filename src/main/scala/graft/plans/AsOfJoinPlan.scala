@@ -11,8 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
   * This is the builder brief's tier (c): an operator Spark lacks, expressed
   * as a first-class plan node (this file) + a planner strategy + a physical
   * exec ([[AsOfJoinExec]]), installed via `SparkSessionExtensions`
-  * ([[graft.GraftExtensions]]) or per-session
-  * ([[org.apache.spark.sql.graft.PlanBridge.addStrategy]]). The composed
+  * ([[graft.GraftExtensions]]). The composed
   * union+window form ([[graft.operators.AsOfJoin.asOfBackward]]) remains the
   * tier-(a) reference implementation; both answer the same DuckDB `ASOF
   * LEFT JOIN` oracle.

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * fold to a NULL result — so the rewrite is safe regardless of the arrays'
   * `containsNull` flags, and user code written against the public
   * [[graft.operators.Similarity.dot]] API silently gets the native kernel
-  * when the rule is installed via [[graft.GraftExtensions]] (or per-session
-  * through `experimental.extraOptimizations`). The match is deliberately
+  * through [[graft.GraftExtensions]], which every graft session installs.
+  * The match is deliberately
   * exact — any other fold shape is left untouched.
   */
 object NativeDotRule extends Rule[LogicalPlan] {

@@ -369,7 +369,6 @@ object EventStream {
     * batch footer (streaming sources never infer) plus the same `ts`
     * normalization as the batch reader ([[Tables.normalizeEventsTs]]). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
     val schema = spark.read.parquet(path).schema
     // The file source anchors `basePath` at the literal path when it is not
@@ -563,7 +562,6 @@ object EventStream {
     * aggregate keeps the per-batch publish sort-free (same argument as
     * [[graft.operators.Similarity]]'s topKPerQuery). */
   private val streamTrendingQ: Q = (s, dir) => {
-    graft.functions.TopKAgg.register(s)
     // Streaming state-shuffle width derived from the measured feed size
     // (r15, the [[graft.operators.IterState]] discipline applied to the
     // streaming runtime): a stateful micro-batch runs its aggregation at
@@ -588,7 +586,6 @@ object EventStream {
     val q = agg.writeStream.outputMode("complete")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, _: Long) =>
-        graft.functions.TopKAgg.register(b.sparkSession)
         b.select(col("event_type"), col("user_id"),
             col("total_dec").cast("double").as("total"))
           .groupBy("event_type")

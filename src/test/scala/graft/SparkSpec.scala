@@ -10,6 +10,19 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
+
+  /** Runs `body` with the native HOF rewrites ([[graft.plans.NativeDotRule]],
+    * [[graft.plans.NativeVocabHitsRule]]) excluded from the optimizer, so a
+    * reference built from the HOF form really runs the HOF form. Build,
+    * plan and collect the reference inside `body`: the exclusion is read
+    * when the plan is optimized. */
+  def withoutNativeRules[T](body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, Seq(graft.plans.NativeDotRule, graft.plans.NativeVocabHitsRule)
+      .map(_.ruleName).mkString(","))
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {

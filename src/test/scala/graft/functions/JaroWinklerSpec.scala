@@ -40,7 +40,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("registered expression matches the static kernel and handles null") {
-    GraftJaroWinkler.register(spark)
     val rows = Seq(("martha", "marhta"), ("dixon", "dicksonx"),
       ("same", "same"), ("", ""))
       .toDF("a", "b")

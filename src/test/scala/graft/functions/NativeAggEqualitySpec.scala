@@ -12,11 +12,6 @@ import graft.SparkSpec
 class NativeAggEqualitySpec extends SparkSpec {
   import spark.implicits._
 
-  DecSumAgg.register(spark)
-  PercentileAgg.register(spark)
-  GraftSqDistDec.register(spark)
-  GraftPqCode.register(spark)
-
   private val rnd = new scala.util.Random(42)
 
   /** Adversarial doubles: money-like, half-way ties, full-precision noise

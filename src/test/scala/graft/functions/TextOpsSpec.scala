@@ -191,25 +191,29 @@ class TextOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val real = graft.Tables(spark, sf001).documents
     val en = TextOps.langMarkers.toMap.apply("en")
-    val rows = real.select(col("doc_id"),
-      TextOps.vocabHits(col("text"), en).as("native"),
-      TextOps.vocabHitsHof(col("text"), en).as("hof"),
-      TextOps.langScores(TextOps.tokens(col("text"))).as("s_native"),
-      TextOps.langScoresHof(TextOps.tokens(col("text"))).as("s_hof"))
-      .collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getInt(1) === r.getInt(2), s"doc ${r.getLong(0)} vocab hits differ")
-      assert(r.getSeq[Int](3) === r.getSeq[Int](4), s"doc ${r.getLong(0)} lang scores differ")
+    def byId(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (r.getInt(1), r.getSeq[Int](2))).toMap
+    val native = byId(real.select(col("doc_id"),
+      TextOps.vocabHits(col("text"), en),
+      TextOps.langScores(TextOps.tokens(col("text")))))
+    // the reference runs the real HOF form, not the rule's rewrite of it
+    val hof = withoutNativeRules {
+      val ref = real.select(col("doc_id"),
+        TextOps.vocabHitsHof(col("text"), en),
+        TextOps.langScoresHof(TextOps.tokens(col("text"))))
+      val plan = ref.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("graft_vocab_hits"), plan)
+      byId(ref)
+    }
+    assert(native.nonEmpty && native.keySet === hof.keySet)
+    native.foreach { case (id, (hits, scores)) =>
+      assert(hits === hof(id)._1, s"doc $id vocab hits differ")
+      assert(scores === hof(id)._2, s"doc $id lang scores differ")
     }
   }
 
   test("NativeVocabHitsRule rewrites the plain size(filter(In)) shape to the kernel") {
     import org.apache.spark.sql.functions._
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraOptimizations.contains(graft.plans.NativeVocabHitsRule))
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ graft.plans.NativeVocabHitsRule
     val en = TextOps.langMarkers.toMap.apply("en")
     val d = graft.Tables(spark, sf001).documents
     // user code written with plain built-ins, no graft API in sight
@@ -218,9 +222,13 @@ class TextOpsSpec extends SparkSpec {
     assert(df.queryExecution.optimizedPlan.toString.contains("graft_vocab_hits"),
       df.queryExecution.optimizedPlan.toString.linesIterator.take(3).mkString("\n"))
     // identical values to the un-rewritten HOF
-    val got = df.orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val exp = d.select(col("doc_id"), TextOps.vocabHitsHof(col("text"), en).as("h"))
-      .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val got = df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val exp = withoutNativeRules {
+      val ref = d.select(col("doc_id"), TextOps.vocabHitsHof(col("text"), en))
+      val plan = ref.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("graft_vocab_hits"), plan)
+      ref.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    }
     assert(got === exp && got.nonEmpty)
     // a filter on a non-literal vocabulary is left untouched
     val dyn = d.select(size(filter(split(col("text"), " "),

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class TopKAggSpec extends SparkSpec {
 
   private def ordersTop(dir: String, k: Int) = {
-    TopKAgg.register(spark)
     spark.read.parquet(s"$dir/orders.parquet")
       .groupBy("o_orderpriority")
       .agg(expr(s"graft_topk(o_totalprice, o_orderkey, $k)").as("top"))
@@ -40,7 +39,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("graft_topk is invariant to input partitioning") {
-    TopKAgg.register(spark)
     val base = spark.read.parquet(s"$sf001/orders.parquet")
     val results = Seq(1, 7, 32).map { n =>
       base.repartition(n)
@@ -53,7 +51,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("ties on score break toward the smaller tag; k caps the group") {
-    TopKAgg.register(spark)
     import spark.implicits._
     val df = Seq(
       ("g", 5.0, 10L), ("g", 5.0, 3L), ("g", 5.0, 7L), ("g", 9.0, 99L),
@@ -68,7 +65,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("null scores and tags are skipped, not kept") {
-    TopKAgg.register(spark)
     import spark.implicits._
     val df = Seq(
       ("g", Some(2.0), Some(1L)), ("g", None, Some(2L)), ("g", Some(4.0), None))
@@ -81,7 +77,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("DECIMAL score and INT tag are implicitly cast, not executor-crashed (ADVICE r10)") {
-    TopKAgg.register(spark)
     import spark.implicits._
     // the standard warehouse money type + an int key: before the
     // ImplicitCastInputTypes fix this threw ClassCastException on the
@@ -98,7 +93,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("NaN scores never occupy heap slots (ADVICE r10)") {
-    TopKAgg.register(spark)
     import spark.implicits._
     // NaN first so it would seed the heap while size<k under the old raw-<
     // compare; it must be skipped like a null and never block finite scores
@@ -112,7 +106,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("k accepts any foldable integral constant, rejects non-constants (ADVICE r10)") {
-    TopKAgg.register(spark)
     import spark.implicits._
     val df = Seq(("g", 1.0, 1L), ("g", 2.0, 2L)).toDF("g", "s", "t")
     // CAST(2 AS BIGINT) is foldable but not a bare Int literal

@@ -29,7 +29,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("graft_shingles skips null tokens like concat_ws, regardless of array backing (ADVICE r5)") {
-    graft.functions.GraftShingles.register(spark)
     val df = spark.range(1).select(
       array(lit("a"), lit(null).cast("string"), lit("b")).as("toks"))
     // n=2 windows: [a, null] -> "a" (null skipped), [null, b] -> "b"
@@ -250,7 +249,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash signature matches the md5 bit-arithmetic reference value") {
-    graft.functions.GraftSimHash.register(spark)
     // hand-computed: md5_number_upper token hashes (first 8 digest bytes
     // little-endian), ±1 bit votes, bit set iff sum > 0 — the DuckDB oracle
     // formulation evaluated independently in python
@@ -260,7 +258,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash is deterministic and near-identical docs collide within hamming 3") {
-    graft.functions.GraftSimHash.register(spark)
     val df = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappb"),

@@ -20,14 +20,11 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("NativeDotRule rewrites the HOF dot shape to the codegen'd kernel") {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraOptimizations.contains(graft.plans.NativeDotRule))
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ graft.plans.NativeDotRule
     val e = Tables(spark, sf001).embeddings.limit(5)
     val v = Similarity.toDouble(col("embedding"))
     val df = e.select(col("vec_id"), Similarity.dot(v, v).as("d"))
-    // the public HOF API now optimizes to the native kernel...
+    // the public HOF API optimizes to the native kernel in every graft
+    // session (the rule rides in with GraftExtensions)...
     assert(df.queryExecution.optimizedPlan.toString.contains("graft_dot"),
       df.queryExecution.optimizedPlan.toString.linesIterator.take(3).mkString("\n"))
     // ...with identical values (sequential left fold in both forms)
@@ -45,15 +42,22 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graft_dot matches the HOF fold on edge inputs: length mismatch and null elements (ADVICE r5)") {
-    graft.functions.GraftDot.register(spark)
     val df = Seq(
       (1L, Seq[Option[Double]](Some(1.0), Some(2.0)), Seq[Option[Double]](Some(3.0), Some(4.0))),
       (2L, Seq[Option[Double]](Some(1.0), Some(2.0)), Seq[Option[Double]](Some(3.0))), // unequal length
       (3L, Seq[Option[Double]](Some(1.0), None), Seq[Option[Double]](Some(3.0), Some(4.0))), // null element
     ).toDF("id", "a", "b")
-    val got = df.select($"id", expr("graft_dot(a, b)").as("native"),
-        Similarity.dot($"a", $"b").as("hof"))
-      .collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq.sortBy(_._1)
+    def byId(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val native = byId(df.select($"id", expr("graft_dot(a, b)")))
+    // the reference runs the real HOF fold, not the rule's rewrite of it
+    val hof = withoutNativeRules {
+      val ref = df.select($"id", Similarity.dot($"a", $"b"))
+      val plan = ref.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("graft_dot"), plan)
+      byId(ref)
+    }
+    val got = native.keys.toSeq.sorted.map(id => (id, native(id), hof(id)))
     // HOF semantics: zip_with pads/propagates nulls through the fold -> NULL
     assert(got === Seq(
       (1L, Some(11.0), Some(11.0)),
@@ -349,7 +353,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graft_pq_adc: matches a hand-computed lookup sum, NULLs on corrupt codes") {
-    graft.functions.GraftPqAdc.register(spark)
     val tab = Seq(Seq(1.0, 2.0, 3.0), Seq(10.0, 20.0, 30.0))
     val rows = Seq(
       (1L, tab, Seq[Option[Int]](Some(2), Some(0))),   // 3.0 + 10.0

@@ -75,7 +75,6 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       srcDir.toPath.resolve("part-0.parquet"))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(srcDir.getAbsolutePath).schema
     val stream = graft.Tables.normalizeEventsTs(
       spark.readStream.schema(schema).parquet(srcDir.getAbsolutePath))
@@ -347,7 +346,6 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/events.parquet"),
       srcDir.toPath.resolve("part-0.parquet"))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(srcDir.getAbsolutePath).schema
     val stream = graft.Tables.normalizeEventsTs(
       spark.readStream.schema(schema)
