@@ -10,7 +10,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -245,20 +245,26 @@ object Bench {
     * counts) and the returned frame's `analyze`. `exec` is the noop write:
     * its `optimize` and `plan`, then execution, where AQE re-plans per
     * stage. `jobs`, `stages` and `tasks` cover both; `compiles` counts
-    * Janino compilations, one per codegen-cache miss. */
+    * Janino compilations, one per codegen-cache miss. `planChars` sums,
+    * over every action the query runs (eager rounds and the write), the
+    * length of the explain string AQE renders again at each stage update
+    * (`spark.sql.ui.explainMode`, formatted by default): the driver cost
+    * that grows with plan size. */
   private[graft] final case class ProbeRecord(
       pass: Int, query: String, wall: Double, build: Double, buildJobs: Int,
       analyze: Double, optimize: Double, plan: Double, exec: Double,
-      jobs: Int, stages: Int, tasks: Int, compiles: Long)
+      jobs: Int, stages: Int, tasks: Int, compiles: Long, planChars: Long)
 
-  /** Scheduler counts, and the noop write's [[QueryExecution]]: a V2
-    * overwrite reaches listeners as "overwrite"; the last is the probe's. */
+  /** Scheduler counts, every action's [[QueryExecution]], and the noop
+    * write's: a V2 overwrite reaches listeners as "overwrite"; the last is
+    * the probe's. */
   private final class ProbeListener extends SparkListener with QueryExecutionListener {
     val jobs, stages, tasks = new AtomicInteger
     val stageLines = new ConcurrentLinkedQueue[String]
+    val actions = new ConcurrentLinkedQueue[QueryExecution]
     @volatile var write: Option[QueryExecution] = None
     def reset(): Unit = {
-      Seq(jobs, stages, tasks).foreach(_.set(0)); stageLines.clear(); write = None
+      Seq(jobs, stages, tasks).foreach(_.set(0)); stageLines.clear(); actions.clear(); write = None
     }
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -270,8 +276,10 @@ object Bench {
       stageLines.add(f"id=${si.stageId}%d wall_ms=$wall%d run_ms=${si.taskMetrics.executorRunTime}%d " +
         f"tasks=${si.numTasks}%d ${si.name.take(60)} ${rdds.take(160)}")
     }
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+      actions.add(qe)
       if (funcName == "overwrite") write = Some(qe)
+    }
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
   }
 
@@ -289,6 +297,7 @@ object Bench {
     def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
     def phase(qe: QueryExecution, p: String): Double =
       qe.tracker.phases.get(p).map(_.durationMs.toDouble).getOrElse(0.0)
+    val explainMode = ExplainMode.fromString(spark.conf.get("spark.sql.ui.explainMode"))
     try for (pass <- 1 to repeats; name <- names) yield {
       PlanBridge.drainListeners(spark)
       l.reset()
@@ -310,11 +319,12 @@ object Bench {
       val r = ProbeRecord(pass, name, wall, build, buildJobs,
         phase(df.queryExecution, QueryPlanningTracker.ANALYSIS),
         phase(write, QueryPlanningTracker.OPTIMIZATION), phase(write, QueryPlanningTracker.PLANNING),
-        exec, l.jobs.get, l.stages.get, l.tasks.get, compiles)
+        exec, l.jobs.get, l.stages.get, l.tasks.get, compiles,
+        l.actions.asScala.map(_.explainString(explainMode).length.toLong).sum)
       println(f"PROBE pass=$pass $name wall_ms=${r.wall}%.1f build_ms=${r.build}%.1f " +
         f"build_jobs=${r.buildJobs} analyze_ms=${r.analyze}%.0f optimize_ms=${r.optimize}%.0f " +
         f"plan_ms=${r.plan}%.0f exec_ms=${r.exec}%.1f jobs=${r.jobs} stages=${r.stages} " +
-        f"tasks=${r.tasks} compiles=${r.compiles}")
+        f"tasks=${r.tasks} compiles=${r.compiles} plan_chars=${r.planChars}")
       l.stageLines.asScala.foreach(s => println(s"STAGE pass=$pass $name $s"))
       spark.catalog.clearCache()
       r

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -308,15 +308,37 @@ object Graph {
   }
 
   /** Horizon bound below which bounded traversals ([[bfsLayers]],
-    * [[ssspBounded]]) plan as ONE declarative DAG instead of one
-    * materialized round per hop. The one-shot plan references each round's
-    * state twice (union leg + next round's input), so the LOGICAL tree
-    * doubles per hop — trivial analysis cost at ≤5 hops (≤32 leaves),
-    * runaway past ~10 — while the PHYSICAL plan stays linear because
-    * identical subplans collapse into ReusedExchange nodes. Past the
-    * bound, the classic per-round materialization (one action per hop,
-    * lineage truncated by the persist) is the right trade. */
+    * [[ssspBounded]]) plan as ONE declarative DAG ([[hopFold]]) instead of
+    * one materialized round per hop. Each hop of that DAG reads the
+    * previous hop's state once, so the plan grows by one join and one
+    * aggregate per hop; but it is one job's plan, which AQE re-plans and
+    * re-renders at every stage, and every hop re-expands every visited
+    * node. Past the bound, the classic per-round materialization (one
+    * action per hop, lineage truncated by the persist) is the right
+    * trade. */
   private val oneShotMaxHops = 5
+
+  /** One relax hop over an adjacency `(a, b, …)`: every state row
+    * `(node, d)` keeps itself and offers `step` (an expression over `d`
+    * and the adjacency columns) to each neighbour `b`; the min per node is
+    * the new state. The state is read ONCE (a left join, so nodes without
+    * edges, isolated seeds included, keep their distance), so chaining
+    * hops grows the plan linearly. BFS is the step `d + 1`; bounded SSSP
+    * is `round(d + c, 6)`. */
+  private def hop(adj: DataFrame, step: Column)(state: DataFrame): DataFrame =
+    state.join(adj, col("node") === col("a"), "left")
+      .select(explode(array(
+        struct(col("node"), col("d")),
+        struct(col("b").as("node"), step.as("d")))).as("__e"))
+      .select("__e.*")
+      .filter(col("node").isNotNull)
+      .groupBy("node").agg(min(col("d")).as("d"))
+
+  /** `hops` chained [[hop]]s as one lazy plan: after h hops the state holds
+    * every node within h steps of the seeds at its least distance. */
+  private def hopFold(adj: DataFrame, step: Column, start: DataFrame,
+                      hops: Int): DataFrame =
+    (1 to hops).foldLeft(start)((state, _) => hop(adj, step)(state))
 
   /** Multi-source BFS layers over an undirected `(s1 < s2)` edge list:
     * hop distance from the seed set, up to `maxHops` — the reachability /
@@ -329,16 +351,16 @@ object Graph {
     *
     *   - `maxHops <=` [[oneShotMaxHops]] (the graded and by far the most
     *     common case — blast-radius queries bound the horizon): ONE
-    *     declarative DAG, zero per-hop actions. Layer h = distinct nodes
-    *     reachable by a length-h walk (`adj ⋈ layer_{h-1}` + distinct);
-    *     `min(dist)` over the unioned layers IS the BFS distance — a
-    *     length-h walk only reaches nodes at distance ≤ h, and a node at
-    *     distance d is reached by some length-d walk, so the min layer
-    *     containing v is exactly d. No visited-set anti-join needed: the
-    *     min absorbs revisits. Collapsing the per-hop persist+count
-    *     actions into one job removes the dominant cost at bench scale —
-    *     dozens of 32-task scheduler rounds on a node-count-sized state
-    *     frame (measured 11.3 s → see PERF.md r10).
+    *     declarative DAG, zero per-hop actions: the [[hopFold]] with step
+    *     `d + 1`. After h hops the state is every node within h hops at
+    *     its least distance — each hop keeps every known (node, d) and
+    *     offers d + 1 to its neighbours, and the per-node min absorbs
+    *     revisits, so no visited-set anti-join is needed. Each hop reads
+    *     the previous state once, so k hops plan k joins (GraphSpec pins
+    *     it). Collapsing the per-hop persist+count actions into one job
+    *     removes the dominant cost at bench scale — dozens of 32-task
+    *     scheduler rounds on a node-count-sized state frame (measured
+    *     11.3 s → see PERF.md r10).
     *
     *   - deeper horizons: textbook frontier expansion, one materialized
     *     round per hop (equi-join + distinct + anti-join against the
@@ -363,22 +385,12 @@ object Graph {
     // economics)
     val adjRows = adj.count()
     graft.operators.IterState.withStateShuffle(edges.sparkSession, adjRows) {
-    // the seed frame feeds two consumers (layer 0's union leg + layer
-    // 1's join) and its lineage is caller-supplied (here a TakeOrdered
-    // over the edge list) — lazy-persist so the job computes it once
-    val seed0 = seeds.select(col("node")).persist()
     val out =
       if (maxHops <= oneShotMaxHops) {
-        val layers = Iterator.iterate(seed0) { front =>
-          adj.join(front.select(col("node").as("a")), "a")
-            .select(col("b").as("node")).distinct()
-        }.take(maxHops + 1).toSeq
-        layers.zipWithIndex
-          .map { case (l, h) => l.select(col("node"), lit(h).as("dist")) }
-          .reduce(_.unionByName(_))
-          .groupBy("node").agg(min(col("dist")).as("dist"))
+        hopFold(adj, col("d") + 1, seeds.select(col("node"), lit(0).as("d")), maxHops)
+          .select(col("node"), col("d").as("dist"))
       } else {
-        val hop0 = seed0.select(col("node"), lit(0).as("dist")).persist()
+        val hop0 = seeds.select(col("node"), lit(0).as("dist")).persist()
         val (visited, _) = (1 to maxHops).foldLeft((hop0, hop0)) {
           case ((vis, frontier), h) =>
             val next = adj.join(frontier.select(col("node").as("a")), "a")
@@ -403,7 +415,6 @@ object Graph {
     // manager's dependency tracking, so the released caches can't take
     // the result with them.
     val snap = out.localCheckpoint(true)
-    seed0.unpersist()
     adj.unpersist()
     snap
     } // IterState.withStateShuffle
@@ -422,48 +433,31 @@ object Graph {
     *
     * Like [[bfsLayers]], two plans, same answer (VERDICT r9 item 3): a
     * bounded horizon `<=` [[oneShotMaxHops]] chains all relax rounds into
-    * ONE declarative DAG — each round's state feeds both the union leg
-    * and the next round's join, and the identical subplans collapse into
-    * ReusedExchange at physical planning, so execution stays linear in
-    * rounds while the whole traversal is a single job (measured against
-    * the per-round form in PERF.md r10). Deeper horizons re-persist
+    * ONE declarative DAG — the [[hopFold]] with step `round(d + c, 6)`,
+    * each round reading the previous round's state once, so the whole
+    * traversal is a single job (measured against the per-round form in
+    * PERF.md r10). Deeper horizons run the same [[hop]] but re-persist
     * (node, dist) state per round and pay one action per hop to keep the
-    * logical plan bounded. */
+    * logical plan bounded. Both paths compute the same relax recurrence,
+    * so their doubles are identical. */
   def ssspBounded(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"need at least one hop, got $maxHops")
     val cost = round(lit(1.0) / col("w").cast(DoubleType), 6)
-    // adjacency pre-partitioned on the probe key before caching + the
-    // seed frame lazy-persisted, as in [[bfsLayers]]
+    // adjacency pre-partitioned on the probe key before caching, as in
+    // [[bfsLayers]]
     val adj = edges.select(col("s1").as("a"), col("s2").as("b"), cost.as("c"))
       .union(edges.select(col("s2").as("a"), col("s1").as("b"), cost.as("c")))
       .repartition(col("a")).persist()
     // derived state shuffle width, as in [[bfsLayers]] (r15)
     val adjRows = adj.count()
     graft.operators.IterState.withStateShuffle(edges.sparkSession, adjRows) {
-    val d0 = seeds.select(col("node"), lit(0.0).as("d")).persist()
-    def relax(dist: DataFrame): DataFrame = {
-      val cand = adj.join(dist.withColumnRenamed("node", "a"), "a")
-        .select(col("b").as("node"), round(col("d") + col("c"), 6).as("d"))
-      dist.unionByName(cand).groupBy("node").agg(min(col("d")).as("d"))
-    }
+    val d0 = seeds.select(col("node"), lit(0.0).as("d"))
+    val step = round(col("d") + col("c"), 6)
     val result =
-      if (maxHops <= oneShotMaxHops) {
-        // Per-LEVEL min-reduce + ONE final min instead of carrying the
-        // running min forward: level_l = min-reduced relax^l(seeds), and
-        // min over levels 0..maxHops equals the iterated Bellman-Ford
-        // state BIT-EXACTLY — per-step rounding is monotone, so the min
-        // distributes through `round(d + c, 6)` and reducing before or
-        // after relaxing yields the same doubles. Each level frame is
-        // ≤|nodes| rows.
-        val levels = Iterator.iterate(d0.toDF()) { prev =>
-          adj.join(prev.withColumnRenamed("node", "a"), "a")
-            .select(col("b").as("node"), round(col("d") + col("c"), 6).as("d"))
-            .groupBy("node").agg(min(col("d")).as("d"))
-        }.take(maxHops + 1).toSeq
-        levels.reduce(_.unionByName(_)).groupBy("node").agg(min(col("d")).as("d"))
-      } else {
+      if (maxHops <= oneShotMaxHops) hopFold(adj, step, d0, maxHops)
+      else {
         (1 to maxHops).foldLeft(d0) { (dist, _) =>
-          val next = relax(dist).persist()
+          val next = hop(adj, step)(dist).persist()
           next.count() // materialize: round h+1 relaxes state, not lineage
           if (dist ne d0) dist.unpersist()
           next
@@ -473,7 +467,6 @@ object Graph {
     // same cache-snapshot discipline as [[bfsLayers]] — see the comment
     // there for why this must be a localCheckpoint, not a persist
     val snap = out.localCheckpoint(true)
-    d0.unpersist()
     result.unpersist()
     adj.unpersist()
     snap

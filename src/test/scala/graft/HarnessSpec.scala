@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The `Bench` probe on the shared session: one record per query and
   * pass, phases that nest inside the measured wall time, eager rounds
-  * counted as build jobs, and a session left running for the next suite. */
+  * counted as build jobs, a plan size, and a session left running for the
+  * next suite. */
 class HarnessSpec extends SparkSpec {
 
   test("the probe splits each query into phases and scheduler work") {
@@ -18,6 +19,7 @@ class HarnessSpec extends SparkSpec {
       assert(r.build + r.exec <= r.wall + 1.0, s"build + exec exceeds wall in $r")
       assert(r.optimize + r.plan <= r.exec + 2.0, s"write phases exceed exec in $r")
       assert(r.jobs >= r.buildJobs && r.jobs > 0 && r.stages > 0 && r.tasks >= r.stages, r)
+      assert(r.planChars > 0, s"no plan size in $r")
     }
     val g6 = records.find(_.query == "g6_bfs_layers").get
     assert(g6.buildJobs > 0, "g6_bfs_layers runs its rounds while it builds")

@@ -1,6 +1,9 @@
 package graft.analytics
 
+import scala.math.BigDecimal.RoundingMode
+
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.logical.Join
 
 class GraphSpec extends SparkSpec {
 
@@ -162,5 +165,66 @@ class GraphSpec extends SparkSpec {
     val out = Graph.ssspBounded(edges, seeds, maxHops = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out === Map(1L -> 0.0, 3L -> 0.25, 2L -> 0.5, 4L -> 1.0))
+  }
+
+  /** A seeded random graph over nodes 1..40, a path 1-41-42-…-50 that
+    * puts node 40 + h exactly h hops from seed 1, a disconnected path
+    * 200..204, and seeds 1, 2 and the edgeless node 999. */
+  private val randomGraph: (Seq[(Long, Long, Long)], Seq[Long]) = {
+    val rnd = new scala.util.Random(17)
+    val random = Seq.fill(55)((1L + rnd.nextInt(40), 1L + rnd.nextInt(40)))
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+    val tail = (1L +: (41L until 50L)).zip(41L to 50L)
+    val island = (200L until 204L).map(a => (a, a + 1))
+    val edges = (random ++ tail ++ island).distinct.map { case (a, b) => (a, b, 1L + rnd.nextInt(5)) }
+    (edges, Seq(1L, 2L, 999L))
+  }
+
+  private def round6(x: Double): Double = BigDecimal(x).setScale(6, RoundingMode.HALF_UP).toDouble
+
+  /** Driver-side reference: `hops` relax rounds of `(node, d)` state, each
+    * keeping every node and offering `step(d, w)` along every edge. */
+  private def relaxReference[D](edges: Seq[(Long, Long, Long)], seeds: Seq[Long], zero: D,
+                                hops: Int)(step: (D, Long) => D)(implicit o: Ordering[D]): Map[Long, D] = {
+    val adj = edges.flatMap { case (a, b, w) => Seq(a -> (b, w), b -> (a, w)) }.groupMap(_._1)(_._2)
+    (1 to hops).foldLeft(seeds.map(_ -> zero).toMap) { (state, _) =>
+      val offers = for ((n, d) <- state.toSeq; (m, w) <- adj.getOrElse(n, Nil)) yield m -> step(d, w)
+      (state.toSeq ++ offers).groupMapReduce(_._1)(_._2)(o.min)
+    }
+  }
+
+  test("BFS and SSSP match a driver-side reference on both plans (3 and 6 hops)") {
+    val s = spark
+    import s.implicits._
+    val (edgeRows, seedIds) = randomGraph
+    val edges = edgeRows.toDF("s1", "s2", "w")
+    val seeds = seedIds.toDF("node")
+    for (hops <- Seq(3, 6)) { // one-shot fold, then the per-hop frontier
+      val bfs = Graph.bfsLayers(edges.select("s1", "s2"), seeds, hops)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(bfs === relaxReference(edgeRows, seedIds, 0, hops)((d, _) => d + 1), s"BFS, $hops hops")
+      val sssp = Graph.ssspBounded(edges, seeds, hops)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(sssp === relaxReference(edgeRows, seedIds, 0.0, hops)(
+        (d, w) => round6(d + round6(1.0 / w)))(Ordering.Double.TotalOrdering), s"SSSP, $hops hops")
+      assert(bfs(999L) === 0 && sssp(999L) === 0.0, "an edgeless seed keeps distance 0")
+      assert(bfs.keySet === sssp.keySet && bfs.values.max === hops)
+      assert(!bfs.keySet.exists(n => n >= 200L && n <= 204L), "the island stays unreached")
+    }
+  }
+
+  test("one-shot BFS plans one join per hop: each hop reads the previous state once") {
+    val s = spark
+    import s.implicits._
+    val edges = randomGraph._1.map { case (a, b, _) => (a, b) }.toDF("s1", "s2")
+    val seeds = randomGraph._2.toDF("node")
+    for (hops <- 1 to 5) {
+      val (_, actions) = withActions(Graph.bfsLayers(edges, seeds, hops))
+      val traversal = actions.collect { case ("localCheckpoint", qe) => qe }
+      assert(traversal.size === 1, actions.map(_._1))
+      val joins = traversal.head.optimizedPlan.collect { case j: Join => j }
+      assert(joins.size === hops, s"$hops hops")
+    }
   }
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.math.BigDecimal.RoundingMode
+
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -13,6 +16,49 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
+  test("connectedComponents builds its edge cache from one scan of the pairs") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    val (labels, actions) = withActions(Dedup.connectedComponents(pairs))
+    assert(labels.count() === 5)
+    // the first action is the edge cache's materializing count
+    val build = actions.collectFirst { case ("count", qe) => qe }.get
+    val edgeCache = build.optimizedPlan.collectFirst { case r: InMemoryRelation => r }.get
+    assert(edgeCache.cacheBuilder.logicalPlan.collectLeaves().size === 1,
+      edgeCache.cacheBuilder.logicalPlan.treeString)
+  }
+
+  test("jaccardPairs equals brute-force pairwise jaccard on a random corpus") {
+    // 6-word vocabulary so trigrams collide; docs of 1-12 tokens (the short
+    // ones have no shingles), exact copies and one-token edits of earlier docs
+    val rnd = new scala.util.Random(29)
+    val vocab = Vector("a", "b", "c", "d", "e", "f")
+    val docs = (1 to 80).foldLeft(Vector.empty[String]) { (acc, _) =>
+      val doc = rnd.nextInt(4) match {
+        case 0 if acc.nonEmpty => acc(rnd.nextInt(acc.size))
+        case 1 if acc.nonEmpty =>
+          val t = acc(rnd.nextInt(acc.size)).split(" ", -1)
+          t.updated(rnd.nextInt(t.length), vocab(rnd.nextInt(vocab.size))).mkString(" ")
+        case _ => Seq.fill(1 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+      }
+      acc :+ doc
+    }
+    val shingles = docs.map(_.split(" ", -1).sliding(3).filter(_.length == 3)
+      .map(_.mkString(" ")).toSet)
+    val threshold = 0.5
+    val expected = (for {
+      i <- docs.indices; j <- docs.indices if i < j
+      a = shingles(i); b = shingles(j) if a.nonEmpty && b.nonEmpty
+      common = (a intersect b).size.toLong if common > 0
+      jac = common.toDouble / (a.size.toLong + b.size.toLong - common) if jac >= threshold
+    } yield (i + 1L, j + 1L, BigDecimal(jac).setScale(4, RoundingMode.HALF_UP).toDouble)).toSet
+    assert(docs.count(_.split(" ").length < 3) > 0 && docs.distinct.size < docs.size)
+    assert(expected.size > 20 && expected.exists(_._3 == 1.0) && expected.exists(_._3 < 1.0))
+    val df = docs.zipWithIndex.map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
+    val got = Dedup.jaccardPairs(Dedup.shingleIndex(df, "doc_id", "text"), threshold)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got === expected)
   }
 
   test("shingleIndex emits distinct word trigrams, none for short docs") {
