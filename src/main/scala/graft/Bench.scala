@@ -255,16 +255,25 @@ object Bench {
       analyze: Double, optimize: Double, plan: Double, exec: Double,
       jobs: Int, stages: Int, tasks: Int, compiles: Long, planChars: Long)
 
-  /** Scheduler counts, every action's [[QueryExecution]], and the noop
-    * write's: a V2 overwrite reaches listeners as "overwrite"; the last is
-    * the probe's. */
-  private final class ProbeListener extends SparkListener with QueryExecutionListener {
+  /** Every action run while registered, in order: its name ("count",
+    * "localCheckpoint", a V2 write's "overwrite", …) and its
+    * [[QueryExecution]], whose plans stay inspectable. */
+  private[graft] trait ActionLog extends QueryExecutionListener {
+    val actions = new ConcurrentLinkedQueue[(String, QueryExecution)]
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      actions.add(funcName -> qe)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  /** Scheduler counts and the query's actions. The noop write reaches
+    * listeners as "overwrite"; the last is the probe's. */
+  private final class ProbeListener extends SparkListener with ActionLog {
     val jobs, stages, tasks = new AtomicInteger
     val stageLines = new ConcurrentLinkedQueue[String]
-    val actions = new ConcurrentLinkedQueue[QueryExecution]
-    @volatile var write: Option[QueryExecution] = None
+    def write: Option[QueryExecution] =
+      actions.asScala.collect { case ("overwrite", qe) => qe }.lastOption
     def reset(): Unit = {
-      Seq(jobs, stages, tasks).foreach(_.set(0)); stageLines.clear(); actions.clear(); write = None
+      Seq(jobs, stages, tasks).foreach(_.set(0)); stageLines.clear(); actions.clear()
     }
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -276,11 +285,6 @@ object Bench {
       stageLines.add(f"id=${si.stageId}%d wall_ms=$wall%d run_ms=${si.taskMetrics.executorRunTime}%d " +
         f"tasks=${si.numTasks}%d ${si.name.take(60)} ${rdds.take(160)}")
     }
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      actions.add(qe)
-      if (funcName == "overwrite") write = Some(qe)
-    }
-    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
   }
 
   /** Probe mode: runs `names` for `repeats` passes on `spark` with the
@@ -320,7 +324,7 @@ object Bench {
         phase(df.queryExecution, QueryPlanningTracker.ANALYSIS),
         phase(write, QueryPlanningTracker.OPTIMIZATION), phase(write, QueryPlanningTracker.PLANNING),
         exec, l.jobs.get, l.stages.get, l.tasks.get, compiles,
-        l.actions.asScala.map(_.explainString(explainMode).length.toLong).sum)
+        l.actions.asScala.map(_._2.explainString(explainMode).length.toLong).sum)
       println(f"PROBE pass=$pass $name wall_ms=${r.wall}%.1f build_ms=${r.build}%.1f " +
         f"build_jobs=${r.buildJobs} analyze_ms=${r.analyze}%.0f optimize_ms=${r.optimize}%.0f " +
         f"plan_ms=${r.plan}%.0f exec_ms=${r.exec}%.1f jobs=${r.jobs} stages=${r.stages} " +

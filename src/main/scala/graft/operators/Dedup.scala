@@ -5,7 +5,6 @@ import graft.Ops.Q
 import graft.functions.TextOps
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,51 +56,29 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keeper_id"))
 
-  /** The index with each doc's shingle-set size attached as `sz` by a
-    * count window over `id`, so the pairs of a self-join carry their
-    * members' sizes (`sz_a`, `sz_b`) through the join and the pair count
-    * instead of two per-pair lookups after it ([[withPairSizes]]). The
-    * carried form plans fewer stages (dedup_jaccard_pairs 8 jobs instead
-    * of 13), which is what a driver-bound run — small inputs, many rounds
-    * — pays for; it costs an index-sized exchange and sort per join side,
-    * so on executor-bound inputs the lookups are cheaper (sf0.1, 4 cores:
-    * dedup_jaccard_pairs median 4.3 s carried vs 3.8 s looked up). The
-    * window beat the other way to attach sizes, a sizes join back onto
-    * the index, which reads the index four times (sf0.1: dedup_components
-    * 3.4 vs 4.9 s, dedup_jaccard_pairs 3.8 vs 5.6 s). */
-  private def withSizes(index: DataFrame): DataFrame =
-    index.withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
+  /** Per-doc shingle-set sizes. */
+  private def sizes(index: DataFrame): DataFrame =
+    index.groupBy("id").agg(count(lit(1)).as("sz"))
 
-  /** `sz_a`/`sz_b` looked up per pair in per-doc sizes, after the pair
-    * count. Used where the candidate pairs are few (the MinHash-LSH paths:
-    * dedup_minhash_pairs at sf0.1 1.5 s vs 2.3 s with [[withSizes]]) and by
-    * the containment, threshold-sweep and incremental joins, whose
-    * carried-size forms were slower at sf0.1 (3.6 vs 4.4 s, 3.9 vs 4.2 s,
-    * 1.7 vs 1.8 s) and which serve no round-bound entry. */
+  /** `pairs` (id_a, id_b, ...) with both members' shingle-set sizes joined
+    * on as `sz_a`/`sz_b`. Carrying the sizes through the self-join instead
+    * (a count window over `id` on the index) plans 5 fewer jobs in
+    * [[jaccardPairs]] but gave curation_rounds no clear `cpu_s` gain
+    * (median 4.31 vs 4.52 s, each form ahead on 5 of 10 seeds) and was
+    * 10–15% slower on the sf0.1 Jaccard entries, so sizes are looked up. */
   private def withPairSizes(pairs: DataFrame, index: DataFrame): DataFrame = {
-    val sz = index.groupBy("id").agg(count(lit(1)).as("sz"))
+    val sz = sizes(index)
     pairs.join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
   }
 
-  /** One side of a pair join over a [[withSizes]] index: `(id_x, shingle,
-    * sz_x)` for `x` = "a" or "b". */
-  private def side(sized: DataFrame, x: String): DataFrame =
-    sized.select(col("id").as(s"id_$x"), col("shingle"), col("sz").as(s"sz_$x"))
-
   /** Common-shingle count per (id_a < id_b) pair of the inverted-index
-    * self-join, without sizes. */
+    * self-join. */
   private def selfJoinCounts(index: DataFrame): DataFrame =
     index.select(col("id").as("id_a"), col("shingle"))
       .join(index.select(col("id").as("id_b"), col("shingle")), Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-
-  /** Common-shingle count per (id_a, id_b) of joined pair rows that carry
-    * both members' sizes: the sizes are functions of the ids, so grouping
-    * on them as well changes no group. */
-  private def countCommon(pairRows: DataFrame): DataFrame =
-    pairRows.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(count(lit(1)).as("common"))
 
   /** Shared scoring tail: (id_a, id_b, sz_a, sz_b, common) -> thresholded
     * jaccard pairs. */
@@ -112,9 +89,8 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
 
-  /** Exact pairwise Jaccard >= threshold via the inverted index: sizes
-    * attached to the index once ([[withSizes]]), self-join on shingle
-    * (id_a < id_b) carrying `sz_a`/`sz_b`, count common shingles, score.
+  /** Exact pairwise Jaccard >= threshold via the inverted index:
+    * self-join on shingle (id_a < id_b), count common shingles, join sizes.
     * At scale, ultra-common shingles dominate the join — cap with
     * `maxDocFreq` (drops shingles shared by more than that many docs; a
     * shingle that common carries no dedup signal anyway). With a cap, the
@@ -123,27 +99,24 @@ object Dedup {
     * counts with uncapped sizes yields the jaccard of neither set).
     *
     * Cache contract (ADVICE r5): with `maxDocFreq` set, the returned frame
-    * is backed by a persisted capped index (it feeds the sizes and both
-    * self-join sides). The cache lives until the caller releases it — a
-    * long-lived session should `spark.catalog.clearCache()` (or unpersist)
-    * after consuming the result, the same caller-release contract
-    * documented on [[connectedComponents]]; the bench harness does exactly
-    * this between queries. */
+    * is backed by a persisted capped index (it feeds both self-join sides
+    * AND sizes). The cache lives until the caller releases it — a long-lived
+    * session should `spark.catalog.clearCache()` (or unpersist) after
+    * consuming the result, the same caller-release contract documented on
+    * [[connectedComponents]]; the bench harness does exactly this between
+    * queries. */
   def jaccardPairs(index: DataFrame, threshold: Double,
                    maxDocFreq: Option[Int] = None): DataFrame = {
     val idx = maxDocFreq match {
       case Some(cap) =>
         val rare = index.groupBy("shingle").agg(count(lit(1)).as("df"))
           .filter(col("df") <= cap).select("shingle")
-        // the capped index feeds the sizes and both self-join sides:
-        // persist it, or the doc-frequency aggregation + filter-join re-runs
+        // the capped index feeds both self-join sides AND sizes: persist it,
+        // or the doc-frequency aggregation + filter-join re-runs 3x
         index.join(rare, "shingle").persist()
       case None => index
     }
-    val sized = withSizes(idx)
-    val common = countCommon(side(sized, "a").join(side(sized, "b"), Seq("shingle"))
-      .filter(col("id_a") < col("id_b")))
-    scorePairs(common, threshold)
+    scorePairs(withPairSizes(selfJoinCounts(idx), idx), threshold)
   }
 
   /** Prefix-filtered exact-Jaccard join (the PPJoin/All-Pairs principle,
@@ -174,11 +147,11 @@ object Dedup {
     * clears caches between queries). */
   def jaccardPairsPrefix(index: DataFrame, threshold: Double): DataFrame = {
     val docFreq = index.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val w = Window
+    val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("df").asc, col("shingle").asc)
-    val sized = withSizes(index)
-    val prefix = sized.join(docFreq, "shingle")
+    val prefix = index.join(docFreq, "shingle")
       .withColumn("__pos", row_number().over(w))
+      .join(sizes(index), "id")
       .filter(col("__pos") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
       .select("id", "shingle")
       .persist()
@@ -186,9 +159,12 @@ object Dedup {
       .join(prefix.select(col("id").as("id_b"), col("shingle")), Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    val common = countCommon(cand.join(side(sized, "a"), Seq("id_a"))
-      .join(side(sized, "b"), Seq("id_b", "shingle")))
-    scorePairs(common, threshold)
+    val common = cand
+      .join(index.select(col("id").as("id_a"), col("shingle")), Seq("id_a"))
+      .join(index.select(col("id").as("id_b"), col("shingle")),
+        Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
+    scorePairs(withPairSizes(common, index), threshold)
   }
 
   /** Incremental exact-Jaccard dedup: pairs involving at least one NEW doc

@@ -1,13 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graft.PlanBridge
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite (lazy, reused across suites in one JVM).
@@ -35,17 +32,12 @@ trait SparkSpec extends AnyFunSuite {
     * order: the action's name ("count", "localCheckpoint", …) and its
     * [[QueryExecution]], whose plans a test can inspect. */
   def withActions[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
-    val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(funcName -> qe)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
+    val l = new Bench.ActionLog {}
     spark.listenerManager.register(l)
     try {
       val out = body
       PlanBridge.drainListeners(spark)
-      (out, seen.asScala.toSeq)
+      (out, l.actions.asScala.toSeq)
     } finally spark.listenerManager.unregister(l)
   }
 }
