@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Ops.Q
 import graft.Tables
+import graft.operators.IterState
 
 /** Graph analytics over plain DataFrames — the iterative-computation
   * family (connected components lives with the dedup operators,
@@ -37,12 +38,8 @@ object Graph {
     * Scale shape: ranks and edges are hash-partitioned by node key; each
     * iteration is one co-keyed join + map-side-combining aggregate + one
     * left join back onto the node frame (absent keys = no in-edges →
-    * teleport mass only). The edge-ratio frame is persisted once, reused
-    * by every iteration, and released in-function after the result
-    * materializes; N is one count over the node frame. At web-graph scale
-    * you'd localCheckpoint every few iterations to cap lineage exactly as
-    * [[graft.operators.Dedup.connectedComponents]] does — at the graded
-    * iteration budget the planner handles the full lineage. */
+    * teleport mass only). The edge-ratio frame is the cached input of the
+    * [[IterState.fixpoint]] rounds; N is one count over the node frame. */
   def pageRank(edges: DataFrame, damping: Double = 0.85,
                teleport: Double = 0.15, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
@@ -53,32 +50,18 @@ object Graph {
     val er = edges.join(outW, "src")
       .select(col("src"), col("dst"),
         (col("w").cast(DoubleType) / col("__ow").cast(DoubleType)).as("ratio"))
-      .persist()
-    // edge-ratio cache materialized at full width; rank state is
-    // node-sized — derived shuffle width for the power iterations
-    // ([[graft.operators.IterState]], r15 — M·R shuffle-file economics)
-    val erRows = er.count()
-    graft.operators.IterState.withStateShuffle(edges.sparkSession, erRows) {
-      val p0 = nodes.select(col("node"), (lit(1.0) / lit(n)).as("p"))
-      val result = (1 to iters).foldLeft(p0) { (rank, _) =>
-        val contrib = er.join(rank, er("src") === rank("node"))
-          .select(er("dst"),
-            round(col("p") * col("ratio"), 12).cast(DecimalType(32, 12)).as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("s"))
-        nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-          .select(nodes("node"),
-            round(lit(teleport) / lit(n) +
-              lit(damping) * coalesce(col("s").cast(DoubleType), lit(0.0)), 12)
-              .as("p"))
-      }
-      // localCheckpoint, NOT persist+count: releasing the edge cache below
-      // would drop a dependent persist's materialized blocks
-      // (CacheManager.recacheByCondition — see [[bfsLayers]]) and the
-      // caller's first action would re-run every iteration cold
-      val snap = result.localCheckpoint(true)
-      er.unpersist()
-      snap
-    }
+    val p0 = nodes.select(col("node"), (lit(1.0) / lit(n)).as("p"))
+    IterState.fixpoint(er, iters)(_ => p0) { rank =>
+      val contrib = er.join(rank, er("src") === rank("node"))
+        .select(er("dst"),
+          round(col("p") * col("ratio"), 12).cast(DecimalType(32, 12)).as("c"))
+        .groupBy("dst").agg(sum(col("c")).as("s"))
+      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+        .select(nodes("node"),
+          round(lit(teleport) / lit(n) +
+            lit(damping) * coalesce(col("s").cast(DoubleType), lit(0.0)), 12)
+            .as("p"))
+    }(identity)
   }
 
   /** The user-timeline transition graph (`b5_transition_matrix`'s edge
@@ -148,27 +131,19 @@ object Graph {
     * endpoint; closure is an equi-join on the (a, c) pair key. Cost is
     * Σ deg(v)² wedge rows — the standard distributed triangle-count bound;
     * the [[coActivityEdges]] bucket cap keeps degrees bounded upstream. */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    // NOT wrapped in [[graft.operators.IterState.withStateShuffle]] (r15):
-    // the dominant intermediate here is the wedge stream (Σ_b deg² rows),
-    // which is DATA-sized, not state-sized — a paired A/B of the derived
-    // width measured 3.15 → 4.73 s (estimate jobs + reduced aggregate
-    // parallelism), so the session width is the right one. See
-    // OPTIMIZATION_r15.md.
-    val e = edges.select("s1", "s2").persist()
-    val wedges = e.select(col("s1").as("a"), col("s2").as("b"))
-      .join(e.select(col("s1").as("b"), col("s2").as("c")), "b")
-    val tris = wedges.join(e.select(col("s1").as("a"), col("s2").as("c")),
-      Seq("a", "c"))
-    val perCorner = tris.select(explode(array(col("a"), col("b"), col("c")))
-      .as("node"))
-    val out = perCorner.groupBy("node").agg(count(lit(1)).as("n_triangles"))
-      .orderBy("node")
-    // cache-snapshot discipline as on [[pageRank]]
-    val snap = out.localCheckpoint(true)
-    e.unpersist()
-    snap
-  }
+  def triangleCounts(edges: DataFrame): DataFrame =
+    // the session width, not [[IterState.withStateShuffle]] (r15): the
+    // wedge stream (Σ_b deg² rows) is DATA-sized, and a paired A/B of the
+    // derived width measured 3.15 → 4.73 s (OPTIMIZATION_r15.md)
+    IterState.snapshot(edges.select("s1", "s2")) { e =>
+      val wedges = e.select(col("s1").as("a"), col("s2").as("b"))
+        .join(e.select(col("s1").as("b"), col("s2").as("c")), "b")
+      val tris = wedges.join(e.select(col("s1").as("a"), col("s2").as("c")),
+        Seq("a", "c"))
+      tris.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("n_triangles"))
+        .orderBy("node")
+    }
 
   /** Bounded k-core peel: `rounds` synchronous rounds of dropping every
     * node with degree < k, recomputing degrees against the surviving set
@@ -186,40 +161,19 @@ object Graph {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("s1").as("node")).union(e.select(col("s2").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    // Each round is materialized before the next references it (3×):
-    // unpersisted, round r's plan re-derives the upstream edge build 3^r
-    // times — measured 440 s vs ~2 s at sf0.01. Same per-round persist +
-    // release discipline as [[graft.operators.Dedup.connectedComponents]].
-    var cur = edges.select("s1", "s2").persist()
-    var curN = cur.count()
-    // Peel-round state (degrees + surviving edges) is edge-count-sized:
-    // run the rounds at the derived shuffle width
-    // ([[graft.operators.IterState]], r15 — M·R shuffle-file economics).
-    graft.operators.IterState.withStateShuffle(edges.sparkSession, curN) {
-      var r = 0
-      var stable = false
-      while (r < rounds && !stable) {
-        val keep = degrees(cur).filter(col("deg") >= k).select("node")
-        val next = cur
-          .join(keep.withColumnRenamed("node", "s1"), Seq("s1"), "left_semi")
-          .join(keep.withColumnRenamed("node", "s2"), Seq("s2"), "left_semi")
-          .persist()
-        val nextN = next.count()
-        // Fixpoint early-exit is semantics-preserving, not an approximation:
-        // once a peel round removes no edge, every further round is the
-        // identity, so the round budget and the fixpoint agree exactly.
-        stable = nextN == curN
-        cur.unpersist()
-        cur = next
-        curN = nextN
-        r += 1
-      }
-      // cache-snapshot discipline as on [[pageRank]]
-      val snap = degrees(cur).filter(col("deg") >= k).orderBy("node")
-        .localCheckpoint(true)
-      cur.unpersist()
-      snap
+    // The early exit is exact, not an approximation: once a round peels no
+    // edge, every further round is the identity.
+    var kept = 0L
+    val stable = Some { (next: DataFrame) =>
+      val n = next.count()
+      try n == kept finally kept = n
     }
+    val e = edges.select("s1", "s2")
+    IterState.fixpoint(e, rounds, stable) { rows => kept = rows; e } { cur =>
+      val keep = degrees(cur).filter(col("deg") >= k).select("node")
+      cur.join(keep.withColumnRenamed("node", "s1"), Seq("s1"), "left_semi")
+        .join(keep.withColumnRenamed("node", "s2"), Seq("s2"), "left_semi")
+    }(degrees(_).filter(col("deg") >= k).orderBy("node"))
   }
 
   /** Common-neighbor link prediction: for every NON-adjacent pair at
@@ -233,36 +187,31 @@ object Graph {
     * Scale shape: wedge join keyed on the shared neighbor, one pair-count
     * aggregate, an anti-join against the edge list, a broadcast-sized
     * degree join, then TakeOrderedAndProject for the top-k cut. */
-  def linkPrediction(edges: DataFrame, topK: Int = 100): DataFrame = {
-    // NOT wrapped in [[graft.operators.IterState.withStateShuffle]] (r15):
-    // the wedge join emits Σ_mid deg(mid)² rows — DATA-sized. Sizing the
-    // width by |e| ran the final aggregate single-partition for 10.6 s,
-    // and sizing by the exact wedge estimate still measured 5.50 → 9.13 s
-    // paired (estimate jobs + reduced aggregate parallelism). The
-    // session width is the right one here. See OPTIMIZATION_r15.md.
-    val e = edges.select("s1", "s2").persist()
-    val nbrs = e.select(col("s1").as("node"), col("s2").as("nbr"))
-      .union(e.select(col("s2").as("node"), col("s1").as("nbr")))
-    val deg = nbrs.groupBy("node").agg(count(lit(1)).as("deg"))
-    val cand = nbrs.select(col("nbr").as("mid"), col("node").as("a"))
-      .join(nbrs.select(col("nbr").as("mid"), col("node").as("c")), "mid")
-      .filter(col("a") < col("c"))
-      .groupBy("a", "c").agg(count(lit(1)).as("common"))
-      .join(e.select(col("s1").as("a"), col("s2").as("c")), Seq("a", "c"),
-        "left_anti")
-    val out = cand
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("c"), col("deg").as("dc")), "c")
-      .select(col("a"), col("c"), col("common"),
-        round(col("common").cast(DoubleType) /
-          (col("da") + col("dc") - col("common")), 6).as("nbr_jaccard"))
-      .orderBy(col("common").desc, col("nbr_jaccard").desc, col("a"), col("c"))
-      .limit(topK)
-      // cache-snapshot discipline as on [[pageRank]]
-      .localCheckpoint(true)
-    e.unpersist()
-    out
-  }
+  def linkPrediction(edges: DataFrame, topK: Int = 100): DataFrame =
+    // the session width, not [[IterState.withStateShuffle]] (r15): the
+    // wedge join emits Σ_mid deg(mid)² rows, DATA-sized; sizing by |e| ran
+    // the final aggregate single-partition for 10.6 s, and sizing by the
+    // exact wedge estimate measured 5.50 → 9.13 s paired
+    // (OPTIMIZATION_r15.md)
+    IterState.snapshot(edges.select("s1", "s2")) { e =>
+      val nbrs = e.select(col("s1").as("node"), col("s2").as("nbr"))
+        .union(e.select(col("s2").as("node"), col("s1").as("nbr")))
+      val deg = nbrs.groupBy("node").agg(count(lit(1)).as("deg"))
+      val cand = nbrs.select(col("nbr").as("mid"), col("node").as("a"))
+        .join(nbrs.select(col("nbr").as("mid"), col("node").as("c")), "mid")
+        .filter(col("a") < col("c"))
+        .groupBy("a", "c").agg(count(lit(1)).as("common"))
+        .join(e.select(col("s1").as("a"), col("s2").as("c")), Seq("a", "c"),
+          "left_anti")
+      cand
+        .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+        .join(deg.select(col("node").as("c"), col("deg").as("dc")), "c")
+        .select(col("a"), col("c"), col("common"),
+          round(col("common").cast(DoubleType) /
+            (col("da") + col("dc") - col("common")), 6).as("nbr_jaccard"))
+        .orderBy(col("common").desc, col("nbr_jaccard").desc, col("a"), col("c"))
+        .limit(topK)
+    }
 
   /** Synchronous label propagation, `rounds` fixed rounds: every node
     * adopts the most frequent label among its neighbors, smallest label
@@ -282,49 +231,27 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val e = edges.select("s1", "s2")
     val adj = e.select(col("s1").as("node"), col("s2").as("nbr"))
-      .union(e.select(col("s2").as("node"), col("s1").as("nbr"))).persist()
-    // adjacency cache materialized at full width; the per-round vote and
-    // label state is adjacency-sized — derived shuffle width
-    // ([[graft.operators.IterState]], r15 — M·R shuffle-file economics)
-    val adjRows = adj.count()
-    graft.operators.IterState.withStateShuffle(edges.sparkSession, adjRows) {
-      val init = adj.select("node").distinct()
-        .select(col("node"), col("node").as("label"))
-      val result = (1 to rounds).foldLeft(init) { (labels, _) =>
-        adj
-          .join(labels.select(col("node").as("nbr"), col("label")), "nbr")
-          .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
-          // struct max = (max cnt, then min label via negation): the argmin
-          // without a per-node window pass
-          .groupBy("node")
-          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("top"))
-          .select(col("node"), (-col("top.nl")).as("label"))
-      }.orderBy("node")
-        // cache-snapshot discipline as on [[pageRank]]
-        .localCheckpoint(true)
-      adj.unpersist()
-      result
-    }
+      .union(e.select(col("s2").as("node"), col("s1").as("nbr")))
+    IterState.fixpoint(adj, rounds)(_ =>
+      adj.select("node").distinct().select(col("node"), col("node").as("label"))) { labels =>
+      adj
+        .join(labels.select(col("node").as("nbr"), col("label")), "nbr")
+        .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
+        // struct max = (max cnt, then min label via negation): the argmin
+        // without a per-node window pass
+        .groupBy("node")
+        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("top"))
+        .select(col("node"), (-col("top.nl")).as("label"))
+    }(_.orderBy("node"))
   }
-
-  /** Horizon bound below which bounded traversals ([[bfsLayers]],
-    * [[ssspBounded]]) plan as ONE declarative DAG ([[hopFold]]) instead of
-    * one materialized round per hop. Each hop of that DAG reads the
-    * previous hop's state once, so the plan grows by one join and one
-    * aggregate per hop; but it is one job's plan, which AQE re-plans and
-    * re-renders at every stage, and every hop re-expands every visited
-    * node. Past the bound, the classic per-round materialization (one
-    * action per hop, lineage truncated by the persist) is the right
-    * trade. */
-  private val oneShotMaxHops = 5
 
   /** One relax hop over an adjacency `(a, b, …)`: every state row
     * `(node, d)` keeps itself and offers `step` (an expression over `d`
     * and the adjacency columns) to each neighbour `b`; the min per node is
     * the new state. The state is read ONCE (a left join, so nodes without
     * edges, isolated seeds included, keep their distance), so chaining
-    * hops grows the plan linearly. BFS is the step `d + 1`; bounded SSSP
-    * is `round(d + c, 6)`. */
+    * hops grows the plan by one join per hop, and the per-node min absorbs
+    * revisits, so no visited-set anti-join is needed. */
   private def hop(adj: DataFrame, step: Column)(state: DataFrame): DataFrame =
     state.join(adj, col("node") === col("a"), "left")
       .select(explode(array(
@@ -334,91 +261,32 @@ object Graph {
       .filter(col("node").isNotNull)
       .groupBy("node").agg(min(col("d")).as("d"))
 
-  /** `hops` chained [[hop]]s as one lazy plan: after h hops the state holds
-    * every node within h steps of the seeds at its least distance. */
-  private def hopFold(adj: DataFrame, step: Column, start: DataFrame,
-                      hops: Int): DataFrame =
-    (1 to hops).foldLeft(start)((state, _) => hop(adj, step)(state))
+  /** `maxHops` chained [[hop]]s from `(seed, zero)` over the adjacency
+    * `(a, b, …)`, partitioned on the probe key `a` before caching, so
+    * every hop reads the cache co-located and exchanges only the
+    * node-sized state (~1.4× off the traversal, PERF.md r10). No hop ends
+    * in an action: the hops are one lazy plan, cut every
+    * [[IterState.CheckpointEvery]] hops (11.3 s of per-hop scheduler
+    * rounds before, PERF.md r10). After h hops the state holds every node
+    * within h steps of the seeds at its least distance, as `(node, dist)`. */
+  private def relaxHops(adjacency: DataFrame, seeds: DataFrame, zero: Column,
+                        step: Column, maxHops: Int): DataFrame = {
+    require(maxHops >= 1, s"need at least one hop, got $maxHops")
+    val adj = adjacency.repartition(col("a"))
+    IterState.fixpoint(adj, maxHops)(_ => seeds.select(col("node"), zero.as("d")))(
+      hop(adj, step))(_.select(col("node"), col("d").as("dist")))
+  }
 
   /** Multi-source BFS layers over an undirected `(s1 < s2)` edge list:
     * hop distance from the seed set, up to `maxHops` — the reachability /
     * blast-radius query (how far does influence from these accounts
     * spread; which docs sit within k citation hops of a contaminated
     * seed). Set semantics + integer distances => deterministic, no
-    * tie-breaks needed.
-    *
-    * Two plans, same answer (VERDICT r9 item 3):
-    *
-    *   - `maxHops <=` [[oneShotMaxHops]] (the graded and by far the most
-    *     common case — blast-radius queries bound the horizon): ONE
-    *     declarative DAG, zero per-hop actions: the [[hopFold]] with step
-    *     `d + 1`. After h hops the state is every node within h hops at
-    *     its least distance — each hop keeps every known (node, d) and
-    *     offers d + 1 to its neighbours, and the per-node min absorbs
-    *     revisits, so no visited-set anti-join is needed. Each hop reads
-    *     the previous state once, so k hops plan k joins (GraphSpec pins
-    *     it). Collapsing the per-hop persist+count actions into one job
-    *     removes the dominant cost at bench scale — dozens of 32-task
-    *     scheduler rounds on a node-count-sized state frame (measured
-    *     11.3 s → see PERF.md r10).
-    *
-    *   - deeper horizons: textbook frontier expansion, one materialized
-    *     round per hop (equi-join + distinct + anti-join against the
-    *     visited set, persisted per round) — the Pregel BFS shape, where
-    *     visited-set pruning and bounded lineage matter more than
-    *     scheduler latency. At web scale you'd localCheckpoint every few
-    *     hops exactly as [[graft.operators.Dedup.connectedComponents]]
-    *     does. */
-  def bfsLayers(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, s"need at least one hop, got $maxHops")
-    // adjacency pre-partitioned on the probe key BEFORE caching (the
-    // [[graft.operators.Dedup.connectedComponents]] discipline): every
-    // hop's frontier join then reads the cache co-located and exchanges
-    // only the node-sized frontier — measured ~1.4× off the one-shot
-    // traversal on top of the single-job rewrite (PERF.md r10)
-    val adj = edges.select(col("s1").as("a"), col("s2").as("b"))
-      .union(edges.select(col("s2").as("a"), col("s1").as("b")))
-      .repartition(col("a")).persist()
-    // adjacency cache materialized at full width; frontier/visited state
-    // is node-sized — the traversal below runs at the derived shuffle
-    // width ([[graft.operators.IterState]], r15 — M·R shuffle-file
-    // economics)
-    val adjRows = adj.count()
-    graft.operators.IterState.withStateShuffle(edges.sparkSession, adjRows) {
-    val out =
-      if (maxHops <= oneShotMaxHops) {
-        hopFold(adj, col("d") + 1, seeds.select(col("node"), lit(0).as("d")), maxHops)
-          .select(col("node"), col("d").as("dist"))
-      } else {
-        val hop0 = seeds.select(col("node"), lit(0).as("dist")).persist()
-        val (visited, _) = (1 to maxHops).foldLeft((hop0, hop0)) {
-          case ((vis, frontier), h) =>
-            val next = adj.join(frontier.select(col("node").as("a")), "a")
-              .select(col("b").as("node")).distinct()
-              .join(vis.select("node"), Seq("node"), "left_anti")
-              .select(col("node"), lit(h).as("dist"))
-            val v2 = vis.unionByName(next).persist()
-            v2.count() // materialize so the anti join of hop h+1 reads
-                       // state, not a rebuilt lineage
-            (v2, next)
-        }
-        visited.orderBy("node")
-      }
-    // Snapshot the result OFF the operator-internal caches BEFORE
-    // releasing them: Dataset.unpersist is non-cascading for the cache
-    // entry itself but DROPS dependent entries' materialized blocks for
-    // lazy re-cache (CacheManager.recacheByCondition) — with a plain
-    // persist here, the adj release below silently forced the caller's
-    // first action to re-run the whole traversal against cold caches
-    // (measured 5.1 s re-run of a 1,500-row result, PERF.md r10).
-    // localCheckpoint truncates lineage at RDD level, outside the cache
-    // manager's dependency tracking, so the released caches can't take
-    // the result with them.
-    val snap = out.localCheckpoint(true)
-    adj.unpersist()
-    snap
-    } // IterState.withStateShuffle
-  }
+    * tie-breaks needed. [[relaxHops]] with step `d + 1`. */
+  def bfsLayers(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    relaxHops(edges.select(col("s1").as("a"), col("s2").as("b"))
+      .union(edges.select(col("s2").as("a"), col("s1").as("b"))),
+      seeds, lit(0), col("d") + 1, maxHops)
 
   /** Bounded-hop weighted shortest paths (Bellman–Ford relax rounds) from
     * a seed set: the weighted companion of [[bfsLayers]] — "how CLOSE is
@@ -426,51 +294,16 @@ object Graph {
     * inverse tie strength `round(1/w, 6)` (strong co-activity = short
     * distance). Each of the `maxHops` rounds is one edge-keyed join
     * (candidate relaxations) plus one node-keyed min — the Pregel
-    * shortest-path recurrence as plain keyed frames. Candidate distances
-    * re-round to 6 every round, so both engines chain IDENTICAL doubles
-    * and the min is over equal values; a node the bound never reaches is
-    * simply absent (no infinities to compare).
-    *
-    * Like [[bfsLayers]], two plans, same answer (VERDICT r9 item 3): a
-    * bounded horizon `<=` [[oneShotMaxHops]] chains all relax rounds into
-    * ONE declarative DAG — the [[hopFold]] with step `round(d + c, 6)`,
-    * each round reading the previous round's state once, so the whole
-    * traversal is a single job (measured against the per-round form in
-    * PERF.md r10). Deeper horizons run the same [[hop]] but re-persist
-    * (node, dist) state per round and pay one action per hop to keep the
-    * logical plan bounded. Both paths compute the same relax recurrence,
-    * so their doubles are identical. */
+    * shortest-path recurrence as plain keyed frames, [[relaxHops]] with
+    * step `round(d + c, 6)`. Candidate distances re-round to 6 every
+    * round, so both engines chain IDENTICAL doubles and the min is over
+    * equal values; a node the bound never reaches is simply absent (no
+    * infinities to compare). */
   def ssspBounded(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, s"need at least one hop, got $maxHops")
     val cost = round(lit(1.0) / col("w").cast(DoubleType), 6)
-    // adjacency pre-partitioned on the probe key before caching, as in
-    // [[bfsLayers]]
-    val adj = edges.select(col("s1").as("a"), col("s2").as("b"), cost.as("c"))
-      .union(edges.select(col("s2").as("a"), col("s1").as("b"), cost.as("c")))
-      .repartition(col("a")).persist()
-    // derived state shuffle width, as in [[bfsLayers]] (r15)
-    val adjRows = adj.count()
-    graft.operators.IterState.withStateShuffle(edges.sparkSession, adjRows) {
-    val d0 = seeds.select(col("node"), lit(0.0).as("d"))
-    val step = round(col("d") + col("c"), 6)
-    val result =
-      if (maxHops <= oneShotMaxHops) hopFold(adj, step, d0, maxHops)
-      else {
-        (1 to maxHops).foldLeft(d0) { (dist, _) =>
-          val next = hop(adj, step)(dist).persist()
-          next.count() // materialize: round h+1 relaxes state, not lineage
-          if (dist ne d0) dist.unpersist()
-          next
-        }
-      }
-    val out = result.select(col("node"), col("d").as("dist"))
-    // same cache-snapshot discipline as [[bfsLayers]] — see the comment
-    // there for why this must be a localCheckpoint, not a persist
-    val snap = out.localCheckpoint(true)
-    result.unpersist()
-    adj.unpersist()
-    snap
-    } // IterState.withStateShuffle
+    relaxHops(edges.select(col("s1").as("a"), col("s2").as("b"), cost.as("c"))
+      .union(edges.select(col("s2").as("a"), col("s1").as("b"), cost.as("c"))),
+      seeds, lit(0.0), round(col("d") + col("c"), 6), maxHops)
   }
 
   // ---------------------------------------------------------------- entries

@@ -36,10 +36,8 @@ object Curation {
     * materializes it with one `collect` and releases every frame it
     * cached before returning (ADVICE r6 — library callers must not leak
     * cached frames or depend on the harness's suite-wide `clearCache()`).
-    * The one cache this function cannot release is
-    * [[Dedup.connectedComponents]]'s final-round labels frame (it has no
-    * external handle); that operator's scaladoc documents the
-    * clearCache/unpersist contract for long-lived sessions. */
+    * [[Dedup.connectedComponents]] releases its own caches
+    * ([[IterState.fixpoint]]). */
   def curationFunnel(docs: DataFrame, idCol: String, textCol: String,
                      pruneTokenBudget: Long): DataFrame = {
     val spark = docs.sparkSession

@@ -792,9 +792,10 @@ object Dedup {
     * O(graph diameter) rounds. All state is (id, label) pairs — shuffled by
     * id, no adjacency ever collected; the one driver-side value per round is
     * the convergence count. Near-dup graphs have tiny diameter (clusters are
-    * quasi-cliques), so 3-5 rounds settle even at 100 TB.
-    */
-  /** `pathCompression` adds a pointer-jumping step each round (hash-to-min:
+    * quasi-cliques), so 3-5 rounds settle even at 100 TB. The rounds run
+    * under [[IterState.fixpoint]].
+    *
+    * `pathCompression` adds a pointer-jumping step each round (hash-to-min:
     * every node also adopts its LABEL'S label), collapsing chains in
     * O(log diameter) rounds instead of O(diameter) — one extra label-frame
     * self-join per round. Leave it off for near-dup graphs (quasi-cliques
@@ -805,75 +806,53 @@ object Dedup {
     * the fixpoint. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 20,
                           pathCompression: Boolean = false): DataFrame = {
-    // The edge list feeds EVERY propagation round (join + convergence
-    // check): persist it, or each round re-runs the upstream pair
-    // generation — measured 50 s -> 3 s for the graded entry at sf0.01.
-    // Both orientations come from ONE scan of `pairs` (each row explodes
-    // into (a, b) and (b, a)): a union of two `pairs` legs would plan and
-    // run the whole pair generation twice, since the legs differ in their
-    // projections and share no exchange. Partitioned by the probe key
-    // BEFORE caching, so every round's neighbor join reads the cache
-    // co-located and only exchanges the (much smaller) label side — one
-    // shuffle per round instead of two.
+    // Both orientations of the edge cache come from ONE scan of `pairs`
+    // (each row explodes into (a, b) and (b, a)): a union of two `pairs`
+    // legs would plan and run the whole pair generation twice, since the
+    // legs differ in their projections and share no exchange. Partitioned
+    // on the probe key, so each round exchanges only the label side.
     val sym = pairs
       .select(explode(array(
         struct(col("id_a"), col("id_b")),
         struct(col("id_b").as("id_a"), col("id_a").as("id_b")))).as("__e"))
       .select("__e.*")
       .repartition(col("id_b"))
-      .persist()
-    // Materialize the edge cache at the session's FULL shuffle width (the
-    // pair generation upstream is the data-sized, CPU-heavy part — it
-    // keeps its parallelism), and let the measured edge count size the
-    // state shuffles of the loop below ([[IterState]], r15): every round
-    // exchanges node-sized (id, label) frames, and at the session-wide R
-    // each of those exchanges wrote M·R block files — a thread dump
-    // showed ~10 s of CPU per round inside BypassMergeSortShuffleWriter
-    // file opens at bench scale. Derived-from-size, never a constant.
-    val symRows = sym.count()
-    IterState.withStateShuffle(pairs.sparkSession, symRows) {
+    var settled = false
+    val noneChanged = Some { (next: DataFrame) =>
+      settled = next.filter(col("next_label") < col("label")).count() == 0
+      settled
+    }
     // Round 1 folded into initialization: with label(id) = id, the
     // neighbor-min join degenerates to min(id_b) per id_a — one
     // aggregation over the edge cache, no join round spent on it.
-    var cached = sym.groupBy(col("id_a"))
-      .agg(least(col("id_a"), min(col("id_b"))).as("label"))
-      .select(col("id_a").as("id"), col("label")).persist()
-    var labels = cached
-    var converged = false
-    var round = 1
-    while (!converged && round < maxRounds) {
+    IterState.fixpoint(sym, maxRounds - 1, noneChanged)(_ =>
+      sym.groupBy(col("id_a"))
+        .agg(least(col("id_a"), min(col("id_b"))).as("next_label"))
+        .select(col("id_a").as("id"), col("next_label"))) { state =>
+      val labels = state.select(col("id"), col("next_label").as("label"))
       val neighborMin = sym.join(labels, sym("id_b") === labels("id"))
         .groupBy(sym("id_a").as("id")).agg(min(col("label")).as("nlabel"))
       val relaxed = labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("label"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("next_label"))
-      // The pointer-jumping self-join references `relaxed` TWICE. A plain
-      // persist is NOT enough: cache substitution trims the PHYSICAL plan,
-      // but the analyzer still walks the full LOGICAL tree, which would
-      // double per round (2^k nodes by round k — measured as a heap death
-      // by round ~8 on a 300-node chain). localCheckpoint(eager) truncates
-      // the logical lineage itself, so each round's plan is join(scan,
-      // scan) regardless of depth.
-      val next = if (!pathCompression) {
-        val n = relaxed.persist()
-        // ONE action: materializes the new state AND yields the
-        // convergence count (a second isEmpty/count action would double
-        // the per-round scheduler latency, which dominates on shallow
-        // graphs)
-        converged = n.filter(col("next_label") < col("label")).count() == 0
-        n
-      } else {
+      if (!pathCompression) relaxed
+      else {
         // Pointer jumping: follow the tentative label one more hop
         // (label-of-label), so label distances halve per round — one
-        // extra label-frame self-join. The relax result is
-        // localCheckpoint'ed because the jump references it TWICE (lut +
-        // probe); a plain persist trims only the physical plan while the
-        // LOGICAL tree doubles per round (2^k nodes by round k —
-        // measured as a heap death by round ~8 on a 300-node chain).
-        // The lookup side renames BOTH columns so the join condition
-        // never references an attribute present on both sides (the
-        // self-join ambiguity trap: df("c") resolves to the same exprId
-        // on each side).
+        // extra label-frame self-join. The jump references the relax
+        // result TWICE (lut + probe); a plain persist trims only the
+        // physical plan while the LOGICAL tree doubles per round (2^k
+        // nodes by round k — a heap death by round ~8 on a 300-node
+        // chain), so the relax result is localCheckpoint'ed. LAZY (r15,
+        // guide §2.6): the returned frame is a LogicalRDD leaf either
+        // way, but the eager form paid a separate materialization job per
+        // round before the convergence count could start; the two jump
+        // branches may race to fill the checkpoint blocks, which measured
+        // strictly cheaper than the extra job (OPTIMIZATION_r15). The
+        // lookup side renames BOTH columns so the join condition never
+        // references an attribute present on both sides (the self-join
+        // ambiguity trap: df("c") resolves to the same exprId on each
+        // side).
         //
         // r10 notes — two round-cutting variants tried and REJECTED on
         // measurement. (1) Chaining MORE pointer jumps per round: 3
@@ -888,71 +867,24 @@ object Dedup {
         // noise, because the doubled edge-aggregation work per round
         // cancels the scheduler rounds saved. The round count is a
         // property of the input graph; see PERF.md r10.
-        // LAZY localCheckpoint (r15, guide §2.6): the plan-truncation
-        // effect is identical — the returned frame is a LogicalRDD leaf
-        // either way, so the analyzer never sees a doubling tree — but the
-        // eager form paid a SEPARATE materialization job per round before
-        // the count job could start. Lazy defers the checkpoint to the
-        // count action itself: one job barrier per round instead of two.
-        // The two jump branches (lut + probe) may race to fill the
-        // checkpoint blocks, but the relax result's own shuffle outputs
-        // are shared, so the duplicated work is a cache-read race on a
-        // label-frame-sized RDD — measured strictly cheaper than the
-        // extra job (link_entity_clusters 13.2 -> see OPTIMIZATION_r15).
         val jumpBase = relaxed.localCheckpoint(false)
         val lut = jumpBase.select(col("id").as("__lid"),
           col("next_label").as("__llabel"))
-        val j = jumpBase.join(lut, col("next_label") === col("__lid"), "left")
+        jumpBase.join(lut, col("next_label") === col("__lid"), "left")
           .select(col("id"), col("label"),
             least(col("next_label"),
               coalesce(col("__llabel"), col("next_label"))).as("next_label"))
-          .persist()
-        // ONE action: checkpoints the relax state, materializes the jump,
-        // AND yields the convergence count
-        converged = j.filter(col("next_label") < col("label")).count() == 0
-        j
       }
-      cached.unpersist()
-      // Lineage cap (VERDICT r5): each non-compressed round chains one
-      // more join onto the label plan; near-dup graphs converge in 2-3
-      // rounds, but a pathological diameter would grow the lineage
-      // unboundedly (planner time + stack depth). Every 5th round the
-      // materialized state is localCheckpoint'ed — truncates the plan to
-      // a scan of the cached blocks, no recomputation, no behavior
-      // change. (The compression path is already checkpoint-backed.)
-      cached = if (!pathCompression && !converged && round % 5 == 0) {
-        val chk = next.localCheckpoint(true)
-        next.unpersist()
-        chk
-      } else next
-      labels = cached.select(col("id"), col("next_label").as("label"))
-      round += 1
-    }
-    // Wrong labels are worse than a loud failure: an unconverged exit would
-    // silently report one cluster as several. Near-dup graphs are
-    // quasi-cliques (diameter ~1-2); anything deeper than maxRounds is a
-    // pathological input the caller should see.
-    if (!converged) {
-      sym.unpersist()
-      throw new IllegalStateException(
+    } { state =>
+      // Wrong labels are worse than a loud failure: an unconverged exit
+      // would silently report one cluster as several. Near-dup graphs are
+      // quasi-cliques (diameter ~1-2); anything deeper than maxRounds is a
+      // pathological input the caller should see.
+      if (!settled) throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds " +
           "(graph diameter exceeds the round budget — raise maxRounds)")
+      state.select(col("id"), col("next_label").as("label"))
     }
-    // Snapshot the final labels OFF the internal caches before releasing
-    // them (the [[graft.analytics.Graph.bfsLayers]] discipline): on the
-    // non-compression path the final state's plan still references the
-    // edge cache, and releasing `sym` with the labels merely persisted
-    // drops the labels cache's materialized blocks too
-    // (CacheManager.recacheByCondition tracks the dependency through the
-    // propagation join), silently forcing the CALLER's first action to
-    // re-run every converged round against a cold edge cache. (The
-    // compression path's state is already checkpoint-rooted per round,
-    // so it was immune; the snapshot makes both paths uniformly safe.)
-    val snap = labels.localCheckpoint(true)
-    sym.unpersist()
-    cached.unpersist()
-    snap
-    } // IterState.withStateShuffle
   }
 
   // ---------------------------------------------------------------- entries
@@ -1145,11 +1077,14 @@ object Dedup {
     noveltyScore(Tables(s, dir).documents, "doc_id", "text")
       .orderBy("doc_id")
 
+  /** Releases its shingle index once the labels exist, as [[componentsQ]]
+    * does: the keeper map reads the labels' snapshot, not the index. */
   private val canonicalKeepQ: Q = (s, dir) => {
     val d = Tables(s, dir).documents
-    canonicalKeep(d, "doc_id", "text",
-      jaccardPairs(shingleIndex(d, "doc_id", "text").persist(), 0.8))
-      .orderBy("doc_id")
+    val index = shingleIndex(d, "doc_id", "text").persist()
+    val keep = try canonicalKeep(d, "doc_id", "text", jaccardPairs(index, 0.8))
+      finally index.unpersist()
+    keep.orderBy("doc_id")
   }
 
   private val minhashIncrementalQ: Q = (s, dir) =>

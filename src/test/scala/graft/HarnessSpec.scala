@@ -26,4 +26,12 @@ class HarnessSpec extends SparkSpec {
     assert(!spark.sparkContext.isStopped)
     assert(SparkSession.getActiveSession.contains(spark))
   }
+
+  test("the benchmarked curation entries keep their job and stage counts") {
+    // the second pass, so the counts are free of first-run effects; a
+    // change to these counts changes the `curation_rounds` benchmark
+    val records = Bench.probe(spark, sf001, Seq("g6_bfs_layers", "dedup_components"), repeats = 2)
+    val counts = records.filter(_.pass == 2).map(r => r.query -> (r.jobs, r.stages)).toMap
+    assert(counts === Map("g6_bfs_layers" -> ((19, 19)), "dedup_components" -> ((26, 26))))
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.analytics.Graph
+import graft.operators.Dedup
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -24,10 +26,26 @@ class QueryReuseSpec extends SparkSpec {
   }
 
   test("the iterative curation entries leave no cached data behind") {
+    val s = spark
+    import s.implicits._
     spark.catalog.clearCache()
-    for (name <- Seq("dedup_components", "g6_bfs_layers", "g7_sssp_bounded")) {
-      SparkEntry.queries(name)(spark, sf001).collect()
+    val conf = spark.conf.getAll
+    def leavesNothing(name: String)(run: => Any): Unit = {
+      run
       assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cache entry")
+      assert(spark.conf.getAll === conf, s"$name changed the session conf")
     }
+    val path = (1L until 10L).map(i => (i, i + 1, 1L)).toDF("s1", "s2", "w")
+    val seeds = Seq(1L).toDF("node")
+    leavesNothing("bfsLayers, 6 hops")(Graph.bfsLayers(path.select("s1", "s2"), seeds, 6).collect())
+    leavesNothing("ssspBounded, 6 hops")(Graph.ssspBounded(path, seeds, 6).collect())
+    val chain = (1L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    leavesNothing("connectedComponents out of rounds") {
+      intercept[IllegalStateException](Dedup.connectedComponents(chain, maxRounds = 2))
+    }
+    for (name <- Seq("dedup_components", "g6_bfs_layers", "g7_sssp_bounded", "g1_pagerank",
+        "g2_triangle_count", "g3_kcore", "g4_link_prediction", "g5_label_propagation",
+        "dedup_canonical_keep", "link_entity_clusters"))
+      leavesNothing(name)(SparkEntry.queries(name)(spark, sf001).collect())
   }
 }

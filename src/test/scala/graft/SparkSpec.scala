@@ -40,6 +40,9 @@ trait SparkSpec extends AnyFunSuite {
       (out, l.actions.asScala.toSeq)
     } finally spark.listenerManager.unregister(l)
   }
+
+  /** The names of the actions `body` runs, in order. */
+  def actionNames(body: => Any): Seq[String] = withActions(body)._2.map(_._1)
 }
 
 object SparkSpec {

@@ -200,7 +200,7 @@ class GraphSpec extends SparkSpec {
     val (edgeRows, seedIds) = randomGraph
     val edges = edgeRows.toDF("s1", "s2", "w")
     val seeds = seedIds.toDF("node")
-    for (hops <- Seq(3, 6)) { // one-shot fold, then the per-hop frontier
+    for (hops <- Seq(3, 6)) { // one lazy fold, then a fold cut after hop 5
       val bfs = Graph.bfsLayers(edges.select("s1", "s2"), seeds, hops)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(bfs === relaxReference(edgeRows, seedIds, 0, hops)((d, _) => d + 1), s"BFS, $hops hops")
@@ -211,6 +211,31 @@ class GraphSpec extends SparkSpec {
       assert(bfs(999L) === 0 && sssp(999L) === 0.0, "an edgeless seed keeps distance 0")
       assert(bfs.keySet === sssp.keySet && bfs.values.max === hops)
       assert(!bfs.keySet.exists(n => n >= 200L && n <= 204L), "the island stays unreached")
+    }
+  }
+
+  test("each operator runs a fixed action sequence: input count, one count per tested round, snapshot") {
+    val s = spark
+    import s.implicits._
+    val (cnt, chk) = ("count", "localCheckpoint")
+    assert(actionNames(Graph.pageRank(edges(
+      ("A", "B", 3L), ("A", "C", 1L), ("B", "A", 1L), ("C", "A", 1L)))) === Seq(cnt, cnt, chk))
+    assert(actionNames(Graph.triangleCounts(uedges((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)))) ===
+      Seq(chk))
+    val peel = uedges((1, 2), (2, 3), (1, 3), (3, 4), (4, 5))
+    // peels 5, then 4, then a round that peels nothing ends the loop early
+    assert(actionNames(Graph.kCore(peel, k = 2, rounds = 4)) === Seq(cnt, cnt, cnt, cnt, chk))
+    assert(actionNames(Graph.kCore(peel, k = 2, rounds = 1)) === Seq(cnt, cnt, chk))
+    assert(actionNames(Graph.linkPrediction(uedges((1, 2), (1, 3), (1, 4), (2, 3)))) === Seq(chk))
+    assert(actionNames(Graph.labelPropagation(
+      uedges((1, 2), (2, 3), (1, 3), (7, 8), (8, 9), (7, 9)), rounds = 3)) === Seq(cnt, chk))
+    val path = Seq((1L, 2L, 1L), (2L, 3L, 4L), (3L, 4L, 4L), (4L, 5L, 2L), (2L, 6L, 1L),
+      (8L, 9L, 1L)).toDF("s1", "s2", "w")
+    val seeds = Seq(1L).toDF("node")
+    // no hop ends in an action; a 6-hop fold is cut once, after hop 5
+    for ((hops, expected) <- Seq(3 -> Seq(cnt, chk), 6 -> Seq(cnt, chk, chk))) {
+      assert(actionNames(Graph.bfsLayers(path.select("s1", "s2"), seeds, hops)) === expected, s"BFS, $hops hops")
+      assert(actionNames(Graph.ssspBounded(path, seeds, hops)) === expected, s"SSSP, $hops hops")
     }
   }
 

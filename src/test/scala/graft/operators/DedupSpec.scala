@@ -29,6 +29,26 @@ class DedupSpec extends SparkSpec {
       edgeCache.cacheBuilder.logicalPlan.treeString)
   }
 
+  test("connectedComponents runs a fixed action sequence on both paths") {
+    val (cnt, chk) = ("count", "localCheckpoint")
+    val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
+    // the edge cache's count, one convergence count per round, the snapshot
+    assert(actionNames(Dedup.connectedComponents(pairs)) === Seq(cnt, cnt, cnt, cnt, chk))
+    // each compressed round adds the relax state's lazy checkpoint
+    assert(actionNames(Dedup.connectedComponents(pairs, pathCompression = true)) ===
+      Seq(cnt, chk, cnt, chk, cnt, chk))
+    // 13 rounds on a 14-node path: the state is cut after rounds 5 and 10
+    val path = (1L until 14L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    assert(actionNames(Dedup.connectedComponents(path)) ===
+      Seq.fill(6)(cnt) ++ Seq(chk) ++ Seq.fill(5)(cnt) ++ Seq(chk) ++ Seq.fill(3)(cnt) ++ Seq(chk))
+    // a compressed state reads only checkpoints: past round 5 it is not cut again
+    val long = (1L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val compressed = actionNames(Dedup.connectedComponents(long, pathCompression = true))
+    val rounds = compressed.count(_ == cnt) - 1
+    assert(rounds > 5 && compressed === Seq(cnt) ++ Seq.fill(rounds)(Seq(chk, cnt)).flatten ++ Seq(chk),
+      compressed)
+  }
+
   test("jaccardPairs equals brute-force pairwise jaccard on a random corpus") {
     // 6-word vocabulary so trigrams collide; docs of 1-12 tokens (the short
     // ones have no shingles), exact copies and one-token edits of earlier docs

@@ -3,15 +3,26 @@
 correctness gate. Run graft.Verify first, then this script compares each
 dumped parquet result against the DuckDB oracle on the same tables.
 
-Usage: python3 tools/check_correctness.py [sfDir] [outDir]
+Usage: python3 tools/check_correctness.py [sfDir] [outDir] [nameRegex]
+
+nameRegex (optional) checks only the dumped queries whose name it matches
+(re.search), e.g. '^(g|dedup_|link_)' or '^g3_kcore$'.
+
+DuckDB is capped at 4 GB of memory and spills to target/duckdb_tmp, so a
+large oracle (g3_kcore's four-round self-join) pages to disk instead of
+running out of memory on a shared host.
 """
-import sys, glob, os, json
+import sys, glob, os, json, re
 import duckdb
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+only = re.compile(sys.argv[3]) if len(sys.argv) > 3 else None
 
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 con = duckdb.connect()
+con.execute("SET memory_limit = '4GB'")
+con.execute(f"SET temp_directory = '{os.path.join(repo, 'target', 'duckdb_tmp')}'")
 for p in glob.glob(f"{sf}/*.parquet"):
     name = os.path.basename(p)[:-len(".parquet")]
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
@@ -20,6 +31,8 @@ oracle = json.load(open(f"{out}/oracle_sql.json"))
 results = {}
 for qdir in sorted(glob.glob(f"{out}/*/")):
     name = os.path.basename(qdir.rstrip("/"))
+    if only and not only.search(name):
+        continue
     files = glob.glob(f"{qdir}/*.parquet")
     if not files:
         results[name] = "NO_OUTPUT"
