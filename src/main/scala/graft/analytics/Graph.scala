@@ -38,8 +38,9 @@ object Graph {
     * Scale shape: ranks and edges are hash-partitioned by node key; each
     * iteration is one co-keyed join + map-side-combining aggregate + one
     * left join back onto the node frame (absent keys = no in-edges →
-    * teleport mass only). The edge-ratio frame is the cached input of the
-    * [[IterState.fixpoint]] rounds; N is one count over the node frame. */
+    * teleport mass only). The edge-ratio frame is the checkpointed input
+    * of the [[IterState.fixpoint]] rounds; N is one count over the node
+    * frame. */
   def pageRank(edges: DataFrame, damping: Double = 0.85,
                teleport: Double = 0.15, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
@@ -51,9 +52,9 @@ object Graph {
       .select(col("src"), col("dst"),
         (col("w").cast(DoubleType) / col("__ow").cast(DoubleType)).as("ratio"))
     val p0 = nodes.select(col("node"), (lit(1.0) / lit(n)).as("p"))
-    IterState.fixpoint(er, iters)(_ => p0) { rank =>
-      val contrib = er.join(rank, er("src") === rank("node"))
-        .select(er("dst"),
+    IterState.fixpoint(er, iters)((_, _) => p0) { (ratios, rank) =>
+      val contrib = ratios.join(rank, ratios("src") === rank("node"))
+        .select(ratios("dst"),
           round(col("p") * col("ratio"), 12).cast(DecimalType(32, 12)).as("c"))
         .groupBy("dst").agg(sum(col("c")).as("s"))
       nodes.join(contrib, nodes("node") === contrib("dst"), "left")
@@ -135,7 +136,7 @@ object Graph {
     // the session width, not [[IterState.withStateShuffle]] (r15): the
     // wedge stream (Σ_b deg² rows) is DATA-sized, and a paired A/B of the
     // derived width measured 3.15 → 4.73 s (OPTIMIZATION_r15.md)
-    IterState.snapshot(edges.select("s1", "s2")) { e =>
+    IterState.snapshotCached(edges.select("s1", "s2")) { e =>
       val wedges = e.select(col("s1").as("a"), col("s2").as("b"))
         .join(e.select(col("s1").as("b"), col("s2").as("c")), "b")
       val tris = wedges.join(e.select(col("s1").as("a"), col("s2").as("c")),
@@ -169,7 +170,7 @@ object Graph {
       try n == kept finally kept = n
     }
     val e = edges.select("s1", "s2")
-    IterState.fixpoint(e, rounds, stable) { rows => kept = rows; e } { cur =>
+    IterState.fixpoint(e, rounds, stable) { (in, rows) => kept = rows; in } { (_, cur) =>
       val keep = degrees(cur).filter(col("deg") >= k).select("node")
       cur.join(keep.withColumnRenamed("node", "s1"), Seq("s1"), "left_semi")
         .join(keep.withColumnRenamed("node", "s2"), Seq("s2"), "left_semi")
@@ -193,9 +194,8 @@ object Graph {
     // the final aggregate single-partition for 10.6 s, and sizing by the
     // exact wedge estimate measured 5.50 → 9.13 s paired
     // (OPTIMIZATION_r15.md)
-    IterState.snapshot(edges.select("s1", "s2")) { e =>
-      val nbrs = e.select(col("s1").as("node"), col("s2").as("nbr"))
-        .union(e.select(col("s2").as("node"), col("s1").as("nbr")))
+    IterState.snapshotCached(edges.select("s1", "s2")) { e =>
+      val nbrs = IterState.symmetric(e, "s1", "s2").toDF("node", "nbr")
       val deg = nbrs.groupBy("node").agg(count(lit(1)).as("deg"))
       val cand = nbrs.select(col("nbr").as("mid"), col("node").as("a"))
         .join(nbrs.select(col("nbr").as("mid"), col("node").as("c")), "mid")
@@ -229,12 +229,9 @@ object Graph {
     * backfill join is needed, which saves a nodes-distinct re-aggregate
     * and a left join per round (6.6 → 3.5 s at sf0.1, PERF.md r10). */
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
-    val e = edges.select("s1", "s2")
-    val adj = e.select(col("s1").as("node"), col("s2").as("nbr"))
-      .union(e.select(col("s2").as("node"), col("s1").as("nbr")))
-    IterState.fixpoint(adj, rounds)(_ =>
-      adj.select("node").distinct().select(col("node"), col("node").as("label"))) { labels =>
-      adj
+    IterState.fixpoint(IterState.symmetric(edges, "s1", "s2").toDF("node", "nbr"), rounds)(
+      (adj, _) => adj.select("node").distinct().select(col("node"), col("node").as("label"))) {
+      (adj, labels) => adj
         .join(labels.select(col("node").as("nbr"), col("label")), "nbr")
         .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
         // struct max = (max cnt, then min label via negation): the argmin
@@ -245,36 +242,21 @@ object Graph {
     }(_.orderBy("node"))
   }
 
-  /** One relax hop over an adjacency `(a, b, …)`: every state row
-    * `(node, d)` keeps itself and offers `step` (an expression over `d`
-    * and the adjacency columns) to each neighbour `b`; the min per node is
-    * the new state. The state is read ONCE (a left join, so nodes without
-    * edges, isolated seeds included, keep their distance), so chaining
-    * hops grows the plan by one join per hop, and the per-node min absorbs
-    * revisits, so no visited-set anti-join is needed. */
-  private def hop(adj: DataFrame, step: Column)(state: DataFrame): DataFrame =
-    state.join(adj, col("node") === col("a"), "left")
-      .select(explode(array(
-        struct(col("node"), col("d")),
-        struct(col("b").as("node"), step.as("d")))).as("__e"))
-      .select("__e.*")
-      .filter(col("node").isNotNull)
-      .groupBy("node").agg(min(col("d")).as("d"))
-
-  /** `maxHops` chained [[hop]]s from `(seed, zero)` over the adjacency
-    * `(a, b, …)`, partitioned on the probe key `a` before caching, so
-    * every hop reads the cache co-located and exchanges only the
-    * node-sized state (~1.4× off the traversal, PERF.md r10). No hop ends
-    * in an action: the hops are one lazy plan, cut every
-    * [[IterState.CheckpointEvery]] hops (11.3 s of per-hop scheduler
+  /** `maxHops` chained [[IterState.hop]]s from `(seed, zero)` over the
+    * adjacency `(a, b, …)`, partitioned on the probe key `a` before the
+    * driver checkpoints it, so every hop reads the checkpoint co-located
+    * and exchanges only the node-sized state (~1.4× off the traversal,
+    * PERF.md r10). `seeds` draws the seed frame `(node)` from that
+    * checkpoint. No hop ends in an action: the hops are one lazy plan, cut
+    * every [[IterState.CheckpointEvery]] hops (11.3 s of per-hop scheduler
     * rounds before, PERF.md r10). After h hops the state holds every node
     * within h steps of the seeds at its least distance, as `(node, dist)`. */
-  private def relaxHops(adjacency: DataFrame, seeds: DataFrame, zero: Column,
+  private def relaxHops(adjacency: DataFrame, seeds: DataFrame => DataFrame, zero: Column,
                         step: Column, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"need at least one hop, got $maxHops")
-    val adj = adjacency.repartition(col("a"))
-    IterState.fixpoint(adj, maxHops)(_ => seeds.select(col("node"), zero.as("d")))(
-      hop(adj, step))(_.select(col("node"), col("d").as("dist")))
+    IterState.fixpoint(adjacency.repartition(col("a")), maxHops)(
+      (adj, _) => seeds(adj).select(col("node"), zero.as("d")))(
+      IterState.hop(_, step)(_))(_.select(col("node"), col("d").as("dist")))
   }
 
   /** Multi-source BFS layers over an undirected `(s1 < s2)` edge list:
@@ -284,9 +266,11 @@ object Graph {
     * seed). Set semantics + integer distances => deterministic, no
     * tie-breaks needed. [[relaxHops]] with step `d + 1`. */
   def bfsLayers(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
-    relaxHops(edges.select(col("s1").as("a"), col("s2").as("b"))
-      .union(edges.select(col("s2").as("a"), col("s1").as("b"))),
-      seeds, lit(0), col("d") + 1, maxHops)
+    bfsFrom(edges, _ => seeds, maxHops)
+
+  private def bfsFrom(edges: DataFrame, seeds: DataFrame => DataFrame,
+                      maxHops: Int): DataFrame =
+    relaxHops(IterState.symmetric(edges, "s1", "s2"), seeds, lit(0), col("d") + 1, maxHops)
 
   /** Bounded-hop weighted shortest paths (Bellman–Ford relax rounds) from
     * a seed set: the weighted companion of [[bfsLayers]] — "how CLOSE is
@@ -299,12 +283,14 @@ object Graph {
     * round, so both engines chain IDENTICAL doubles and the min is over
     * equal values; a node the bound never reaches is simply absent (no
     * infinities to compare). */
-  def ssspBounded(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val cost = round(lit(1.0) / col("w").cast(DoubleType), 6)
-    relaxHops(edges.select(col("s1").as("a"), col("s2").as("b"), cost.as("c"))
-      .union(edges.select(col("s2").as("a"), col("s1").as("b"), cost.as("c"))),
+  def ssspBounded(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    ssspFrom(edges, _ => seeds, maxHops)
+
+  private def ssspFrom(edges: DataFrame, seeds: DataFrame => DataFrame,
+                       maxHops: Int): DataFrame =
+    relaxHops(IterState.symmetric(edges, "s1", "s2",
+        round(lit(1.0) / col("w").cast(DoubleType), 6).as("c")),
       seeds, lit(0.0), round(col("d") + col("c"), 6), maxHops)
-  }
 
   // ---------------------------------------------------------------- entries
 
@@ -326,39 +312,19 @@ object Graph {
   private val lpaQ: Q = (s, dir) =>
     labelPropagation(coActivityEdges(Tables(s, dir).events), rounds = 3)
 
-  /** Seeds = the 5 lowest node ids in the edge list (deterministic).
-    *
-    * `edges.count()` after the persist is load-bearing, not a debug
-    * leftover: the edge frame feeds FOUR scan legs downstream (two
-    * adjacency union legs + two seed union legs), and if the first
-    * traversal job runs against a cold cache those legs race to fill the
-    * same partitions and each re-runs the expensive pair-join lineage —
-    * measured ~2× the whole entry (11 s vs 5.5 s, PERF.md r10).
-    * Materializing the cache in its own (cheap, edge-count-sized) action
-    * first makes every later leg a cache read. */
-  private val bfsQ: Q = (s, dir) => {
-    val edges = coActivityEdges(Tables(s, dir).events).persist()
-    edges.count()
-    val seeds = edges.select(col("s1").as("node"))
-      .union(edges.select(col("s2").as("node")))
-      .distinct().orderBy("node").limit(5)
-    val out = bfsLayers(edges, seeds, maxHops = 3)
-    edges.unpersist()
-    out.orderBy("dist", "node")
-  }
+  /** Seeds = the 5 lowest node ids in the edge list (deterministic),
+    * read from the adjacency checkpoint, so the edge build runs once. */
+  private def lowestNodes(adj: DataFrame): DataFrame =
+    adj.select(col("a").as("node")).distinct().orderBy("node").limit(5)
 
-  /** Same 5-lowest-id seed set as [[bfsQ]]; 3 relax rounds; same
-    * load-bearing edge-cache materialization (see [[bfsQ]]). */
-  private val ssspQ: Q = (s, dir) => {
-    val edges = coActivityEdges(Tables(s, dir).events).persist()
-    edges.count()
-    val seeds = edges.select(col("s1").as("node"))
-      .union(edges.select(col("s2").as("node")))
-      .distinct().orderBy("node").limit(5)
-    val out = ssspBounded(edges, seeds, maxHops = 3)
-    edges.unpersist()
-    out.orderBy("node")
-  }
+  private val bfsQ: Q = (s, dir) =>
+    bfsFrom(coActivityEdges(Tables(s, dir).events), lowestNodes, maxHops = 3)
+      .orderBy("dist", "node")
+
+  /** Same 5-lowest-id seed set as [[bfsQ]]; 3 relax rounds. */
+  private val ssspQ: Q = (s, dir) =>
+    ssspFrom(coActivityEdges(Tables(s, dir).events), lowestNodes, maxHops = 3)
+      .orderBy("node")
 
   val entries: Map[String, Q] = Map(
     "g7_sssp_bounded" -> ssspQ,

@@ -119,13 +119,12 @@ object Main {
           val threshold = opt.getOrElse("threshold", "0.8").toDouble
           val docs = Tables(spark, input).documents
           val pairs = graft.operators.Dedup
-            .minhashDedupPairs(docs, "doc_id", "text", threshold).persist()
+            .minhashDedupPairs(docs, "doc_id", "text", threshold)
           pairs.write.mode("overwrite").parquet(s"$out/pairs")
           val labels = graft.operators.Dedup.connectedComponents(pairs)
           labels.write.mode("overwrite").parquet(s"$out/clusters")
           val nPairs = pairs.count()
           val nClustered = labels.count()
-          pairs.unpersist()
           println(s"[graft] dedup threshold=$threshold pairs=$nPairs " +
             s"clustered_docs=$nClustered -> $out")
 

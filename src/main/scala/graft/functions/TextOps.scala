@@ -916,16 +916,12 @@ object TextOps {
     * RangePartitioner samples with a fixed per-partition seed over a
     * deterministic scan, so both branches see identical boundaries, and
     * within a range partition the window's sort fixes the order. A narrow
-    * persist() would trade the second scan for ~24 bytes/row of cache —
-    * worth it only when the value projection is expensive. */
+    * checkpoint of the input would trade the second scan for ~24 bytes/row
+    * — worth it only when the value projection is expensive
+    * ([[qualityPrune]]). */
   private def withGlobalStart(t: DataFrame, orderCols: Seq[Column],
-                              valCol: String,
-                              cacheInput: Boolean = false): DataFrame = {
-    // cacheInput: the local and prefix branches each evaluate `t`; when its
-    // value projection is expensive (qualityPrune's per-token vocab probe),
-    // caching halves the work. Caller releases via clearCache().
-    val in = if (cacheInput) t.persist() else t
-    val byRange = in.repartitionByRange(orderCols: _*)
+                              valCol: String): DataFrame = {
+    val byRange = t.repartitionByRange(orderCols: _*)
       .withColumn("__pid", spark_partition_id())
     val localW = org.apache.spark.sql.expressions.Window
       .partitionBy("__pid").orderBy(orderCols: _*)
@@ -949,17 +945,22 @@ object TextOps {
     * [[seqPack]]/[[mixBudget]] convention). Unlike a threshold filter,
     * this yields an exact token-mass target regardless of the score
     * distribution. Same distributed prefix-sum shape as [[seqPack]], just
-    * ordered by (quality desc, id) instead of id. */
+    * ordered by (quality desc, id) instead of id.
+    *
+    * The prefix sum's two branches each read the scored frame, whose
+    * per-token vocabulary probe is the expensive part, so the scores are
+    * one checkpoint and the kept docs a snapshot
+    * ([[graft.operators.IterState.snapshot]]); nothing stays cached. */
   def qualityPrune(docs: DataFrame, idCol: String, textCol: String,
                    tokenBudget: Long): DataFrame = {
     require(tokenBudget > 0, s"token budget must be positive, got $tokenBudget")
-    val t = docs.select(col(idCol).as("doc_id"),
+    graft.operators.IterState.snapshot(docs.select(col(idCol).as("doc_id"),
       tokenCount(col(textCol)).cast(LongType).as("n_tokens"),
-      compositeQuality(col(textCol)).as("quality"))
-    withGlobalStart(t, Seq(col("quality").desc, col("doc_id")), "n_tokens",
-        cacheInput = true)
-      .filter(col("__start") < tokenBudget)
-      .select("doc_id", "quality", "n_tokens")
+      compositeQuality(col(textCol)).as("quality"))) { t =>
+      withGlobalStart(t, Seq(col("quality").desc, col("doc_id")), "n_tokens")
+        .filter(col("__start") < tokenBudget)
+        .select("doc_id", "quality", "n_tokens")
+    }
   }
 
   /** Default training-sequence token budget for the graded entry. */

@@ -36,16 +36,18 @@ object Curation {
     * materializes it with one `collect` and releases every frame it
     * cached before returning (ADVICE r6 — library callers must not leak
     * cached frames or depend on the harness's suite-wide `clearCache()`).
-    * [[Dedup.connectedComponents]] releases its own caches
-    * ([[IterState.fixpoint]]). */
+    * The shingle index is built and released by [[Dedup.withIndex]],
+    * [[Dedup.connectedComponents]] releases its own checkpoints
+    * ([[IterState.fixpoint]]), and the prune's snapshot is released once
+    * the card is collected, with the labels snapshot the drop set reads. */
   def curationFunnel(docs: DataFrame, idCol: String, textCol: String,
                      pruneTokenBudget: Long): DataFrame = {
     val spark = docs.sparkSession
     val d0 = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // Each survivor frame feeds several consumers (the next stage's joins,
     // its own stage aggregate, and — for d1 — the shingle index AND the
-    // keeper-length lookup), so d1/d2 and the index persist; all three are
-    // unpersisted below once the funnel rows are materialized.
+    // keeper-length lookup), so d1/d2 persist; both are unpersisted below
+    // once the funnel rows are materialized.
     // Stage 1: exact dedup, keep the smallest id per content hash.
     val d1 = d0.join(
       Dedup.exactGroups(d0, "doc_id", "text")
@@ -61,9 +63,8 @@ object Curation {
     // survivor filter is a broadcast ANTI join (the corpus never shuffles
     // for it; the full canonicalKeep redirect map would cost two
     // corpus-wide left joins the funnel doesn't need).
-    val idx = Dedup.shingleIndex(d1, "doc_id", "text").persist()
-    val drop = Dedup.canonicalDropIds(d1, "doc_id", "text",
-      Dedup.jaccardPairs(idx, 0.8))
+    val drop = Dedup.withIndex(d1)(idx =>
+      Dedup.canonicalDropIds(d1, "doc_id", "text", Dedup.jaccardPairs(idx, 0.8)))
     val d2 = d1.join(broadcast(drop), Seq("doc_id"), "left_anti").persist()
     d2.count()
     // stage 3: best-first quality prune to the token budget
@@ -83,7 +84,7 @@ object Curation {
     // Materialize the 4-row card, then release this function's caches.
     val rows = funnel.collect()
     val schema = funnel.schema
-    idx.unpersist(); d1.unpersist(); d2.unpersist()
+    d1.unpersist(); d2.unpersist(); IterState.release(funnel)
     spark.createDataFrame(spark.sparkContext.parallelize(
       rows.toIndexedSeq, 1), schema)
   }

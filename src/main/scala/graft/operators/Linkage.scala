@@ -246,7 +246,7 @@ object Linkage {
   /** Entity clusters over the match graph: candidate pairs whose two sides
     * differ link records into one real-world entity; min-label connected
     * components (the same [[Dedup.connectedComponents]] propagation the
-    * dedup clusters use — (id, label) state, edge cache pre-partitioned on
+    * dedup clusters use — (id, label) state, edge checkpoint partitioned on
     * the probe key) collapse transitive chains A~B~C into one entity id.
     * This is the step that turns pairwise linkage into a deduplicated
     * entity table; survivorship policy on top is [[Dedup.canonicalKeep]]'s

@@ -1527,10 +1527,9 @@ object Similarity {
   /** Online-retrieval shape, GRADED: the corpus (vec_id >= 20) index is
     * persisted once; a batch of NEW queries (vec_id < 10, disjoint from the
     * corpus) probes it, and the probe result is graded against the exact
-    * twin over the SAME corpus slice. Cache contract as
-    * minhashIncrementalPairs: caller releases with clearCache() after
-    * consuming. The 0.95 floor is the OR-amplification parameter contract
-    * pinned in SimilaritySpec. */
+    * twin over the SAME corpus slice. Cache contract: the caller releases
+    * with clearCache() after consuming. The 0.95 floor is the
+    * OR-amplification parameter contract pinned in SimilaritySpec. */
   private val lshIncrementalQ: Q = (s, dir) => {
     val e = Tables(s, dir).embeddings
     val corpus = e.filter(col("vec_id") >= 20)

@@ -189,7 +189,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("incremental jaccard candidates shuffle once — no (pair, shingle) distinct exchange") {
-    val p = plan("dedup_jaccard_incremental")
+    // the pairs are the snapshot Dedup.withIndex takes, so the candidate
+    // stream runs in that action's plan, not in the query's own
+    val p = withActions(SparkEntry.queries("dedup_jaccard_incremental")(spark, sf001))._2
+      .collect { case ("localCheckpoint", qe) => qe }.last
+      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // the orientation filter makes every (pair, shingle) row unique by
     // construction, so the only candidate-stream Exchange is the pair count;
     // a 3-column (id_a, id_b, shingle) partitioning means the distinct is back

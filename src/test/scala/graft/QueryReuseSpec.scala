@@ -3,6 +3,8 @@ package graft
 import graft.analytics.Graph
 import graft.operators.Dedup
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
 
 /** What a repeated query may and may not reuse from the queries before it:
@@ -30,22 +32,39 @@ class QueryReuseSpec extends SparkSpec {
     import s.implicits._
     spark.catalog.clearCache()
     val conf = spark.conf.getAll
+    // Checkpoints live outside the cache manager: every RDD a call leaves
+    // persisted must be a checkpoint its returned frame reads (the snapshot)
     def leavesNothing(name: String)(run: => Any): Unit = {
-      run
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val kept = run match {
+        case df: DataFrame =>
+          df.collect()
+          df.queryExecution.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd.id }.toSet
+        case _ => Set.empty[Int]
+      }
       assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cache entry")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before -- kept
+      assert(left.isEmpty, s"$name left persisted RDDs ${left.toSeq.sorted}")
       assert(spark.conf.getAll === conf, s"$name changed the session conf")
     }
     val path = (1L until 10L).map(i => (i, i + 1, 1L)).toDF("s1", "s2", "w")
     val seeds = Seq(1L).toDF("node")
-    leavesNothing("bfsLayers, 6 hops")(Graph.bfsLayers(path.select("s1", "s2"), seeds, 6).collect())
-    leavesNothing("ssspBounded, 6 hops")(Graph.ssspBounded(path, seeds, 6).collect())
+    leavesNothing("bfsLayers, 6 hops")(Graph.bfsLayers(path.select("s1", "s2"), seeds, 6))
+    leavesNothing("ssspBounded, 6 hops")(Graph.ssspBounded(path, seeds, 6))
+    leavesNothing("triangleCounts")(Graph.triangleCounts(path.select("s1", "s2")))
     val chain = (1L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    leavesNothing("connectedComponents, cut after rounds 5 and 10")(
+      Dedup.connectedComponents(chain.filter(col("id_a") < 14)))
+    leavesNothing("connectedComponents, compressed")(
+      Dedup.connectedComponents(chain, pathCompression = true))
     leavesNothing("connectedComponents out of rounds") {
       intercept[IllegalStateException](Dedup.connectedComponents(chain, maxRounds = 2))
     }
     for (name <- Seq("dedup_components", "g6_bfs_layers", "g7_sssp_bounded", "g1_pagerank",
         "g2_triangle_count", "g3_kcore", "g4_link_prediction", "g5_label_propagation",
-        "dedup_canonical_keep", "link_entity_clusters"))
-      leavesNothing(name)(SparkEntry.queries(name)(spark, sf001).collect())
+        "dedup_canonical_keep", "link_entity_clusters", "dedup_jaccard_pairs",
+        "dedup_jaccard_prefix", "dedup_jaccard_capped", "dedup_cluster_stats",
+        "dedup_containment", "dedup_threshold_sweep", "pipeline_corpus_curation"))
+      leavesNothing(name)(SparkEntry.queries(name)(spark, sf001))
   }
 }

@@ -3,7 +3,6 @@ package graft.operators
 import scala.math.BigDecimal.RoundingMode
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -22,30 +21,31 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
     val (labels, actions) = withActions(Dedup.connectedComponents(pairs))
     assert(labels.count() === 5)
-    // the first action is the edge cache's materializing count
-    val build = actions.collectFirst { case ("count", qe) => qe }.get
-    val edgeCache = build.optimizedPlan.collectFirst { case r: InMemoryRelation => r }.get
-    assert(edgeCache.cacheBuilder.logicalPlan.collectLeaves().size === 1,
-      edgeCache.cacheBuilder.logicalPlan.treeString)
+    // the first action is the edge checkpoint
+    val (name, build) = actions.head
+    assert(name === "localCheckpoint")
+    assert(build.analyzed.collectLeaves().size === 1, build.analyzed.treeString)
   }
 
   test("connectedComponents runs a fixed action sequence on both paths") {
     val (cnt, chk) = ("count", "localCheckpoint")
     val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-    // the edge cache's count, one convergence count per round, the snapshot
-    assert(actionNames(Dedup.connectedComponents(pairs)) === Seq(cnt, cnt, cnt, cnt, chk))
+    // the edge checkpoint, one convergence count per round, the snapshot
+    assert(actionNames(Dedup.connectedComponents(pairs)) === Seq(chk, cnt, cnt, cnt, chk))
     // each compressed round adds the relax state's lazy checkpoint
     assert(actionNames(Dedup.connectedComponents(pairs, pathCompression = true)) ===
-      Seq(cnt, chk, cnt, chk, cnt, chk))
-    // 13 rounds on a 14-node path: the state is cut after rounds 5 and 10
+      Seq(chk, chk, cnt, chk, cnt, chk))
+    // 13 rounds on a 14-node path: a state that reads the edge checkpoint
+    // is still cut, after rounds 5 and 10
     val path = (1L until 14L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     assert(actionNames(Dedup.connectedComponents(path)) ===
-      Seq.fill(6)(cnt) ++ Seq(chk) ++ Seq.fill(5)(cnt) ++ Seq(chk) ++ Seq.fill(3)(cnt) ++ Seq(chk))
-    // a compressed state reads only checkpoints: past round 5 it is not cut again
+      Seq(chk) ++ Seq.fill(5)(cnt) ++ Seq(chk) ++ Seq.fill(5)(cnt) ++ Seq(chk) ++ Seq.fill(3)(cnt) ++
+        Seq(chk))
+    // a compressed state reads only its own checkpoints: past round 5 it is not cut again
     val long = (1L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val compressed = actionNames(Dedup.connectedComponents(long, pathCompression = true))
-    val rounds = compressed.count(_ == cnt) - 1
-    assert(rounds > 5 && compressed === Seq(cnt) ++ Seq.fill(rounds)(Seq(chk, cnt)).flatten ++ Seq(chk),
+    val rounds = compressed.count(_ == cnt)
+    assert(rounds > 5 && compressed === Seq(chk) ++ Seq.fill(rounds)(Seq(chk, cnt)).flatten ++ Seq(chk),
       compressed)
   }
 
