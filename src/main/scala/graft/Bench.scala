@@ -32,99 +32,6 @@ import Verify.q
   * separate `errors` map instead of polluting timings.
   */
 object Bench {
-  /** Representative heavy queries (full-surface correctness is Verify's job).
-    * Shared with [[Slope]], which measures each one's sf0.01→sf0.1 scaling. */
-  private[graft] val headline = Seq(
-    "a1_kpi_global", "a5_two_key_group", "a4_daily_series", "a9_multistat",
-    "a11_error_buckets", "j2_fact_join", "j4_star_join", "j5_anti_join",
-    "t3_topk_rank", "w2_running_sum", "u1_union_distinct", "p8_bucketize",
-    "a10_percentile_approx", "a15_dedup_count",
-    "dedup_minhash_pairs", "ann_cosine_topk", "text_quality_score",
-    "dedup_exact_groups", "text_lang_id", "w_session_windows",
-    "skew_salted_join", "s7_sql_views", "pipeline_clean_ingest",
-    "asof_join_backward", "a16_rollup",
-    "asof_join_native", "dedup_jaccard_capped", "ann_lsh_topk",
-    "range_join_binned", "j9_bucketed_join",
-    "text_tfidf_topk", "text_heavy_hitters", "text_bigram_freq",
-    "dedup_components", "dedup_jaccard_incremental", "emb_quantize_int8",
-    "dedup_minhash_incremental",
-    "text_gopher_rules", "text_repetition", "dedup_contamination",
-    "asof_join_broadcast",
-    "text_seq_packing", "dedup_simhash_pairs", "asof_join_tolerance_native",
-    "dedup_substring_probe", "text_pii_scrub",
-    "text_lm_score", "asof_join_multikey", "text_weighted_sample",
-    "text_chunking", "asof_join_nearest", "range_join_overlap",
-    "b1_funnel_steps", "b2_cohort_retention", "dedup_canonical_keep",
-    // levenshtein: the LSH variant is the benched scale path; the graded
-    // dedup_levenshtein entry is the exact length-band audit form, which
-    // is candidate-quadratic within a block (~21 s at sf0.1) by design
-    "dedup_levenshtein_lsh", "text_novelty", "text_mix_budget",
-    "text_quality_prune", "dedup_containment", "b4_funnel_windowed",
-    "b5_transition_matrix", "a30_date_spine_fill", "text_source_kl",
-    // round-7 entries
-    "a37_zscore_outliers", "a38_mad", "a39_winsorize",
-    "inc_agg_merge", "inc_snapshot_diff", "b9_interval_union", "b10_ewma",
-    "ann_cosine_filtered", "ann_euclidean_topk", "layout_zorder",
-    "text_oov_ratio", "dedup_split_leakage", "dedup_semantic",
-    "q_k_anonymity", "ml_class_weights", "f12_date_arith",
-    // round-8 entries
-    "dedup_seen_sharded", "ann_lsh_incremental", "ann_ivf_incremental",
-    "text_bm25_topk", "ann_hybrid_rerank", "text_ngram_heavy_hitters",
-    "text_pmi_pairs",
-    // round-9 entries
-    "g2_triangle_count", "g3_kcore", "g4_link_prediction",
-    "g5_label_propagation", "emb_kmeans",
-    "a41_psi_drift", "a42_ks_drift", "a43_chi2_drift",
-    "j13_bloom_prefilter", "q_l_diversity", "a44_corr_matrix",
-    "inc_cdc_apply", "b12_rfm_segments", "ml_target_encoding",
-    "r4_group_sample", "g6_bfs_layers", "g7_sssp_bounded",
-    "b13_activity_streaks", "b15_assoc_rules", "b16_attribution",
-    "b17_survival_km", "q_t_closeness", "text_zipf_fit",
-    "a45_ab_test", "a46_calibration_bins",
-    "text_feature_hashing", "text_lm_bigram_score", "q_erasure_audit",
-    "emb_silhouette", "b18_top_paths", "text_mix_temperature",
-    "text_bpe_train", "a47_ols_closed_form", "a48_benford",
-    "dedup_jaccard_prefix", "link_best_match", "layout_manifest_stats",
-    "ml_kfold_ols", "ml_conformal_interval",
-    "link_jaro_scored", "link_entity_clusters", "layout_zorder_prune",
-    "layout_compare_prune", "u6_except_all", "j14_join_size_estimate",
-    // round-10 entries
-    "ann_pq_topk", "ann_ivfpq_topk", "ann_pq_incremental",
-    "link_snm_accuracy", "layout_bloom_prune", "t6_topk_group_native",
-    "ml_logreg_irls", "ml_naive_bayes", "ml_auc_roc", "a49_hll_intersect",
-    "q_dp_noised_counts", "layout_hilbert_prune", "stream_trending_topk",
-    // round-11 entries
-    "mm_video_frames", "ann_ivfpq_residual_topk", "stream_incremental_totals",
-    "stream_late_data_drop",
-    "ann_index_persist", "layout_time_travel", "layout_vacuum_plan",
-    "layout_commit_conflicts", "layout_log_checkpoint",
-    // r11 third-continuation entries: the DSv2 connector family (write
-    // through the commit protocol + pruned read each run; sub-2 s at
-    // sf0.1, metadata aggregate sub-0.5 s)
-    "s16_tiles_roundtrip", "s17_tiles_filter_prune",
-    "s18_tiles_agg_pushdown", "s19_tiles_runtime_prune",
-    "s20_tiles_stream_sink", "f13_catalog_functions", "s21_tiles_sql_ddl",
-    "s22_tiles_delete_where",
-    // round-12 entries: DV (merge-on-read) DELETE and string zone-map prune
-    // over the columnar v2 tile payload; ann_mmr_rerank joins the
-    // headliners after its greedy rounds collapsed into one per-query
-    // aggregation (the r10 form was 2·kSel scheduler-bound jobs, ~10 s at
-    // sf0.1 — the reason it was excluded; VERDICT r11 wrong-item 5)
-    "s23_tiles_delete_rows", "s24_tiles_string_prune", "ann_mmr_rerank",
-    "s25_tiles_compact", "s26_tiles_stream_source", "s27_tiles_replace_where",
-    "s28_tiles_add_column", "s29_tiles_merge_upsert", "s30_tiles_spj",
-    "s31_tiles_group_meta", "s32_tiles_time_travel", "s33_tiles_bloom_point",
-    // round-14 entries: field-id schema evolution, OPTIMIZE ZORDER BY, and
-    // the tiles-persisted seen-before index (metadata-only probe)
-    "s34_tiles_rename_drop", "s35_tiles_zorder", "dedup_seen_persisted",
-    "s36_tiles_widen",
-    // pipeline_corpus_curation is Verify-graded but NOT a bench headliner:
-    // it is a composite of stages that are each benched above, and its
-    // bench-scale cost is dominated by sequential stage materializations
-    // (eager component rounds + inter-stage caches) that amortize at real
-    // scale but read as ~10 s of scheduler latency at sf0.1 (PERF.md).
-  )
-
   /** Previous per-query numbers for the mechanical round-over-round
     * comparison, best source first. Returns (artifactName, kind, map) where
     * kind names which aggregate the prev values are — "min" from our own
@@ -237,7 +144,7 @@ object Bench {
   private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      SparkEntry.queries.get("a7_distinct_list").foreach(_(spark, sfDir).collect())
+      SparkEntry.warmUp(spark, sfDir).collect()
     } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up on $sfDir failed: $e") }
 
   /** One probed run of one query, times in ms. `build` is the query
@@ -358,7 +265,8 @@ object Bench {
     val spark = GraftSession.local(cpus, cpus)
 
     val available = SparkEntry.queries
-    val names = headline.filter(available.contains) ++
+    val headline = SparkEntry.headline
+    val names = headline ++
       (if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) available.keys.toSeq.sorted.diff(headline) else Nil)
     warmUp(spark, sfDir)
 

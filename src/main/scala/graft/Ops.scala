@@ -20,6 +20,11 @@ object Ops {
   /** A registered query: (session, sf data dir) => result frame. */
   type Q = (SparkSession, String) => DataFrame
 
+  /** One registry entry: its name, its query, the DuckDB SQL that must hash
+    * the same (`None`: only the row count is checked), and whether the
+    * graded bench times it. */
+  final case class Entry(name: String, q: Q, oracle: Option[String], headline: Boolean = false)
+
   /** The decimal-exact aggregates below run through the r14 native kernels
     * ([[graft.functions.DecSumAgg]] / [[graft.functions.PercentileAgg]]) —
     * bit-identical to the builtin `sum(cast(… as decimal))` / `percentile`
@@ -35,6 +40,15 @@ object Ops {
     * (= `sum(cast(c as decimal(30, scale))).cast(double)`, bit-exact). */
   def dsumWide(c: Column, scale: Int = 6): Column =
     call_function("graft_dec_sum", c, lit(30), lit(scale)).cast(DoubleType)
+
+  /** Spreads `df` across the session width by a hash of `key`, before
+    * CPU-heavy per-row work whose input would otherwise keep the scan-split
+    * count (one task for one small file). The width is pinned
+    * (REPARTITION_BY_NUM): an unpinned keyed repartition is
+    * AQE-coalescible back to the scan splits. xxhash64 of the key is
+    * deterministic under task retry (content-derived, never round-robin). */
+  def spread(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, xxhash64(col(key)))
 
   /** Deterministic mean: exact decimal sum divided by count, rounded. */
   def dmean(c: Column, scale: Int = 4): Column =

@@ -36,7 +36,7 @@ object Slope {
     val spark = GraftSession.local(Bench.cpus, Bench.cpus)
 
     val available = SparkEntry.queries
-    val names = Bench.headline.filter(available.contains)
+    val names = SparkEntry.headline
     var errors = Map.empty[String, String]
     val samples = scala.collection.mutable.Map.empty[(String, String), List[Double]]
     for (sf <- Seq(sfSmall, sfBig)) {

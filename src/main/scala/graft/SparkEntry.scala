@@ -1,25 +1,24 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry. Each module lists its queries once, as a
+  * `Seq[Entry]` after every query and oracle helper it names; [[all]]
+  * joins those lists in module order, and the maps below are derived from
+  * it once, when this object loads:
+  *  - [[queries]]: every entry's query, which Verify dumps;
+  *  - [[oracleSql]]: the DuckDB SQL of every entry that has one. An entry
+  *    with `oracle = None` gets the weaker rows-only check (for seed- or
+  *    engine-specific output);
+  *  - [[headline]]: the entries `Bench` and `Slope` time, in registry order.
   *
-  * Thin registry: every module exposes `entries` (name -> query) and
-  * `oracles` (name -> DuckDB SQL); this object concatenates them. A name in
-  * `queries` without an oracle gets the driver's weaker rows-only check
-  * (used for seed-/approximation-specific operators).
+  * Loading fails if two entries share a name, and the error names them.
   */
 object SparkEntry {
 
-  /** Flagship: the A5 pricing-summary aggregate (TPC-H Q1 shape — the same
-    * groupBy/agg pattern as the reference's KPI queries, app.py:239-252). */
-  def entry(spark: SparkSession): DataFrame =
-    analytics.CoreQueries.entries("a5_two_key_group")(spark, "/root/testdata/sf0.001")
-
-  def queries: Map[String, Q] =
+  val all: Seq[Entry] = unique(
     analytics.CoreQueries.entries ++
       analytics.ExtendedQueries.entries ++
       analytics.Behavior.entries ++
@@ -45,33 +44,27 @@ object SparkEntry {
       streaming.EventStream.entries ++
       sources.Sources.entries ++
       sources.Tiles.entries ++
-      ml.FarePipeline.entries
+      ml.FarePipeline.entries)
 
-  def oracleSql: Map[String, String] =
-    analytics.CoreQueries.oracles ++
-      analytics.ExtendedQueries.oracles ++
-      analytics.Behavior.oracles ++
-      analytics.Graph.oracles ++
-      analytics.RobustStats.oracles ++
-      analytics.Drift.oracles ++
-      operators.Incremental.oracles ++
-      warehouse.Layout.oracles ++
-      warehouse.StarSchema.oracles ++
-      functions.TextOps.oracles ++
-      functions.CatalogFunctions.oracles ++
-      operators.Dedup.oracles ++
-      operators.Curation.oracles ++
-      operators.Similarity.oracles ++
-      operators.Multimodal.oracles ++
-      operators.Skew.oracles ++
-      operators.Linkage.oracles ++
-      operators.RuntimeFilters.oracles ++
-      operators.AsOfJoin.oracles ++
-      operators.RangeJoin.oracles ++
-      warehouse.Bucketing.oracles ++
-      quality.Gates.oracles ++
-      streaming.EventStream.oracles ++
-      sources.Sources.oracles ++
-      sources.Tiles.oracles ++
-      ml.FarePipeline.oracles
+  /** `entries` as given; fails naming every name that occurs twice. */
+  private[graft] def unique(entries: Seq[Entry]): Seq[Entry] = {
+    val dups = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"registry names declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    entries
+  }
+
+  val queries: Map[String, Q] = all.map(e => e.name -> e.q).toMap
+
+  val oracleSql: Map[String, String] = all.flatMap(e => e.oracle.map(e.name -> _)).toMap
+
+  val headline: Seq[String] = all.filter(_.headline).map(_.name)
+
+  /** The benches' untimed warm-up query. A lookup that fails here fails
+    * the warm-up, which reports it. */
+  private[graft] def warmUp: Q = queries("a7_distinct_list")
+
+  /** Flagship: the A5 pricing-summary aggregate (TPC-H Q1 shape — the same
+    * groupBy/agg pattern as the reference's KPI queries, app.py:239-252). */
+  def entry(spark: SparkSession): DataFrame =
+    queries("a5_two_key_group")(spark, "/root/testdata/sf0.001")
 }

@@ -94,8 +94,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // one entry per line, sorted by name: two commits' files diff cleanly
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{\n", ",\n", "\n}\n")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     // the engine-side summary: next to the dumps, and (full sweeps only)

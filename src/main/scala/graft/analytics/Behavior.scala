@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 import graft.Tables
 
 /** Event-behavior analytics over the `events` feed: ordered funnels and
@@ -666,29 +666,8 @@ object Behavior {
     topPaths(Tables(s, dir).events, "user_id", "ts", "event_type",
       "event_id", pathLen = 3, k = 20)
 
-  val entries: Map[String, Q] = Map(
-    "b18_top_paths" -> topPathsQ,
-    "b17_survival_km" -> kmQ,
-    "b13_activity_streaks" -> streaksQ,
-    "b14_cumulative_actives" -> cumulativeQ,
-    "b15_assoc_rules" -> assocQ,
-    "b16_attribution" -> attributionQ,
-    "b1_funnel_steps" -> funnelQ,
-    "b4_funnel_windowed" -> funnelWindowedQ,
-    "b5_transition_matrix" -> transitionQ,
-    "b6_time_weighted_avg" -> twaQ,
-    "b7_stickiness" -> stickinessQ,
-    "b8_retention_rate" -> retentionRateQ,
-    "b2_cohort_retention" -> cohortQ,
-    "b3_cohort_value" -> cohortValueQ,
-    "b9_interval_union" -> intervalUnionQ,
-    "b10_ewma" -> ewmaQ,
-    "b11_seasonal_anomaly" -> anomalyQ,
-    "b12_rfm_segments" -> rfmQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "b18_top_paths" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("b18_top_paths", topPathsQ, Some(
       """WITH f AS (
         |  SELECT user_id, event_type, ts, event_id,
         |         row_number() OVER (PARTITION BY user_id
@@ -700,11 +679,11 @@ object Behavior {
         |  FROM f WHERE rn <= 3 GROUP BY 1)
         |SELECT path, count(*) AS n_users
         |FROM p GROUP BY 1
-        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
+        |ORDER BY n_users DESC, path LIMIT 20""".stripMargin), headline = true),
     // cumulative product in log space: ln terms round to 6, the running
     // sum rides exact DECIMAL(18,6), one exp at the end (the
     // text_source_kl determinism contract)
-    "b17_survival_km" ->
+    Entry("b17_survival_km", kmQ, Some(
       """WITH pu AS (
         |  SELECT user_id, min(CAST(ts AS DATE)) AS first_day,
         |         max(CAST(ts AS DATE)) AS last_day
@@ -733,8 +712,8 @@ object Behavior {
         |            ELSE round(exp(CAST(sum(term) OVER (ORDER BY t ROWS
         |                 BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |                 AS DOUBLE)), 6) END AS km_survival
-        |FROM tm ORDER BY t""".stripMargin,
-    "b13_activity_streaks" ->
+        |FROM tm ORDER BY t""".stripMargin), headline = true),
+    Entry("b13_activity_streaks", streaksQ, Some(
       """WITH du AS (
         |  SELECT DISTINCT user_id AS uid, CAST(ts AS DATE) AS day
         |  FROM events),
@@ -747,8 +726,8 @@ object Behavior {
         |SELECT uid, CAST(sum(len) AS BIGINT) AS n_active_days,
         |       count(*) AS n_streaks,
         |       CAST(max(len) AS BIGINT) AS longest_streak
-        |FROM st GROUP BY 1 ORDER BY uid""".stripMargin,
-    "b14_cumulative_actives" ->
+        |FROM st GROUP BY 1 ORDER BY uid""".stripMargin), headline = true),
+    Entry("b14_cumulative_actives", cumulativeQ, Some(
       """WITH fs AS (
         |  SELECT user_id, min(CAST(ts AS DATE)) AS day
         |  FROM events GROUP BY 1),
@@ -756,10 +735,10 @@ object Behavior {
         |SELECT day, n_new,
         |       CAST(sum(n_new) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
         |            PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-        |FROM nd ORDER BY day""".stripMargin,
+        |FROM nd ORDER BY day""".stripMargin)),
     // lift folds to n_both*N/(n_a*n_b): integer products, ONE division —
     // bit-identical across engines before the round
-    "b15_assoc_rules" ->
+    Entry("b15_assoc_rules", assocQ, Some(
       """WITH ut AS (
         |  SELECT DISTINCT user_id AS uid, event_type AS t FROM events),
         |tot AS (SELECT CAST(count(DISTINCT uid) AS BIGINT) AS n FROM ut),
@@ -779,8 +758,8 @@ object Behavior {
         |JOIN tc tb ON p.consequent = tb.t
         |CROSS JOIN tot
         |WHERE round(CAST(n_both AS DOUBLE) / tot.n, 6) >= 0.05
-        |ORDER BY antecedent, consequent""".stripMargin,
-    "b16_attribution" ->
+        |ORDER BY antecedent, consequent""".stripMargin), headline = true),
+    Entry("b16_attribution", attributionQ, Some(
       """WITH tagged AS (
         |  SELECT event_type, value,
         |         last_value(CASE WHEN event_type <> 'purchase'
@@ -795,9 +774,9 @@ object Behavior {
         |         AS attributed_value
         |FROM tagged
         |WHERE event_type = 'purchase' AND value IS NOT NULL
-        |GROUP BY 1 ORDER BY channel""".stripMargin,
+        |GROUP BY 1 ORDER BY channel""".stripMargin), headline = true),
     // quartile anchors rounded to 6 before bucketing, in lockstep with rfmQ
-    "b12_rfm_segments" ->
+    Entry("b12_rfm_segments", rfmQ, Some(
       """WITH pu AS (
         |  SELECT user_id, max(CAST(ts AS DATE)) AS last_day, count(*) AS freq,
         |         round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)
@@ -838,8 +817,8 @@ object Behavior {
         |       CAST(count(*) AS BIGINT) AS n_users,
         |       round(CAST(sum(CAST(monetary AS DECIMAL(18,2))) AS DOUBLE), 2)
         |         AS segment_value
-        |FROM b GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "b1_funnel_steps" ->
+        |FROM b GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin), headline = true),
+    Entry("b1_funnel_steps", funnelQ, Some(
       """WITH s1 AS (
         |  SELECT user_id, min(ts) AS t FROM events
         |  WHERE event_type = 'view' GROUP BY 1),
@@ -858,8 +837,8 @@ object Behavior {
         |SELECT count(CASE WHEN step = 0 THEN 1 END) AS n_view,
         |       count(CASE WHEN step = 1 THEN 1 END) AS n_click,
         |       count(CASE WHEN step = 2 THEN 1 END) AS n_purchase
-        |FROM lv""".stripMargin,
-    "b4_funnel_windowed" ->
+        |FROM lv""".stripMargin), headline = true),
+    Entry("b4_funnel_windowed", funnelWindowedQ, Some(
       """WITH s1 AS (
         |  SELECT user_id, min(ts) AS t FROM events
         |  WHERE event_type = 'view' GROUP BY 1),
@@ -880,8 +859,8 @@ object Behavior {
         |SELECT count(CASE WHEN step = 0 THEN 1 END) AS n_view,
         |       count(CASE WHEN step = 1 THEN 1 END) AS n_click,
         |       count(CASE WHEN step = 2 THEN 1 END) AS n_purchase
-        |FROM lv""".stripMargin,
-    "b2_cohort_retention" ->
+        |FROM lv""".stripMargin), headline = true),
+    Entry("b2_cohort_retention", cohortQ, Some(
       """WITH f AS (
         |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
         |  FROM events GROUP BY 1),
@@ -891,8 +870,8 @@ object Behavior {
         |                   date_trunc('week', e.ts)) // 7 AS week_offset
         |  FROM events e JOIN f ON e.user_id = f.user_id)
         |SELECT cohort_week, week_offset, count(*) AS n_users
-        |FROM a GROUP BY 1, 2 ORDER BY cohort_week, week_offset""".stripMargin,
-    "b5_transition_matrix" ->
+        |FROM a GROUP BY 1, 2 ORDER BY cohort_week, week_offset""".stripMargin), headline = true),
+    Entry("b5_transition_matrix", transitionQ, Some(
       """WITH t AS (
         |  SELECT event_type AS from_type,
         |         lead(event_type) OVER (PARTITION BY user_id
@@ -900,8 +879,8 @@ object Behavior {
         |  FROM events)
         |SELECT from_type, to_type, count(*) AS n_transitions
         |FROM t WHERE to_type IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin,
-    "b8_retention_rate" ->
+        |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin), headline = true),
+    Entry("b8_retention_rate", retentionRateQ, Some(
       """WITH f AS (
         |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
         |  FROM events GROUP BY 1),
@@ -920,8 +899,8 @@ object Behavior {
         |       round(CAST(m.n_users AS DOUBLE) / sz.cohort_size, 6)
         |         AS retention
         |FROM m JOIN sz ON m.cohort_week = sz.cw
-        |ORDER BY m.cohort_week, week_offset""".stripMargin,
-    "b7_stickiness" ->
+        |ORDER BY m.cohort_week, week_offset""".stripMargin)),
+    Entry("b7_stickiness", stickinessQ, Some(
       """WITH du AS (
         |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
         |days AS (SELECT DISTINCT d AS day FROM du),
@@ -934,8 +913,8 @@ object Behavior {
         |        FROM du GROUP BY 1)
         |SELECT dau.day, dau.dau, mau.mau,
         |       round(CAST(dau.dau AS DOUBLE) / mau.mau, 6) AS stickiness
-        |FROM dau JOIN mau ON dau.day = mau.day ORDER BY dau.day""".stripMargin,
-    "b6_time_weighted_avg" ->
+        |FROM dau JOIN mau ON dau.day = mau.day ORDER BY dau.day""".stripMargin)),
+    Entry("b6_time_weighted_avg", twaQ, Some(
       """WITH d AS (
         |  SELECT user_id, value,
         |         epoch_us(lead(ts) OVER (PARTITION BY user_id
@@ -947,8 +926,8 @@ object Behavior {
         |         round(CAST(sum(CAST(value * dt AS DECIMAL(30,2))) AS DOUBLE)
         |               / sum(dt), 6) END AS twa
         |FROM d WHERE dt IS NOT NULL
-        |GROUP BY 1 ORDER BY user_id""".stripMargin,
-    "b3_cohort_value" ->
+        |GROUP BY 1 ORDER BY user_id""".stripMargin)),
+    Entry("b3_cohort_value", cohortValueQ, Some(
       """WITH c AS (
         |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
         |  FROM events WHERE event_type = 'signup' GROUP BY 1)
@@ -956,8 +935,8 @@ object Behavior {
         |       CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events e JOIN c ON e.user_id = c.user_id
         |WHERE e.event_type = 'purchase'
-        |GROUP BY 1 ORDER BY cohort_week""".stripMargin,
-    "b9_interval_union" ->
+        |GROUP BY 1 ORDER BY cohort_week""".stripMargin)),
+    Entry("b9_interval_union", intervalUnionQ, Some(
       """WITH iv AS (
         |  SELECT user_id, ts, ts + INTERVAL 30 MINUTE AS te, event_id
         |  FROM events),
@@ -978,10 +957,10 @@ object Behavior {
         |SELECT user_id, CAST(sum(ne) AS BIGINT) AS n_events,
         |       CAST(count(*) AS BIGINT) AS n_islands,
         |       CAST(sum(epoch_us(e) - epoch_us(s)) AS BIGINT) AS covered_us
-        |FROM isl GROUP BY 1 ORDER BY user_id""".stripMargin,
+        |FROM isl GROUP BY 1 ORDER BY user_id""".stripMargin), headline = true),
     // generated from the SAME ewmaWeights values the operator embeds, in
     // the same left-to-right summation order — bit-identical arithmetic
-    "b10_ewma" -> {
+    Entry("b10_ewma", ewmaQ, Some {
       val weights = ewmaWeights(0.3, 8)
       val lagDefs = weights.indices
         .map(j => s"lag(value, $j) OVER w AS l$j").mkString(", ")
@@ -999,11 +978,11 @@ object Behavior {
          |       CASE WHEN ($den) > 0
          |            THEN round(($num) / ($den), 6) END AS ewma
          |FROM l ORDER BY user_id, event_id""".stripMargin
-    },
+    }, headline = true),
     // same explicit-lag arithmetic as the operator, every division
     // CASE-gated identically (DuckDB's dayofweek numbering differs from
     // Spark's by an offset, but only the induced GROUPING matters here)
-    "b11_seasonal_anomaly" -> {
+    Entry("b11_seasonal_anomaly", anomalyQ, Some {
       val lagDefs = (1 to 4).map(j => s"lag(revenue, $j) OVER w AS l$j")
         .mkString(", ")
       val n = (1 to 4)
@@ -1037,6 +1016,6 @@ object Behavior {
          |       round(mu, 2) AS baseline_mu, z,
          |       coalesce(abs(z) > 2.0, false) AS is_anomaly
          |FROM zz ORDER BY day""".stripMargin
-    },
+    }),
   )
 }

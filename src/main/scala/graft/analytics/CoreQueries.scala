@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.{Ops, Tables}
-import graft.Ops.{Q, dsum, dsumWide, dmean, pct}
+import graft.Ops.{Entry, Q, dsum, dsumWide, dmean, pct}
 import graft.operators.Cleaning
 
 import org.apache.spark.sql.DataFrame
@@ -829,146 +829,86 @@ object CoreQueries {
 
   // ---------------------------------------------------------------- registry
 
-  val entries: Map[String, Q] = Map(
-    "p1_cast_projection" -> p1CastProjection,
-    "p2_month_window" -> p2MonthWindow,
-    "p3_null_guards" -> p3NullGuards,
-    "p7_rename_select" -> p7RenameSelect,
-    "p8_bucketize" -> p8Bucketize,
-    "p9_range_limit" -> p9RangeLimit,
-    "p10_between_isin" -> p10BetweenIsin,
-    "p11_sign_counts" -> p11SignCounts,
-    "a1_kpi_global" -> a1KpiGlobal,
-    "a2_minmax_range" -> a2MinMax,
-    "a3_null_profile" -> a3NullProfile,
-    "a4_daily_series" -> a4DailySeries,
-    "a5_two_key_group" -> a5TwoKeyGroup,
-    "a6_group_sum_desc" -> a6GroupSumDesc,
-    "a7_distinct_list" -> a7DistinctList,
-    "a9_multistat" -> a9MultiStat,
-    "a10_percentiles" -> a10Percentiles,
-    "a10_percentiles_grouped" -> a10PercentilesGrouped,
-    "a10_percentile_approx" -> a10Approx,
-    "a11_error_buckets" -> a11ErrorBuckets,
-    "a12_missing_ratio" -> a12MissingRatio,
-    "a14_regression_metrics" -> a14RegMetrics,
-    "a15_dedup_count" -> a15DedupCount,
-    "j1_broadcast_dim" -> j1BroadcastDim,
-    "j2_fact_join" -> j2FactJoin,
-    "j4_star_join" -> j4StarJoin,
-    "j8_part_join" -> j8PartJoin,
-    "j5_anti_join" -> j5AntiJoin,
-    "j6_semi_join" -> j6SemiJoin,
-    "j7_left_outer" -> j7LeftOuter,
-    "j10_nullsafe_join" -> j10NullSafeJoin,
-    "t3_topk_rank" -> t3TopkRank,
-    "t6_topk_group_native" -> t6TopkGroupNative,
-    "w2_running_sum" -> w2RunningSum,
-    "w3_lag_gap" -> w3LagGap,
-    "w4_ntile" -> w4Ntile,
-    "w7_value_windows" -> w7ValueWindows,
-    "w8_rank_dense" -> w8RankDense,
-    "u1_union_distinct" -> u1UnionDistinct,
-    "u2_union_all" -> u2UnionAll,
-    "u3_intersect" -> u3Intersect,
-    "u4_except" -> u4Except,
-    "u6_except_all" -> u6ExceptAll,
-    "j14_join_size_estimate" -> j14JoinSizeEstimate,
-    "f1_date_parts" -> f1DateParts,
-    "f12_date_arith" -> f12DateArith,
-    "f2_math" -> f2Math,
-    "f3_null_funcs" -> f3NullFuncs,
-    "f4_json_extract" -> f4JsonExtract,
-    "f5_string_funcs" -> f5StringFuncs,
-    "f6_variant_agg" -> f6Variant,
-    "f7_unpivot" -> f7Unpivot,
-    "f8_array_funcs" -> f8ArrayFuncs,
-    "r1_sample" -> r1Sample,
-    "r2_split" -> r2Split,
-    "r3_stratified_sample" -> r3Stratified,
-    "r3_stratified_hash" -> r3StratifiedHash,
-    "r4_group_sample" -> r4GroupSample,
-  )
-
-  /** DuckDB oracle SQL per entry. Sums go through DECIMAL in lockstep with
+  /** Oracle sums go through DECIMAL in lockstep with
     * the Spark side (see [[graft.Ops.dsum]]); integer-ish aggregates are cast
     * to BIGINT because DuckDB's integer SUM returns HUGEINT. */
-  val oracles: Map[String, String] = Map(
-    "p1_cast_projection" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("p1_cast_projection", p1CastProjection, Some(
       """SELECT CAST(l_orderkey AS INT) AS l_orderkey,
         |       CAST(l_linenumber AS BIGINT) AS l_linenumber,
         |       CAST(l_shipdate AS DATE) AS l_shipdate, l_quantity
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "p2_month_window" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Entry("p2_month_window", p2MonthWindow, Some(
       """SELECT event_id, ts, event_type FROM events
         |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
         |  AND ts <  TIMESTAMP '2024-02-01 00:00:00'
-        |ORDER BY event_id""".stripMargin,
-    "p3_null_guards" ->
+        |ORDER BY event_id""".stripMargin)),
+    Entry("p3_null_guards", p3NullGuards, Some(
       """SELECT event_id, user_id, value FROM events
         |WHERE ts IS NOT NULL AND event_type IS NOT NULL
         |  AND value IS NOT NULL AND value >= 0
         |  AND (user_id IS NULL OR user_id >= 0)
-        |ORDER BY event_id""".stripMargin,
-    "p7_rename_select" ->
+        |ORDER BY event_id""".stripMargin)),
+    Entry("p7_rename_select", p7RenameSelect, Some(
       """SELECT l_orderkey AS okey, l_linenumber AS lno, l_quantity AS qty,
         |       l_returnflag AS rflag
-        |FROM lineitem ORDER BY okey, lno""".stripMargin,
-    "p8_bucketize" ->
+        |FROM lineitem ORDER BY okey, lno""".stripMargin)),
+    Entry("p8_bucketize", p8Bucketize, Some(
       """SELECT CASE WHEN o_totalprice < 50000 THEN 'low'
         |            WHEN o_totalprice < 150000 THEN 'medium'
         |            WHEN o_totalprice < 300000 THEN 'high'
         |            ELSE 'very_high' END AS bucket,
         |       count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "p9_range_limit" ->
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin), headline = true),
+    Entry("p9_range_limit", p9RangeLimit, Some(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
         |FROM lineitem WHERE l_quantity > 0 AND l_extendedprice <= 50000
-        |ORDER BY l_orderkey, l_linenumber LIMIT 5000""".stripMargin,
-    "p10_between_isin" ->
+        |ORDER BY l_orderkey, l_linenumber LIMIT 5000""".stripMargin)),
+    Entry("p10_between_isin", p10BetweenIsin, Some(
       """SELECT o_orderpriority, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders
         |WHERE o_orderdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
         |                      AND TIMESTAMP '1997-12-31 00:00:00'
         |  AND o_orderpriority IN ('1-URGENT','2-HIGH')
-        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "p11_sign_counts" ->
+        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
+    Entry("p11_sign_counts", p11SignCounts, Some(
       """SELECT CAST(sum(CASE WHEN c_acctbal < 0 THEN 1 ELSE 0 END) AS BIGINT) AS neg_n,
         |       CAST(sum(CASE WHEN c_acctbal > 0 THEN 1 ELSE 0 END) AS BIGINT) AS pos_n,
         |       CAST(sum(CAST(abs(c_acctbal) AS DECIMAL(18,2))) AS DOUBLE) AS abs_total
-        |FROM customer""".stripMargin,
-    "a1_kpi_global" ->
+        |FROM customer""".stripMargin)),
+    Entry("a1_kpi_global", a1KpiGlobal, Some(
       """SELECT count(*) AS n_rows,
         |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_price,
         |       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_qty
-        |FROM lineitem""".stripMargin,
-    "a2_minmax_range" ->
+        |FROM lineitem""".stripMargin), headline = true),
+    Entry("a2_minmax_range", a2MinMax, Some(
       """SELECT CAST(min(o_orderdate) AS DATE) AS min_date,
-        |       CAST(max(o_orderdate) AS DATE) AS max_date FROM orders""".stripMargin,
-    "a3_null_profile" ->
+        |       CAST(max(o_orderdate) AS DATE) AS max_date FROM orders""".stripMargin)),
+    Entry("a3_null_profile", a3NullProfile, Some(
       """SELECT CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_user,
         |       CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_value,
         |       CAST(sum(CASE WHEN value < 0 THEN 1 ELSE 0 END) AS BIGINT) AS neg_value
-        |FROM events""".stripMargin,
-    "a4_daily_series" ->
+        |FROM events""".stripMargin)),
+    Entry("a4_daily_series", a4DailySeries, Some(
       """SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n_orders,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY 1 ORDER BY day""".stripMargin,
-    "a5_two_key_group" ->
+        |FROM orders GROUP BY 1 ORDER BY day""".stripMargin), headline = true),
+    Entry("a5_two_key_group", a5TwoKeyGroup, Some(
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6))) AS DOUBLE) AS revenue
-        |FROM lineitem GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "a6_group_sum_desc" ->
+        |FROM lineitem GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""".stripMargin),
+      headline = true),
+    Entry("a6_group_sum_desc", a6GroupSumDesc, Some(
       """SELECT o_orderpriority, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY 1 ORDER BY revenue DESC, o_orderpriority""".stripMargin,
-    "a7_distinct_list" ->
-      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment",
-    "a9_multistat" ->
+        |FROM orders GROUP BY 1 ORDER BY revenue DESC, o_orderpriority""".stripMargin)),
+    Entry("a7_distinct_list", a7DistinctList, Some(
+      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment")),
+    Entry("a9_multistat", a9MultiStat, Some(
       """WITH a AS (
         |  SELECT count(*) AS n,
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -980,29 +920,29 @@ object CoreQueries {
         |  FROM orders)
         |SELECT n, round(s1 / n, 4) AS mean_v,
         |       round(sqrt((s2 - s1 * s1 / n) / (n - 1)), 4) AS stddev_v,
-        |       min_v, max_v, q25, q50, q75 FROM a""".stripMargin,
-    "a10_percentiles_grouped" ->
+        |       min_v, max_v, q25, q50, q75 FROM a""".stripMargin), headline = true),
+    Entry("a10_percentiles_grouped", a10PercentilesGrouped, Some(
       """SELECT l_returnflag,
         |       round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
         |       round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
         |       round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)),
     // tolerance-graded sketch (VERDICT r7 item 3): the oracle reproduces
     // the exact percentiles and expects the within-bound flags to hold
-    "a10_percentile_approx" ->
+    Entry("a10_percentile_approx", a10Approx, Some(
       """SELECT round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_exact,
         |       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95_exact,
         |       TRUE AS p50_within_eps,
         |       TRUE AS p95_within_eps
-        |FROM lineitem""".stripMargin,
-    "a10_percentiles" ->
+        |FROM lineitem""".stripMargin), headline = true),
+    Entry("a10_percentiles", a10Percentiles, Some(
       """SELECT round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
         |       round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
         |       round(quantile_cont(l_extendedprice, 0.75), 4) AS p75,
         |       round(quantile_cont(l_extendedprice, 0.95), 4) AS p95,
         |       round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
-        |FROM lineitem""".stripMargin,
-    "a11_error_buckets" ->
+        |FROM lineitem""".stripMargin)),
+    Entry("a11_error_buckets", a11ErrorBuckets, Some(
       """WITH e AS (
         |  SELECT l_extendedprice - (l_quantity * 1000.0 + 500.0) AS err,
         |         CASE WHEN l_extendedprice < 10000 THEN 'low'
@@ -1015,13 +955,13 @@ object CoreQueries {
         |       round(CAST(sum(CAST(abs(err) AS DECIMAL(30,6))) AS DOUBLE) / count(*), 4) AS mae,
         |       round(sqrt(CAST(sum(CAST(err * err AS DECIMAL(30,6))) AS DOUBLE) / count(*)), 4) AS rmse,
         |       round(quantile_cont(err, 0.5), 4) AS median_err
-        |FROM e GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "a12_missing_ratio" ->
+        |FROM e GROUP BY 1 ORDER BY bucket""".stripMargin), headline = true),
+    Entry("a12_missing_ratio", a12MissingRatio, Some(
       """SELECT round(avg(CASE WHEN user_id IS NULL THEN 1.0 ELSE 0.0 END), 6) AS miss_user,
         |       round(avg(CASE WHEN value IS NULL THEN 1.0 ELSE 0.0 END), 6) AS miss_value,
         |       round(avg(CASE WHEN props IS NULL THEN 1.0 ELSE 0.0 END), 6) AS miss_props
-        |FROM events""".stripMargin,
-    "a14_regression_metrics" ->
+        |FROM events""".stripMargin)),
+    Entry("a14_regression_metrics", a14RegMetrics, Some(
       """WITH e AS (
         |  SELECT l_extendedprice AS label,
         |         l_extendedprice - (l_quantity * 1000.0 + 500.0) AS err
@@ -1034,28 +974,29 @@ object CoreQueries {
         |         CAST(sum(CAST(abs(err) AS DECIMAL(30,6))) AS DOUBLE) AS sae
         |  FROM e)
         |SELECT n, round(sqrt(sse / n), 4) AS rmse, round(sae / n, 4) AS mae,
-        |       round(1.0 - sse / (s2 - s1 * s1 / n), 6) AS r2 FROM a""".stripMargin,
-    "a15_dedup_count" ->
+        |       round(1.0 - sse / (s2 - s1 * s1 / n), 6) AS r2 FROM a""".stripMargin)),
+    Entry("a15_dedup_count", a15DedupCount, Some(
       """SELECT (SELECT count(*) FROM events) AS raw_rows,
         |       (SELECT count(*) FROM
-        |          (SELECT DISTINCT user_id, ts, event_type FROM events)) AS dedup_rows""".stripMargin,
-    "j1_broadcast_dim" ->
+        |          (SELECT DISTINCT user_id, ts, event_type FROM events)) AS dedup_rows""".stripMargin),
+      headline = true),
+    Entry("j1_broadcast_dim", j1BroadcastDim, Some(
       """SELECT n_name, count(*) AS n_cust,
         |       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS acct_total
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1 ORDER BY n_name""".stripMargin,
-    "j2_fact_join" ->
+        |GROUP BY 1 ORDER BY n_name""".stripMargin)),
+    Entry("j2_fact_join", j2FactJoin, Some(
       """SELECT o_orderpriority, count(*) AS n_items,
         |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "j8_part_join" ->
+        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin), headline = true),
+    Entry("j8_part_join", j8PartJoin, Some(
       """SELECT p_brand, count(*) AS n_items,
         |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6))) AS DOUBLE) AS revenue,
         |       CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS retail_total
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1 ORDER BY p_brand""".stripMargin,
-    "j4_star_join" ->
+        |GROUP BY 1 ORDER BY p_brand""".stripMargin)),
+    Entry("j4_star_join", j4StarJoin, Some(
       """SELECT r_name, count(*) AS n_items,
         |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -1063,22 +1004,22 @@ object CoreQueries {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1 ORDER BY r_name""".stripMargin,
-    "j5_anti_join" ->
+        |GROUP BY 1 ORDER BY r_name""".stripMargin), headline = true),
+    Entry("j5_anti_join", j5AntiJoin, Some(
       """SELECT c_custkey FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "j6_semi_join" ->
+        |ORDER BY c_custkey""".stripMargin), headline = true),
+    Entry("j6_semi_join", j6SemiJoin, Some(
       """SELECT c_mktsegment, count(*) AS n FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
-    "j7_left_outer" ->
+        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin)),
+    Entry("j7_left_outer", j7LeftOuter, Some(
       """SELECT c_mktsegment,
         |       CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_no_orders,
         |       count(o_orderkey) AS n_orders
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
-    "t6_topk_group_native" ->
+        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin)),
+    Entry("t6_topk_group_native", t6TopkGroupNative, Some(
       """WITH ranked AS (
         |  SELECT o_orderpriority, o_orderkey, o_totalprice,
         |         row_number() OVER (
@@ -1093,8 +1034,8 @@ object CoreQueries {
         |       CAST(r.rank AS INT) AS rank, r.o_orderkey, r.o_totalprice
         |FROM ranked r JOIN aggs a USING (o_orderpriority)
         |WHERE r.rank <= 20
-        |ORDER BY r.o_orderpriority, rank""".stripMargin,
-    "t3_topk_rank" ->
+        |ORDER BY r.o_orderpriority, rank""".stripMargin), headline = true),
+    Entry("t3_topk_rank", t3TopkRank, Some(
       """WITH top AS (
         |  SELECT o_custkey, count(*) AS n,
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
@@ -1102,24 +1043,25 @@ object CoreQueries {
         |  ORDER BY revenue DESC, o_custkey LIMIT 10)
         |SELECT CAST(row_number() OVER (ORDER BY revenue DESC, o_custkey) AS INT) AS rank,
         |       o_custkey, n, revenue
-        |FROM top ORDER BY rank""".stripMargin,
-    "w2_running_sum" ->
+        |FROM top ORDER BY rank""".stripMargin), headline = true),
+    Entry("w2_running_sum", w2RunningSum, Some(
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         |       sum(l_quantity) OVER (PARTITION BY l_suppkey
         |         ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
-        |FROM lineitem ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "w3_lag_gap" ->
+        |FROM lineitem ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin),
+      headline = true),
+    Entry("w3_lag_gap", w3LagGap, Some(
       """SELECT user_id, event_id,
         |       epoch_us(ts) - lag(epoch_us(ts), 1)
         |         OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "w4_ntile" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin)),
+    Entry("w4_ntile", w4Ntile, Some(
       """SELECT o_orderkey, o_orderpriority,
         |       CAST(ntile(4) OVER (PARTITION BY o_orderpriority
         |         ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS quartile
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "w7_value_windows" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Entry("w7_value_windows", w7ValueWindows, Some(
       """SELECT user_id, event_id,
         |       first_value(value) OVER w AS first_v,
         |       last_value(value) OVER w AS last_v,
@@ -1127,40 +1069,40 @@ object CoreQueries {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "w8_rank_dense" ->
+        |ORDER BY user_id, event_id""".stripMargin)),
+    Entry("w8_rank_dense", w8RankDense, Some(
       """SELECT o_orderkey, o_orderpriority,
         |       CAST(rank() OVER w AS INT) AS rnk,
         |       CAST(dense_rank() OVER w AS INT) AS drnk
         |FROM orders
         |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_orderdate DESC)
-        |ORDER BY o_orderkey""".stripMargin,
-    "j10_nullsafe_join" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Entry("j10_nullsafe_join", j10NullSafeJoin, Some(
       """WITH a AS (SELECT s_suppkey, nullif(s_suppkey % 7, 0) AS k FROM supplier),
         |b AS (SELECT s_suppkey AS b_suppkey, nullif(s_suppkey % 7, 0) AS k2 FROM supplier)
         |SELECT coalesce(a.k, -1) AS key_group, count(*) AS n_pairs
         |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k2
-        |GROUP BY 1 ORDER BY key_group""".stripMargin,
-    "u1_union_distinct" ->
+        |GROUP BY 1 ORDER BY key_group""".stripMargin)),
+    Entry("u1_union_distinct", u1UnionDistinct, Some(
       """SELECT o_custkey AS custkey FROM orders
-        |UNION SELECT c_custkey FROM customer ORDER BY custkey""".stripMargin,
-    "u2_union_all" ->
+        |UNION SELECT c_custkey FROM customer ORDER BY custkey""".stripMargin), headline = true),
+    Entry("u2_union_all", u2UnionAll, Some(
       """SELECT 'orders' AS tbl, count(*) AS n FROM orders
         |UNION ALL SELECT 'lineitem' AS tbl, count(*) AS n FROM lineitem
-        |ORDER BY tbl""".stripMargin,
-    "u3_intersect" ->
+        |ORDER BY tbl""".stripMargin)),
+    Entry("u3_intersect", u3Intersect, Some(
       """SELECT c_custkey AS custkey FROM customer
-        |INTERSECT SELECT o_custkey FROM orders ORDER BY custkey""".stripMargin,
-    "u4_except" ->
+        |INTERSECT SELECT o_custkey FROM orders ORDER BY custkey""".stripMargin)),
+    Entry("u4_except", u4Except, Some(
       """SELECT c_custkey AS custkey FROM customer
-        |EXCEPT SELECT o_custkey FROM orders ORDER BY custkey""".stripMargin,
-    "u6_except_all" ->
+        |EXCEPT SELECT o_custkey FROM orders ORDER BY custkey""".stripMargin)),
+    Entry("u6_except_all", u6ExceptAll, Some(
       """WITH d AS (
         |  SELECT l_linenumber AS v FROM lineitem
         |  EXCEPT ALL
         |  SELECT CAST(o_orderkey % 7 + 1 AS INT) AS v FROM orders)
-        |SELECT v, count(*) AS n FROM d GROUP BY 1 ORDER BY v""".stripMargin,
-    "j14_join_size_estimate" ->
+        |SELECT v, count(*) AS n FROM d GROUP BY 1 ORDER BY v""".stripMargin), headline = true),
+    Entry("j14_join_size_estimate", j14JoinSizeEstimate, Some(
       """WITH ca AS (SELECT o_custkey AS k, count(*) AS na
         |            FROM orders GROUP BY 1),
         |cb AS (SELECT c_custkey AS k, count(*) AS nb
@@ -1171,8 +1113,8 @@ object CoreQueries {
         |      FROM orders JOIN customer ON o_custkey = c_custkey)
         |SELECT predicted_rows, actual_rows,
         |       CAST(predicted_rows = actual_rows AS INT) AS exact
-        |FROM p, a""".stripMargin,
-    "f1_date_parts" ->
+        |FROM p, a""".stripMargin), headline = true),
+    Entry("f1_date_parts", f1DateParts, Some(
       """SELECT event_id,
         |       CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
         |       CAST(day(ts) AS INT) AS d,
@@ -1180,8 +1122,8 @@ object CoreQueries {
         |       CAST(hour(ts) AS INT) AS h, CAST(minute(ts) AS INT) AS mi,
         |       CAST(ts AS DATE) AS day, date_trunc('hour', ts) AS hour_bucket,
         |       epoch_us(ts) AS us
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f12_date_arith" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Entry("f12_date_arith", f12DateArith, Some(
       """WITH o AS (
         |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d FROM orders)
         |SELECT o_orderkey,
@@ -1194,8 +1136,8 @@ object CoreQueries {
         |       CAST(date_diff('day', DATE '1995-01-01', d) AS INT) AS days_since,
         |       CAST(dayofyear(d) AS INT) AS doy,
         |       CAST(quarter(d) AS INT) AS q
-        |FROM o ORDER BY o_orderkey""".stripMargin,
-    "f2_math" ->
+        |FROM o ORDER BY o_orderkey""".stripMargin), headline = true),
+    Entry("f2_math", f2Math, Some(
       """SELECT c_custkey,
         |       round(abs(c_acctbal), 2) AS abs_bal,
         |       round(sqrt(abs(c_acctbal)), 4) AS sqrt_bal,
@@ -1203,27 +1145,27 @@ object CoreQueries {
         |       CAST(floor(c_acctbal) AS BIGINT) AS floor_bal,
         |       CAST(ceil(c_acctbal) AS BIGINT) AS ceil_bal,
         |       CAST(sign(c_acctbal) AS DOUBLE) AS sign_bal
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "f3_null_funcs" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Entry("f3_null_funcs", f3NullFuncs, Some(
       """SELECT c_custkey,
         |       coalesce(nullif(c_mktsegment, 'BUILDING'), 'NONE') AS seg2,
         |       CAST(c_mktsegment = 'BUILDING' AS INT) AS is_building
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "f4_json_extract" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Entry("f4_json_extract", f4JsonExtract, Some(
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "f5_string_funcs" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Entry("f5_string_funcs", f5StringFuncs, Some(
       """SELECT c_custkey, CAST(length(c_name) AS INT) AS name_len,
         |       upper(c_name) AS name_up, substr(c_name, 1, 8) AS name_pre,
         |       c_mktsegment || '_' || c_name AS seg_name
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "f6_variant_agg" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Entry("f6_variant_agg", f6Variant, Some(
       """SELECT event_type, count(*) AS n,
         |       CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS k_sum,
         |       CAST(min(CAST(json_extract_string(props, '$.k') AS INT)) AS INT) AS k_min,
         |       CAST(max(CAST(json_extract_string(props, '$.k') AS INT)) AS INT) AS k_max
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "f7_unpivot" ->
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin)),
+    Entry("f7_unpivot", f7Unpivot, Some(
       """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS value FROM lineitem
         |UNION ALL
         |SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
@@ -1231,28 +1173,31 @@ object CoreQueries {
         |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
         |UNION ALL
         |SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
-    "f8_array_funcs" ->
+        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin)),
+    Entry("f8_array_funcs", f8ArrayFuncs, Some(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents)
         |SELECT doc_id, CAST(len(ts) AS INT) AS n_toks,
         |       array_to_string(list_sort(ts)[1:3], ',') AS first3_sorted,
         |       list_contains(ts, 'the') AS has_the,
         |       ts[-1] AS last_tok
-        |FROM t ORDER BY doc_id""".stripMargin,
+        |FROM t ORDER BY doc_id""".stripMargin)),
     // tolerance-graded seeded samplers (VERDICT r9 item 6): the oracle
     // re-derives the exact total and expects the contract booleans —
     // fraction-within-tolerance, no duplicate keys, partition
     // completeness/disjointness — to hold; the sampled row sets themselves
     // stay engine-local by design
-    "r1_sample" ->
+    Entry("r1_sample", r1Sample, Some(
       """SELECT count(*) AS n_total, TRUE AS frac_within_tol,
-        |       TRUE AS no_duplicates FROM orders""".stripMargin,
-    "r2_split" ->
+        |       TRUE AS no_duplicates FROM orders""".stripMargin)),
+    Entry("r2_split", r2Split, Some(
       """SELECT count(*) AS n_total, TRUE AS union_complete, TRUE AS disjoint,
-        |       TRUE AS train_frac_within_tol FROM orders""".stripMargin,
+        |       TRUE AS train_frac_within_tol FROM orders""".stripMargin)),
+    // rows-only: the seeded row set is engine-specific (EntrySpec checks
+    // the per-stratum fractions); r3_stratified_hash is its graded twin
+    Entry("r3_stratified_sample", r3Stratified, None),
     // deterministic stratified twin (VERDICT r8 item 5): same md5-draw
     // convention as the text_hash_split oracle; thresholds floor(f*4096)
-    "r3_stratified_hash" ->
+    Entry("r3_stratified_hash", r3StratifiedHash, Some(
       """WITH t AS (
         |  SELECT o_orderpriority,
         |         md5_number_upper(CAST(o_orderkey AS VARCHAR)) % 4096 AS draw,
@@ -1262,10 +1207,10 @@ object CoreQueries {
         |  FROM orders)
         |SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n
         |FROM t WHERE thr IS NOT NULL AND draw < thr
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
     // same md5-draw convention; ties broken by the natural key so the
     // per-group ranking is a total order in both engines
-    "r4_group_sample" ->
+    Entry("r4_group_sample", r4GroupSample, Some(
       """WITH t AS (
         |  SELECT o_orderpriority, o_orderkey,
         |         CAST(row_number() OVER (
@@ -1275,6 +1220,6 @@ object CoreQueries {
         |  FROM orders)
         |SELECT o_orderpriority, o_orderkey, rank_in_group
         |FROM t WHERE rank_in_group <= 20
-        |ORDER BY o_orderpriority, rank_in_group""".stripMargin,
+        |ORDER BY o_orderpriority, rank_in_group""".stripMargin), headline = true),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Ops.{Q, pct}
+import graft.Ops.{Entry, Q, pct}
 import graft.Tables
 
 /** Distribution-drift detection — the monitoring layer a training pipeline
@@ -271,17 +271,8 @@ object Drift {
     importanceWeights(Tables(s, dir).orders, "o_totalprice",
       col("o_orderdate") < lit(boundary).cast("timestamp"))
 
-  val entries: Map[String, Q] = Map(
-    "a49_importance_weights" -> weightsQ,
-    "a41_psi_drift" -> psiQ,
-    "a42_ks_drift" -> ksQ,
-    "a43_chi2_drift" -> chi2Q,
-    "a45_ab_test" -> abTestQ,
-    "a46_calibration_bins" -> calibrationQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "a45_ab_test" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("a45_ab_test", abTestQ, Some(
       """WITH pu AS (
         |  SELECT user_id,
         |         max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
@@ -317,10 +308,10 @@ object Drift {
         |       coalesce(CASE WHEN se > 0
         |                     THEN abs(round((pb - pa) / se, 4)) > 1.96 END,
         |                false) AS significant
-        |FROM z2""".stripMargin,
+        |FROM z2""".stripMargin), headline = true),
     // per-row score rounds to 6 BEFORE binning/averaging, so cross-engine
     // exp() ulp noise is quantized away
-    "a46_calibration_bins" ->
+    Entry("a46_calibration_bins", calibrationQ, Some(
       """WITH s AS (
         |  SELECT round(CAST(1 AS DOUBLE)
         |               / (CAST(1 AS DOUBLE)
@@ -334,8 +325,8 @@ object Drift {
         |       count(*) AS n,
         |       round(avg(sc), 6) AS mean_score,
         |       round(avg(CAST(y AS DOUBLE)), 6) AS outcome_rate
-        |FROM s GROUP BY 1 ORDER BY bin""".stripMargin,
-    "a49_importance_weights" -> {
+        |FROM s GROUP BY 1 ORDER BY bin""".stripMargin), headline = true),
+    Entry("a49_importance_weights", weightsQ, Some {
       val bins = 10
       val qs = (1 until bins).map(i =>
         s"round(quantile_cont(o_totalprice, ${i.toDouble / bins}), 6) AS a$i")
@@ -364,8 +355,8 @@ object Drift {
          |SELECT CAST(bin AS INT) AS bin, n_ref, n_cur,
          |       round(pr / pc, 6) AS weight
          |FROM p ORDER BY bin""".stripMargin
-    },
-    "a41_psi_drift" -> {
+    }),
+    Entry("a41_psi_drift", psiQ, Some {
       val bins = 10
       val qs = (1 until bins).map(i =>
         s"round(quantile_cont(o_totalprice, ${i.toDouble / bins}), 6) AS a$i")
@@ -395,8 +386,8 @@ object Drift {
          |       round(pr, 6) AS p_ref, round(pc, 6) AS p_cur,
          |       round((pc - pr) * ln(pc / pr), 6) AS psi_term
          |FROM p ORDER BY bin""".stripMargin
-    },
-    "a42_ks_drift" -> {
+    }, headline = true),
+    Entry("a42_ks_drift", ksQ, Some {
       val grid = 256
       s"""WITH b AS (
          |  SELECT round(min(o_totalprice), 6) AS lo,
@@ -422,8 +413,8 @@ object Drift {
          |  FROM c, t)
          |SELECT gap AS ks_stat, CAST(bin AS INT) AS at_bin
          |FROM e ORDER BY gap DESC, bin LIMIT 1""".stripMargin
-    },
-    "a43_chi2_drift" ->
+    }, headline = true),
+    Entry("a43_chi2_drift", chi2Q, Some(
       """WITH c AS (
         |  SELECT event_type AS category,
         |         CAST(sum(CASE WHEN extract(day FROM ts) <= 15
@@ -441,6 +432,6 @@ object Drift {
         |       round(er, 6) AS exp_ref, round(ec, 6) AS exp_cur,
         |       round((n_ref - er) * (n_ref - er) / er
         |             + (n_cur - ec) * (n_cur - ec) / ec, 6) AS chi2_term
-        |FROM e ORDER BY category""".stripMargin,
+        |FROM e ORDER BY category""".stripMargin), headline = true),
   )
 }

@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.{Ops, Tables}
-import graft.Ops.{Q, dsum, dsumWide}
+import graft.Ops.{Entry, Q, dsum, dsumWide}
 import graft.operators.Cleaning
 import graft.sources.Sources
 import graft.ml.ModelRegistry
@@ -812,54 +812,10 @@ object ExtendedQueries {
         dsum(col("l_extendedprice")).as("mass"))
       .orderBy("bin")
 
-  val entries: Map[String, Q] = Map(
-    "a24_correlation" -> correlationQ,
-    "a31_regression_agg" -> regressionAggQ,
-    "a32_skew_kurtosis" -> skewKurtosisQ,
-    "a33_bool_aggs" -> boolAggsQ,
-    "f9_bit_aggs" -> bitAggsQ,
-    "f10_map_funcs" -> mapFuncsQ,
-    "f11_hof_funcs" -> hofFuncsQ,
-    "p12_regex_extract_all" -> regexExtractAllQ,
-    "u5_union_by_name" -> unionByNameQ,
-    "q_gdpr_erasure" -> gdprErasureQ,
-    "a34_percent_of_total" -> percentOfTotalQ,
-    "a35_top_share" -> topShareQ,
-    "a36_gini" -> giniQ,
-    "p13_try_funcs" -> tryFuncsQ,
-    "a25_mode" -> modeQ,
-    "a26_histogram" -> histogramQ,
-    "a21_weighted_mean" -> weightedMeanQ,
-    "w6_rolling_7d" -> rolling7dQ,
-    "w5_percent_rank" -> percentRankQ,
-    "a20_collect_set" -> collectSetQ,
-    "a18_count_distinct" -> distinctCountsQ,
-    "a19_approx_distinct" -> approxDistinctQ,
-    "a23_hll_mergeable" -> hllMergeQ,   // tolerance-graded vs exact (r8)
-    "a49_hll_intersect" -> hllIntersectQ, // sketch set-algebra, union-relative tolerance
-    "a41_cms_frequency" -> cmsQ,        // tolerance-graded vs exact
-    "a42_crosstab" -> crosstabQ,
-    "s7_sql_views" -> sqlViewsQ,
-    "pipeline_clean_ingest" -> cleanIngestQ,
-    "pipeline_dag_run" -> dagRunQ,
-    "a16_rollup" -> rollupQ,
-    "a17_pivot" -> pivotQ,
-    "a22_cube" -> cubeQ,
-    "a28_grouping_sets" -> groupingSetsQ,
-    "a30_date_spine_fill" -> dateSpineFillQ,
-    "j11_full_outer" -> fullOuterQ,
-    "q_exists_subquery" -> existsSubqueryQ,
-    "q_recursive_cte" -> recursiveCteQ,
-    "q_lateral_join" -> lateralJoinQ,
-    "t4_top_errors_labeled" -> topErrorsQ,
-    "ml_sliding_window" -> slidingWindowQ,
-    "a13_summary_builtin" -> summaryQ,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // pure month arithmetic (r9): DuckDB re-derives the train/test window
     // rows exactly, year wraps included
-    "ml_sliding_window" ->
+    Entry("ml_sliding_window", slidingWindowQ, Some(
       """WITH m(window_for) AS (VALUES ('2023-02'), ('2024-01'), ('2024-12')),
         |t AS (
         |  SELECT window_for, 'train' AS role,
@@ -869,8 +825,8 @@ object ExtendedQueries {
         |  UNION ALL
         |  SELECT window_for, 'test', window_for FROM m)
         |SELECT window_for, role, month FROM t
-        |ORDER BY window_for, role, month""".stripMargin,
-    "a32_skew_kurtosis" ->
+        |ORDER BY window_for, role, month""".stripMargin)),
+    Entry("a32_skew_kurtosis", skewKurtosisQ, Some(
       """WITH m AS (
         |  SELECT count(*) AS n,
         |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS s1,
@@ -888,34 +844,34 @@ object ExtendedQueries {
         |    THEN (s4 / n - 4.0 * m1 * (s3 / n) + 6.0 * m1 * m1 * (s2 / n)
         |          - 3.0 * m1 * m1 * m1 * m1) / (v * v) - 3.0 END, 6)
         |    AS excess_kurtosis
-        |FROM d""".stripMargin,
-    "a33_bool_aggs" ->
+        |FROM d""".stripMargin)),
+    Entry("a33_bool_aggs", boolAggsQ, Some(
       """SELECT o_orderpriority,
         |       bool_and(o_totalprice > 1000.0) AS all_over_1k,
         |       bool_or(o_totalprice > 400000.0) AS any_over_400k,
         |       count(CASE WHEN o_totalprice > 200000.0 THEN 1 END) AS n_over_200k
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "f9_bit_aggs" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
+    Entry("f9_bit_aggs", bitAggsQ, Some(
       """SELECT l_returnflag,
         |       CAST(bit_and(l_linenumber) AS INT) AS b_and,
         |       CAST(bit_or(l_linenumber) AS INT) AS b_or,
         |       CAST(bit_xor(l_linenumber) AS INT) AS b_xor
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "f10_map_funcs" ->
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin)),
+    Entry("f10_map_funcs", mapFuncsQ, Some(
       """SELECT o_orderpriority,
         |       CAST(count(DISTINCT o_orderstatus) AS INT) AS n_statuses,
         |       count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
         |       count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "f11_hof_funcs" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
+    Entry("f11_hof_funcs", hofFuncsQ, Some(
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents)
         |SELECT doc_id,
         |       CAST(len(list_filter(ts, t -> length(t) > 4)) AS INT) AS n_long,
         |       len(list_filter(ts, t -> t = 'the')) > 0 AS has_the,
         |       len(list_filter(ts, t -> NOT length(t) > 1)) = 0 AS all_multichar,
         |       CAST(list_sum(list_transform(ts, t -> length(t))) AS BIGINT) AS char_sum
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "p12_regex_extract_all" ->
+        |FROM t ORDER BY doc_id""".stripMargin)),
+    Entry("p12_regex_extract_all", regexExtractAllQ, Some(
       """SELECT o_orderkey,
         |       CAST(len(regexp_extract_all(o_orderpriority, '[0-9]+')) AS INT)
         |         AS n_runs,
@@ -923,16 +879,16 @@ object ExtendedQueries {
         |         AS digit_runs,
         |       array_to_string(regexp_extract_all(o_orderpriority, '[A-Z]+'), ',')
         |         AS word_runs
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_gdpr_erasure" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Entry("q_gdpr_erasure", gdprErasureQ, Some(
       """WITH req AS (
         |  SELECT c_custkey FROM customer WHERE c_custkey % 100 = 0)
         |SELECT count(*) AS n_before,
         |       count(CASE WHEN req.c_custkey IS NOT NULL THEN 1 END)
         |         AS n_removed,
         |       count(CASE WHEN req.c_custkey IS NULL THEN 1 END) AS n_after
-        |FROM orders LEFT JOIN req ON o_custkey = req.c_custkey""".stripMargin,
-    "a36_gini" ->
+        |FROM orders LEFT JOIN req ON o_custkey = req.c_custkey""".stripMargin)),
+    Entry("a36_gini", giniQ, Some(
       """WITH pc AS (
         |  SELECT o_custkey,
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -948,8 +904,8 @@ object ExtendedQueries {
         |             / (count(*) * CAST(sum(CAST(revenue AS DECIMAL(18,2)))
         |                                AS DOUBLE))
         |             - (count(*) + 1.0) / count(*), 6) AS gini
-        |FROM r""".stripMargin,
-    "a35_top_share" ->
+        |FROM r""".stripMargin)),
+    Entry("a35_top_share", topShareQ, Some(
       """WITH pc AS (
         |  SELECT o_custkey,
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -965,8 +921,8 @@ object ExtendedQueries {
         |       round(sum(revenue), 2) AS total_revenue,
         |       round(sum(CASE WHEN rk <= 10 THEN revenue ELSE 0.0 END)
         |             / sum(revenue), 6) AS top10_share
-        |FROM r""".stripMargin,
-    "a34_percent_of_total" ->
+        |FROM r""".stripMargin)),
+    Entry("a34_percent_of_total", percentOfTotalQ, Some(
       """WITH g AS (
         |  SELECT o_orderpriority,
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
@@ -974,15 +930,15 @@ object ExtendedQueries {
         |  FROM orders GROUP BY 1)
         |SELECT o_orderpriority, revenue,
         |       round(revenue / sum(revenue) OVER (), 6) AS share
-        |FROM g ORDER BY o_orderpriority""".stripMargin,
-    "p13_try_funcs" ->
+        |FROM g ORDER BY o_orderpriority""".stripMargin)),
+    Entry("p13_try_funcs", tryFuncsQ, Some(
       """SELECT o_orderkey,
         |       round(o_totalprice / nullif(o_orderkey % 3, 0), 4) AS div3,
         |       CAST(TRY_CAST(substring(o_orderpriority, 1, 1) AS INT) AS BIGINT)
         |         AS prio_num,
         |       TRY_CAST(o_orderstatus AS INT) AS status_num
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "u5_union_by_name" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Entry("u5_union_by_name", unionByNameQ, Some(
       """WITH u AS (
         |  SELECT c_custkey, c_name, c_acctbal FROM customer
         |  UNION ALL
@@ -990,8 +946,8 @@ object ExtendedQueries {
         |  WHERE c_mktsegment = 'BUILDING')
         |SELECT c_acctbal IS NULL AS from_short_feed, count(*) AS n,
         |       count(DISTINCT c_custkey) AS n_keys
-        |FROM u GROUP BY 1 ORDER BY from_short_feed""".stripMargin,
-    "a31_regression_agg" ->
+        |FROM u GROUP BY 1 ORDER BY from_short_feed""".stripMargin)),
+    Entry("a31_regression_agg", regressionAggQ, Some(
       """WITH m AS (
         |  SELECT count(*) AS n,
         |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
@@ -1009,8 +965,8 @@ object ExtendedQueries {
         |  round(CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
         |    THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
         |         / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r2
-        |FROM m""".stripMargin,
-    "a24_correlation" ->
+        |FROM m""".stripMargin)),
+    Entry("a24_correlation", correlationQ, Some(
       """WITH m AS (
         |  SELECT count(*) AS n,
         |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sq,
@@ -1038,8 +994,8 @@ object ExtendedQueries {
         |         round(CASE WHEN (n*spp - sp*sp) * (n*sdd - sd*sd) > 0
         |           THEN (n*spd - sp*sd) / sqrt((n*spp - sp*sp) * (n*sdd - sd*sd)) END, 6)
         |  FROM m)
-        |ORDER BY pair""".stripMargin,
-    "a25_mode" ->
+        |ORDER BY pair""".stripMargin)),
+    Entry("a25_mode", modeQ, Some(
       """WITH c AS (
         |  SELECT o_orderpriority, o_orderstatus, count(*) AS n
         |  FROM orders GROUP BY 1, 2),
@@ -1048,18 +1004,18 @@ object ExtendedQueries {
         |            ORDER BY n DESC, o_orderstatus) AS rk
         |  FROM c)
         |SELECT o_orderpriority, o_orderstatus AS mode_status, n AS mode_n
-        |FROM r WHERE rk = 1 ORDER BY o_orderpriority""".stripMargin,
-    "a26_histogram" ->
+        |FROM r WHERE rk = 1 ORDER BY o_orderpriority""".stripMargin)),
+    Entry("a26_histogram", histogramQ, Some(
       """SELECT CAST(least(floor(l_extendedprice / 5000), 23) AS BIGINT) AS bin,
         |       count(*) AS n,
         |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS mass
-        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin,
-    "a21_weighted_mean" ->
+        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin)),
+    Entry("a21_weighted_mean", weightedMeanQ, Some(
       """SELECT l_returnflag,
         |       round(sum(l_extendedprice * l_quantity) / sum(l_quantity), 4) AS wmean_price,
         |       count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "w6_rolling_7d" ->
+        |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin)),
+    Entry("w6_rolling_7d", rolling7dQ, Some(
       """WITH daily AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
@@ -1068,38 +1024,40 @@ object ExtendedQueries {
         |       round(sum(rev) OVER (
         |         ORDER BY date_diff('day', DATE '1970-01-01', day)
         |         RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS rev7
-        |FROM daily ORDER BY day""".stripMargin,
-    "w5_percent_rank" ->
+        |FROM daily ORDER BY day""".stripMargin)),
+    Entry("w5_percent_rank", percentRankQ, Some(
       """SELECT o_orderkey, o_orderpriority,
         |       round(percent_rank() OVER (PARTITION BY o_orderpriority
         |         ORDER BY o_totalprice, o_orderkey), 6) AS pr,
         |       round(cume_dist() OVER (PARTITION BY o_orderpriority
         |         ORDER BY o_totalprice, o_orderkey), 6) AS cd
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "a20_collect_set" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Entry("a20_collect_set", collectSetQ, Some(
       """SELECT o_orderpriority,
         |       array_to_string(list_sort(list(DISTINCT o_orderstatus)), ',') AS statuses,
         |       count(*) AS n
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "a18_count_distinct" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
+    Entry("a18_count_distinct", distinctCountsQ, Some(
       """SELECT count(DISTINCT l_orderkey) AS n_orders,
         |       count(DISTINCT l_partkey) AS n_parts,
         |       count(DISTINCT l_suppkey) AS n_supps
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin)),
     // tolerance-graded sketches (VERDICT r7 item 3): the oracle reproduces
     // the exact answers and expects every within-bound flag to hold
-    "a19_approx_distinct" ->
+    Entry("a19_approx_distinct", approxDistinctQ, Some(
       """SELECT count(DISTINCT l_orderkey) AS n_orders_exact,
         |       count(DISTINCT l_partkey) AS n_parts_exact,
         |       TRUE AS orders_within_eps,
         |       TRUE AS parts_within_eps
-        |FROM lineitem""".stripMargin,
-    "a23_hll_mergeable" ->
+        |FROM lineitem""".stripMargin)),
+    // tolerance-graded vs exact (r8)
+    Entry("a23_hll_mergeable", hllMergeQ, Some(
       """SELECT count(DISTINCT o_custkey) AS n_exact,
         |       TRUE AS merged_within_eps,
         |       TRUE AS merge_consistent
-        |FROM orders""".stripMargin,
-    "a49_hll_intersect" ->
+        |FROM orders""".stripMargin)),
+    // sketch set-algebra, union-relative tolerance
+    Entry("a49_hll_intersect", hllIntersectQ, Some(
       """WITH per AS (
         |  SELECT o_custkey,
         |         max(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS a,
@@ -1110,27 +1068,28 @@ object ExtendedQueries {
         |       CAST(sum(CASE WHEN a = 1 OR b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_union,
         |       CAST(sum(a * b) AS BIGINT) AS n_intersect,
         |       TRUE AS intersect_within_eps
-        |FROM per""".stripMargin,
-    "a41_cms_frequency" ->
+        |FROM per""".stripMargin), headline = true),
+    // tolerance-graded vs exact
+    Entry("a41_cms_frequency", cmsQ, Some(
       """SELECT event_type, count(*) AS n_exact,
         |       TRUE AS est_within_eps,
         |       TRUE AS merge_consistent
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin)),
     // Spark dayofweek = DuckDB dayofweek()+1 (Sunday-first 1..7)
-    "a42_crosstab" -> {
+    Entry("a42_crosstab", crosstabQ, Some {
       val dows = (1 to 7).map(d =>
         s"""CAST(sum(CASE WHEN dayofweek(CAST(ts AS DATE)) + 1 = $d THEN 1 ELSE 0 END) AS BIGINT) AS "$d"""")
         .mkString(",\n       ")
       s"""SELECT event_type AS event_type_dow,
          |       $dows
          |FROM events GROUP BY 1 ORDER BY event_type_dow""".stripMargin
-    },
-    "s7_sql_views" ->
+    }),
+    Entry("s7_sql_views", sqlViewsQ, Some(
       """SELECT c_mktsegment, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "pipeline_dag_run" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin), headline = true),
+    Entry("pipeline_dag_run", dagRunQ, Some(
       """WITH raw AS (SELECT count(*) AS n FROM events),
         |rm AS (SELECT count(*) AS n,
         |              count(DISTINCT CAST(ts AS DATE)) AS days
@@ -1174,8 +1133,8 @@ object ExtendedQueries {
         |  SELECT '6_ml_features',
         |         CASE WHEN n >= 1000 THEN 'PASS' ELSE 'FAIL' END,
         |         n, CAST(NULL AS DOUBLE) FROM mlf
-        |) ORDER BY task""".stripMargin,
-    "pipeline_clean_ingest" ->
+        |) ORDER BY task""".stripMargin)),
+    Entry("pipeline_clean_ingest", cleanIngestQ, Some(
       """SELECT count(*) AS n_rows,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
         |       count(DISTINCT CAST(ts AS DATE)) AS n_days
@@ -1183,32 +1142,33 @@ object ExtendedQueries {
         |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
         |  AND ts <  TIMESTAMP '2024-02-01 00:00:00'
         |  AND ts IS NOT NULL AND event_type IS NOT NULL
-        |  AND value IS NOT NULL AND value >= 0""".stripMargin,
-    "a16_rollup" ->
+        |  AND value IS NOT NULL AND value >= 0""".stripMargin), headline = true),
+    Entry("a16_rollup", rollupQ, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year, o_orderpriority,
         |       count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders GROUP BY ROLLUP (1, 2)
-        |ORDER BY o_year ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "a17_pivot" ->
+        |ORDER BY o_year ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+      headline = true),
+    Entry("a17_pivot", pivotQ, Some(
       """SELECT o_orderpriority,
         |       CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
         |       CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
         |       CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "a22_cube" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)),
+    Entry("a22_cube", cubeQ, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year, o_orderpriority,
         |       count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders GROUP BY CUBE (1, 2)
-        |ORDER BY o_year ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "a28_grouping_sets" ->
+        |ORDER BY o_year ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)),
+    Entry("a28_grouping_sets", groupingSetsQ, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year, o_orderpriority,
         |       count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders GROUP BY GROUPING SETS ((1), (2), ())
-        |ORDER BY o_year ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "a30_date_spine_fill" ->
+        |ORDER BY o_year ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)),
+    Entry("a30_date_spine_fill", dateSpineFillQ, Some(
       """WITH b AS (
         |  SELECT min(o_orderdate) AS mn, max(o_orderdate) AS mx FROM orders),
         |spine AS (
@@ -1219,8 +1179,8 @@ object ExtendedQueries {
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |  FROM orders GROUP BY 1)
         |SELECT spine.d, coalesce(daily.revenue, 0.0) AS revenue
-        |FROM spine LEFT JOIN daily USING (d) ORDER BY d""".stripMargin,
-    "q_recursive_cte" ->
+        |FROM spine LEFT JOIN daily USING (d) ORDER BY d""".stripMargin), headline = true),
+    Entry("q_recursive_cte", recursiveCteQ, Some(
       """WITH RECURSIVE b AS (
         |  SELECT date_trunc('month', min(o_orderdate)) AS mn,
         |         date_trunc('month', max(o_orderdate)) AS mx
@@ -1232,8 +1192,8 @@ object ExtendedQueries {
         |SELECT months.m AS month, count(o.o_orderkey) AS n
         |FROM months LEFT JOIN orders o
         |  ON date_trunc('month', o.o_orderdate) = months.m
-        |GROUP BY 1 ORDER BY month""".stripMargin,
-    "q_lateral_join" ->
+        |GROUP BY 1 ORDER BY month""".stripMargin)),
+    Entry("q_lateral_join", lateralJoinQ, Some(
       """SELECT seg.c_mktsegment, t.o_orderkey, t.o_totalprice
         |FROM (SELECT DISTINCT c_mktsegment FROM customer) seg,
         |LATERAL (
@@ -1241,8 +1201,8 @@ object ExtendedQueries {
         |  FROM orders o JOIN customer cc ON o.o_custkey = cc.c_custkey
         |  WHERE cc.c_mktsegment = seg.c_mktsegment
         |  ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 2) t
-        |ORDER BY c_mktsegment, o_totalprice DESC, o_orderkey""".stripMargin,
-    "j11_full_outer" ->
+        |ORDER BY c_mktsegment, o_totalprice DESC, o_orderkey""".stripMargin)),
+    Entry("j11_full_outer", fullOuterQ, Some(
       """WITH c AS (
         |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
         |o AS (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1)
@@ -1250,8 +1210,8 @@ object ExtendedQueries {
         |                   AND o.o_custkey IS NOT NULL THEN 1 END) AS n_both,
         |       count(CASE WHEN o.o_custkey IS NULL THEN 1 END) AS n_cust_only,
         |       count(CASE WHEN c.c_custkey IS NULL THEN 1 END) AS n_ord_only
-        |FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey""".stripMargin,
-    "q_exists_subquery" ->
+        |FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey""".stripMargin)),
+    Entry("q_exists_subquery", existsSubqueryQ, Some(
       """SELECT c_mktsegment,
         |       count(CASE WHEN EXISTS (
         |         SELECT 1 FROM orders
@@ -1261,8 +1221,8 @@ object ExtendedQueries {
         |         SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         |         THEN 1 END) AS n_never_ordered
         |FROM customer
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "a13_summary_builtin" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Entry("a13_summary_builtin", summaryQ, Some(
       """WITH a AS (
         |  SELECT count(*) AS n,
         |         CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS q_s1,
@@ -1283,8 +1243,8 @@ object ExtendedQueries {
         |       round(sqrt((q_s2 - q_s1 * q_s1 / n) / (n - 1)), 4) AS stddev_v,
         |       q_min AS min_v, q_max AS max_v
         |FROM a
-        |ORDER BY column_name""".stripMargin,
-    "t4_top_errors_labeled" ->
+        |ORDER BY column_name""".stripMargin)),
+    Entry("t4_top_errors_labeled", topErrorsQ, Some(
       """WITH e AS (
         |  SELECT l_orderkey, l_linenumber, l_quantity, l_discount,
         |         round(abs(l_extendedprice - (l_quantity * 1000.0 + 500.0)), 4) AS abs_err
@@ -1297,6 +1257,6 @@ object ExtendedQueries {
         |       CASE WHEN l_quantity >= 40 THEN 'high_quantity'
         |            WHEN l_discount >= 0.08 THEN 'high_discount'
         |            ELSE 'unmodeled' END AS likely_cause
-        |FROM top ORDER BY rank""".stripMargin,
+        |FROM top ORDER BY rank""".stripMargin)),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 import graft.Tables
 import graft.operators.IterState
 
@@ -326,16 +326,6 @@ object Graph {
     ssspFrom(coActivityEdges(Tables(s, dir).events), lowestNodes, maxHops = 3)
       .orderBy("node")
 
-  val entries: Map[String, Q] = Map(
-    "g7_sssp_bounded" -> ssspQ,
-    "g1_pagerank" -> pageRankQ,
-    "g2_triangle_count" -> triangleQ,
-    "g3_kcore" -> kcoreQ,
-    "g4_link_prediction" -> linkPredQ,
-    "g5_label_propagation" -> lpaQ,
-    "g6_bfs_layers" -> bfsQ,
-  )
-
   /** Shared oracle prefix: the [[coActivityEdges]] build in DuckDB SQL —
     * same bucket cap (64), same distinct-pair count, same `w >= 3` floor. */
   private val edgeCtes =
@@ -350,10 +340,10 @@ object Graph {
       |  FROM bb x JOIN bb y ON x.et = y.et AND x.h = y.h AND x.u < y.u
       |  GROUP BY 1, 2 HAVING count(*) >= 3)""".stripMargin
 
-  // generated: the identical contribution/teleport expressions per
-  // iteration, decimal-summed, so all five rounds stay bit-equal
-  val oracles: Map[String, String] = Map(
-    "g1_pagerank" -> {
+  val entries: Seq[Entry] = Seq(
+    // generated: the identical contribution/teleport expressions per
+    // iteration, decimal-summed, so all five rounds stay bit-equal
+    Entry("g1_pagerank", pageRankQ, Some {
       val (damping, teleport, iters) = (0.85, 0.15, 5)
       val iterCtes = (1 to iters).map { k =>
         s"""r$k AS (
@@ -387,9 +377,8 @@ object Graph {
          |       FROM nodes CROSS JOIN nn),
          |$iterCtes
          |SELECT node, p FROM r$iters ORDER BY node""".stripMargin
-    },
-
-    "g2_triangle_count" ->
+    }),
+    Entry("g2_triangle_count", triangleQ, Some(
       s"""WITH $edgeCtes,
          |tri AS (
          |  SELECT e1.s1 AS a, e1.s2 AS b2, e2.s2 AS c
@@ -400,9 +389,8 @@ object Graph {
          |  UNION ALL SELECT b2 FROM tri
          |  UNION ALL SELECT c FROM tri)
          |SELECT node, count(*) AS n_triangles
-         |FROM corners GROUP BY 1 ORDER BY node""".stripMargin,
-
-    "g3_kcore" -> {
+         |FROM corners GROUP BY 1 ORDER BY node""".stripMargin), headline = true),
+    Entry("g3_kcore", kcoreQ, Some {
       val (k, rounds) = (3, 4)
       val roundCtes = (1 to rounds).map { r =>
         s"""d${r - 1} AS (
@@ -423,9 +411,8 @@ object Graph {
          |  SELECT s1 AS node FROM e$rounds
          |  UNION ALL SELECT s2 FROM e$rounds)
          |GROUP BY 1 HAVING count(*) >= $k ORDER BY node""".stripMargin
-    },
-
-    "g4_link_prediction" ->
+    }, headline = true),
+    Entry("g4_link_prediction", linkPredQ, Some(
       s"""WITH $edgeCtes,
          |nb AS (
          |  SELECT s1 AS node, s2 AS nbr FROM ed
@@ -444,9 +431,8 @@ object Graph {
          |         AS nbr_jaccard
          |FROM ne JOIN dg da ON da.node = ne.a JOIN dg dc ON dc.node = ne.c
          |ORDER BY ne.common DESC, nbr_jaccard DESC, ne.a, ne.c
-         |LIMIT 100""".stripMargin,
-
-    "g5_label_propagation" -> {
+         |LIMIT 100""".stripMargin), headline = true),
+    Entry("g5_label_propagation", lpaQ, Some {
       val rounds = 3
       val roundCtes = (1 to rounds).map { r =>
         s"""v$r AS (
@@ -470,11 +456,10 @@ object Graph {
          |l0 AS (SELECT node, node AS label FROM nodes),
          |$roundCtes
          |SELECT node, label FROM l$rounds ORDER BY node""".stripMargin
-    },
-
+    }, headline = true),
     // generated: one (frontier-join + anti-join) CTE pair per hop,
     // mirroring bfsLayers' visited-set recursion exactly
-    "g6_bfs_layers" -> {
+    Entry("g6_bfs_layers", bfsQ, Some {
       val maxHops = 3
       val hopCtes = (1 to maxHops).map { h =>
         s"""f$h AS (
@@ -497,10 +482,10 @@ object Graph {
          |$hopCtes
          |SELECT node, CAST(dist AS INT) AS dist FROM v$maxHops
          |ORDER BY dist, node""".stripMargin
-    },
+    }, headline = true),
     // candidate distances re-round to 6 every relax round, so both
     // engines chain identical doubles and min() compares equal values
-    "g7_sssp_bounded" -> {
+    Entry("g7_sssp_bounded", ssspQ, Some {
       val maxHops = 3
       val hopCtes = (1 to maxHops).map { h =>
         s"""d$h AS (
@@ -525,6 +510,6 @@ object Graph {
          |d0 AS (SELECT node, CAST(0 AS DOUBLE) AS d FROM seeds),
          |$hopCtes
          |SELECT node, d AS dist FROM d$maxHops ORDER BY node""".stripMargin
-    },
+    }, headline = true),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
-import graft.Ops.{Q, pct}
+import graft.Ops.{Entry, Q, pct}
 
 /** Robust / outlier-aware statistics — the data-quality profiling layer a
   * training pipeline runs before trusting a numeric column (the same role
@@ -704,25 +704,10 @@ object RobustStats {
        |FROM cm""".stripMargin
   }
 
-  val entries: Map[String, Q] = Map(
-    "ml_auc_roc" -> aucQ,
-    "ml_naive_bayes" -> naiveBayesQ,
-    "ml_logreg_irls" -> logregQ,
-    "ml_kfold_ols" -> kfoldQ,
-    "ml_conformal_interval" -> conformalQ,
-    "a37_zscore_outliers" -> zscoreQ,
-    "a38_mad" -> madQ,
-    "a39_winsorize" -> winsorizeQ,
-    "a40_eqdepth_histogram" -> eqDepthQ,
-    "a44_corr_matrix" -> corrQ,
-    "a47_ols_closed_form" -> olsQ,
-    "a48_benford" -> benfordQ,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // tie-corrected Mann-Whitney: average ranks per score value, exact
     // rational arithmetic up to one rounded division
-    "ml_auc_roc" ->
+    Entry("ml_auc_roc", aucQ, Some(
       """WITH d AS (
         |  SELECT CAST(n_chars AS DOUBLE) AS score,
         |         CASE WHEN (CAST(md5_number_upper(CAST(doc_id AS VARCHAR)
@@ -743,13 +728,15 @@ object RobustStats {
         |              - CAST(sum(y) AS DOUBLE) * (sum(y) + 1) / 2.0)
         |             / CAST(sum(y) * (count(*) - sum(y)) AS DOUBLE), 6)
         |         AS auc
-        |FROM r""".stripMargin,
-    "ml_naive_bayes" -> naiveBayesOracleSql("vector", nbVocab),
-    "ml_logreg_irls" -> logregOracleSql(iters = 4, lambda = 1.0),
+        |FROM r""".stripMargin), headline = true),
+    Entry("ml_naive_bayes", naiveBayesQ,
+      Some(naiveBayesOracleSql("vector", nbVocab)), headline = true),
+    Entry("ml_logreg_irls", logregQ,
+      Some(logregOracleSql(iters = 4, lambda = 1.0)), headline = true),
     // per-fold DECIMAL moments; leave-fold-out = exact decimal window
     // subtraction; Cramer + held-out SSE in the same fixed-order double
     // math as the engine
-    "ml_kfold_ols" ->
+    Entry("ml_kfold_ols", kfoldQ, Some(
       """WITH base AS (
         |  SELECT l_quantity, l_discount,
         |         CAST((l_orderkey * 7 + l_linenumber) % 5 AS INT) AS fold,
@@ -807,11 +794,11 @@ object RobustStats {
         |       round(b0, 6) AS beta0, round(b1, 6) AS beta1,
         |       round(b2, 6) AS beta2,
         |       round(sqrt(sse / CAST(n_test AS DOUBLE)), 4) AS rmse_test
-        |FROM g ORDER BY fold""".stripMargin,
+        |FROM g ORDER BY fold""".stripMargin), headline = true),
     // r is abs(y - pred) with BOTH operands spelled out in the engine's
     // exact double op order — algebraically it is |noise|, but (A+noise)-A
     // differs from noise in last ulps, and qhat rounds from those bits
-    "ml_conformal_interval" ->
+    Entry("ml_conformal_interval", conformalQ, Some(
       """WITH base AS (
         |  SELECT (l_orderkey * 7 + l_linenumber) % 2 = 0 AS cal,
         |         abs((CAST(3.0 AS DOUBLE) + CAST(2.0 AS DOUBLE) * l_quantity
@@ -828,9 +815,9 @@ object RobustStats {
         |SELECT c.n_cal, c.qhat, count(*) AS n_test,
         |       round(avg(CAST(b.r <= c.qhat AS DOUBLE)), 6) AS coverage_test
         |FROM base b, c WHERE NOT b.cal
-        |GROUP BY c.n_cal, c.qhat""".stripMargin,
+        |GROUP BY c.n_cal, c.qhat""".stripMargin), headline = true),
     // one DECIMAL moment pass; Cramer + R2 in fixed-order double math
-    "a47_ols_closed_form" ->
+    Entry("a47_ols_closed_form", olsQ, Some(
       """WITH base AS (
         |  SELECT l_quantity, l_discount,
         |         CAST(3.0 AS DOUBLE) + CAST(2.0 AS DOUBLE) * l_quantity
@@ -879,10 +866,10 @@ object RobustStats {
         |  round(CASE WHEN abs(det) > 0 THEN b2 END, 6) AS beta2,
         |  round(CASE WHEN abs(det) > 0 AND sst > 0
         |             THEN CAST(1 AS DOUBLE) - sse / sst END, 6) AS r2
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin), headline = true),
     // leading digit from the BIGINT string, never floor(log10) (boundary
     // ulps at exact powers of ten differ by engine)
-    "a48_benford" ->
+    Entry("a48_benford", benfordQ, Some(
       """WITH c AS (
         |  SELECT CAST(substr(CAST(CAST(floor(l_extendedprice) AS BIGINT)
         |                          AS VARCHAR), 1, 1) AS INT) AS digit,
@@ -897,8 +884,8 @@ object RobustStats {
         |                 - round(log10(CAST(1 AS DOUBLE)
         |                               + CAST(1 AS DOUBLE) / digit), 6)), 6)
         |         AS deviation
-        |FROM c, t ORDER BY digit""".stripMargin,
-    "a37_zscore_outliers" ->
+        |FROM c, t ORDER BY digit""".stripMargin), headline = true),
+    Entry("a37_zscore_outliers", zscoreQ, Some(
       """WITH st AS (
         |  SELECT l_returnflag, count(*) AS n,
         |         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s,
@@ -916,8 +903,8 @@ object RobustStats {
         |       CAST(sum(CASE WHEN abs(zv) > 2.5 THEN 1 ELSE 0 END) AS BIGINT)
         |         AS n_outliers,
         |       round(max(abs(zv)), 6) AS max_absz
-        |FROM z GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "a38_mad" ->
+        |FROM z GROUP BY 1 ORDER BY l_returnflag""".stripMargin), headline = true),
+    Entry("a38_mad", madQ, Some(
       """WITH med AS (
         |  SELECT l_returnflag,
         |         round(quantile_cont(l_extendedprice, 0.5), 6) AS med
@@ -926,8 +913,8 @@ object RobustStats {
         |       round(any_value(med), 4) AS median_price,
         |       round(quantile_cont(abs(l.l_extendedprice - med), 0.5), 4) AS mad
         |FROM lineitem l JOIN med USING (l_returnflag)
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "a39_winsorize" ->
+        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin), headline = true),
+    Entry("a39_winsorize", winsorizeQ, Some(
       """WITH b AS (
         |  SELECT l_returnflag,
         |         round(quantile_cont(l_extendedprice, 0.05), 6) AS lo,
@@ -944,10 +931,10 @@ object RobustStats {
         |                           AS DECIMAL(18,6))) AS DOUBLE)
         |             / count(*), 4) AS winsorized_mean
         |FROM lineitem l JOIN b USING (l_returnflag)
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin), headline = true),
     // generated for k=8 with the same strict-> comparisons and rounded
     // anchors the operator embeds
-    "a40_eqdepth_histogram" -> {
+    Entry("a40_eqdepth_histogram", eqDepthQ, Some {
       val k = 8
       val qs = (1 until k).map(i =>
         s"round(quantile_cont(l_extendedprice, ${i.toDouble / k}), 6) AS b$i")
@@ -968,11 +955,11 @@ object RobustStats {
          |       max($lst[bin + 2]) AS hi,
          |       count(*) AS n
          |FROM a GROUP BY bin ORDER BY bin""".stripMargin
-    },
+    }),
     // generated for the same column list as the entry; the moment casts
     // (DECIMAL(24,6) sums, DECIMAL(30,6) squares/products) and the final
     // double arithmetic mirror corrMatrix exactly
-    "a44_corr_matrix" -> {
+    Entry("a44_corr_matrix", corrQ, Some {
       val cs = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
       val pairs = for { i <- cs.indices; j <- i + 1 until cs.size }
         yield (cs(i), cs(j))
@@ -996,6 +983,6 @@ object RobustStats {
          |  FROM lineitem)
          |$rows
          |ORDER BY col_x, col_y""".stripMargin
-    },
+    }, headline = true),
   )
 }

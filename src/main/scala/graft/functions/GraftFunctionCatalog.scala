@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException}
@@ -157,12 +157,8 @@ object CatalogFunctions {
         |GROUP BY bucket ORDER BY bucket""".stripMargin)
   }
 
-  val entries: Map[String, Q] = Map(
-    "f13_catalog_functions" -> catalogFnQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "f13_catalog_functions" -> {
+  val entries: Seq[Entry] = Seq(
+    Entry("f13_catalog_functions", catalogFnQ, Some {
       val z = graft.warehouse.Layout.zTerms("(l_partkey & 65535)", "(l_suppkey & 65535)", 16)
       s"""WITH z AS (
          |  SELECT CAST($z AS BIGINT) AS z,
@@ -171,6 +167,6 @@ object CatalogFunctions {
          |SELECT bucket, count(*) AS n, CAST(sum(z) AS BIGINT) AS z_sum,
          |       min(z) AS z_min, max(z) AS z_max
          |FROM z GROUP BY 1 ORDER BY bucket""".stripMargin
-    },
+    }, headline = true),
   )
 }

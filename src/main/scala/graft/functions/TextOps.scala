@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q, spread}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -20,28 +20,6 @@ import org.apache.spark.sql.types._
   *  - scoring is pure per-row arithmetic: no shuffle at all.
   */
 object TextOps {
-
-  /** Spread a document frame by a content-derived key before CPU-heavy
-    * per-row text work (r15, guide §2.5 — the mm_video_frames r14 form):
-    * the tokenize/regex/n-gram projections inherit the SCAN SPLIT count,
-    * which is one task for a single small file, so a 32-core session ran
-    * the whole text family single-threaded (r15 JobAudit, now the `Bench`
-    * probe: 3–14 tasks across 3–12 stages per entry). One narrow exchange of (id, text) buys
-    * session-width parallelism for every consumer of the frame — exactly
-    * how a production featurizer spreads tokenizer CPU. Width pinned
-    * (REPARTITION_BY_NUM — an unpinned keyed repartition is
-    * AQE-coalescible back to the scan-split count); xxhash64 of the id is
-    * deterministic under task retry (content-derived, never round-robin).
-    * Opt-in per entry, paired-A/B gated: kept only where it measured
-    * faster (ngram heavy hitters — 5-gram fan-out; PII scrub — regex-bound
-    * projection). lm_score/bigram_lm/repetition/tfidf/feature_hashing
-    * measured FLAT-to-WORSE with the spread (the exchange + 32-way task
-    * fan-out costs more than the parallelism buys on their multi-stage
-    * aggregation pipelines) and keep the plain scan — the dedup_minhash
-    * lesson; numbers in OPTIMIZATION_r15.md. */
-  private def spread(df: DataFrame, idCol: String): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-      xxhash64(col(idCol)))
 
   /** Whitespace tokens of a text column. */
   def tokens(text: Column): Column = split(text, " ")
@@ -553,6 +531,10 @@ object TextOps {
       .groupBy("ngram").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDocs)
 
+  // spread only where a paired A/B measured it faster: here (5-gram
+  // fan-out) and in the PII scrub (regex-bound projection). lm_score,
+  // bigram_lm, repetition, tfidf and feature_hashing measured flat to worse
+  // with it and keep the plain scan (OPTIMIZATION_r15.md)
   private val ngramHHQ: Q = (s, dir) =>
     ngramHeavyHitters(spread(Tables(s, dir).documents, "doc_id"), "doc_id", "text",
       n = 5, minDocs = 2)
@@ -1320,46 +1302,6 @@ object TextOps {
     oovRatio(Tables(s, dir).documents, "doc_id", "text", 200)
       .orderBy("doc_id")
 
-  val entries: Map[String, Q] = Map(
-    "text_oov_ratio" -> oovRatioQ,
-    "text_token_stats" -> tokenStats,
-    "text_quality_score" -> qualityScore,
-    "text_fingerprint" -> fingerprintQ,
-    "text_lang_id" -> langIdQ,
-    "text_bpe_tokens" -> bpeTokensQ,
-    "text_rolling_hash" -> rollingHashQ,
-    "text_heavy_hitters" -> heavyHittersQ,
-    "text_tfidf_topk" -> tfidfQ,
-    "text_zipf_fit" -> zipfQ,
-    "text_feature_hashing" -> featureHashQ,
-    "text_lm_bigram_score" -> bigramLmQ,
-    "text_bm25_topk" -> bm25Q,
-    "text_ngram_heavy_hitters" -> ngramHHQ,
-    "text_pmi_pairs" -> pmiQ,
-    "text_normalize" -> normalizeQ,
-    "text_bigram_freq" -> bigramQ,
-    "text_gopher_rules" -> gopherQ,
-    "text_repetition" -> repetitionQ,
-    "text_dup_ngrams" -> dupNgramQ,
-    "text_cdc_chunks" -> cdcChunksQ,
-    "text_source_mix" -> sourceMixQ,
-    "text_mix_temperature" -> temperatureMixQ,
-    "text_bpe_train" -> bpeTrainQ,
-    "text_seq_packing" -> seqPackQ,
-    "text_pii_scrub" -> piiScrubQ,
-    "text_domain_cap" -> domainCapQ,
-    "text_mix_budget" -> mixBudgetQ,
-    "text_quality_prune" -> qualityPruneQ,
-    "text_encoding_stats" -> mojibakeQ,
-    "text_stopword_strip" -> stopStripQ,
-    "text_weighted_sample" -> weightedSampleQ,
-    "text_lm_score" -> lmScoreQ,
-    "text_hash_split" -> hashSplitQ,
-    "text_chunking" -> chunkQ,
-    "text_source_entropy" -> entropyQ,
-    "text_source_kl" -> sourceKlQ,
-  )
-
   /** DuckDB SQL twin of [[compositeQuality]] over a column named `text` —
     * shared by the quality-prune oracle and the corpus-curation oracle so
     * the score can never drift between them. */
@@ -1388,11 +1330,11 @@ object TextOps {
     s"CASE $cases ELSE '${langs.last}' END"
   }
 
-  val oracles: Map[String, String] = Map(
-    "text_bpe_train" -> bpeOracleSql(BpeMerges, BpePasses),
+  val entries: Seq[Entry] = Seq(
+    Entry("text_bpe_train", bpeTrainQ, Some(bpeOracleSql(BpeMerges, BpePasses)), headline = true),
     // bucket address and sign both come from md5 — the engine-neutral
     // content hash both engines compute identically
-    "text_feature_hashing" ->
+    Entry("text_feature_hashing", featureHashQ, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1405,10 +1347,10 @@ object TextOps {
         |  FROM tok)
         |SELECT doc_id, bucket, count(*) AS weight,
         |       CAST(sum(sign) AS BIGINT) AS signed_weight
-        |FROM h GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
+        |FROM h GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin), headline = true),
     // per-token log-score rounds to 6, per-doc sum rides exact DECIMAL,
     // one division per doc (the text_source_kl contract)
-    "text_lm_bigram_score" ->
+    Entry("text_lm_bigram_score", bigramLmQ, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(sp) AS token,
         |         generate_subscripts(sp, 1) AS pos
@@ -1448,9 +1390,9 @@ object TextOps {
         |SELECT doc_id, count(*) AS n_scored,
         |       round(CAST(sum(CAST(lp AS DECIMAL(18,6))) AS DOUBLE)
         |             / count(*), 6) AS avg_logprob
-        |FROM scored GROUP BY 1 ORDER BY doc_id""".stripMargin,
+        |FROM scored GROUP BY 1 ORDER BY doc_id""".stripMargin), headline = true),
     // closed-form OLS on ln/ln moments; one CASE-gated division per output
-    "text_zipf_fit" ->
+    Entry("text_zipf_fit", zipfQ, Some(
       """WITH tok AS (
         |  SELECT source, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1484,8 +1426,8 @@ object TextOps {
         |                  THEN (sy - (num / den) * sx) / n_terms END, 6)
         |         AS zipf_intercept
         |FROM s JOIN tot t USING (source)
-        |ORDER BY source""".stripMargin,
-    "text_oov_ratio" ->
+        |ORDER BY source""".stripMargin), headline = true),
+    Entry("text_oov_ratio", oovRatioQ, Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |vc AS (SELECT tok, count(*) AS n FROM toks GROUP BY 1),
@@ -1497,14 +1439,14 @@ object TextOps {
         |       round(sum(CASE WHEN v.tok IS NULL THEN 1.0 ELSE 0.0 END)
         |             / count(*), 6) AS oov_ratio
         |FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "text_token_stats" ->
+        |GROUP BY 1 ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_token_stats", tokenStats, Some(
       """SELECT doc_id, CAST(length(text) AS INT) AS n_chars,
         |       CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
         |       round(CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS DOUBLE)
         |             / len(string_split(text, ' ')), 4) AS avg_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_quality_score" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Entry("text_quality_score", qualityScore, Some(
       s"""WITH t AS (
          |  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
          |         len(list_filter(string_split(text, ' '),
@@ -1517,28 +1459,28 @@ object TextOps {
          |       round(CAST(digit_chars AS DOUBLE) / n_chars, 6) AS digit_ratio,
          |       round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.5 +
          |             least(CAST(stop_hits AS DOUBLE) / n_tokens * 5.0, 0.5), 6) AS quality
-         |FROM t ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
+         |FROM t ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_fingerprint", fingerprintQ, Some(
       """SELECT doc_id, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_lang_id" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Entry("text_lang_id", langIdQ, Some(
       s"""WITH s AS (SELECT doc_id, lang, $langScoreSql FROM documents)
          |SELECT doc_id, lang, $langCaseSql AS lang_pred
-         |FROM s ORDER BY doc_id""".stripMargin,
-    "text_bpe_tokens" ->
+         |FROM s ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_bpe_tokens", bpeTokensQ, Some(
       """SELECT doc_id,
         |       CAST(len(string_split(text, ' ')) AS INT) AS n_words,
         |       CAST(len(regexp_extract_all(text, '[a-z]{1,4}|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_bpe_est
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_heavy_hitters" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Entry("text_heavy_hitters", heavyHittersQ, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
         |  FROM documents)
         |SELECT token, count(*) AS df FROM tok
         |GROUP BY token
         |HAVING count(*) >= 0.2 * (SELECT count(*) FROM documents)
-        |ORDER BY df DESC, token""".stripMargin,
-    "text_tfidf_topk" ->
+        |ORDER BY df DESC, token""".stripMargin), headline = true),
+    Entry("text_tfidf_topk", tfidfQ, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -1554,8 +1496,8 @@ object TextOps {
         |           ORDER BY tfidf DESC, token) AS INT) AS rank
         |  FROM scored)
         |SELECT doc_id, rank, token, tfidf
-        |FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "text_ngram_heavy_hitters" ->
+        |FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin), headline = true),
+    Entry("text_ngram_heavy_hitters", ngramHHQ, Some(
       """WITH tok AS (
         |  SELECT string_split(text, ' ') AS ts FROM documents),
         |grams AS (
@@ -1564,8 +1506,8 @@ object TextOps {
         |  FROM tok WHERE len(ts) >= 5)
         |SELECT ngram, count(*) AS df FROM grams
         |GROUP BY ngram HAVING count(*) >= 2
-        |ORDER BY df DESC, ngram""".stripMargin,
-    "text_pmi_pairs" ->
+        |ORDER BY df DESC, ngram""".stripMargin), headline = true),
+    Entry("text_pmi_pairs", pmiQ, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
         |  FROM documents),
@@ -1584,8 +1526,8 @@ object TextOps {
         |  JOIN dfreq db ON db.tok = tok_b
         |  CROSS JOIN n)
         |SELECT tok_a, tok_b, df_ab, pmi FROM scored
-        |ORDER BY pmi DESC, tok_a, tok_b LIMIT 20""".stripMargin,
-    "text_bm25_topk" ->
+        |ORDER BY pmi DESC, tok_a, tok_b LIMIT 20""".stripMargin), headline = true),
+    Entry("text_bm25_topk", bm25Q, Some(
       """WITH base AS (
         |  SELECT doc_id, len(string_split(text, ' ')) AS dl,
         |         unnest(string_split(text, ' ')) AS token
@@ -1609,12 +1551,12 @@ object TextOps {
         |           AS rank, doc_id, score
         |  FROM scored)
         |SELECT rank, doc_id, score FROM ranked
-        |WHERE rank <= 10 ORDER BY rank""".stripMargin,
+        |WHERE rank <= 10 ORDER BY rank""".stripMargin), headline = true),
     // rotl(acc,5) in HUGEINT: (acc*32 mod 2^64) + (acc div 2^59) — the two
     // terms occupy disjoint bit ranges, so + == |; DuckDB's << would raise
     // on overflow, multiplication in HUGEINT cannot. Signed conversion as
     // in the simhash oracle.
-    "text_rolling_hash" ->
+    Entry("text_rolling_hash", rollingHashQ, Some(
       """WITH u AS (
         |  SELECT doc_id,
         |    list_reduce(
@@ -1629,13 +1571,13 @@ object TextOps {
         |       CAST(CASE WHEN s >= 9223372036854775808::HUGEINT
         |                 THEN s::HUGEINT - 18446744073709551616::HUGEINT
         |                 ELSE s::HUGEINT END AS BIGINT) AS rolling_fp
-        |FROM u ORDER BY doc_id""".stripMargin,
-    "text_normalize" ->
+        |FROM u ORDER BY doc_id""".stripMargin)),
+    Entry("text_normalize", normalizeQ, Some(
       """SELECT doc_id,
         |       trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
         |                           ' +', ' ', 'g')) AS norm_text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_bigram_freq" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Entry("text_bigram_freq", bigramQ, Some(
       """WITH tok AS (
         |  SELECT string_split(text, ' ') AS ts FROM documents),
         |grams AS (
@@ -1643,8 +1585,8 @@ object TextOps {
         |                               i -> ts[i] || ' ' || ts[i+1])) AS bigram
         |  FROM tok WHERE len(ts) >= 2)
         |SELECT bigram, count(*) AS n FROM grams
-        |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
-    "text_gopher_rules" ->
+        |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20""".stripMargin), headline = true),
+    Entry("text_gopher_rules", gopherQ, Some(
       s"""WITH t AS (
          |  SELECT doc_id, text, string_split(text, ' ') AS ts FROM documents),
          |s AS (
@@ -1661,8 +1603,8 @@ object TextOps {
          |SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_frac, stop_hits,
          |  ((n_words BETWEEN 50 AND 100000) AND (mean_word_len BETWEEN 3.0 AND 10.0)
          |   AND symbol_ratio < 0.1 AND alpha_word_frac > 0.8 AND stop_hits >= 2) AS keep
-         |FROM s ORDER BY doc_id""".stripMargin,
-    "text_repetition" ->
+         |FROM s ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_repetition", repetitionQ, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -1683,8 +1625,9 @@ object TextOps {
         |  FROM bf GROUP BY 1)
         |SELECT w.doc_id, w.top_word_frac, w.distinct_word_frac,
         |       coalesce(b.top_bigram_frac, 0.0) AS top_bigram_frac
-        |FROM words w LEFT JOIN bstat b USING (doc_id) ORDER BY w.doc_id""".stripMargin,
-    "text_dup_ngrams" ->
+        |FROM words w LEFT JOIN bstat b USING (doc_id) ORDER BY w.doc_id""".stripMargin),
+      headline = true),
+    Entry("text_dup_ngrams", dupNgramQ, Some(
       """WITH t AS (
         |  SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
         |grams AS (
@@ -1702,10 +1645,10 @@ object TextOps {
         |       CAST(coalesce(total, 0) AS BIGINT) AS n_grams,
         |       coalesce(round(CAST(dup AS DOUBLE) / total, 6), 0.0) AS dup_ngram_frac,
         |       coalesce(round(CAST(dupchars AS DOUBLE) / chars, 6), 0.0) AS dup_char_frac
-        |FROM documents LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM documents LEFT JOIN per USING (doc_id) ORDER BY doc_id""".stripMargin)),
     // zipped unnests (DuckDB aligns parallel unnests); UBIGINT % m equals
     // Spark's pmod(signed, m) because 2^64 ≡ 0 (mod m) for the graded m
-    "text_cdc_chunks" ->
+    Entry("text_cdc_chunks", cdcChunksQ, Some(
       """WITH tok AS (
         |  SELECT doc_id,
         |         unnest(range(1, len(string_split(text, ' ')) + 1)) AS pos,
@@ -1724,8 +1667,8 @@ object TextOps {
         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
         |       count(*) AS n_tokens,
         |       md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_hash
-        |FROM c GROUP BY 1, 2 ORDER BY doc_id, chunk_id""".stripMargin,
-    "text_pii_scrub" -> {
+        |FROM c GROUP BY 1, 2 ORDER BY doc_id, chunk_id""".stripMargin)),
+    Entry("text_pii_scrub", piiScrubQ, Some {
       val Seq((email, er), (intl, pr), (dashed, _), (num, nr)) = piiPatterns
       s"""SELECT doc_id,
          |       regexp_replace(regexp_replace(regexp_replace(regexp_replace(
@@ -1737,25 +1680,25 @@ object TextOps {
          |       CAST(len(regexp_extract_all(text, '$intl')) +
          |            len(regexp_extract_all(text, '$dashed')) AS INT) AS n_phones
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "text_hash_split" ->
+    }, headline = true),
+    Entry("text_hash_split", hashSplitQ, Some(
       """SELECT doc_id,
         |       CASE WHEN md5_number_upper(CAST(doc_id AS VARCHAR)) % 4096 < 3277
         |            THEN 'train'
         |            WHEN md5_number_upper(CAST(doc_id AS VARCHAR)) % 4096 < 3687
         |            THEN 'val'
         |            ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
     // offsets step by size-overlap=90; a trailing chunk of length <= overlap
     // is dropped (wholly contained in its predecessor)
-    "text_chunking" ->
+    Entry("text_chunking", chunkQ, Some(
       """SELECT d.doc_id, off // 90 AS chunk_id, off AS chunk_start,
         |       substring(d.text, CAST(off + 1 AS INT), 120) AS chunk
         |FROM documents d, unnest(generate_series(0, d.n_chars - 1, 90)) AS t(off)
         |WHERE off = 0 OR d.n_chars - off > 30
-        |ORDER BY d.doc_id, chunk_id""".stripMargin,
+        |ORDER BY d.doc_id, chunk_id""".stripMargin), headline = true),
     // each -p ln p term rounds to 6 before a DECIMAL(20,6) sum (lm_score rule)
-    "text_source_entropy" ->
+    Entry("text_source_entropy", entropyQ, Some(
       """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS word
         |           FROM documents),
         |     c AS (SELECT source, word, count(*) AS c FROM w GROUP BY 1, 2),
@@ -1767,10 +1710,10 @@ object TextOps {
         |                                 * ln(CAST(c.c AS DOUBLE) / t.tot), 6)
         |                           AS DECIMAL(20,6))) AS DOUBLE), 6) AS entropy
         |FROM c JOIN t USING (source)
-        |GROUP BY c.source ORDER BY c.source""".stripMargin,
+        |GROUP BY c.source ORDER BY c.source""".stripMargin)),
     // regrouped form KL_s = num/c_s - ln c_s + ln T: each c_sw*(ln c_sw -
     // ln c_w) term rounds to 6 before a DECIMAL(26,6) sum (sourceKl rule)
-    "text_source_kl" ->
+    Entry("text_source_kl", sourceKlQ, Some(
       """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS word
         |           FROM documents),
         |     sw AS (SELECT source, word, count(*) AS c_sw FROM w GROUP BY 1, 2),
@@ -1788,9 +1731,9 @@ object TextOps {
         |       round(CAST(num AS DOUBLE) / c_s
         |             - ln(CAST(c_s AS DOUBLE))
         |             + ln(CAST(total AS DOUBLE)), 6) AS kl
-        |FROM g, t ORDER BY source""".stripMargin,
+        |FROM g, t ORDER BY source""".stripMargin), headline = true),
     // each ln rounds to 6 before a DECIMAL(20,6) sum -> order/ulp-stable mean
-    "text_lm_score" ->
+    Entry("text_lm_score", lmScoreQ, Some(
       """WITH g AS (
         |  SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
         |db AS (
@@ -1807,8 +1750,8 @@ object TextOps {
         |  FROM dbw JOIN c2 USING (bigram) JOIN c1 USING (w1))
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
         |       round(CAST(sum(lp) AS DOUBLE) / count(*), 6) AS lm_score
-        |FROM lp GROUP BY 1 ORDER BY doc_id""".stripMargin,
-    "text_weighted_sample" ->
+        |FROM lp GROUP BY 1 ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_weighted_sample", weightedSampleQ, Some(
       """WITH per AS (
         |  SELECT source, count(*) AS n_docs,
         |         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -1821,31 +1764,31 @@ object TextOps {
         |SELECT d.doc_id, d.source
         |FROM documents d JOIN w USING (source)
         |WHERE md5_number_upper(CAST(d.doc_id AS VARCHAR)) % 4096 < weight * 4096
-        |ORDER BY doc_id""".stripMargin,
-    "text_encoding_stats" ->
+        |ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_encoding_stats", mojibakeQ, Some(
       """SELECT doc_id, lang,
         |       CAST(len(regexp_extract_all(text, '�')) AS INT) AS n_replacement,
         |       CAST(len(regexp_extract_all(text,
         |         '[\x00-\x08\x0b\x0c\x0e-\x1f]')) AS INT) AS n_control,
         |       round(CAST(len(regexp_extract_all(text, '[^\x00-\x7f]')) AS DOUBLE)
         |             / length(text), 6) AS non_ascii_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_stopword_strip" -> {
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Entry("text_stopword_strip", stopStripQ, Some {
       val en = vocabSql(langMarkers.toMap.apply("en"))
       s"""SELECT doc_id,
          |       array_to_string(list_filter(string_split(text, ' '),
          |                                   t -> NOT t IN $en), ' ') AS stripped
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "text_domain_cap" ->
+    }),
+    Entry("text_domain_cap", domainCapQ, Some(
       """WITH r AS (
         |  SELECT doc_id, source,
         |         CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id)
         |              AS INT) AS rk
         |  FROM documents)
         |SELECT doc_id, source, rk FROM r
-        |WHERE rk <= 10 ORDER BY source, rk""".stripMargin,
-    "text_mix_budget" ->
+        |WHERE rk <= 10 ORDER BY source, rk""".stripMargin)),
+    Entry("text_mix_budget", mixBudgetQ, Some(
       """WITH t AS (
         |  SELECT doc_id, source,
         |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -1858,8 +1801,8 @@ object TextOps {
         |           AS cum_before
         |  FROM t)
         |SELECT doc_id, source, n_tokens FROM r
-        |WHERE cum_before < 2000 ORDER BY doc_id""".stripMargin,
-    "text_quality_prune" ->
+        |WHERE cum_before < 2000 ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_quality_prune", qualityPruneQ, Some(
       s"""WITH q AS (
          |  SELECT doc_id,
          |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -1873,8 +1816,8 @@ object TextOps {
          |           AS cum_before
          |  FROM q)
          |SELECT doc_id, quality, n_tokens FROM r
-         |WHERE cum_before < 8000 ORDER BY doc_id""".stripMargin,
-    "text_seq_packing" ->
+         |WHERE cum_before < 8000 ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_seq_packing", seqPackQ, Some(
       s"""WITH t AS (
          |  SELECT doc_id,
          |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -1888,8 +1831,8 @@ object TextOps {
          |SELECT doc_id, n_tokens,
          |       start // $SeqBudget AS seq_id,
          |       start % $SeqBudget AS offset
-         |FROM c ORDER BY doc_id""".stripMargin,
-    "text_source_mix" ->
+         |FROM c ORDER BY doc_id""".stripMargin), headline = true),
+    Entry("text_source_mix", sourceMixQ, Some(
       """WITH per AS (
         |  SELECT source, count(*) AS n_docs,
         |         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -1898,10 +1841,10 @@ object TextOps {
         |SELECT source, n_docs, n_tokens,
         |       round(CAST(n_tokens AS DOUBLE) / total, 6) AS share,
         |       round(least(1.0, (CAST(total AS DOUBLE) / k) / n_tokens), 6) AS weight
-        |FROM per, tot ORDER BY source""".stripMargin,
+        |FROM per, tot ORDER BY source""".stripMargin)),
     // p^alpha rounds to 6 BEFORE the DECIMAL normalization sum (pow is the
     // one ulp-unstable step); everything after is identical-double math
-    "text_mix_temperature" ->
+    Entry("text_mix_temperature", temperatureMixQ, Some(
       """WITH per AS (
         |  SELECT source, count(*) AS n_docs,
         |         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -1919,6 +1862,6 @@ object TextOps {
         |SELECT source, n_docs, n_tokens, round(p, 6) AS share,
         |       round(qu / qsum, 6) AS temp_weight,
         |       round(qu / qsum / p, 6) AS sample_factor
-        |FROM a, s ORDER BY source""".stripMargin,
+        |FROM a, s ORDER BY source""".stripMargin), headline = true),
   )
 }

@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 import graft.operators.Cleaning
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
@@ -207,16 +207,8 @@ object FarePipeline {
       .orderBy("event_type")
   }
 
-  val entries: Map[String, Q] = Map(
-    "ml_features" -> mlFeaturesQ,
-    "ml_target_encoding" -> mlTargetEncodingQ,
-    "ml_class_weights" -> mlClassWeightsQ,
-    "ml_gbt_metrics" -> mlGbtMetricsQ, // model metrics are seed/engine-specific
-    "ml_batch_inference" -> mlBatchInferenceQ, // predictions engine-specific
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ml_target_encoding" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("ml_target_encoding", mlTargetEncodingQ, Some(
       """WITH c AS (
         |  SELECT event_type, count(*) AS n,
         |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s
@@ -228,14 +220,18 @@ object FarePipeline {
         |SELECT event_type, n,
         |       round((s + 100.0 * mu) / (n + 100.0), 6) AS enc_smoothed,
         |       mu AS global_mean
-        |FROM c, g ORDER BY event_type""".stripMargin,
-    "ml_class_weights" ->
+        |FROM c, g ORDER BY event_type""".stripMargin), headline = true),
+    Entry("ml_class_weights", mlClassWeightsQ, Some(
       """WITH c AS (SELECT label, count(*) AS n FROM embeddings GROUP BY 1),
         |t AS (SELECT sum(n) AS total, count(*) AS n_classes FROM c)
         |SELECT label, n,
         |       round(CAST(total AS DOUBLE) / (n_classes * n), 6) AS class_weight
-        |FROM c, t ORDER BY label""".stripMargin,
-    "ml_features" ->
+        |FROM c, t ORDER BY label""".stripMargin), headline = true),
+    // model metrics are seed/engine-specific
+    Entry("ml_gbt_metrics", mlGbtMetricsQ, None),
+    // predictions engine-specific
+    Entry("ml_batch_inference", mlBatchInferenceQ, None),
+    Entry("ml_features", mlFeaturesQ, Some(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_discount,
         |       l_returnflag, l_linestatus,
         |       CAST(month(l_shipdate) AS INT) AS ship_month,
@@ -245,6 +241,6 @@ object FarePipeline {
         |             CAST(dayofweek(l_shipdate) + 1 AS INT) * 10.0, 4) AS label
         |FROM lineitem
         |WHERE l_quantity > 0 AND l_quantity <= 200 AND l_extendedprice >= 0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
   )
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -366,18 +366,6 @@ object AsOfJoin {
       .orderBy("event_id")
   }
 
-  val entries: Map[String, Q] = Map(
-    "asof_join_backward" -> asOfQ,
-    "asof_join_nearest" -> asOfNearestQ,
-    "asof_join_native" -> asOfNativeQ,
-    "asof_join_forward" -> asOfForwardQ,
-    "asof_join_forward_native" -> asOfForwardNativeQ,
-    "asof_join_broadcast" -> asOfBroadcastQ,
-    "asof_join_tolerance" -> asOfToleranceQ,
-    "asof_join_tolerance_native" -> asOfToleranceNativeQ,
-    "asof_join_multikey" -> asOfMultiKeyQ,
-  )
-
   private val asOfOracle =
     """SELECT v.event_id, v.user_id, p.value AS last_purchase
       |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view') v
@@ -426,16 +414,17 @@ object AsOfJoin {
       |FROM b JOIN f USING (event_id)
       |ORDER BY b.event_id""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "asof_join_backward" -> asOfOracle,
-    "asof_join_nearest" -> asOfNearestOracle,
-    "asof_join_native" -> asOfOracle,
-    "asof_join_forward" -> asOfForwardOracle,
-    "asof_join_forward_native" -> asOfForwardOracle,
-    "asof_join_broadcast" -> asOfOracle,
-    "asof_join_tolerance" -> asOfToleranceOracle,
-    "asof_join_tolerance_native" -> asOfToleranceOracle,
-    "asof_join_multikey" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("asof_join_backward", asOfQ, Some(asOfOracle), headline = true),
+    Entry("asof_join_nearest", asOfNearestQ, Some(asOfNearestOracle), headline = true),
+    Entry("asof_join_native", asOfNativeQ, Some(asOfOracle), headline = true),
+    Entry("asof_join_forward", asOfForwardQ, Some(asOfForwardOracle)),
+    Entry("asof_join_forward_native", asOfForwardNativeQ, Some(asOfForwardOracle)),
+    Entry("asof_join_broadcast", asOfBroadcastQ, Some(asOfOracle), headline = true),
+    Entry("asof_join_tolerance", asOfToleranceQ, Some(asOfToleranceOracle)),
+    Entry("asof_join_tolerance_native", asOfToleranceNativeQ,
+      Some(asOfToleranceOracle), headline = true),
+    Entry("asof_join_multikey", asOfMultiKeyQ, Some(
       """WITH ref AS (
         |  SELECT user_id, event_type, ts, min(value) AS prev_value
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2, 3)
@@ -444,6 +433,6 @@ object AsOfJoin {
         |ASOF LEFT JOIN ref r
         |  ON e.user_id = r.user_id AND e.event_type = r.event_type
         | AND e.ts >= r.ts
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin), headline = true),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 import graft.Tables
 
 /** Incremental-computation operators — the "never recompute the world"
@@ -168,16 +168,10 @@ object Incremental {
       .orderBy("o_orderkey")
   }
 
-  val entries: Map[String, Q] = Map(
-    "inc_agg_merge" -> aggMergeQ,
-    "inc_snapshot_diff" -> snapshotDiffQ,
-    "inc_cdc_apply" -> cdcApplyQ,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // the oracle recomputes from scratch; the engine must reach the same
     // numbers through the snapshot+delta merge path
-    "inc_agg_merge" ->
+    Entry("inc_agg_merge", aggMergeQ, Some(
       """SELECT o_orderpriority, count(*) AS n,
         |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2)
         |         AS revenue,
@@ -185,8 +179,8 @@ object Incremental {
         |             / count(*), 4) AS avg_price,
         |       min(o_totalprice) AS min_price,
         |       max(o_totalprice) AS max_price
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "inc_snapshot_diff" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin), headline = true),
+    Entry("inc_snapshot_diff", snapshotDiffQ, Some(
       """WITH o AS (
         |  SELECT o_orderkey, o_totalprice AS price FROM orders
         |  WHERE o_orderkey % 7 != 0),
@@ -203,8 +197,8 @@ object Incremental {
         |         round(o.price, 2) AS old_val, round(n.price, 2) AS new_val
         |  FROM o FULL OUTER JOIN n USING (o_orderkey))
         |SELECT * FROM d WHERE change_type IS NOT NULL
-        |ORDER BY o_orderkey""".stripMargin,
-    "inc_cdc_apply" ->
+        |ORDER BY o_orderkey""".stripMargin), headline = true),
+    Entry("inc_cdc_apply", cdcApplyQ, Some(
       """WITH snap AS (
         |  SELECT o_orderkey, o_totalprice AS price FROM orders),
         |log AS (
@@ -228,6 +222,6 @@ object Incremental {
         |                    WHERE l.o_orderkey = s.o_orderkey)
         |  UNION ALL
         |  SELECT o_orderkey, price FROM latest WHERE op != 'D')
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin), headline = true),
   )
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q, spread}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -70,8 +70,7 @@ object Linkage {
     // an unpinned keyed repartition is AQE-coalescible, and the advisory
     // byte sizing — blind to the ~|c_b|× fan-out the join applies ABOVE
     // the exchange — merged the KB-sized probe back into ONE partition.
-    dirty.repartition(dirty.sparkSession.sparkContext.defaultParallelism,
-        xxhash64(col(dirtyId)))
+    spread(dirty, dirtyId)
       .join(clean, blockCols)
       // banded Levenshtein: the 3-arg form computes only a 2·maxDist+1
       // diagonal band and bails to -1 past the threshold — O(maxDist·len)
@@ -191,12 +190,10 @@ object Linkage {
     * ROUNDED score so the cut is reproducible across engines. */
   private val jaroScoredQ: Q = (s, dir) => {
     val t = Tables(s, dir)
-    dirtyCustomers(t)
-      // spread the probe side before the broadcast block join — same
-      // rationale as [[blockedCandidates]] (the JW scoring of the block
-      // cross product ran as ONE task off the single scan split; width
-      // pinned — an unpinned keyed repartition is AQE-coalescible)
-      .repartition(s.sparkContext.defaultParallelism, xxhash64(col("d_id")))
+    // spread the probe side before the broadcast block join — same
+    // rationale as [[blockedCandidates]] (the JW scoring of the block
+    // cross product ran as ONE task off the single scan split)
+    spread(dirtyCustomers(t), "d_id")
       .join(cleanCustomers(t), Seq("c_nationkey", "c_mktsegment"))
       .withColumn("jw", round(
         call_function("graft_jaro_winkler", col("d_name"), col("c_name")), 4))
@@ -331,18 +328,6 @@ object Linkage {
           .as("accuracy"))
   }
 
-  val entries: Map[String, Q] = Map(
-    "link_snm_candidates" -> snmCandidatesQ,
-    "link_snm_accuracy" -> snmAccuracyQ,
-    "link_candidates" -> candidatesQ,
-    "link_best_match" -> bestMatchQ,
-    "link_accuracy" -> accuracyQ,
-    "link_jaro_scored" -> jaroScoredQ,
-    "link_incremental" -> incrementalQ,
-    "link_block_stats" -> blockStatsQ,
-    "link_entity_clusters" -> entityClustersQ,
-  )
-
   private val dirtySql =
     """dirty AS (
       |  SELECT c_custkey AS d_id,
@@ -394,12 +379,12 @@ object Linkage {
       |    ON a.b = t.b AND t.rk > a.rk AND t.rk <= a.rk + 3
       |  WHERE a.side <> t.side)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "link_snm_candidates" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("link_snm_candidates", snmCandidatesQ, Some(
       s"""WITH $snmSql
          |SELECT d_id, m_id, rank_gap FROM p
-         |ORDER BY d_id, m_id, rank_gap""".stripMargin,
-    "link_snm_accuracy" ->
+         |ORDER BY d_id, m_id, rank_gap""".stripMargin)),
+    Entry("link_snm_accuracy", snmAccuracyQ, Some(
       s"""WITH $snmSql,
          |allr2 AS (
          |  SELECT c_nationkey AS b, d_id AS id, reverse(d_name) AS name,
@@ -439,11 +424,11 @@ object Linkage {
          |       CAST(sum(CAST(d_id = m_id AS INT)) AS BIGINT) AS n_correct,
          |       round(sum(CAST(d_id = m_id AS INT)) * 1.0 / count(*), 4)
          |         AS accuracy
-         |FROM best WHERE rk = 1""".stripMargin,
-    "link_candidates" ->
+         |FROM best WHERE rk = 1""".stripMargin), headline = true),
+    Entry("link_candidates", candidatesQ, Some(
       s"""WITH $dirtySql
-         |SELECT d_id, m_id, lev FROM cand ORDER BY d_id, m_id""".stripMargin,
-    "link_best_match" ->
+         |SELECT d_id, m_id, lev FROM cand ORDER BY d_id, m_id""".stripMargin)),
+    Entry("link_best_match", bestMatchQ, Some(
       s"""WITH $dirtySql,
          |best AS (
          |  SELECT d_id, m_id, lev,
@@ -452,8 +437,8 @@ object Linkage {
          |  FROM cand)
          |SELECT d_id, m_id, lev,
          |       CAST(d_id = m_id AS INT) AS correct
-         |FROM best WHERE rk = 1 ORDER BY d_id""".stripMargin,
-    "link_accuracy" ->
+         |FROM best WHERE rk = 1 ORDER BY d_id""".stripMargin), headline = true),
+    Entry("link_accuracy", accuracyQ, Some(
       s"""WITH $dirtySql,
          |best AS (
          |  SELECT d_id, m_id,
@@ -464,8 +449,8 @@ object Linkage {
          |       CAST(sum(CAST(d_id = m_id AS INT)) AS BIGINT) AS n_correct,
          |       round(sum(CAST(d_id = m_id AS INT)) * 1.0 / count(*), 4)
          |         AS accuracy
-         |FROM best WHERE rk = 1""".stripMargin,
-    "link_jaro_scored" ->
+         |FROM best WHERE rk = 1""".stripMargin)),
+    Entry("link_jaro_scored", jaroScoredQ, Some(
       """WITH dirty AS (
         |  SELECT c_custkey AS d_id,
         |         concat(substr(c_name, 1,
@@ -481,8 +466,8 @@ object Linkage {
         |  ON d.c_nationkey = c.c_nationkey
         | AND d.c_mktsegment = c.c_mktsegment
         |WHERE round(jaro_winkler_similarity(d.d_name, c.c_name), 4) >= 0.97
-        |ORDER BY d_id, m_id""".stripMargin,
-    "link_incremental" ->
+        |ORDER BY d_id, m_id""".stripMargin), headline = true),
+    Entry("link_incremental", incrementalQ, Some(
       s"""WITH $dirtySql,
          |best AS (
          |  SELECT d_id, m_id, lev,
@@ -491,8 +476,8 @@ object Linkage {
          |  FROM cand WHERE d_id % 5 = 0)
          |SELECT d_id, m_id, lev,
          |       CAST(d_id = m_id AS INT) AS correct
-         |FROM best WHERE rk = 1 ORDER BY d_id""".stripMargin,
-    "link_entity_clusters" ->
+         |FROM best WHERE rk = 1 ORDER BY d_id""".stripMargin)),
+    Entry("link_entity_clusters", entityClustersQ, Some(
       s"""WITH RECURSIVE $dirtySql,
          |jp AS (SELECT d_id AS id_a, m_id AS id_b FROM cand
          |       WHERE d_id <> m_id),
@@ -504,12 +489,12 @@ object Linkage {
          |  UNION
          |  SELECT s.id_a, r.label FROM sym s JOIN reach r ON s.id_b = r.id),
          |lab AS (SELECT id, min(label) AS entity FROM reach GROUP BY id)
-         |SELECT id, entity FROM lab ORDER BY id""".stripMargin,
-    "link_block_stats" ->
+         |SELECT id, entity FROM lab ORDER BY id""".stripMargin), headline = true),
+    Entry("link_block_stats", blockStatsQ, Some(
       """SELECT c_nationkey, c_mktsegment,
         |       count(*) AS n_dirty, count(*) AS n_clean,
         |       CAST(count(*) AS BIGINT) * count(*) AS n_candidates
         |FROM customer
-        |GROUP BY 1, 2 ORDER BY c_nationkey, c_mktsegment""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY c_nationkey, c_mktsegment""".stripMargin)),
   )
 }

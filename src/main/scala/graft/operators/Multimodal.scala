@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -732,19 +732,11 @@ object Multimodal {
         col("col").as("gray_mean"))
       .orderBy("media_id", "frame_idx")
 
-  val entries: Map[String, Q] = Map(
-    "mm_decode_features" -> decodeQ,
-    "mm_audio_features" -> audioQ,
-    "mm_binary_stats" -> binaryStatsQ,
-    "mm_frame_sample" -> frameSampleQ,
-    "mm_video_frames" -> videoQ,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // the decode oracle re-derives the gradient generator's closed forms:
     // r depends on x only, g on y only, b on (x, y) — exact integer sums
     // divided once then rounded, matching ImageIoDecoder's arithmetic
-    "mm_decode_features" ->
+    Entry("mm_decode_features", decodeQ, Some(
       """WITH m AS (
         |  SELECT doc_id AS media_id, 8 + doc_id % 9 AS w, 6 + doc_id % 7 AS h
         |  FROM documents),
@@ -768,11 +760,11 @@ object Multimodal {
         |FROM m JOIN rm ON m.media_id = rm.media_id
         |       JOIN gm ON m.media_id = gm.media_id
         |       JOIN bm ON m.media_id = bm.media_id
-        |ORDER BY m.media_id""".stripMargin,
+        |ORDER BY m.media_id""".stripMargin)),
     // the audio oracle re-derives the sawtooth generator's closed forms:
     // exact integer sums of v and v*v over range(n), divided once then
     // rounded — matching WavDecoder's arithmetic on the lossless PCM
-    "mm_audio_features" ->
+    Entry("mm_audio_features", audioQ, Some(
       """WITH m AS (
         |  SELECT doc_id AS media_id,
         |         CAST(800 + (doc_id % 40) * 25 AS BIGINT) AS n,
@@ -788,19 +780,19 @@ object Multimodal {
         |      FROM s GROUP BY media_id)
         |SELECT media_id, n_samples, CAST(8000 AS INT) AS sample_rate,
         |       rms, mean_abs
-        |FROM a ORDER BY media_id""".stripMargin,
+        |FROM a ORDER BY media_id""".stripMargin)),
     // the synthetic payload is the UTF-8 bytes of the doc text, so the
     // binary-side digest/length must equal the text-side ones
-    "mm_binary_stats" ->
+    Entry("mm_binary_stats", binaryStatsQ, Some(
       """SELECT doc_id AS media_id, 'image/fake' AS media_type,
         |       CAST(octet_length(encode(text)) AS INT) AS n_bytes,
         |       md5(text) AS content_md5
-        |FROM documents ORDER BY media_id""".stripMargin,
+        |FROM documents ORDER BY media_id""".stripMargin)),
     // the video oracle re-derives the gray-gradient generator's closed
     // forms per SAMPLED frame: exact integer pixel sums over the (x, y)
     // grid for each stride-2 frame index, divided once then rounded —
     // matching GifFrameDecoder's arithmetic on the lossless palette
-    "mm_video_frames" ->
+    Entry("mm_video_frames", videoQ, Some(
       """WITH m AS (
         |  SELECT doc_id AS media_id,
         |         CAST(8 + doc_id % 5 AS BIGINT) AS w,
@@ -819,16 +811,16 @@ object Multimodal {
         |       CAST(h AS INT) AS height, CAST(frame_idx AS INT) AS frame_idx,
         |       round(CAST(sum(v) AS DOUBLE) / count(*), 4) AS gray_mean
         |FROM px GROUP BY media_id, n, w, h, frame_idx
-        |ORDER BY media_id, frame_idx""".stripMargin,
+        |ORDER BY media_id, frame_idx""".stripMargin), headline = true),
     // same header-derived frame count (bytes div 40 + 1) and stride-4
     // index range as the operator
-    "mm_frame_sample" ->
+    Entry("mm_frame_sample", frameSampleQ, Some(
       """WITH v AS (
         |  SELECT doc_id AS media_id,
         |         CAST(octet_length(encode(text)) // 40 + 1 AS INT) AS n_frames
         |  FROM documents)
         |SELECT media_id, n_frames,
         |       CAST(unnest(range(0, n_frames, 4)) AS INT) AS frame_idx
-        |FROM v ORDER BY media_id, frame_idx""".stripMargin,
+        |FROM v ORDER BY media_id, frame_idx""".stripMargin)),
   )
 }

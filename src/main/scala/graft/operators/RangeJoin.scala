@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.Ops.{Q, dsum}
+import graft.Ops.{Entry, Q, dsum}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -117,13 +117,8 @@ object RangeJoin {
       .orderBy("window_id")
   }
 
-  val entries: Map[String, Q] = Map(
-    "range_join_binned" -> rangeJoinQ,
-    "range_join_overlap" -> overlapQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "range_join_binned" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("range_join_binned", rangeJoinQ, Some(
       """WITH iv(window_id, w_start, w_end) AS (VALUES
         |  ('w1', TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-08'),
         |  ('w2', TIMESTAMP '2024-01-05', TIMESTAMP '2024-01-12'),
@@ -134,8 +129,8 @@ object RangeJoin {
         |SELECT window_id, count(*) AS n,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events e JOIN iv ON e.ts >= iv.w_start AND e.ts < iv.w_end
-        |GROUP BY 1 ORDER BY window_id""".stripMargin,
-    "range_join_overlap" ->
+        |GROUP BY 1 ORDER BY window_id""".stripMargin), headline = true),
+    Entry("range_join_overlap", overlapQ, Some(
       """WITH iv(window_id, w_start, w_end) AS (VALUES
         |  ('w1', TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-08'),
         |  ('w2', TIMESTAMP '2024-01-05', TIMESTAMP '2024-01-12'),
@@ -150,6 +145,6 @@ object RangeJoin {
         |SELECT window_id, count(*) AS n_user_days,
         |       count(DISTINCT user_id) AS n_users
         |FROM sess JOIN iv ON sess.s_start < iv.w_end AND iv.w_start < sess.s_end
-        |GROUP BY 1 ORDER BY window_id""".stripMargin,
+        |GROUP BY 1 ORDER BY window_id""".stripMargin), headline = true),
   )
 }

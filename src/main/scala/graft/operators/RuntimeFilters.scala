@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.Ops.{Q, dsumWide}
+import graft.Ops.{Entry, Q, dsumWide}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -102,18 +102,14 @@ object RuntimeFilters {
       .orderBy("o_orderstatus")
   }
 
-  val entries: Map[String, Q] = Map(
-    "j13_bloom_prefilter" -> bloomPrefilterQ,
-  )
-
-  // the oracle is the PLAIN filtered join: the runtime filter must not
-  // change a single bit of the result
-  val oracles: Map[String, String] = Map(
-    "j13_bloom_prefilter" ->
+  val entries: Seq[Entry] = Seq(
+    // the oracle is the PLAIN filtered join: the runtime filter must not
+    // change a single bit of the result
+    Entry("j13_bloom_prefilter", bloomPrefilterQ, Some(
       """SELECT o_orderstatus, count(*) AS n_items,
         |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin), headline = true),
   )
 }

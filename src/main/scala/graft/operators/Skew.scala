@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.Ops.{Q, dsumWide}
+import graft.Ops.{Entry, Q, dsumWide}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -74,24 +74,19 @@ object Skew {
       key = "event_type", valueCol = "value", k = 8, saltSource = "event_id")
       .orderBy("event_type")
 
-  val entries: Map[String, Q] = Map(
-    "skew_salted_join" -> saltedJoinQ,
-    "skew_salted_agg" -> saltedAggQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "skew_salted_join" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("skew_salted_join", saltedJoinQ, Some(
       """SELECT o_orderpriority, count(*) AS n_items,
         |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
+        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin), headline = true),
     // the oracle is the DIRECT aggregation: two-stage salting must not
     // change a single bit of the result
-    "skew_salted_agg" ->
+    Entry("skew_salted_agg", saltedAggQ, Some(
       """SELECT event_type, count(*) AS n,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(value) AS min_v, max(value) AS max_v
         |FROM events WHERE value IS NOT NULL
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
+        |GROUP BY 1 ORDER BY event_type""".stripMargin)),
   )
 }

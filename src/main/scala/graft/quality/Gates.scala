@@ -1,7 +1,7 @@
 package graft.quality
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 import graft.operators.Cleaning
 import graft.sources.Sources
 
@@ -404,24 +404,10 @@ object Gates {
       .orderBy("o_orderpriority")
   }
 
-  val entries: Map[String, Q] = Map(
-    "q_dp_noised_counts" -> dpNoisedCountsQ,
-    "q_dp_noised_mean" -> dpNoisedMeanQ,
-    "q_k_anonymity" -> kAnonymityQ,
-    "q_k_anonymize_ladder" -> kAnonymizeQ,
-    "q_l_diversity" -> lDiversityQ,
-    "q_t_closeness" -> tClosenessQ,
-    "q_erasure_audit" -> erasureQ,
-    "q_retention_gate" -> retentionGateQ,
-    "q_floor_gate" -> floorGateQ,
-    "q_availability_gate" -> availabilityGateQ,
-    "q_sla_gate" -> slaGateQ,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // the md5-uniform draw replays exactly (power-of-two modulus); the
     // Laplace inverse-CDF ln() agrees to ulps and the release rounds to 4dp
-    "q_dp_noised_counts" ->
+    Entry("q_dp_noised_counts", dpNoisedCountsQ, Some(
       """WITH t AS (
         |  SELECT o_orderpriority, count(*) AS n_true,
         |         (CAST(md5_number_upper(o_orderpriority || ':dp-release-1')
@@ -430,8 +416,8 @@ object Gates {
         |SELECT o_orderpriority, n_true,
         |       round(n_true + (-1.0 / 0.5) * sign(u - 0.5)
         |                      * ln(1 - 2 * abs(u - 0.5)), 4) AS n_released
-        |FROM t ORDER BY o_orderpriority""".stripMargin,
-    "q_dp_noised_mean" ->
+        |FROM t ORDER BY o_orderpriority""".stripMargin), headline = true),
+    Entry("q_dp_noised_mean", dpNoisedMeanQ, Some(
       """WITH t AS (
         |  SELECT o_orderpriority, count(*) AS n,
         |         CAST(sum(CAST(least(greatest(o_totalprice, 0), 400)
@@ -444,8 +430,8 @@ object Gates {
         |       round(mean_raw + (-400.0 / 0.5) / n * sign(u - 0.5)
         |                        * ln(1 - 2 * abs(u - 0.5)), 6)
         |         AS mean_released
-        |FROM t ORDER BY o_orderpriority""".stripMargin,
-    "q_k_anonymize_ladder" ->
+        |FROM t ORDER BY o_orderpriority""".stripMargin)),
+    Entry("q_k_anonymize_ladder", kAnonymizeQ, Some(
       """WITH lv(g) AS (VALUES (250), (500), (1000), (2000), (4000), (8000)),
         |grp AS (
         |  SELECT g, c_nationkey,
@@ -469,16 +455,16 @@ object Gates {
         |       CAST(fits = 1 AND
         |            g = min(CASE WHEN fits = 1 THEN g END) OVER ()
         |            AS INT) AS chosen
-        |FROM m ORDER BY g""".stripMargin,
-    "q_k_anonymity" ->
+        |FROM m ORDER BY g""".stripMargin)),
+    Entry("q_k_anonymity", kAnonymityQ, Some(
       """SELECT c_nationkey, c_mktsegment,
         |       CAST(floor(c_acctbal / 2000) AS BIGINT) AS balance_bucket,
         |       count(*) AS n_rows, CAST(5 AS INT) AS k,
         |       count(*) AS suppression_cost
         |FROM customer
         |GROUP BY 1, 2, 3 HAVING count(*) < 5
-        |ORDER BY c_nationkey, c_mktsegment, balance_bucket""".stripMargin,
-    "q_l_diversity" ->
+        |ORDER BY c_nationkey, c_mktsegment, balance_bucket""".stripMargin), headline = true),
+    Entry("q_l_diversity", lDiversityQ, Some(
       """SELECT c_nationkey,
         |       CAST(floor(c_acctbal / 2000) AS BIGINT) AS balance_bucket,
         |       count(*) AS n_rows,
@@ -486,10 +472,10 @@ object Gates {
         |       CAST(3 AS INT) AS l
         |FROM customer
         |GROUP BY 1, 2 HAVING count(DISTINCT c_mktsegment) < 3
-        |ORDER BY c_nationkey, balance_bucket""".stripMargin,
+        |ORDER BY c_nationkey, balance_bucket""".stripMargin), headline = true),
     // residual is measured on the scrubbed set (always 0 when the cascade
     // is correct), not derived arithmetically
-    "q_erasure_audit" ->
+    Entry("q_erasure_audit", erasureQ, Some(
       """WITH er AS (
         |  SELECT c_custkey AS k FROM customer WHERE c_custkey % 17 = 0),
         |eo AS (
@@ -516,10 +502,10 @@ object Gates {
         |SELECT table_name, rows_before, rows_erased,
         |       rows_before - rows_erased AS rows_after,
         |       CAST(0 AS BIGINT) AS residual
-        |FROM u ORDER BY table_name""".stripMargin,
+        |FROM u ORDER BY table_name""".stripMargin), headline = true),
     // integer-exact TVD: one division at the end, so both engines agree
     // bit-for-bit before the round
-    "q_t_closeness" ->
+    Entry("q_t_closeness", tClosenessQ, Some(
       """WITH base AS (
         |  SELECT c_nationkey,
         |         CAST(floor(c_acctbal / 2000) AS BIGINT) AS balance_bucket,
@@ -551,19 +537,19 @@ object Gates {
         |FROM agg
         |WHERE round(0.5 * CAST(present + (n * n_rows - covered) AS DOUBLE)
         |            / CAST(n_rows * n AS DOUBLE), 6) > 0.4
-        |ORDER BY c_nationkey, balance_bucket""".stripMargin,
-    "q_sla_gate" ->
+        |ORDER BY c_nationkey, balance_bucket""".stripMargin), headline = true),
+    Entry("q_sla_gate", slaGateQ, Some(
       """SELECT * FROM (VALUES
         |  ('dim_date_build', 'OK'), ('events_scan', 'OK'),
         |  ('synthetic_breach', 'SLA_MISS'))
         |  AS t(task, status)
-        |ORDER BY task""".stripMargin,
-    "q_availability_gate" ->
+        |ORDER BY task""".stripMargin)),
+    Entry("q_availability_gate", availabilityGateQ, Some(
       """SELECT * FROM (VALUES
         |  ('events', true, 'RUN'), ('missing_feed', false, 'SKIP'))
         |  AS t(feed, available, action)
-        |ORDER BY feed""".stripMargin,
-    "q_retention_gate" ->
+        |ORDER BY feed""".stripMargin)),
+    Entry("q_retention_gate", retentionGateQ, Some(
       """WITH a AS (
         |  SELECT count(*) AS raw_rows,
         |         CAST(sum(CASE WHEN value IS NOT NULL AND value >= 0
@@ -574,10 +560,10 @@ object Gates {
         |       CASE WHEN kept_rows * 1.0 / raw_rows < 0.80 THEN 'FAIL'
         |            WHEN kept_rows * 1.0 / raw_rows < 0.90 THEN 'WARN'
         |            ELSE 'PASS' END AS status
-        |FROM a""".stripMargin,
-    "q_floor_gate" ->
+        |FROM a""".stripMargin)),
+    Entry("q_floor_gate", floorGateQ, Some(
       """SELECT count(*) AS n_rows, CAST(1000 AS BIGINT) AS floor,
         |       CASE WHEN count(*) >= 1000 THEN 'PASS' ELSE 'FAIL' END AS status
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
   )
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.Ops.{Q, dsum}
+import graft.Ops.{Entry, Q, dsum}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -232,50 +232,36 @@ object Sources {
       .orderBy("table_name")
   }
 
-  val entries: Map[String, Q] = Map(
-    "s1_retrieval_fetch" -> retrievalQ,
-    "s3_multipath_scan" -> multiPathQ,
-    "s8_csv_roundtrip" -> csvRoundtripQ,
-    "s11_json_roundtrip" -> jsonRoundtripQ,
-    "s12_orc_roundtrip" -> orcRoundtripQ,
-    "s13_xml_roundtrip" -> xmlRoundtripQ,
-    "s14_text_roundtrip" -> textRoundtripQ,
-    "s15_schema_evolution" -> schemaEvolutionQ,
-    "s5_partitioned_sink" -> partitionedSinkQ,
-    "s6_jdbc_roundtrip" -> jdbcRoundtripQ,
-    "s4_path_probe" -> pathProbeQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s1_retrieval_fetch" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-    "s3_multipath_scan" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("s1_retrieval_fetch", retrievalQ, Some(
+      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey")),
+    Entry("s3_multipath_scan", multiPathQ, Some(
       """SELECT count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM (SELECT * FROM orders UNION ALL SELECT * FROM orders)""".stripMargin,
-    "s8_csv_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-    "s11_json_roundtrip" ->
-      "SELECT s_suppkey, s_name, s_acctbal FROM supplier ORDER BY s_suppkey",
-    "s12_orc_roundtrip" ->
-      "SELECT c_custkey, c_name, c_acctbal FROM customer ORDER BY c_custkey",
-    "s13_xml_roundtrip" ->
-      "SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name FROM region ORDER BY r_regionkey",
-    "s14_text_roundtrip" ->
+        |FROM (SELECT * FROM orders UNION ALL SELECT * FROM orders)""".stripMargin)),
+    Entry("s8_csv_roundtrip", csvRoundtripQ, Some(
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey")),
+    Entry("s11_json_roundtrip", jsonRoundtripQ, Some(
+      "SELECT s_suppkey, s_name, s_acctbal FROM supplier ORDER BY s_suppkey")),
+    Entry("s12_orc_roundtrip", orcRoundtripQ, Some(
+      "SELECT c_custkey, c_name, c_acctbal FROM customer ORDER BY c_custkey")),
+    Entry("s13_xml_roundtrip", xmlRoundtripQ, Some(
+      "SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name FROM region ORDER BY r_regionkey")),
+    Entry("s14_text_roundtrip", textRoundtripQ, Some(
       """SELECT count(*) AS n_lines,
         |       count(DISTINCT text) AS n_distinct,
         |       CAST(sum(length(text)) AS BIGINT) AS total_chars,
         |       min(text) AS first_line, max(text) AS last_line
-        |FROM documents""".stripMargin,
-    "s5_partitioned_sink" ->
+        |FROM documents""".stripMargin)),
+    Entry("s5_partitioned_sink", partitionedSinkQ, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin,
-    "s6_jdbc_roundtrip" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
+        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin)),
+    Entry("s6_jdbc_roundtrip", jdbcRoundtripQ, Some(
+      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey")),
     // generation 1 = even keys (no o_doubled column => all NULL),
     // generation 2 = odd keys carrying price * 2 (exact in any IEEE engine)
-    "s15_schema_evolution" ->
+    Entry("s15_schema_evolution", schemaEvolutionQ, Some(
       """SELECT CAST(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 2 END AS INT)
         |         AS gen,
         |       count(*) AS n,
@@ -286,17 +272,17 @@ object Sources {
         |       round(CAST(sum(CASE WHEN o_orderkey % 2 = 1
         |                     THEN CAST(o_totalprice * 2.0 AS DECIMAL(18,2))
         |                     END) AS DOUBLE), 2) AS doubled_total
-        |FROM orders GROUP BY 1 ORDER BY gen""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY gen""".stripMargin)),
     // The oracle engine's catalog is built by globbing the same sf dir (one
     // view per parquet found), so catalog membership IS an independent
     // probe of the same environment — the env-dependence that kept this
     // entry rows-only grades exactly.
-    "s4_path_probe" ->
+    Entry("s4_path_probe", pathProbeQ, Some(
       """SELECT t.table_name,
         |       EXISTS(SELECT 1 FROM information_schema.tables ti
         |              WHERE ti.table_name = t.table_name) AS exists_flag
         |FROM (VALUES ('region'),('nation'),('customer'),('orders'),
         |             ('lineitem'),('no_such_table')) t(table_name)
-        |ORDER BY table_name""".stripMargin,
+        |ORDER BY table_name""".stripMargin)),
   )
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.Ops.{Q, dsum}
+import graft.Ops.{Entry, Q, dsum}
 
 import org.apache.spark.sql.functions._
 
@@ -589,46 +589,23 @@ object Tiles {
             |FROM tiles_cat.db.orders_widen""".stripMargin)
   }
 
-  val entries: Map[String, Q] = Map(
-    "s36_tiles_widen" -> widenQ,
-    "s35_tiles_zorder" -> zorderTilesQ,
-    "s34_tiles_rename_drop" -> renameDropQ,
-    "s33_tiles_bloom_point" -> bloomPointQ,
-    "s32_tiles_time_travel" -> timeTravelQ,
-    "s29_tiles_merge_upsert" -> mergeUpsertQ,
-    "s30_tiles_spj" -> spjQ,
-    "s31_tiles_group_meta" -> groupMetaQ,
-    "s16_tiles_roundtrip" -> roundtripQ,
-    "s17_tiles_filter_prune" -> filterPruneQ,
-    "s18_tiles_agg_pushdown" -> aggPushdownQ,
-    "s19_tiles_runtime_prune" -> runtimePruneQ,
-    "s20_tiles_stream_sink" -> streamSinkQ,
-    "s21_tiles_sql_ddl" -> sqlDdlQ,
-    "s22_tiles_delete_where" -> deleteWhereQ,
-    "s23_tiles_delete_rows" -> deleteRowsQ,
-    "s24_tiles_string_prune" -> stringPruneQ,
-    "s25_tiles_compact" -> compactQ,
-    "s26_tiles_stream_source" -> streamSourceQ,
-    "s27_tiles_replace_where" -> replaceWhereQ,
-    "s28_tiles_add_column" -> addColumnQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s36_tiles_widen" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("s36_tiles_widen", widenQ, Some(
       """SELECT count(*) AS n,
         |       CAST(sum(o_custkey) AS BIGINT) AS sum_cust,
         |       max(o_custkey) AS max_cust,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
-        |FROM orders""".stripMargin,
-    "s35_tiles_zorder" ->
+        |FROM orders""".stripMargin), headline = true),
+    Entry("s35_tiles_zorder", zorderTilesQ, Some(
       """SELECT count(*) AS n,
         |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty,
         |       min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok
         |FROM lineitem
-        |WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 10 AND 30""".stripMargin,
-    "s34_tiles_rename_drop" ->
+        |WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 10 AND 30""".stripMargin),
+      headline = true),
+    Entry("s34_tiles_rename_drop", renameDropQ, Some(
       """SELECT count(*) AS n,
         |       CAST(sum(o_custkey) AS BIGINT) AS sum_cust,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
@@ -637,14 +614,14 @@ object Tiles {
         |                     THEN CAST(o_totalprice + 1.0 AS DECIMAL(18,2)) END)
         |            AS DOUBLE) AS sum_junk,
         |       min(o_orderkey) AS min_key
-        |FROM orders""".stripMargin,
-    "s33_tiles_bloom_point" ->
+        |FROM orders""".stripMargin), headline = true),
+    Entry("s33_tiles_bloom_point", bloomPointQ, Some(
       """SELECT o_custkey, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
         |FROM orders WHERE o_custkey IN (7, 11, 13, 964)
-        |GROUP BY 1 ORDER BY o_custkey""".stripMargin,
-    "s32_tiles_time_travel" ->
+        |GROUP BY 1 ORDER BY o_custkey""".stripMargin), headline = true),
+    Entry("s32_tiles_time_travel", timeTravelQ, Some(
       """SELECT 'current' AS snap, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
@@ -654,12 +631,12 @@ object Tiles {
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
         |FROM orders
-        |ORDER BY snap""".stripMargin,
-    "s31_tiles_group_meta" ->
+        |ORDER BY snap""".stripMargin), headline = true),
+    Entry("s31_tiles_group_meta", groupMetaQ, Some(
       """SELECT o_orderpriority, count(*) AS n,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "s30_tiles_spj" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin), headline = true),
+    Entry("s30_tiles_spj", spjQ, Some(
       """WITH o AS (
         |  SELECT o_custkey % 32 AS bucket, count(*) AS n_o,
         |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
@@ -669,8 +646,8 @@ object Tiles {
         |         CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS acct
         |  FROM customer GROUP BY 1)
         |SELECT o.bucket AS bucket, n_o, total, n_c, acct
-        |FROM o JOIN c ON o.bucket = c.bucket ORDER BY bucket""".stripMargin,
-    "s29_tiles_merge_upsert" ->
+        |FROM o JOIN c ON o.bucket = c.bucket ORDER BY bucket""".stripMargin), headline = true),
+    Entry("s29_tiles_merge_upsert", mergeUpsertQ, Some(
       """WITH base AS (
         |  SELECT o_orderkey AS k, o_orderstatus AS status, o_totalprice AS v
         |  FROM orders),
@@ -685,77 +662,78 @@ object Tiles {
         |SELECT status, count(*) AS n,
         |       CAST(sum(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(k) AS min_key, max(k) AS max_key
-        |FROM merged GROUP BY status ORDER BY status""".stripMargin,
-    "s16_tiles_roundtrip" ->
+        |FROM merged GROUP BY status ORDER BY status""".stripMargin), headline = true),
+    Entry("s16_tiles_roundtrip", roundtripQ, Some(
       """SELECT o_orderpriority, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "s17_tiles_filter_prune" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin), headline = true),
+    Entry("s17_tiles_filter_prune", filterPruneQ, Some(
       """SELECT count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
         |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderstatus = 'O'""".stripMargin,
-    "s18_tiles_agg_pushdown" ->
+        |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderstatus = 'O'""".stripMargin),
+      headline = true),
+    Entry("s18_tiles_agg_pushdown", aggPushdownQ, Some(
       """SELECT count(*) AS n_rows, count(o_custkey) AS n_cust,
         |       min(o_totalprice) AS min_price, max(o_totalprice) AS max_price,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders""".stripMargin,
-    "s19_tiles_runtime_prune" ->
+        |FROM orders""".stripMargin), headline = true),
+    Entry("s19_tiles_runtime_prune", runtimePruneQ, Some(
       """SELECT c_mktsegment, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE c_name < 'Customer#000000100'
-        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
-    "s20_tiles_stream_sink" ->
+        |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin), headline = true),
+    Entry("s20_tiles_stream_sink", streamSinkQ, Some(
       """SELECT event_type, count(*) AS n,
         |       count(DISTINCT user_id) AS n_users,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "s21_tiles_sql_ddl" ->
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin), headline = true),
+    Entry("s21_tiles_sql_ddl", sqlDdlQ, Some(
       """SELECT o_orderstatus, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
-        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-    "s22_tiles_delete_where" ->
+        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin), headline = true),
+    Entry("s22_tiles_delete_where", deleteWhereQ, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders WHERE year(o_orderdate) >= 1998
-        |GROUP BY 1 ORDER BY o_year""".stripMargin,
-    "s23_tiles_delete_rows" ->
+        |GROUP BY 1 ORDER BY o_year""".stripMargin), headline = true),
+    Entry("s23_tiles_delete_rows", deleteRowsQ, Some(
       """SELECT o_orderpriority, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
         |FROM orders
         |WHERE o_totalprice >= 50000.0 AND o_totalprice <= 200000.0
-        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "s24_tiles_string_prune" ->
+        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin), headline = true),
+    Entry("s24_tiles_string_prune", stringPruneQ, Some(
       """SELECT count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin,
-    "s25_tiles_compact" ->
+        |FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin), headline = true),
+    Entry("s25_tiles_compact", compactQ, Some(
       """SELECT o_orderstatus, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
         |FROM orders WHERE o_totalprice >= 10000.0
-        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-    "s26_tiles_stream_source" ->
+        |GROUP BY 1 ORDER BY o_orderstatus""".stripMargin), headline = true),
+    Entry("s26_tiles_stream_source", streamSourceQ, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin,
-    "s27_tiles_replace_where" ->
+        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin), headline = true),
+    Entry("s27_tiles_replace_where", replaceWhereQ, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       min(o_orderkey) AS min_key
-        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin,
-    "s28_tiles_add_column" ->
+        |FROM orders GROUP BY 1 ORDER BY o_year""".stripMargin), headline = true),
+    Entry("s28_tiles_add_column", addColumnQ, Some(
       """SELECT o_orderpriority, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |       count(CASE WHEN year(o_orderdate) >= 1998 THEN 1 END) AS n_year,
         |       CAST(sum(CASE WHEN year(o_orderdate) >= 1998
         |                     THEN year(o_orderdate) END) AS BIGINT) AS sum_year
-        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin), headline = true),
   )
 }

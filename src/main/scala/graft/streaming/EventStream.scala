@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.Ops.{Q, dsum}
+import graft.Ops.{Entry, Q, dsum}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -726,27 +726,12 @@ object EventStream {
     } // IterState.withStateShuffle
   }
 
-  val entries: Map[String, Q] = Map(
-    "stream_late_data_drop" -> streamLateDropQ,
-    "stream_incremental_totals" -> streamIncrementalQ,
-    "stream_trending_topk" -> streamTrendingQ,
-    "w_tumbling_hourly" -> tumblingQ,
-    "w_sliding_6h_1h" -> slidingQ,
-    "w_session_windows" -> sessionQ,
-    "stream_tumbling_hourly" -> streamTumblingQ,
-    "stream_session_windows" -> streamSessionQ,
-    "stream_static_enrich" -> streamEnrichQ,
-    "stream_distinct_users" -> streamDistinctQ,
-    "stream_view_purchase_join" -> streamJoinQ,
-    "stream_user_totals" -> streamTotalsQ,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // append-mode emission = hourly windows of the LAST calendar day whose
     // end closed at or below the final watermark max(ts) − 1h; the staged
     // older days are entirely below that watermark and must not appear
     // (ts carries microseconds, so the <= vs < boundary is measure-zero)
-    "stream_late_data_drop" ->
+    Entry("stream_late_data_drop", streamLateDropQ, Some(
       """WITH mx AS (SELECT max(ts) AS mts FROM events),
         |recent AS (
         |  SELECT e.ts, e.value FROM events e, mx
@@ -757,13 +742,13 @@ object EventStream {
         |  FROM recent GROUP BY 1)
         |SELECT ws, n, total FROM w, mx
         |WHERE ws + INTERVAL 1 HOUR <= mts - INTERVAL 1 HOUR
-        |ORDER BY ws""".stripMargin,
-    "stream_incremental_totals" ->
+        |ORDER BY ws""".stripMargin), headline = true),
+    Entry("stream_incremental_totals", streamIncrementalQ, Some(
       """SELECT user_id, count(*) AS n_events,
         |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
         |         AS total_cents
-        |FROM events GROUP BY 1""".stripMargin,
-    "stream_trending_topk" ->
+        |FROM events GROUP BY 1""".stripMargin), headline = true),
+    Entry("stream_trending_topk", streamTrendingQ, Some(
       """WITH t AS (
         |  SELECT event_type, user_id,
         |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
@@ -775,18 +760,18 @@ object EventStream {
         |           ORDER BY total DESC, user_id) AS INT) AS rank
         |  FROM t)
         |SELECT event_type, rank, user_id, total FROM r
-        |WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin,
-    "w_tumbling_hourly" ->
+        |WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin), headline = true),
+    Entry("w_tumbling_hourly", tumblingQ, Some(
       """SELECT date_trunc('hour', ts) AS ws, count(*) AS n,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1 ORDER BY ws""".stripMargin,
-    "w_sliding_6h_1h" ->
+        |FROM events GROUP BY 1 ORDER BY ws""".stripMargin)),
+    Entry("w_sliding_6h_1h", slidingQ, Some(
       """SELECT date_trunc('hour', ts) - k * INTERVAL 1 HOUR AS ws,
         |       count(*) AS n,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM events, range(6) r(k)
-        |GROUP BY 1 ORDER BY ws""".stripMargin,
-    "w_session_windows" ->
+        |GROUP BY 1 ORDER BY ws""".stripMargin)),
+    Entry("w_session_windows", sessionQ, Some(
       """WITH g AS (
         |  SELECT user_id, ts,
         |         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -799,8 +784,8 @@ object EventStream {
         |  FROM g)
         |SELECT user_id, min(ts) AS session_start, count(*) AS n
         |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "stream_session_windows" ->
+        |ORDER BY user_id, session_start""".stripMargin), headline = true),
+    Entry("stream_session_windows", streamSessionQ, Some(
       """WITH g AS (
         |  SELECT user_id, ts,
         |         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -812,30 +797,30 @@ object EventStream {
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
         |  FROM g)
         |SELECT user_id, min(ts) AS session_start, count(*) AS n
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-    "stream_tumbling_hourly" ->
+        |FROM sess GROUP BY user_id, sid""".stripMargin)),
+    Entry("stream_tumbling_hourly", streamTumblingQ, Some(
       """SELECT date_trunc('hour', ts) AS ws, count(*) AS n,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1""".stripMargin,
-    "stream_static_enrich" ->
+        |FROM events GROUP BY 1""".stripMargin)),
+    Entry("stream_static_enrich", streamEnrichQ, Some(
       """SELECT coalesce(c.c_mktsegment, 'unknown') AS segment, count(*) AS n,
         |       CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1""".stripMargin,
-    "stream_distinct_users" ->
-      "SELECT DISTINCT user_id FROM events",
-    "stream_view_purchase_join" ->
+        |GROUP BY 1""".stripMargin)),
+    Entry("stream_distinct_users", streamDistinctQ, Some(
+      "SELECT DISTINCT user_id FROM events")),
+    Entry("stream_view_purchase_join", streamJoinQ, Some(
       """SELECT v.user_id AS v_user, v.ts AS v_ts, p.ts AS p_ts,
         |       p.value AS p_value
         |FROM (SELECT user_id, ts FROM events WHERE event_type = 'view') v
         |JOIN (SELECT user_id, ts, value FROM events
         |      WHERE event_type = 'purchase') p
         |  ON v.user_id = p.user_id
-        | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 HOUR""".stripMargin,
-    "stream_user_totals" ->
+        | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 HOUR""".stripMargin)),
+    Entry("stream_user_totals", streamTotalsQ, Some(
       """SELECT user_id, count(*) AS n_events,
         |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
         |         AS total_cents
-        |FROM events GROUP BY 1""".stripMargin,
+        |FROM events GROUP BY 1""".stripMargin)),
   )
 }

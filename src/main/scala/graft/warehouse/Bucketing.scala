@@ -1,7 +1,7 @@
 package graft.warehouse
 
 import graft.Tables
-import graft.Ops.{Q, dsum}
+import graft.Ops.{Entry, Q, dsum}
 
 import org.apache.spark.sql.functions._
 
@@ -45,13 +45,11 @@ object Bucketing {
       .orderBy("c_mktsegment")
   }
 
-  val entries: Map[String, Q] = Map("j9_bucketed_join" -> bucketedJoinQ)
-
-  val oracles: Map[String, String] = Map(
-    "j9_bucketed_join" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("j9_bucketed_join", bucketedJoinQ, Some(
       """SELECT c_mktsegment, count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin), headline = true),
   )
 }

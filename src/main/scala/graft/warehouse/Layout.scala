@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 
 /** Multi-dimensional data LAYOUT: Z-order (Morton) clustering.
   *
@@ -630,22 +630,6 @@ object Layout {
       .orderBy("key")
   }
 
-  val entries: Map[String, Q] = Map(
-    "layout_bloom_prune" -> bloomPruneQ,
-    "layout_zorder" -> zorderQ,
-    "layout_compaction_plan" -> compactionQ,
-    "layout_manifest_stats" -> manifestQ,
-    "layout_manifest_merge" -> manifestMergeQ,
-    "layout_time_travel" -> timeTravelQ,
-    "layout_vacuum_plan" -> vacuumQ,
-    "layout_commit_conflicts" -> conflictsQ,
-    "layout_log_checkpoint" -> logCheckpointQ,
-    "layout_prune_plan" -> pruneQ,
-    "layout_zorder_prune" -> zorderPruneQ,
-    "layout_compare_prune" -> comparePruneQ,
-    "layout_hilbert_prune" -> hilbertPruneQ,
-  )
-
   /** Hilbert-clustered tile census against the same three rectangular
     * predicates as [[comparePruneQ]] — the curve-quality capstone of the
     * layout family. Same harness shape (256-grid scaled coordinates,
@@ -660,8 +644,7 @@ object Layout {
     * and the adjacency property Morton provably lacks — consecutive
     * Hilbert indices are always grid-adjacent, so a tile of consecutive
     * indices is a connected region with a perimeter-bound bounding box. */
-  // lazy: declared after the entries map it is registered in
-  private lazy val hilbertPruneQ: Q = (s, dir) => {
+  private val hilbertPruneQ: Q = (s, dir) => {
     import s.implicits._
     val li = Tables(s, dir).lineitem.select("l_partkey", "l_suppkey")
     val big = 1L << 40
@@ -750,8 +733,8 @@ object Layout {
        |  UNION ALL SELECT 3, 'remove', file, part, n_rows, bytes
        |  FROM files WHERE bucket = 2 AND part < DATE '1997-01-01')""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "layout_hilbert_prune" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("layout_hilbert_prune", hilbertPruneQ, Some(
       s"""WITH rng AS (SELECT max(l_partkey) AS xmax, max(l_suppkey) AS ymax
          |             FROM lineitem),
          |h0 AS (
@@ -785,12 +768,12 @@ object Layout {
          |  FROM tiles, preds)
          |SELECT pred, decision, count(*) AS n_tiles,
          |       CAST(sum(n) AS BIGINT) AS n_rows
-         |FROM dec GROUP BY 1, 2 ORDER BY pred, decision""".stripMargin,
+         |FROM dec GROUP BY 1, 2 ORDER BY pred, decision""".stripMargin), headline = true),
     // zone-map counts and true-containment counts re-derived from the
     // data; the Bloom guarantee flag asserted TRUE (the engine computes
     // it against the data — no false negative is a structural property
     // of the position-set union, and a build/probe drift would hash-fail)
-    "layout_bloom_prune" ->
+    Entry("layout_bloom_prune", bloomPruneQ, Some(
       """WITH m AS (
         |  SELECT date_trunc('month', l_shipdate) AS part,
         |         min(l_orderkey) AS mn, max(l_orderkey) AS mx
@@ -811,9 +794,9 @@ object Layout {
         |       mm.n_tiles_minmax, TRUE AS bloom_no_false_neg
         |FROM keys k JOIN mm ON k.key = mm.key
         |            LEFT JOIN tt ON k.key = tt.key
-        |ORDER BY k.key""".stripMargin,
+        |ORDER BY k.key""".stripMargin), headline = true),
     // merged-halves manifest must equal the direct manifest — same oracle
-    "layout_manifest_merge" ->
+    Entry("layout_manifest_merge", manifestMergeQ, Some(
       """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS part,
         |       count(*) AS n_rows,
         |       min(l_shipdate) AS min_l_shipdate,
@@ -822,8 +805,8 @@ object Layout {
         |       max(l_quantity) AS max_l_quantity,
         |       min(l_extendedprice) AS min_l_extendedprice,
         |       max(l_extendedprice) AS max_l_extendedprice
-        |FROM lineitem GROUP BY 1 ORDER BY part""".stripMargin,
-    "layout_zorder" ->
+        |FROM lineitem GROUP BY 1 ORDER BY part""".stripMargin)),
+    Entry("layout_zorder", zorderQ, Some(
       s"""WITH z AS (
          |  SELECT l_partkey, l_suppkey,
          |         CAST(${zTerms("(l_partkey & 65535)", "(l_suppkey & 65535)", 16)}
@@ -836,8 +819,8 @@ object Layout {
          |       min(l_partkey) AS x_min, max(l_partkey) AS x_max,
          |       min(l_suppkey) AS y_min, max(l_suppkey) AS y_max,
          |       min(zv) AS z_min, max(zv) AS z_max
-         |FROM t GROUP BY 1 ORDER BY tile""".stripMargin,
-    "layout_compaction_plan" ->
+         |FROM t GROUP BY 1 ORDER BY tile""".stripMargin), headline = true),
+    Entry("layout_compaction_plan", compactionQ, Some(
       """WITH inv AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |         -- DuckDB's byte length for VARCHAR is strlen (octet_length
@@ -856,8 +839,8 @@ object Layout {
         |  FROM inv)
         |SELECT event_type, bin, count(*) AS n_files,
         |       CAST(sum(size_bytes) AS BIGINT) AS bytes
-        |FROM packed GROUP BY 1, 2 ORDER BY event_type, bin""".stripMargin,
-    "layout_time_travel" ->
+        |FROM packed GROUP BY 1, 2 ORDER BY event_type, bin""".stripMargin)),
+    Entry("layout_time_travel", timeTravelQ, Some(
       s"""$logCteSql,
          |vs AS (SELECT unnest([0, 1, 2, 3]) AS as_of),
          |last AS (
@@ -869,10 +852,10 @@ object Layout {
          |       CAST(sum(n_rows) AS BIGINT) AS n_rows,
          |       CAST(sum(bytes) AS BIGINT) AS bytes
          |FROM last WHERE rn = 1 AND action = 'add'
-         |GROUP BY as_of ORDER BY as_of""".stripMargin,
+         |GROUP BY as_of ORDER BY as_of""".stripMargin), headline = true),
     // the oracle replays the FULL log; the engine replays the
     // checkpointed-at-2 log — equal hashes = replay equivalence
-    "layout_log_checkpoint" ->
+    Entry("layout_log_checkpoint", logCheckpointQ, Some(
       s"""$logCteSql,
          |vs AS (SELECT unnest([2, 3]) AS as_of),
          |last AS (
@@ -884,8 +867,8 @@ object Layout {
          |       CAST(sum(n_rows) AS BIGINT) AS n_rows,
          |       CAST(sum(bytes) AS BIGINT) AS bytes
          |FROM last WHERE rn = 1 AND action = 'add'
-         |GROUP BY as_of ORDER BY as_of""".stripMargin,
-    "layout_vacuum_plan" ->
+         |GROUP BY as_of ORDER BY as_of""".stripMargin), headline = true),
+    Entry("layout_vacuum_plan", vacuumQ, Some(
       s"""$logCteSql,
          |vs AS (SELECT unnest([2, 3]) AS as_of),
          |last AS (
@@ -898,8 +881,8 @@ object Layout {
          |SELECT DISTINCT file, part, n_rows, bytes
          |FROM log WHERE action = 'add'
          |  AND file NOT IN (SELECT file FROM live)
-         |ORDER BY file""".stripMargin,
-    "layout_commit_conflicts" ->
+         |ORDER BY file""".stripMargin), headline = true),
+    Entry("layout_commit_conflicts", conflictsQ, Some(
       s"""$invCteSql,
          |a AS (SELECT file, part FROM files WHERE bucket IN (0, 1)),
          |b AS (SELECT file, part FROM files
@@ -915,8 +898,8 @@ object Layout {
          |       CAST(sum(fa * fb) AS BIGINT) AS n_common,
          |       CASE WHEN sum(fa * fb) > 0 THEN 'delete_delete'
          |            ELSE 'disjoint' END AS verdict
-         |FROM j GROUP BY part ORDER BY part""".stripMargin,
-    "layout_manifest_stats" ->
+         |FROM j GROUP BY part ORDER BY part""".stripMargin), headline = true),
+    Entry("layout_manifest_stats", manifestQ, Some(
       """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS part,
         |       count(*) AS n_rows,
         |       min(l_shipdate) AS min_l_shipdate,
@@ -925,8 +908,8 @@ object Layout {
         |       max(l_quantity) AS max_l_quantity,
         |       min(l_extendedprice) AS min_l_extendedprice,
         |       max(l_extendedprice) AS max_l_extendedprice
-        |FROM lineitem GROUP BY 1 ORDER BY part""".stripMargin,
-    "layout_prune_plan" ->
+        |FROM lineitem GROUP BY 1 ORDER BY part""".stripMargin), headline = true),
+    Entry("layout_prune_plan", pruneQ, Some(
       """WITH m AS (
         |  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS part,
         |         count(*) AS n_rows,
@@ -938,8 +921,8 @@ object Layout {
         |            WHEN mn >= TIMESTAMP '1997-03-10'
         |             AND mx < TIMESTAMP '1998-06-20' THEN 'full'
         |            ELSE 'partial' END AS decision
-        |FROM m ORDER BY part""".stripMargin,
-    "layout_zorder_prune" ->
+        |FROM m ORDER BY part""".stripMargin)),
+    Entry("layout_zorder_prune", zorderPruneQ, Some(
       s"""WITH z AS (
          |  SELECT l_partkey, l_suppkey,
          |         CAST(${zTerms("(l_partkey & 65535)", "(l_suppkey & 65535)", 16)}
@@ -959,8 +942,8 @@ object Layout {
          |            WHEN x_min >= 200 AND x_max <= 600
          |             AND y_min >= 20 AND y_max <= 80 THEN 'full'
          |            ELSE 'partial' END AS decision
-         |FROM boxes ORDER BY tile""".stripMargin,
-    "layout_compare_prune" ->
+         |FROM boxes ORDER BY tile""".stripMargin), headline = true),
+    Entry("layout_compare_prune", comparePruneQ, Some(
       s"""WITH z AS (
          |  SELECT l_partkey, l_suppkey,
          |         CAST(${zTerms("(l_partkey & 65535)", "(l_suppkey & 65535)", 16)}
@@ -1018,6 +1001,7 @@ object Layout {
          |  FROM boxes, preds)
          |SELECT layout, pred, decision, count(*) AS n_tiles,
          |       CAST(sum(n) AS BIGINT) AS n_rows
-         |FROM dec GROUP BY 1, 2, 3 ORDER BY layout, pred, decision""".stripMargin,
+         |FROM dec GROUP BY 1, 2, 3 ORDER BY layout, pred, decision""".stripMargin),
+      headline = true),
   )
 }

@@ -1,7 +1,7 @@
 package graft.warehouse
 
 import graft.Tables
-import graft.Ops.Q
+import graft.Ops.{Entry, Q}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -264,20 +264,8 @@ object StarSchema {
       .orderBy("event_id")
   }
 
-  val entries: Map[String, Q] = Map(
-    "j3_time_join" -> j3TimeJoinQ,
-    "dim_lookup_enriched" -> dimLookupEnrichedQ,
-    "dim_scd2_apply" -> scd2Q,
-    "j12_scd2_pit" -> pitJoinQ,
-    "fact_scd1_merge" -> scd1Q,
-    "dim_date_build" -> dimDateQ,
-    "dim_time_build" -> dimTimeQ,
-    "s9_literal_dim" -> seededDimQ,
-    "fact_idempotent_load" -> idempotentLoadQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "fact_scd1_merge" ->
+  val entries: Seq[Entry] = Seq(
+    Entry("fact_scd1_merge", scd1Q, Some(
       """WITH t AS (
         |  SELECT event_id, ts, user_id, value FROM events WHERE event_id % 5 <> 0),
         |i AS (
@@ -293,8 +281,8 @@ object StarSchema {
         |           ORDER BY ts DESC, src DESC) AS rn
         |  FROM u)
         |SELECT event_id, ts, user_id, value FROM r
-        |WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    "dim_scd2_apply" ->
+        |WHERE rn = 1 ORDER BY event_id""".stripMargin)),
+    Entry("dim_scd2_apply", scd2Q, Some(
       """WITH cur AS (
         |  SELECT n_nationkey AS nation_key, n_name AS name,
         |         n_regionkey AS region_key,
@@ -322,10 +310,10 @@ object StarSchema {
         |SELECT * FROM untouched
         |UNION ALL SELECT * FROM closed
         |UNION ALL SELECT * FROM newv
-        |ORDER BY nation_key, valid_from""".stripMargin,
+        |ORDER BY nation_key, valid_from""".stripMargin)),
     // the versioned dim written out directly (its construction from the
     // same changes is what dim_scd2_apply's own oracle validates)
-    "j12_scd2_pit" ->
+    Entry("j12_scd2_pit", pitJoinQ, Some(
       """WITH dim AS (
         |  SELECT n_nationkey AS nation_key, n_name AS name,
         |         DATE '2024-01-01' AS valid_from,
@@ -339,8 +327,8 @@ object StarSchema {
         |  ON d.nation_key = e.user_id % 25
         | AND d.valid_from <= CAST(e.ts AS DATE)
         | AND (d.valid_to IS NULL OR CAST(e.ts AS DATE) < d.valid_to)
-        |GROUP BY 1 ORDER BY name""".stripMargin,
-    "dim_lookup_enriched" ->
+        |GROUP BY 1 ORDER BY name""".stripMargin)),
+    Entry("dim_lookup_enriched", dimLookupEnrichedQ, Some(
       """WITH ids AS (
         |  SELECT c_nationkey AS loc_id FROM customer
         |  UNION SELECT s_nationkey FROM supplier),
@@ -350,8 +338,8 @@ object StarSchema {
         |SELECT loc_id, coalesce(n_name, 'unknown') AS zone_name,
         |       coalesce(n_regionkey, -1) AS region_key
         |FROM ids LEFT JOIN lkp ON loc_id = n_nationkey
-        |ORDER BY loc_id""".stripMargin,
-    "j3_time_join" ->
+        |ORDER BY loc_id""".stripMargin)),
+    Entry("j3_time_join", j3TimeJoinQ, Some(
       """WITH dt AS (
         |  SELECT DISTINCT CAST(hour(ts) * 3600 + minute(ts) * 60 AS INT) AS time_id,
         |         CAST(hour(ts) AS INT) AS hour FROM events),
@@ -361,28 +349,28 @@ object StarSchema {
         |SELECT dt.hour, count(*) AS n,
         |       CAST(sum(CAST(ev.value AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM ev JOIN dt ON ev.time_id = dt.time_id
-        |GROUP BY 1 ORDER BY dt.hour""".stripMargin,
-    "dim_date_build" ->
+        |GROUP BY 1 ORDER BY dt.hour""".stripMargin)),
+    Entry("dim_date_build", dimDateQ, Some(
       """SELECT DISTINCT CAST(o_orderdate AS DATE) AS date_id,
         |       CAST(year(o_orderdate) AS INT) AS year,
         |       CAST(month(o_orderdate) AS INT) AS month,
         |       CAST(day(o_orderdate) AS INT) AS day,
         |       CAST(dayofweek(o_orderdate) + 1 AS INT) AS day_of_week
-        |FROM orders ORDER BY date_id""".stripMargin,
-    "dim_time_build" ->
+        |FROM orders ORDER BY date_id""".stripMargin)),
+    Entry("dim_time_build", dimTimeQ, Some(
       """SELECT DISTINCT CAST(hour(ts) * 3600 + minute(ts) * 60 AS INT) AS time_id,
         |       CAST(hour(ts) AS INT) AS hour, CAST(minute(ts) AS INT) AS minute
-        |FROM events ORDER BY time_id""".stripMargin,
-    "s9_literal_dim" ->
+        |FROM events ORDER BY time_id""".stripMargin)),
+    Entry("s9_literal_dim", seededDimQ, Some(
       """SELECT * FROM (VALUES
         |  (0, 'Flex Fare'), (1, 'Credit card'), (2, 'Cash'), (3, 'No charge'),
         |  (4, 'Dispute'), (5, 'Unknown'), (6, 'Voided trip'))
         |  AS t(payment_type_id, payment_description)
-        |ORDER BY payment_type_id""".stripMargin,
-    "fact_idempotent_load" ->
+        |ORDER BY payment_type_id""".stripMargin)),
+    Entry("fact_idempotent_load", idempotentLoadQ, Some(
       """SELECT 'first_load' AS phase,
         |       (SELECT count(*) FROM (SELECT DISTINCT user_id, ts, event_type FROM events)) AS n
         |UNION ALL SELECT 'second_load' AS phase, 0 AS n
-        |ORDER BY phase""".stripMargin,
+        |ORDER BY phase""".stripMargin)),
   )
 }

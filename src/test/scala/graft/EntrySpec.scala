@@ -1,5 +1,6 @@
 package graft
 
+import graft.Ops.Entry
 import graft.quality.Gates
 import org.apache.spark.sql.functions.col
 
@@ -13,9 +14,32 @@ class EntrySpec extends SparkSpec {
   test("every registered query has a unique name and every oracle has a query") {
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet
+    assert(SparkEntry.all.size === qs.size, "a name was lost to the map")
     assert((os -- qs).isEmpty, s"oracles without queries: ${os -- qs}")
-    assert(qs.size >= 130, s"expected full registry, got ${qs.size}")
-    assert(os.size >= 113, s"oracle coverage regressed: ${os.size}")
+    assert(qs.size === 343, s"registry size changed: ${qs.size}")
+    assert(os.size === 340, s"oracle count changed: ${os.size}")
+    val q = SparkEntry.queries("a1_kpi_global")
+    val dup = intercept[IllegalArgumentException](SparkEntry.unique(Seq(
+      Entry("twice_named", q, None), Entry("once_named", q, None),
+      Entry("twice_named", q, Some("SELECT 1")))))
+    assert(dup.getMessage.contains("twice_named"), dup.getMessage)
+    assert(!dup.getMessage.contains("once_named"), dup.getMessage)
+  }
+
+  test("only the seed- and engine-specific entries are rows-only") {
+    assert(SparkEntry.all.filter(_.oracle.isEmpty).map(_.name).toSet ===
+      Set("ml_batch_inference", "ml_gbt_metrics", "r3_stratified_sample"))
+  }
+
+  test("no entry has a null query or a blank oracle") {
+    assert(SparkEntry.all.filter(_.q == null).map(_.name).isEmpty)
+    assert(SparkEntry.all.filter(_.oracle.exists(_.trim.isEmpty)).map(_.name).isEmpty)
+  }
+
+  test("the bench times 178 headliners, not the composite funnel or the exact audit form") {
+    val h = SparkEntry.headline
+    assert(h.size === 178 && h.distinct.size === 178, s"headliners: ${h.size}")
+    assert(!h.contains("pipeline_corpus_curation") && !h.contains("dedup_levenshtein"))
   }
 
   test("all registered queries execute at sf0.001 (excluding the slow ML trainer)") {

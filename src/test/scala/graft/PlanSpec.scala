@@ -444,7 +444,7 @@ class PlanSpec extends SparkSpec {
     // the user total — three consumers in the INITIAL plan. The executed
     // plan must collapse the repeats (ReusedExchange under AQE),
     // otherwise the corpus would be re-shuffled per consumer at 100 TB.
-    val df = graft.analytics.Behavior.entries("b15_assoc_rules")(spark, sf001)
+    val df = SparkEntry.queries("b15_assoc_rules")(spark, sf001)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage")

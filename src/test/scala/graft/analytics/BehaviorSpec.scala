@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 class BehaviorSpec extends SparkSpec {
 
@@ -83,7 +83,7 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("date spine fill is dense: one row per day, flat revenue preserved") {
-    val q = ExtendedQueries.entries("a30_date_spine_fill")
+    val q = SparkEntry.queries("a30_date_spine_fill")
     val out = q(spark, sf001).collect()
     // o_orderdate is TIMESTAMP_NTZ in the testdata parquet
     val days = out.map(_.getAs[java.time.LocalDateTime](0).toLocalDate)

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class DriftSpec extends SparkSpec {
@@ -60,11 +60,11 @@ class DriftSpec extends SparkSpec {
   }
 
   test("graded entries run on sf0.001 with full bin/category coverage") {
-    val psiOut = Drift.entries("a41_psi_drift")(spark, sf001).collect()
+    val psiOut = SparkEntry.queries("a41_psi_drift")(spark, sf001).collect()
     assert(psiOut.length === 10)
-    val ks = Drift.entries("a42_ks_drift")(spark, sf001).collect()
+    val ks = SparkEntry.queries("a42_ks_drift")(spark, sf001).collect()
     assert(ks.length === 1 && ks.head.getAs[Double]("ks_stat") >= 0.0)
-    val chi = Drift.entries("a43_chi2_drift")(spark, sf001).collect()
+    val chi = SparkEntry.queries("a43_chi2_drift")(spark, sf001).collect()
     assert(chi.length === 5) // one row per event type
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -428,17 +428,17 @@ class StreamingSpec extends SparkSpec {
   test("bounded-stream graded entries equal their batch twins on the sf0.001 feed") {
     val t = Tables(spark, sf001)
     // tumbling agg through the real runtime == the shared batch expression
-    val streamed = EventStream.entries("stream_tumbling_hourly")(spark, sf001)
+    val streamed = SparkEntry.queries("stream_tumbling_hourly")(spark, sf001)
       .orderBy("ws").collect().map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2)))
     val batch = EventStream.tumblingAgg(t.events, "1 hour")
       .orderBy("ws").collect().map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2)))
     assert(streamed.toSeq === batch.toSeq)
     // dedup state via the production foreachBatch sink, started twice on one
     // checkpoint: row count == DISTINCT proves the restart re-emitted nothing
-    val users = EventStream.entries("stream_distinct_users")(spark, sf001)
+    val users = SparkEntry.queries("stream_distinct_users")(spark, sf001)
     assert(users.count() === t.events.select("user_id").distinct().count())
     // custom transformWithState processor == groupBy over exact cents
-    val totals = EventStream.entries("stream_user_totals")(spark, sf001)
+    val totals = SparkEntry.queries("stream_user_totals")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val bt = t.events.groupBy("user_id")
       .agg(count(lit(1)).as("n"),
@@ -446,7 +446,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(totals === bt)
     // symmetric stream-stream join state == the batch range join
-    val joined = EventStream.entries("stream_view_purchase_join")(spark, sf001)
+    val joined = SparkEntry.queries("stream_view_purchase_join")(spark, sf001)
     val v = t.events.filter(col("event_type") === "view")
       .select(col("user_id").as("u"), col("ts").as("vts"))
     val p = t.events.filter(col("event_type") === "purchase")
