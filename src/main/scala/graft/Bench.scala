@@ -139,13 +139,31 @@ object Bench {
   }
 
   /** Untimed warm-up: JVM, codegen and parquet-footer costs land here
-    * instead of inflating the first timed query. A failure is logged and
-    * the run goes on; nothing here is measured. */
+    * instead of inflating the first timed query. The warm-up query ends
+    * in the same noop V2 write every timed query ends in, so the write
+    * path's first-use cost is paid here too. A failure is logged and the
+    * run goes on; nothing here is measured. */
   private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      SparkEntry.warmUp(spark, sfDir).collect()
+      SparkEntry.warmUp(spark, sfDir).write.format("noop").mode("overwrite").save()
     } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up on $sfDir failed: $e") }
+
+  /** One timed run of the registered query `name`, the loop body of the
+    * graded run and of [[Slope]]: built and materialized through the noop
+    * write, then the session's cache is cleared so one query's persists
+    * do not bleed into the next timing. Seconds, or the failure's message
+    * (first 120 characters). */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String,
+                              name: String): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
+    } finally spark.catalog.clearCache()
+  }
 
   /** One probed run of one query, times in ms. `build` is the query
     * function: Tables and Column work, eager rounds (whose jobs `buildJobs`
@@ -264,10 +282,9 @@ object Bench {
     val calibrationMt = calibrate(cpus)
     val spark = GraftSession.local(cpus, cpus)
 
-    val available = SparkEntry.queries
     val headline = SparkEntry.headline
     val names = headline ++
-      (if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) available.keys.toSeq.sorted.diff(headline) else Nil)
+      (if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) SparkEntry.queries.keys.toSeq.sorted.diff(headline) else Nil)
     warmUp(spark, sfDir)
 
     // Repeat-and-aggregate (VERDICT r3 item 1), contention-hardened after
@@ -319,18 +336,11 @@ object Bench {
     externalCpu() // prime the interval so the first query's window starts here
     for (pass <- 1 to repeats) {
       passLoad += loadavg
-      for (name <- names if !errors.contains(name)) {
-        val t0 = System.nanoTime()
-        try {
-          available(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-          samples(name) = ((System.nanoTime() - t0) / 1e9, externalCpu()) :: samples.getOrElse(name, Nil)
-        } catch { case e: Throwable =>
-          errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(120)
+      for (name <- names if !errors.contains(name)) timeOnce(spark, sfDir, name) match {
+        case Right(t) => samples(name) = (t, externalCpu()) :: samples.getOrElse(name, Nil)
+        case Left(err) =>
+          errors += name -> err
           externalCpu() // reset the interval so the next query's window is its own
-        }
-        // release operator-internal persists so one query's cache pressure
-        // doesn't bleed into the next timing
-        spark.catalog.clearCache()
       }
     }
     val ok = names.filterNot(errors.contains).map(n => n -> samples(n))

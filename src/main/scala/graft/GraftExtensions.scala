@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DecSumAgg, GraftContainsAny, GraftDot, GraftPqCode, GraftPqEncode, GraftPqTable, GraftJaroWinkler, GraftPqAdc, GraftRollingHash, GraftShingles, GraftSimHash, GraftSqDistDec, GraftVocabHits, MinHashAgg, PercentileAgg, TopKAgg}
+import graft.functions.{DecSum128, GraftContainsAny, GraftDot, GraftPqCode, GraftPqEncode, GraftPqTable, GraftJaroWinkler, GraftPqAdc, GraftRollingHash, GraftShingles, GraftSimHash, GraftSqDistDec, GraftVocabHits, MinHashAgg, PercentileAgg, TopKAgg}
 
 /** SparkSessionExtensions entry point and the only way the engine's
   * native surface gets into a session: the `graft_*` functions, the as-of
@@ -40,7 +40,7 @@ object GraftExtensions {
     ("graft_jaro_winkler", classOf[GraftJaroWinkler], GraftJaroWinkler.builder),
     ("graft_pq_adc", classOf[GraftPqAdc], GraftPqAdc.builder),
     ("graft_topk", classOf[TopKAgg], TopKAgg.builder),
-    ("graft_dec_sum", classOf[DecSumAgg], DecSumAgg.builder),
+    ("graft_dec_sum", classOf[DecSum128], DecSum128.builder),
     ("graft_percentile", classOf[PercentileAgg], PercentileAgg.builder),
     ("graft_pq_encode", classOf[GraftPqEncode], GraftPqCode.encodeBuilder),
     ("graft_pq_table", classOf[GraftPqTable], GraftPqCode.tableBuilder),

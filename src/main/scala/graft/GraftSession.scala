@@ -24,9 +24,13 @@ object GraftSession {
   /** Settings every graft session carries, local or cluster: UTC session
     * time, AQE with partition coalescing and skew-join handling, a codegen
     * class cache sized to the engine's working set, the events feed's
-    * TIMESTAMP(NANOS) read as long (rebuilt by [[Tables.normalizeEventsTs]])
-    * and [[GraftExtensions]], the only way the `graft_*` functions, the
-    * as-of join strategy and the native optimizer rules get into a session.
+    * TIMESTAMP(NANOS) read as long (rebuilt by [[Tables.normalizeEventsTs]]),
+    * [[GraftExtensions]], the only way the `graft_*` functions, the
+    * as-of join strategy and the native optimizer rules get into a session,
+    * and the engine's own V2 catalogs: `tiles_cat` (the tile-layout
+    * `TableCatalog`, warehouse `target/tmp/tile_warehouse` by default) and
+    * `graft_fns` (the layout functions' `FunctionCatalog`). Spark loads a
+    * catalog on first use, so a session that never names one pays nothing.
     * The harness mains and perfbench build their sessions through
     * [[local]], so what is measured and graded runs the config the engine
     * ships.
@@ -55,6 +59,8 @@ object GraftSession {
     "spark.sql.codegen.cache.maxEntries" -> "8192",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.extensions" -> classOf[GraftExtensions].getName,
+    "spark.sql.catalog.tiles_cat" -> classOf[graft.sources.tiles.GraftTileCatalog].getName,
+    "spark.sql.catalog.graft_fns" -> classOf[graft.functions.GraftFunctionCatalog].getName,
   )
 
   private def baseBuilder(shufflePartitions: Int,

@@ -25,11 +25,13 @@ object Ops {
     * graded bench times it. */
   final case class Entry(name: String, q: Q, oracle: Option[String], headline: Boolean = false)
 
-  /** The decimal-exact aggregates below run through the r14 native kernels
-    * ([[graft.functions.DecSumAgg]] / [[graft.functions.PercentileAgg]]) —
-    * bit-identical to the builtin `sum(cast(… as decimal))` / `percentile`
-    * chains (pinned in NativeAggEqualitySpec), 3-5× cheaper per row, same
-    * state and shuffle bytes at scale. */
+  /** The decimal-exact aggregates below run through the native kernels:
+    * every sum, narrow or wide, is the one exact decimal sum
+    * `graft_dec_sum` ([[graft.functions.DecSum128]], a codegen
+    * HashAggregate at every precision), and [[pct]] is
+    * [[graft.functions.PercentileAgg]]. Both are bit-identical to the
+    * builtin `sum(cast(… as decimal))` / `percentile` chains (pinned in
+    * NativeAggEqualitySpec). */
 
   /** Order-independent exact sum of a money-ish double column
     * (= `sum(cast(c as decimal(18, scale))).cast(double)`, bit-exact). */

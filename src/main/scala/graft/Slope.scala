@@ -35,23 +35,16 @@ object Slope {
     val repeats = sys.env.getOrElse("SPARK_GRAFT_SLOPE_REPEATS", "2").toInt.max(1)
     val spark = GraftSession.local(Bench.cpus, Bench.cpus)
 
-    val available = SparkEntry.queries
     val names = SparkEntry.headline
     var errors = Map.empty[String, String]
     val samples = scala.collection.mutable.Map.empty[(String, String), List[Double]]
     for (sf <- Seq(sfSmall, sfBig)) {
       Bench.warmUp(spark, sf) // untimed, per scale factor
-      for (_ <- 1 to repeats; name <- names if !errors.contains(name)) {
-        val t0 = System.nanoTime()
-        try {
-          available(name)(spark, sf).write.format("noop").mode("overwrite").save()
-          samples((name, sf)) =
-            (System.nanoTime() - t0) / 1e9 :: samples.getOrElse((name, sf), Nil)
-        } catch { case e: Throwable =>
-          errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(120)
+      for (_ <- 1 to repeats; name <- names if !errors.contains(name))
+        Bench.timeOnce(spark, sf, name) match {
+          case Right(t) => samples((name, sf)) = t :: samples.getOrElse((name, sf), Nil)
+          case Left(err) => errors += name -> err
         }
-        spark.catalog.clearCache()
-      }
     }
     def r4(v: Double) = math.round(v * 10000.0) / 10000.0
     val rows = names.filterNot(errors.contains).map { n =>

@@ -392,6 +392,9 @@ object Graph {
          |FROM corners GROUP BY 1 ORDER BY node""".stripMargin), headline = true),
     Entry("g3_kcore", kcoreQ, Some {
       val (k, rounds) = (3, 4)
+      // each round's edge set is MATERIALIZED: inlined, every round
+      // re-expands the whole self-join tree below it, and at sf0.01 DuckDB
+      // ran ~22 min and failed (materialized: 0.4 s)
       val roundCtes = (1 to rounds).map { r =>
         s"""d${r - 1} AS (
            |  SELECT node, count(*) AS deg FROM (
@@ -399,13 +402,13 @@ object Graph {
            |    UNION ALL SELECT s2 FROM e${r - 1})
            |  GROUP BY 1),
            |keep${r - 1} AS (SELECT node FROM d${r - 1} WHERE deg >= $k),
-           |e$r AS (
+           |e$r AS MATERIALIZED (
            |  SELECT e.s1, e.s2 FROM e${r - 1} e
            |  JOIN keep${r - 1} k1 ON e.s1 = k1.node
            |  JOIN keep${r - 1} k2 ON e.s2 = k2.node)"""
       }.mkString(",\n")
       s"""WITH $edgeCtes,
-         |e0 AS (SELECT s1, s2 FROM ed),
+         |e0 AS MATERIALIZED (SELECT s1, s2 FROM ed),
          |$roundCtes
          |SELECT node, count(*) AS deg FROM (
          |  SELECT s1 AS node FROM e$rounds

@@ -22,9 +22,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    the expression inside whole-stage codegen with no boxing;
   *  - `produceResult(InternalRow)` as the specified reflective fallback.
   *
-  * Registered per-session via
-  * `spark.sql.catalog.graft_fns = classOf[GraftFunctionCatalog].getName`;
-  * SQL then calls `graft_fns.layout.interleave_bits(x, y)`. Functions are
+  * Registered as `graft_fns` in every graft session
+  * ([[graft.GraftSession.baseConf]]); SQL then calls `graft_fns.layout.interleave_bits(x, y)`. Functions are
   * deterministic and oracle-replayable (integer arithmetic only), so the
   * graded entry hash-compares against DuckDB computing the same transform
   * in plain SQL.
@@ -144,7 +143,6 @@ object CatalogFunctions {
     * session-registered V2 FunctionCatalog and hash-graded against DuckDB
     * running the same integer arithmetic inline. */
   private val catalogFnQ: Q = (s, dir) => {
-    s.conf.set("spark.sql.catalog.graft_fns", classOf[GraftFunctionCatalog].getName)
     Tables(s, dir).lineitem.createOrReplaceTempView("li_catfn")
     s.sql(
       """SELECT bucket, count(*) AS n,

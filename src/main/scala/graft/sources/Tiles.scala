@@ -20,6 +20,10 @@ object Tiles {
 
   private val Fmt = "graft-tiles"
 
+  /** `target/tmp/<name>`, created. `tile_warehouse` is also the default
+    * warehouse of `tiles_cat`, the catalog every graft session registers
+    * ([[graft.GraftSession.baseConf]]), so a table written to
+    * `<tile_warehouse>/db/t` by path is `tiles_cat.db.t` to SQL. */
   private def tmpDir(name: String): String = {
     val d = new java.io.File(s"target/tmp/$name")
     d.mkdirs()
@@ -141,9 +145,6 @@ object Tiles {
     * the INSERT rides the same commit protocol, so the oracle over the
     * origin table grades the whole lifecycle. */
   private val sqlDdlQ: Q = (s, dir) => {
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", tmpDir("tile_warehouse"))
     Tables(s, dir).orders.createOrReplaceTempView("orders_ddl_src")
     s.sql("DROP TABLE IF EXISTS tiles_cat.db.orders_t")
     s.sql("""CREATE TABLE tiles_cat.db.orders_t
@@ -169,9 +170,6 @@ object Tiles {
     * table, so a tile dropped or kept wrongly fails the hash. */
   private val deleteWhereQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     val base = Tables(s, dir).orders.withColumn("o_year", year(col("o_orderdate")))
     val tdir = s"$wh/db/orders_del"
     base.filter(col("o_year") < 1998)
@@ -193,9 +191,6 @@ object Tiles {
     * rows the deletes should have left. */
   private val deleteRowsQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     Tables(s, dir).orders.write.format(Fmt).mode("overwrite")
       .option("cluster_by", "o_orderkey").option("write_partitions", "8")
       .save(s"$wh/db/orders_dv")
@@ -243,9 +238,6 @@ object Tiles {
     * rewritten table still answers exactly. */
   private val compactQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     val tdir = s"$wh/db/orders_cmp"
     wipe(tdir)
     Tables(s, dir).orders.repartition(16)
@@ -304,9 +296,6 @@ object Tiles {
     * complete: the exactness grade of the swap. */
   private val replaceWhereQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     val tdir = s"$wh/db/orders_rw"
     wipe(tdir)
     val base = Tables(s, dir).orders.withColumn("o_year", year(col("o_orderdate")))
@@ -334,9 +323,6 @@ object Tiles {
     * both exact across the boundary. */
   private val addColumnQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     val tdir = s"$wh/db/orders_evo"
     wipe(tdir)
     val base = Tables(s, dir).orders
@@ -422,9 +408,6 @@ object Tiles {
     * with a plain INSERT — the write adopts the table's partitioning. */
   private val groupMetaQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     wipe(s"$wh/db/orders_pby")
     s.sql("""CREATE TABLE tiles_cat.db.orders_pby
             |  (o_orderpriority STRING, o_orderkey BIGINT, o_totalprice DOUBLE)
@@ -503,9 +486,6 @@ object Tiles {
     * exact. No tile is rewritten at any step (suite-pinned). */
   private val renameDropQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     val tdir = s"$wh/db/orders_fid"
     wipe(tdir)
     val base = Tables(s, dir).orders
@@ -566,9 +546,6 @@ object Tiles {
     * exactly and the upcast is value-faithful. No tile rewritten. */
   private val widenQ: Q = (s, dir) => {
     val wh = tmpDir("tile_warehouse")
-    s.conf.set("spark.sql.catalog.tiles_cat",
-      classOf[graft.sources.tiles.GraftTileCatalog].getName)
-    s.conf.set("spark.sql.catalog.tiles_cat.warehouse", wh)
     val tdir = s"$wh/db/orders_widen"
     wipe(tdir)
     val base = Tables(s, dir).orders

@@ -110,4 +110,15 @@ class SessionSpec extends SparkSpec {
     val changed = (after diff before.toSet) ++ (before.toSet diff after)
     assert(changed.isEmpty, s"reading the feed changed ${changed.mkString(", ")}")
   }
+
+  test("the engine's catalogs are registered once: catalog queries leave the config unchanged") {
+    // tiles_cat and graft_fns come from baseConf, never from a query
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    for (name <- Seq("f13_catalog_functions", "s21_tiles_sql_ddl"))
+      assert(SparkEntry.queries(name)(s, sf001).collect().nonEmpty, name)
+    val after = s.conf.getAll.toSet
+    val changed = (after diff before.toSet) ++ (before.toSet diff after)
+    assert(changed.isEmpty, s"the catalog queries changed ${changed.mkString(", ")}")
+  }
 }

@@ -7,14 +7,8 @@ import org.apache.spark.sql.functions._
 
 class FunctionCatalogSpec extends SparkSpec {
 
-  private def registered = {
-    spark.conf.set("spark.sql.catalog.graft_fns",
-      classOf[GraftFunctionCatalog].getName)
-    spark
-  }
-
   test("interleave_bits through the catalog is bit-identical to Layout.zValue") {
-    val s = registered
+    val s = spark
     Tables(s, sf001).lineitem.limit(2000).createOrReplaceTempView("li_fcs")
     val viaCatalog = s.sql(
       """SELECT l_orderkey, l_linenumber,
@@ -28,7 +22,7 @@ class FunctionCatalogSpec extends SparkSpec {
   }
 
   test("the magic invoke path resolves (plan carries Invoke, not ApplyFunctionExpression)") {
-    val s = registered
+    val s = spark
     Tables(s, sf001).region.createOrReplaceTempView("r_fcs")
     val q = s.sql(
       "SELECT graft_fns.layout.bucket(4, CAST(r_regionkey AS BIGINT)) AS b FROM r_fcs")

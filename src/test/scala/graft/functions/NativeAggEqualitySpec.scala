@@ -100,11 +100,11 @@ class NativeAggEqualitySpec extends SparkSpec {
     assert(bt.isFailure && nt.isFailure, s"overflow: builtin=$bt native=$nt")
   }
 
-  test("graft_dec_sum p<=18 plans as codegen HashAggregate; wide p stays ObjectHashAggregate") {
-    // VERDICT r14 item 2: the narrow (p <= 18, every Ops.dsum money sum)
-    // path must aggregate in the unsafe-map HashAggregateExec — no
+  test("graft_dec_sum plans as codegen HashAggregate at every precision") {
+    // narrow (Ops.dsum) and wide (Ops.dsumWide) sums
+    // alike aggregate in the unsafe-map HashAggregateExec — no
     // ObjectHashAggregate 128-distinct-key sort fallback on grouped paths
-    // at scale — while the wide path keeps the typed kernel.
+    // at scale
     val df = mkDf(adversarial(200).map(x =>
       if (x != null && !x.isNaN && !x.isInfinite && math.abs(x) >= 1e8) null
       else x), 7)
@@ -112,11 +112,11 @@ class NativeAggEqualitySpec extends SparkSpec {
       .agg(call_function("graft_dec_sum", col("x"), lit(p), lit(s)).as("s"))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    val narrow = planOf(18, 2)
-    assert(narrow.contains("HashAggregate") &&
-      !narrow.contains("ObjectHashAggregate"), s"narrow plan:\n$narrow")
-    val wide = planOf(30, 6)
-    assert(wide.contains("ObjectHashAggregate"), s"wide plan:\n$wide")
+    for ((p, s) <- Seq((18, 2), (30, 6))) {
+      val plan = planOf(p, s)
+      assert(plan.contains("HashAggregate") &&
+        !plan.contains("ObjectHashAggregate"), s"($p, $s) plan:\n$plan")
+    }
   }
 
   test("graft_dec_sum non-ANSI: per-value cast overflow null-skips in both") {
@@ -136,43 +136,52 @@ class NativeAggEqualitySpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 
-  test("Dec128 128-bit wrap poisons to BigInteger instead of wrapping (wide path)") {
-    // VERDICT r14 wrong-item 2: a true sum past ±2^127 must not wrap to a
-    // silently-valid 38-digit value. Drive the buffers directly — reaching
-    // 2^127 through long mantissas needs ~2e19 rows.
-    val two126 = java.math.BigInteger.ONE.shiftLeft(126)
-    def bufAt(v: java.math.BigInteger): Dec128 = {
-      val b = new Dec128
-      b.hi = v.shiftRight(64).longValueExact()
-      b.lo = v.and(java.math.BigInteger.ONE.shiftLeft(64)
-        .subtract(java.math.BigInteger.ONE)).longValue()
-      b.nonEmpty = true
-      b
+  test("graft_dec_sum DECIMAL(38,0) near the 38-digit edge equals the builtin") {
+    // wide mantissas near 10^38: the running sum passes 2^127 and must come
+    // back exact, and a true sum past 38 digits must fail the result's
+    // CheckOverflow as the builtin's does (ANSI throw / else null)
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    def sums(xs: Seq[Double]): (scala.util.Try[Row], scala.util.Try[Row]) = {
+      val df = xs.map(x => x: java.lang.Double).toDF("x").coalesce(1)
+      (scala.util.Try(df.agg(sum(col("x").cast(DecimalType(38, 0)))).head()),
+        scala.util.Try(df.agg(call_function("graft_dec_sum", col("x"), lit(38), lit(0))).head()))
     }
-    // merge overflow: 2^126 + 2^126 = 2^127 (sign would flip)
-    val a = bufAt(two126)
-    a.merge(bufAt(two126))
-    assert(a.big != null, "merge past 2^127 must poison to BigInteger")
-    assert(a.toBigInteger == two126.shiftLeft(1))
-    // addLong overflow at the positive edge: (2^127 - 1) + 1 = 2^127
-    val c = bufAt(java.math.BigInteger.ONE.shiftLeft(127)
-      .subtract(java.math.BigInteger.ONE))
-    c.addLong(1L)
-    assert(c.big != null, "addLong past 2^127 must poison to BigInteger")
-    assert(c.toBigInteger == java.math.BigInteger.ONE.shiftLeft(127))
-    // negative edge: -2^127 - 1
-    val d = bufAt(java.math.BigInteger.ONE.shiftLeft(127).negate())
-    d.addLong(-1L)
-    assert(d.big != null)
-    assert(d.toBigInteger ==
-      java.math.BigInteger.ONE.shiftLeft(127).negate()
-        .subtract(java.math.BigInteger.ONE))
-    // no false positive: ordinary mixed-sign adds stay on the fast path
-    val e = bufAt(two126)
-    e.addLong(-42L)
-    e.merge(bufAt(two126.negate()))
-    assert(e.big == null && e.toBigInteger ==
-      java.math.BigInteger.valueOf(-42L))
+    val exact = new java.math.BigDecimal("99000000000000000000000000000000000000")
+    try for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val (b, n) = sums(Seq(9.9e37, 9.9e37, -9.9e37))
+      assert(b.get.getDecimal(0) == exact, s"ansi=$ansi builtin: $b")
+      assert(n.get.getDecimal(0) == exact, s"ansi=$ansi native: $n")
+      // the second sum is ~2^128 + 1.7e22: a buffer that wrapped at 2^128
+      // would return the 23-digit remainder instead of overflowing
+      for (xs <- Seq(Seq(9.9e37, 9.9e37), Seq.fill(4)(8.507059173023462e37))) {
+        val (bo, no) = sums(xs)
+        if (ansi == "true") {
+          def arithmetic(t: scala.util.Try[Row]) = t.failed.toOption.exists(e =>
+            Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+              .exists(_.isInstanceOf[ArithmeticException]))
+          assert(arithmetic(bo) && arithmetic(no), s"$xs: builtin=$bo native=$no")
+        } else {
+          assert(bo.get.isNullAt(0) && no.get.isNullAt(0), s"$xs: builtin=$bo native=$no")
+        }
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  test("graft_dec_sum over integral input equals the builtin at every width") {
+    // l * 10^s: the long fast path, and past Long.MaxValue / 10^s the
+    // BigDecimal fallback (1e17 at scale 6; Long.MaxValue at scale 10)
+    val big = Seq[java.lang.Long](Long.MaxValue, Long.MinValue, 1L << 40, -7L, 0L, null)
+    val mid = Seq[java.lang.Long](100000000000000000L, -100000000000000000L, 12345L, null)
+    for ((xs, p, s) <- Seq((big, 38, 10), (mid, 24, 6), (mid, 18, 0))) {
+      val df = xs.zipWithIndex.map { case (x, i) => (i % 2, x) }.toDF("g", "x")
+      val builtin = df.groupBy("g")
+        .agg(sum(col("x").cast(DecimalType(p, s))).as("s")).orderBy("g")
+      val native = df.groupBy("g")
+        .agg(call_function("graft_dec_sum", col("x"), lit(p), lit(s)).as("s"))
+        .orderBy("g")
+      assertSameRows(builtin, native, s"dec_sum long ($p,$s)")
+    }
   }
 
   test("graft_dec_sum survives the shuffle (partial/merge path) identically") {

@@ -9,8 +9,11 @@ nameRegex (optional) checks only the dumped queries whose name it matches
 (re.search), e.g. '^(g|dedup_|link_)' or '^g3_kcore$'.
 
 DuckDB is capped at 4 GB of memory and spills to target/duckdb_tmp, so a
-large oracle (g3_kcore's four-round self-join) pages to disk instead of
-running out of memory on a shared host.
+large oracle pages to disk instead of running out of memory on a shared
+host. g3_kcore's four-round self-join marks each round's edge CTE
+`AS MATERIALIZED`: inlined, the rounds re-expanded the whole join tree and
+the oracle ran ~22 min at sf0.01 before failing; materialized it takes
+under a second.
 """
 import sys, glob, os, json, re
 import duckdb
