@@ -52,6 +52,14 @@ object Ops {
   def spread(df: DataFrame, key: String): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, xxhash64(col(key)))
 
+  /** `target/tmp/<name>`, created; its absolute path. The scratch
+    * directory a query writes its roundtrip output under. */
+  def scratchDir(name: String): String = {
+    val d = new java.io.File(s"target/tmp/$name")
+    d.mkdirs()
+    d.getAbsolutePath
+  }
+
   /** Deterministic mean: exact decimal sum divided by count, rounded. */
   def dmean(c: Column, scale: Int = 4): Column =
     round(dsum(c, 4) / count(lit(1)), scale)

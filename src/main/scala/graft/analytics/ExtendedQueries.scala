@@ -57,9 +57,7 @@ object ExtendedQueries {
       requiredNonNull = Seq("ts", "event_type"),
       nonNegative = Seq("value"))
       .withColumn("day", to_date(col("ts")))
-    val out = {
-      val d = new java.io.File("target/tmp/clean_events"); d.mkdirs(); d.getAbsolutePath
-    }
+    val out = Ops.scratchDir("clean_events")
     Sources.partitionedOverwrite(cleaned, out, Seq("day"))
     Sources.partitionedOverwrite(cleaned, out, Seq("day")) // idempotent re-run
     s.read.parquet(out).agg(

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.Ops.{Entry, Q, dsum}
+import graft.Ops.{Entry, Q, dsum, scratchDir}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,12 +16,6 @@ import org.apache.spark.sql.types._
   * roundtrip is byte-faithful or the hash check fails.
   */
 object Sources {
-
-  private def tmpDir(name: String): String = {
-    val d = new java.io.File(s"target/tmp/$name")
-    d.mkdirs()
-    d.getAbsolutePath
-  }
 
   /** S3 — multi-path union scan (spark_io.py:133-135). */
   def multiPathScan(spark: SparkSession, paths: Seq[String]): DataFrame =
@@ -76,7 +70,7 @@ object Sources {
   /** CSV roundtrip: nation -> csv -> explicit-schema read -> oracle vs the
     * original parquet table. */
   private val csvRoundtripQ: Q = (s, dir) => {
-    val out = tmpDir("csv_nation")
+    val out = scratchDir("csv_nation")
     Tables(s, dir).nation.coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(out)
     val schema = StructType(Seq(
@@ -88,7 +82,7 @@ object Sources {
 
   /** S11 — JSON sink + source roundtrip (trainer.py:308-340 report shape). */
   private val jsonRoundtripQ: Q = (s, dir) => {
-    val out = tmpDir("json_supplier")
+    val out = scratchDir("json_supplier")
     Tables(s, dir).supplier.select("s_suppkey", "s_name", "s_acctbal")
       .coalesce(1).write.mode("overwrite").json(out)
     val schema = StructType(Seq(
@@ -109,7 +103,7 @@ object Sources {
     * data read) — still O(files), which is why the compaction planner
     * (`layout_compaction_plan`) keeps file counts bounded. */
   private val schemaEvolutionQ: Q = (s, dir) => {
-    val out = tmpDir("evolving_orders")
+    val out = scratchDir("evolving_orders")
     val o = Tables(s, dir).orders
     // generation 1: no discount column yet (even keys)
     o.filter(col("o_orderkey") % 2 === 0)
@@ -140,7 +134,7 @@ object Sources {
     * schema read, oracle vs the original parquet table. The enterprise
     * interchange format a lakehouse still has to ingest. */
   private val xmlRoundtripQ: Q = (s, dir) => {
-    val out = tmpDir("xml_region")
+    val out = scratchDir("xml_region")
     Tables(s, dir).region.select("r_regionkey", "r_name")
       .coalesce(1).write.mode("overwrite")
       .option("rowTag", "region").xml(out)
@@ -156,7 +150,7 @@ object Sources {
     * read-back against the original parquet table, so the roundtrip is
     * value-faithful across formats. */
   private val orcRoundtripQ: Q = (s, dir) => {
-    val out = tmpDir("orc_customer")
+    val out = scratchDir("orc_customer")
     Tables(s, dir).customer.select("c_custkey", "c_name", "c_acctbal")
       .coalesce(1).write.mode("overwrite").orc(out)
     s.read.orc(out).orderBy("c_custkey")
@@ -169,7 +163,7 @@ object Sources {
     * scan, so the graded surface is count / distinct / char mass /
     * binary-min / binary-max — equal iff the line multiset survived). */
   private val textRoundtripQ: Q = (s, dir) => {
-    val out = tmpDir("text_docs")
+    val out = scratchDir("text_docs")
     Tables(s, dir).documents.select("text")
       .coalesce(1).write.mode("overwrite").text(out)
     s.read.text(out).agg(
@@ -183,7 +177,7 @@ object Sources {
   /** S5 — partitioned overwrite roundtrip: orders partitioned by year,
     * written twice (idempotence), read back through partition pruning. */
   private val partitionedSinkQ: Q = (s, dir) => {
-    val out = tmpDir("pq_orders_by_year")
+    val out = scratchDir("pq_orders_by_year")
     val orders = Tables(s, dir).orders.withColumn("o_year", year(col("o_orderdate")))
     partitionedOverwrite(orders, out, Seq("o_year"))
     partitionedOverwrite(orders, out, Seq("o_year")) // second write must be a no-op

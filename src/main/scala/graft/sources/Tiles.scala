@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.Ops.{Entry, Q, dsum}
+import graft.Ops.{Entry, Q, dsum, scratchDir}
 
 import org.apache.spark.sql.functions._
 
@@ -20,20 +20,15 @@ object Tiles {
 
   private val Fmt = "graft-tiles"
 
-  /** `target/tmp/<name>`, created. `tile_warehouse` is also the default
-    * warehouse of `tiles_cat`, the catalog every graft session registers
-    * ([[graft.GraftSession.baseConf]]), so a table written to
-    * `<tile_warehouse>/db/t` by path is `tiles_cat.db.t` to SQL. */
-  private def tmpDir(name: String): String = {
-    val d = new java.io.File(s"target/tmp/$name")
-    d.mkdirs()
-    d.getAbsolutePath
-  }
+  // scratchDir("tile_warehouse") is also the default warehouse of
+  // `tiles_cat`, the catalog every graft session registers
+  // (`GraftSession.baseConf`), so a table written to
+  // `<tile_warehouse>/db/t` by path is `tiles_cat.db.t` to SQL.
 
   /** S16 — commit-protocol roundtrip: orders through the DSv2 write path
     * (task tiles + driver manifest publish), read back and aggregated. */
   private val roundtripQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders")
+    val out = scratchDir("tiles_orders")
     Tables(s, dir).orders.write.format(Fmt).mode("overwrite").save(out)
     s.read.format(Fmt).load(out)
       .groupBy("o_orderpriority")
@@ -50,7 +45,7 @@ object Tiles {
     * first ~2/8 tiles at every sf (the prune is suite-pinned on a
     * tighter slice; the entry grades correctness). */
   private val filterPruneQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders_bydate")
+    val out = scratchDir("tiles_orders_bydate")
     // the TABLE requests its own clustered layout (cluster_by →
     // RequiresDistributionAndOrdering); no caller-side repartitionByRange
     Tables(s, dir).orders
@@ -74,7 +69,7 @@ object Tiles {
     * pushdown — zero tiles opened (suite-pinned). The 100-TB shape of
     * `SELECT count(*), max(ts) FROM huge_table`. */
   private val aggPushdownQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders_agg")
+    val out = scratchDir("tiles_orders_agg")
     Tables(s, dir).orders.write.format(Fmt).mode("overwrite").save(out)
     s.read.format(Fmt).load(out)
       .agg(count(lit(1)).as("n_rows"),
@@ -91,7 +86,7 @@ object Tiles {
     * dropping tiles whose custkey range can't match. Oracle grades the
     * plain join, so the prune must be lossless. */
   private val runtimePruneQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders_bycust")
+    val out = scratchDir("tiles_orders_bycust")
     Tables(s, dir).orders
       .repartitionByRange(8, col("o_custkey"))
       .sortWithinPartitions("o_custkey")
@@ -117,8 +112,8 @@ object Tiles {
     * every count below and fail the hash). Read back through the same
     * connector and aggregate against the batch events oracle. */
   private val streamSinkQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_stream_sink")
-    val ckpt = tmpDir("tiles_stream_ckpt")
+    val out = scratchDir("tiles_stream_sink")
+    val ckpt = scratchDir("tiles_stream_ckpt")
     // the entry owns its lifecycle: wipe sink + checkpoint so every
     // invocation grades a fresh stream -> sink -> restart -> read cycle
     wipe(out); wipe(ckpt)
@@ -169,7 +164,7 @@ object Tiles {
     * suite-pinned). The oracle re-derives the survivors from the origin
     * table, so a tile dropped or kept wrongly fails the hash. */
   private val deleteWhereQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     val base = Tables(s, dir).orders.withColumn("o_year", year(col("o_orderdate")))
     val tdir = s"$wh/db/orders_del"
     base.filter(col("o_year") < 1998)
@@ -190,7 +185,7 @@ object Tiles {
     * the read-back aggregate grades the masked table against the origin
     * rows the deletes should have left. */
   private val deleteRowsQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     Tables(s, dir).orders.write.format(Fmt).mode("overwrite")
       .option("cluster_by", "o_orderkey").option("write_partitions", "8")
       .save(s"$wh/db/orders_dv")
@@ -209,7 +204,7 @@ object Tiles {
     * the equality prunes most tiles at planning time (suite-pinned; this
     * entry grades the row-exact result). */
   private val stringPruneQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders_byprio")
+    val out = scratchDir("tiles_orders_byprio")
     Tables(s, dir).orders.write.format(Fmt).mode("overwrite")
       .option("cluster_by", "o_orderpriority,o_orderkey")
       .option("write_partitions", "8").save(out)
@@ -237,7 +232,7 @@ object Tiles {
     * invariants are contract-checked in-entry; the oracle grades that the
     * rewritten table still answers exactly. */
   private val compactQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     val tdir = s"$wh/db/orders_cmp"
     wipe(tdir)
     Tables(s, dir).orders.repartition(16)
@@ -263,9 +258,9 @@ object Tiles {
     * hash). The sink is plain parquet, so the oracle grades the whole
     * log → stream → files loop against the origin table. */
   private val streamSourceQ: Q = (s, dir) => {
-    val src = tmpDir("tiles_stream_src")
-    val outP = tmpDir("tiles_stream_src_out")
-    val ckpt = tmpDir("tiles_stream_src_ckpt")
+    val src = scratchDir("tiles_stream_src")
+    val outP = scratchDir("tiles_stream_src_out")
+    val ckpt = scratchDir("tiles_stream_src_ckpt")
     wipe(src); wipe(outP); wipe(ckpt)
     val base = Tables(s, dir).orders.withColumn("o_year", year(col("o_orderdate")))
     def drain(): Unit = {
@@ -295,7 +290,7 @@ object Tiles {
     * only if the corrupted rows are ALL gone and the replacement is
     * complete: the exactness grade of the swap. */
   private val replaceWhereQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     val tdir = s"$wh/db/orders_rw"
     wipe(tdir)
     val base = Tables(s, dir).orders.withColumn("o_year", year(col("o_orderdate")))
@@ -322,7 +317,7 @@ object Tiles {
     * oracle passes only if the null semantics and the evolved values are
     * both exact across the boundary. */
   private val addColumnQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     val tdir = s"$wh/db/orders_evo"
     wipe(tdir)
     val base = Tables(s, dir).orders
@@ -351,7 +346,7 @@ object Tiles {
     * updated row shows the new value exactly once, every inserted row
     * appears, and every untouched row survives — across tile boundaries. */
   private val mergeUpsertQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders_merge")
+    val out = scratchDir("tiles_orders_merge")
     wipe(out)
     val base = Tables(s, dir).orders.select(
       col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
@@ -378,8 +373,8 @@ object Tiles {
     * correctness through the DuckDB oracle). The 100-TB shape: two
     * co-partitioned fact tables join with no data movement at all. */
   private val spjQ: Q = (s, dir) => {
-    val outO = tmpDir("tiles_spj_orders")
-    val outC = tmpDir("tiles_spj_customer")
+    val outO = scratchDir("tiles_spj_orders")
+    val outC = scratchDir("tiles_spj_customer")
     wipe(outO); wipe(outC)
     Tables(s, dir).orders
       .groupBy((col("o_custkey") % 32).as("bucket"))
@@ -407,7 +402,7 @@ object Tiles {
     * table is created through SQL `PARTITIONED BY` (identity) and filled
     * with a plain INSERT — the write adopts the table's partitioning. */
   private val groupMetaQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     wipe(s"$wh/db/orders_pby")
     s.sql("""CREATE TABLE tiles_cat.db.orders_pby
             |  (o_orderpriority STRING, o_orderkey BIGINT, o_totalprice DOUBLE)
@@ -430,7 +425,7 @@ object Tiles {
     * table: it passes only if the pinned read sees exactly the deleted
     * rows back and the current read sees exactly the survivors. */
   private val timeTravelQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders_tt")
+    val out = scratchDir("tiles_orders_tt")
     wipe(out)
     val base = Tables(s, dir).orders
     base.filter(year(col("o_orderdate")) < 1998)
@@ -460,7 +455,7 @@ object Tiles {
     * `WHERE user_id = ?` on a time-partitioned events table — the lookup
     * that reads 3 files instead of 30,000. */
   private val bloomPointQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_orders_bloom")
+    val out = scratchDir("tiles_orders_bloom")
     wipe(out)
     Tables(s, dir).orders
       .write.format(Fmt).mode("overwrite")
@@ -485,7 +480,7 @@ object Tiles {
     * gone, and the null/value split across the evolution boundary is
     * exact. No tile is rewritten at any step (suite-pinned). */
   private val renameDropQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     val tdir = s"$wh/db/orders_fid"
     wipe(tdir)
     val base = Tables(s, dir).orders
@@ -519,7 +514,7 @@ object Tiles {
     * query (prune-ratio suite-pinned in TilesSpec); the oracle grades the
     * answer stays exact through the rewrite. */
   private val zorderTilesQ: Q = (s, dir) => {
-    val out = tmpDir("tiles_li_zorder")
+    val out = scratchDir("tiles_li_zorder")
     Tables(s, dir).lineitem
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_quantity"), col("l_extendedprice"))
@@ -545,7 +540,7 @@ object Tiles {
     * oracle passes only if the recorded physical tags decode old chunks
     * exactly and the upcast is value-faithful. No tile rewritten. */
   private val widenQ: Q = (s, dir) => {
-    val wh = tmpDir("tile_warehouse")
+    val wh = scratchDir("tile_warehouse")
     val tdir = s"$wh/db/orders_widen"
     wipe(tdir)
     val base = Tables(s, dir).orders

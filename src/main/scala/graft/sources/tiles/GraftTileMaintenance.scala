@@ -2,9 +2,11 @@ package graft.sources.tiles
 
 import java.io.File
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{DataType, StructType}
 
-import TileFormat.TileMeta
+import TileFormat.{ManifestData, TileMeta}
 
 /** Table-maintenance operations over the tile layout — the OPTIMIZE rung
   * of the lakehouse ladder (Delta OPTIMIZE / Iceberg rewrite_data_files),
@@ -72,15 +74,11 @@ object GraftTileMaintenance {
     val compacted: Seq[TileMeta] = rewrite.toSeq.zipWithIndex.flatMap { case (bin, i) =>
       // bins are already sized by this function's targetBytes, so the
       // writer's own roll-over is disabled: exactly one tile per bin.
-      // Bloom sidecars survive the rewrite (ADVICE r13): the rewritten
-      // tile indexes the UNION of its inputs' bloom columns, so a
-      // point-lookup prune never silently degrades after maintenance.
-      val binBloomIdx = bin.flatMap(_.bloomCols).distinct
-        .filter(m.schema.fieldNames.contains).map(m.schema.fieldIndex).toArray
+      // bloom sidecars survive the rewrite (see bloomIdx)
       val writer = new GraftTileWriter(dir, m.schema, partitionId = 90000 + i,
         taskId = -1L, targetBytes = Long.MaxValue, targetRows = Long.MaxValue,
         partitionByIdx = m.partitionBy.map(m.schema.fieldIndex),
-        bloomIdx = binBloomIdx, fieldIds = ids)
+        bloomIdx = bloomIdx(m, bin), fieldIds = ids)
       bin.foreach { t =>
         if (t.dv.nonEmpty) dvs += 1
         val dv = t.dv.toArray
@@ -101,13 +99,7 @@ object GraftTileMaintenance {
       require(msg.parts.nonEmpty, s"graft-tiles: compaction bin $i produced an empty tile")
       msg.parts.map(_.commitTo(new File(dir))) // renames tile + bloom sidecar
     }
-    // manifest-first swap; replaced originals become vacuumable orphans;
-    // compaction is a rewrite, so the generation bump invalidates any
-    // streaming reader's (generation, tileCount) offsets loudly
-    TileFormat.writeManifest(dir, m.schema,
-      keep ++ passthrough.flatten ++ compacted, m.lastEpoch, m.queryId,
-      m.generation + 1L, expect = TileFormat.ExpectCommitSeq(m.commitSeq),
-      partitionBy = m.partitionBy, nextFieldId = m.nextFieldId)
+    TileFormat.publishRewrite(dir, m, keep ++ passthrough.flatten ++ compacted)
     CompactionReport(rewrite.size, rewrite.map(_.size).sum, compacted.size, rows, dvs)
   }
 
@@ -145,7 +137,7 @@ object GraftTileMaintenance {
     * loudly) and the publish is CAS-guarded on the manifest read at
     * entry. */
   def mergeUpsert(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  source: org.apache.spark.sql.DataFrame,
+                  source: DataFrame,
                   keyCols: Seq[String]): MergeReport = {
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     val m = TileFormat.readManifest(dir).getOrElse(throw new IllegalArgumentException(
@@ -171,39 +163,15 @@ object GraftTileMaintenance {
       .select(col("_tile_file"), col("_tile_row")).collect()
       .groupBy(_.getString(0)).map { case (f, rs) => f -> rs.map(_.getLong(1)).toSeq }
 
-    // stage the source as new tiles: a distributed write through the
-    // roll-over writer (same bounded-heap shape as the DSv2 write path).
-    // The staged tiles index the union of the table's existing bloom
-    // columns (ADVICE r13: merge must not degrade point-lookup pruning).
-    val schemaJson = m.schema.json
-    val dirLocal = dir
-    val bloomIdxLocal: Array[Int] = m.tiles.flatMap(_.bloomCols).distinct
-      .filter(m.schema.fieldNames.contains).map(m.schema.fieldIndex).toArray
-    val idsLocal: Array[Int] = TileFormat.fieldIds(m.schema)
-    // staged tiles honor the table's durable layout targets (r14)
-    val tbLocal = m.properties.get("target_tile_bytes").map(_.toLong)
-      .getOrElse(TileFormat.DefaultTileBytes)
-    val trLocal = m.properties.get("target_tile_rows").map(_.toLong)
-      .getOrElse(TileFormat.DefaultTileRows)
     // identity-partitioned tables keep the one-value-per-tile property:
     // cluster+sort the staged source on the partition column so the
     // writer's value-boundary roll yields one tile per value, not per run
-    val pIdx = m.partitionBy.map(m.schema.fieldIndex)
     val ordered = m.partitionBy match {
       case Some(c) => source.select(m.schema.fieldNames.map(col).toSeq: _*)
         .repartition(col(c)).sortWithinPartitions(c)
       case None => source.select(m.schema.fieldNames.map(col).toSeq: _*)
     }
-    val staged: Seq[TilePart] = ordered
-      .queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val w = new GraftTileWriter(dirLocal, schema, 80000 + pid, taskId = pid.toLong,
-          targetBytes = tbLocal, targetRows = trLocal,
-          partitionByIdx = pIdx, bloomIdx = bloomIdxLocal, fieldIds = idsLocal)
-        it.foreach(w.write)
-        Iterator(w.commit().asInstanceOf[GraftTileCommitMessage])
-      }.collect().toSeq.flatMap(_.parts)
+    val fresh = stage(dir, m, ordered, 80000, TileFormat.tileTargets(m.properties))
 
     var dvTiles = 0
     var dropped = 0
@@ -218,14 +186,40 @@ object GraftTileMaintenance {
           else { dvTiles += 1; Some(t.copy(dv = dv)) }
       }
     }
-    val fresh = staged.collect {
-      case p if p.rows > 0 => p.commitTo(new File(dir)) // tile + bloom sidecar
-    }
-    TileFormat.writeManifest(dir, m.schema, survivors ++ fresh, m.lastEpoch,
-      m.queryId, m.generation + 1L,
-      expect = TileFormat.ExpectCommitSeq(m.commitSeq),
-      partitionBy = m.partitionBy, nextFieldId = m.nextFieldId)
+    TileFormat.publishRewrite(dir, m, survivors ++ fresh)
     MergeReport(matchedRows, fresh.map(_.rows).sum, dvTiles, dropped, fresh.size)
+  }
+
+  /** Field indexes of the union of `tiles`' bloom columns still in the
+    * table schema: a tile a rewrite or merge writes indexes every bloom
+    * column of the tiles it replaces or joins, so a point-lookup prune
+    * never silently degrades after maintenance. */
+  private def bloomIdx(m: ManifestData, tiles: Seq[TileMeta]): Array[Int] =
+    tiles.flatMap(_.bloomCols).distinct.filter(m.schema.fieldNames.contains)
+      .map(m.schema.fieldIndex).toArray
+
+  /** Stage `rows` (in table column order) as new tiles of the table `m`
+    * describes, and rename them in: one distributed write through the
+    * roll-over writer (the DSv2 write path's bounded-heap shape), with the
+    * table's field ids, partition column and bloom columns, sealing at
+    * `targets` = (bytes, rows). `base` offsets the partition ids in the
+    * tile names. The caller publishes the returned tiles. */
+  private def stage(dir: String, m: ManifestData, rows: DataFrame, base: Int,
+                    targets: (Long, Long)): Seq[TileMeta] = {
+    val schemaJson = m.schema.json
+    val bloom = bloomIdx(m, m.tiles)
+    val ids = TileFormat.fieldIds(m.schema)
+    val pIdx = m.partitionBy.map(m.schema.fieldIndex)
+    val (tb, tr) = targets
+    rows.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+      val w = new GraftTileWriter(dir, schema, base + pid, taskId = pid.toLong,
+        targetBytes = tb, targetRows = tr, partitionByIdx = pIdx, bloomIdx = bloom,
+        fieldIds = ids)
+      it.foreach(w.write)
+      Iterator(w.commit().asInstanceOf[GraftTileCommitMessage])
+    }.collect().toSeq.flatMap(_.parts)
+      .collect { case p if p.rows > 0 => p.commitTo(new File(dir)) }
   }
 
   private def additionsFor(t: TileMeta,
@@ -286,20 +280,8 @@ object GraftTileMaintenance {
     }
     if (m.tiles.isEmpty) return ZOrderReport(0, 0, 0L)
 
-    val schemaJson = m.schema.json
-    val dirLocal = dir
-    val bloomIdxLocal: Array[Int] = m.tiles.flatMap(_.bloomCols).distinct
-      .filter(m.schema.fieldNames.contains).map(m.schema.fieldIndex).toArray
-    val idsLocal: Array[Int] = TileFormat.fieldIds(m.schema)
-    val pIdx = m.partitionBy.map(m.schema.fieldIndex)
-
-    // per-call override > durable TBLPROPERTIES > engine default
-    val tb = if (targetBytes > 0L) targetBytes
-      else m.properties.get("target_tile_bytes").map(_.toLong)
-        .getOrElse(TileFormat.DefaultTileBytes)
-    val tr = if (targetRows > 0L) targetRows
-      else m.properties.get("target_tile_rows").map(_.toLong)
-        .getOrElse(TileFormat.DefaultTileRows)
+    val (tb, tr) = TileFormat.tileTargets(m.properties,
+      Some(targetBytes).filter(_ > 0L), Some(targetRows).filter(_ > 0L))
 
     val live = spark.read.format("graft-tiles").load(dir)
     val withKey = curve match {
@@ -318,25 +300,8 @@ object GraftTileMaintenance {
         .repartitionByRange(nOut, col("__z")).sortWithinPartitions(col("__z"))
     }).select(m.schema.fieldNames.map(col).toSeq: _*)
 
-    val staged: Seq[TilePart] = ordered
-      .queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val w = new GraftTileWriter(dirLocal, schema, 70000 + pid, taskId = pid.toLong,
-          targetBytes = tb, targetRows = tr,
-          partitionByIdx = pIdx, bloomIdx = bloomIdxLocal, fieldIds = idsLocal)
-        it.foreach(w.write)
-        Iterator(w.commit().asInstanceOf[GraftTileCommitMessage])
-      }.collect().toSeq.flatMap(_.parts)
-
-    val fresh = staged.collect {
-      case p if p.rows > 0 => p.commitTo(new File(dir)) // tile + bloom sidecar
-    }
-    // full-table rewrite: ONE atomic swap; a raced commit fails the CAS
-    // loudly (single-shot — rewrites conflict with everything)
-    TileFormat.writeManifest(dir, m.schema, fresh, m.lastEpoch, m.queryId,
-      m.generation + 1L, expect = TileFormat.ExpectCommitSeq(m.commitSeq),
-      partitionBy = m.partitionBy, nextFieldId = m.nextFieldId)
+    val fresh = stage(dir, m, ordered, 70000, (tb, tr))
+    TileFormat.publishRewrite(dir, m, fresh)
     ZOrderReport(m.tiles.size, fresh.size, fresh.map(_.rows).sum)
   }
 }

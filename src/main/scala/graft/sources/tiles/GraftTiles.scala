@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count,
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -75,22 +76,18 @@ import TileFormat.{ColStats, TileMeta}
   *    from the manifest (complete pushdown, zero tiles opened). Validated
   *    per tile from the zone maps — a nonconforming tile degrades the
   *    report, never the answer.
-  *  - '''Optimistic concurrency''' (r13): every manifest publish CAS-checks
+  *  - '''Optimistic concurrency''': every manifest publish CAS-checks
   *    the `commit_seq` its edit was read at; a racing commit loses LOUDLY
   *    (orphaned tiles, table unchanged), never silently. The conflict
-  *    POLICY is deliberate, not an oversight (r14, VERDICT r13):
-  *    '''appends commute with everything; rewrites conflict with
-  *    everything.''' A batch append or streaming epoch commit that loses
-  *    the CAS re-reads the winner's state and re-publishes its already-
-  *    staged tiles on top — including on top of a racing TRUNCATE or
-  *    DELETE, so an append can land rows into a table another writer just
-  *    emptied (Delta makes the same call: blind appends never fail). Every
-  *    REWRITE (truncate, DELETE, REPLACE WHERE, MERGE, compaction,
-  *    Z-order, ALTER TABLE) is single-shot: its edit was computed FROM the
-  *    snapshot it read, so a moved commit_seq means the premise is gone
-  *    and the caller must re-read and redo. A replay that lost its race
-  *    leaves committed-then-raced tile files as invisible orphans —
-  *    [[TileFormat.vacuumOrphans]] reclaims them (suite-pinned).
+  *    policy is deliberate: '''an append commutes and retries a lost CAS;
+  *    a rewrite is single-shot and bumps the generation'''
+  *    ([[TileFormat.publishAppend]], [[TileFormat.publishRewrite]]). A
+  *    batch append or streaming epoch commit can therefore land rows into
+  *    a table a racing truncate just emptied (Delta makes the same call:
+  *    blind appends never fail), while truncate, DELETE, REPLACE WHERE,
+  *    MERGE, compaction, Z-order and ALTER TABLE surface the conflict.
+  *    Committed-then-raced tile files stay as invisible orphans that
+  *    [[TileFormat.vacuumOrphans]] reclaims (suite-pinned).
   *
   * Reference behavior twin: the reference's warehouse reads partition- and
   * predicate-pruned parquet (SURVEY §2.1, `ex03` layout); this connector
@@ -186,18 +183,7 @@ class GraftTileTable(dir: String, tableSchema: StructType,
   override def deleteWhere(filters: Array[Filter]): Unit = {
     readOnlyPin()
     val m = TileFormat.readManifest(dir).getOrElse(return)
-    val updated = GraftTileTable.survivorsUnderDelete(dir, m, filters)
-    // Manifest-first publish, and the dropped tiles STAY on disk as
-    // orphans for [[TileFormat.vacuumOrphans]] — exactly like truncate and
-    // compaction (VERDICT r12 wrong-item 5: the previous eager delete here
-    // broke snapshot isolation — a reader holding the PREVIOUS manifest
-    // dereferenced deleted files, contradicting the class-doc guarantee
-    // that a reader holding either manifest version always resolves).
-    // DELETE is a rewrite: bump the generation so streaming-reader
-    // offsets can't silently misread.
-    TileFormat.writeManifest(dir, m.schema, updated, m.lastEpoch, m.queryId,
-      m.generation + 1L, expect = TileFormat.ExpectCommitSeq(m.commitSeq),
-      partitionBy = m.partitionBy, nextFieldId = m.nextFieldId)
+    TileFormat.publishRewrite(dir, m, GraftTileTable.survivorsUnderDelete(dir, m, filters))
   }
 
   /** Iceberg-style hidden metadata columns: present only when a query
@@ -1228,10 +1214,9 @@ class GraftTileWriteBuilder(dir: String, schema: StructType,
     override def requiredNumPartitions(): Int =
       if (clusterBy.isEmpty && partitionBy.isEmpty) 0
       else Option(options.get("write_partitions")).map(_.toInt).getOrElse(0)
-    private val targetBytes: Long = opt("target_tile_bytes")
-      .map(_.toLong).getOrElse(TileFormat.DefaultTileBytes)
-    private val targetRows: Long = opt("target_tile_rows")
-      .map(_.toLong).getOrElse(TileFormat.DefaultTileRows)
+    private val (targetBytes, targetRows) = TileFormat.tileTargets(tableProps,
+      Option(options.get("target_tile_bytes")).map(_.toLong),
+      Option(options.get("target_tile_rows")).map(_.toLong))
     /** Bloom sidecars (r13): `bloom_columns=c1,c2` — per-tile bloom filters
       * for point-lookup pruning on columns the tiles are NOT clustered by
       * (the case zone maps cannot prune). Durable via TBLPROPERTIES (r14):
@@ -1247,12 +1232,10 @@ class GraftTileWriteBuilder(dir: String, schema: StructType,
         s"graft-tiles: bloom_columns column `$c` (${schema(c).dataType.sql}) " +
           "is not bloom-indexable")
     }
-    override def toBatch: BatchWrite =
-      new GraftTileBatchWrite(dir, schema, truncateFirst, replaceWhere,
-        targetBytes, targetRows, partitionBy, bloomCols)
-    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-      new GraftTileStreamingWrite(dir, schema, queryId, targetBytes, targetRows,
-        partitionBy, bloomCols)
+    private def write = new GraftTileWrite(dir, schema, queryId, truncateFirst,
+      replaceWhere, targetBytes, targetRows, partitionBy, bloomCols)
+    override def toBatch: BatchWrite = write
+    override def toStreaming: StreamingWrite = write
     override def description(): String = {
       val mode =
         if (truncateFirst) "overwrite"
@@ -1296,13 +1279,40 @@ case class TilePart(tmpName: String, finalName: String, rows: Long,
   * buffering its whole partition (VERDICT r12 missing-item 1). */
 case class GraftTileCommitMessage(parts: Seq[TilePart]) extends WriterCommitMessage
 
-class GraftTileBatchWrite(dir: String, schema: StructType, truncateFirst: Boolean,
-                          replaceWhere: Option[Array[Filter]] = None,
-                          targetBytes: Long = TileFormat.DefaultTileBytes,
-                          targetRows: Long = TileFormat.DefaultTileRows,
-                          partitionBy: Option[String] = None,
-                          bloomCols: Array[String] = Array.empty)
-  extends BatchWrite {
+/** The one commit class of both write paths: a batch write (append,
+  * truncate or REPLACE WHERE) and the exactly-once streaming sink. Tasks
+  * stage tiles through one [[GraftTileWriterFactory]]; the driver's commit
+  * renames them in and publishes the manifest atomically — and NOTHING
+  * else. Readers see the previous table version until the manifest moves,
+  * and a truncate leaves the previous generation's tiles on disk as
+  * orphans (a reader holding the old manifest still resolves every file it
+  * references — snapshot isolation); [[TileFormat.vacuumOrphans]] is the
+  * reclaim step. REPLACE WHERE classifies the previous tiles under its
+  * predicate (drop / keep / DV-split, same prover as DELETE) and publishes
+  * survivors + new tiles in the SAME atomic move — no reader ever sees the
+  * slice deleted-but-not-yet-replaced.
+  *
+  * Streaming: Structured Streaming replays an epoch's `commit(epochId,
+  * messages)` after a driver restart whenever the sink cannot prove it
+  * already committed — the SINK owns idempotence (the contract every
+  * transactional lakehouse sink implements). The manifest records
+  * `(query_id, last_epoch)`: a commit is a replay ONLY when the same query
+  * run is at or below its own watermark, in which case the replay's tmp
+  * tiles are deleted and the table is untouched. Keying by query id means
+  * a SECOND streaming query (fresh checkpoint, epochs restarting at 0)
+  * writing to an existing table is new work and appends, and it takes over
+  * the watermark identity. Epochs from one query are monotonically
+  * increasing, which is all the per-query watermark needs; a truncate
+  * (batch overwrite) resets history and identity along with the data.
+  */
+class GraftTileWrite(dir: String, schema: StructType, queryId: String = "",
+                     truncateFirst: Boolean = false,
+                     replaceWhere: Option[Array[Filter]] = None,
+                     targetBytes: Long = TileFormat.DefaultTileBytes,
+                     targetRows: Long = TileFormat.DefaultTileRows,
+                     partitionBy: Option[String] = None,
+                     bloomCols: Array[String] = Array.empty)
+  extends BatchWrite with StreamingWrite {
 
   /** The TABLE's field ids for this write's columns, resolved by name at
     * write-build time (ids are stable under rename, so a concurrent
@@ -1320,110 +1330,63 @@ class GraftTileBatchWrite(dir: String, schema: StructType, truncateFirst: Boolea
       case None => (Array.tabulate(schema.length)(_ + 1), schema.length + 1)
     }
 
-  /** The write schema stamped with the resolved ids — what a truncate
-    * publishes so the manifest ids agree with the tiles' colIds. */
+  /** The write schema stamped with the resolved ids — what a truncate or a
+    * table's first commit publishes, so the manifest ids agree with the
+    * tiles' colIds. */
   private def stampedWriteSchema: StructType =
     StructType(schema.fields.zip(resolvedIds).map {
       case (f, id) => TileFormat.fieldWithId(f, id)
     })
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftTileWriterFactory(dir, schema.json, targetBytes, targetRows,
-      partitionBy.map(schema.fieldIndex), bloomCols.map(schema.fieldIndex),
-      resolvedIds)
+  private def factory = new GraftTileWriterFactory(dir, schema.json, targetBytes,
+    targetRows, partitionBy.map(schema.fieldIndex), bloomCols.map(schema.fieldIndex),
+    resolvedIds)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = factory
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    factory
+  override def useCommitCoordinator(): Boolean = true
 
-  /** Driver-side publish: rename task files in, then write the manifest
-    * atomically — and NOTHING else. Readers see the previous table version
-    * until the manifest moves, and a truncate leaves the previous
-    * generation's tiles on disk as orphans (a reader holding the old
-    * manifest still resolves every file it references — snapshot
-    * isolation); [[TileFormat.vacuumOrphans]] is the reclaim step.
-    * REPLACE WHERE classifies the previous tiles under its predicate
-    * (drop / keep / DV-split, same prover as DELETE) and publishes
-    * survivors + new tiles in the SAME atomic move — no reader ever sees
-    * the slice deleted-but-not-yet-replaced. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val d = new File(dir)
-    d.mkdirs()
-    val prior = TileFormat.readManifest(dir)
-    // Optimistic CAS (r13): every publish below states the commitSeq of
-    // the manifest this commit's edit was computed from. A concurrent
-    // commit to the same table makes the loser THROW with its renamed
-    // tiles left as vacuumable orphans — never a silently dropped update
-    // (the Layout.commitConflicts semantics, enforced in the connector).
-    val expect = prior.map(p => TileFormat.ExpectCommitSeq(p.commitSeq))
-      .getOrElse(TileFormat.ExpectAbsent)
-    val fresh = messages.toSeq.flatMap {
+  private def parts(messages: Array[WriterCommitMessage]): Seq[TilePart] =
+    messages.toSeq.flatMap {
       case m: GraftTileCommitMessage => m.parts
       case _ => Seq.empty
-    }.collect { case p if p.rows > 0 => p.commitTo(d) }
-    if (truncateFirst) {
-      // truncate resets data, streaming history, and query identity; old
-      // generation files intentionally NOT deleted here (manifest-first);
-      // the generation bump invalidates any streaming reader's offsets
-      TileFormat.writeManifest(dir, stampedWriteSchema, fresh, -1L, None,
-        prior.map(_.generation + 1L).getOrElse(0L), expect = expect,
-        partitionBy = partitionBy, nextFieldId = resolvedNextId)
-    } else if (replaceWhere.isDefined) {
-      val survivors = prior match {
-        case Some(m) => GraftTileTable.survivorsUnderDelete(dir, m, replaceWhere.get)
-        case None => Seq.empty
-      }
-      // one atomic publish: the replaced slice and its replacement swap
-      // together; the watermark survives (a partial rewrite is not a
-      // history reset) but the generation bumps (tile positions moved)
-      TileFormat.writeManifest(dir, prior.map(_.schema).getOrElse(stampedWriteSchema),
-        survivors ++ fresh,
-        prior.map(_.lastEpoch).getOrElse(-1L), prior.flatMap(_.queryId),
-        prior.map(_.generation + 1L).getOrElse(0L), expect = expect,
-        partitionBy = prior.flatMap(_.partitionBy).orElse(partitionBy),
-        nextFieldId = prior.map(_.nextFieldId).getOrElse(resolvedNextId))
-      // Replaced tiles STAY on disk as orphans for vacuumOrphans, like
-      // truncate (VERDICT r12 wrong-item 5: eagerly deleting them here
-      // broke snapshot isolation for a reader holding the prior manifest).
-    } else {
-      // APPENDS COMMUTE (r13, the Delta conflict-resolution split): a lost
-      // CAS race means another commit landed first, but an append's edit —
-      // "add these tiles at the tail" — is valid against ANY newer state,
-      // so re-read and re-publish instead of failing the job. Rewrites
-      // (truncate, REPLACE WHERE, DELETE, compaction, merge) stay
-      // single-shot: their edits were computed FROM a specific state and
-      // must surface the conflict. Bounded so a livelock turns into the
-      // loud error, not a hang.
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        val now = if (attempt == 0) prior else TileFormat.readManifest(dir)
-        val existing = now.map(_.tiles).getOrElse(Seq.empty)
-        try {
-          // a batch append preserves the streaming watermark, its owner, the
-          // generation (appends only grow the tile tail — reader offsets stay
-          // valid), and the PRIOR schema object (same names/types by the
-          // getTable check; keeping the original nullability flags stops an
-          // all-non-null append from narrowing a nullable column's type)
-          TileFormat.writeManifest(dir, now.map(_.schema).getOrElse(stampedWriteSchema),
-            existing ++ fresh,
-            now.map(_.lastEpoch).getOrElse(-1L), now.flatMap(_.queryId),
-            now.map(_.generation).getOrElse(0L),
-            expect = now.map(p => TileFormat.ExpectCommitSeq(p.commitSeq))
+    }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    if (!truncateFirst && replaceWhere.isEmpty)
+      TileFormat.publishAppend(dir, parts(messages), stampedWriteSchema, partitionBy,
+        resolvedNextId)
+    else {
+      val prior = TileFormat.readManifest(dir)
+      val d = new File(dir)
+      val fresh = parts(messages).collect { case p if p.rows > 0 => p.commitTo(d) }
+      (prior, replaceWhere) match {
+        case (Some(m), Some(filters)) if !truncateFirst =>
+          // the replaced slice and its replacement swap in one publish
+          TileFormat.publishRewrite(dir, m,
+            GraftTileTable.survivorsUnderDelete(dir, m, filters) ++ fresh)
+        case _ =>
+          // truncate resets data, streaming history and query identity; the
+          // generation bump invalidates any streaming reader's offsets (a
+          // REPLACE WHERE on a table with no manifest yet is the same create)
+          TileFormat.writeManifest(dir, stampedWriteSchema, fresh, -1L, None,
+            prior.map(_.generation + 1L).getOrElse(0L),
+            expect = prior.map(p => TileFormat.ExpectCommitSeq(p.commitSeq))
               .getOrElse(TileFormat.ExpectAbsent),
-            partitionBy = now.flatMap(_.partitionBy).orElse(partitionBy),
-            nextFieldId = now.map(_.nextFieldId).getOrElse(resolvedNextId))
-          committed = true
-        } catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt >= 16) throw e
-        }
+            partitionBy = partitionBy, nextFieldId = resolvedNextId)
       }
     }
-  }
+
+  /** An epoch commit is an append that also moves the query's watermark. */
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    TileFormat.publishAppend(dir, parts(messages), stampedWriteSchema, partitionBy,
+      resolvedNextId, epoch = Some(queryId -> epochId))
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: GraftTileCommitMessage => m.parts.foreach(_.abortIn(new File(dir)))
-      case _ => ()
-    }
+    parts(messages).foreach(_.abortIn(new File(dir)))
+
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    abort(messages)
 }
 
 class GraftTileWriterFactory(dir: String, schemaJson: String,
@@ -1432,12 +1395,15 @@ class GraftTileWriterFactory(dir: String, schemaJson: String,
                              partitionByIdx: Option[Int] = None,
                              bloomIdx: Array[Int] = Array.empty,
                              fieldIds: Array[Int] = Array.empty)
-  extends DataWriterFactory {
+  extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     new GraftTileWriter(dir, schema, partitionId, taskId, targetBytes, targetRows,
       partitionByIdx, bloomIdx, fieldIds)
   }
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    createWriter(partitionId, taskId)
 }
 
 /** Task-side tile writer: buffers one column chunk per column (a parquet
@@ -1655,125 +1621,9 @@ class GraftTileWriter(dir: String, schema: StructType, partitionId: Int, taskId:
   }
 
   override def abort(): Unit = {
-    parts.foreach { p =>
-      new File(dir, p.tmpName).delete()
-      if (p.bloomCols.nonEmpty)
-        new File(dir, TileFormat.bloomSidecarName(p.tmpName)).delete()
-    }
+    parts.foreach(_.abortIn(new File(dir)))
     parts.clear()
   }
 
   override def close(): Unit = ()
-}
-
-// ----------------------------------------------------------- streaming sink
-
-/** Exactly-once streaming sink over the same tile + manifest layout.
-  *
-  * Structured Streaming replays an epoch's `commit(epochId, messages)`
-  * after a driver restart whenever the sink cannot prove it already
-  * committed — the SINK owns idempotence (the contract every transactional
-  * lakehouse sink implements). The manifest records `(query_id,
-  * last_epoch)`: a commit is a replay ONLY when the same query run is at
-  * or below its own watermark, in which case the replay's tmp tiles are
-  * deleted and the table is untouched. Keying by query id (ADVICE r11)
-  * means a SECOND streaming query (fresh checkpoint, epochs restarting at
-  * 0) writing to an existing table is new work and appends — its commits
-  * are serialized by the driver-side commit path, and it takes over the
-  * watermark identity. Epochs from one query are monotonically increasing,
-  * which is all the per-query watermark needs; a truncate (batch
-  * overwrite) resets history and identity along with the data.
-  */
-class GraftTileStreamingWrite(dir: String, schema: StructType, queryId: String,
-                              targetBytes: Long = TileFormat.DefaultTileBytes,
-                              targetRows: Long = TileFormat.DefaultTileRows,
-                              partitionBy: Option[String] = None,
-                              bloomCols: Array[String] = Array.empty)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-
-  /** Table field ids by name (rename-stable), fresh-positional otherwise —
-    * the same resolution as the batch write. */
-  private val (resolvedIds: Array[Int], resolvedNextId: Int) =
-    TileFormat.readManifest(dir) match {
-      case Some(m) if schema.fields.forall(f => m.schema.fieldNames.contains(f.name)) =>
-        val byName = m.schema.fields
-          .map(f => f.name -> TileFormat.fieldIdOf(f).getOrElse(0)).toMap
-        (schema.fields.map(f => byName(f.name)), m.nextFieldId)
-      case Some(m) => (Array.tabulate(schema.length)(_ + 1),
-        math.max(m.nextFieldId, schema.length + 1))
-      case None => (Array.tabulate(schema.length)(_ + 1), schema.length + 1)
-    }
-
-  private def stampedWriteSchema: StructType =
-    StructType(schema.fields.zip(resolvedIds).map {
-      case (f, id) => TileFormat.fieldWithId(f, id)
-    })
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-  : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new GraftTileStreamingWriterFactory(dir, schema.json, targetBytes, targetRows,
-      partitionBy.map(schema.fieldIndex), bloomCols.map(schema.fieldIndex),
-      resolvedIds)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val d = new File(dir)
-    d.mkdirs()
-    // an epoch commit is an append and appends commute (r13): retry a lost
-    // CAS race against the fresh state — re-evaluating the REPLAY check
-    // each attempt, since the state that just beat us could be this very
-    // epoch from a twin driver (exactly-once holds either way)
-    var fresh: Option[Seq[TileMeta]] = None
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val prior = TileFormat.readManifest(dir)
-      if (prior.exists(m => m.queryId.contains(queryId) && m.lastEpoch >= epochId)) {
-        // epoch replay of THIS query after restart: already committed
-        if (fresh.isEmpty) abort(epochId, messages)
-        // (tiles renamed by a lost first attempt stay as vacuumable orphans)
-        return
-      }
-      if (fresh.isEmpty)
-        fresh = Some(messages.toSeq.flatMap {
-          case m: GraftTileCommitMessage => m.parts
-          case _ => Seq.empty
-        }.collect { case p if p.rows > 0 => p.commitTo(d) })
-      val existing = prior.map(_.tiles).getOrElse(Seq.empty)
-      try {
-        TileFormat.writeManifest(dir, prior.map(_.schema).getOrElse(stampedWriteSchema),
-          existing ++ fresh.get, epochId, Some(queryId),
-          prior.map(_.generation).getOrElse(0L),
-          expect = prior.map(p => TileFormat.ExpectCommitSeq(p.commitSeq))
-            .getOrElse(TileFormat.ExpectAbsent),
-          partitionBy = prior.flatMap(_.partitionBy).orElse(partitionBy),
-          nextFieldId = prior.map(_.nextFieldId).getOrElse(resolvedNextId))
-        committed = true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= 16) throw e
-      }
-    }
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: GraftTileCommitMessage => m.parts.foreach(_.abortIn(new File(dir)))
-      case _ => ()
-    }
-}
-
-class GraftTileStreamingWriterFactory(dir: String, schemaJson: String,
-                                      targetBytes: Long = TileFormat.DefaultTileBytes,
-                                      targetRows: Long = TileFormat.DefaultTileRows,
-                                      partitionByIdx: Option[Int] = None,
-                                      bloomIdx: Array[Int] = Array.empty,
-                                      fieldIds: Array[Int] = Array.empty)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    new GraftTileWriter(dir, schema, partitionId, taskId, targetBytes, targetRows,
-      partitionByIdx, bloomIdx, fieldIds)
-  }
 }

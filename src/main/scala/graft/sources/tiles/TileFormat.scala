@@ -531,6 +531,86 @@ object TileFormat {
     } finally Files.deleteIfExists(tmp)
   }
 
+  // The commit policy, in one place: an append commutes and retries a lost
+  // CAS; a rewrite is single-shot and bumps the generation (the Delta
+  // conflict split). Truncate and ALTER publish through writeManifest
+  // directly: they reset or keep different fields.
+
+  /** Publish an APPEND of the staged `parts` at the tail of the CURRENT
+    * table. An append's edit ("add these tiles") is valid against any newer
+    * state, so a lost CAS re-reads the winner's manifest and re-publishes
+    * the already-renamed tiles on top of it — including on top of a racing
+    * truncate or DELETE. Bounded at 16 attempts so a livelock turns into the
+    * loud error, not a hang.
+    *
+    * An append keeps the generation (it only grows the tile tail, so reader
+    * offsets stay valid) and the current schema object (same names and types
+    * by the getTable check; its nullability flags stop an all-non-null
+    * append from narrowing a nullable column). `schema`, `partitionBy` and
+    * `nextFieldId` are the write's own, used where the table has none.
+    *
+    * `epoch` = (query id, epoch id) makes this a streaming epoch commit: the
+    * table's watermark moves to it, and an attempt that finds the same query
+    * already at or past `epochId` is a REPLAY after restart — nothing is
+    * published. The check runs on every attempt, since the state that just
+    * won the CAS could be this very epoch from a twin driver. A replay seen
+    * before any rename deletes the staged files; tiles renamed by a lost
+    * earlier attempt stay as vacuumable orphans. A batch append (None)
+    * keeps the watermark it finds. */
+  def publishAppend(dir: String, parts: Seq[TilePart], schema: StructType,
+                    partitionBy: Option[String], nextFieldId: Int,
+                    epoch: Option[(String, Long)] = None): Unit = {
+    val d = new File(dir)
+    var fresh: Seq[TileMeta] = null
+    var attempt = 0
+    while (true) {
+      val now = readManifest(dir)
+      if (epoch.exists { case (q, e) => now.exists(m => m.queryId.contains(q) && m.lastEpoch >= e) }) {
+        if (fresh == null) parts.foreach(_.abortIn(d))
+        return
+      }
+      if (fresh == null) fresh = parts.collect { case p if p.rows > 0 => p.commitTo(d) }
+      try {
+        writeManifest(dir, now.map(_.schema).getOrElse(schema),
+          now.map(_.tiles).getOrElse(Nil) ++ fresh,
+          epoch.map(_._2).getOrElse(now.map(_.lastEpoch).getOrElse(-1L)),
+          epoch.map(_._1).orElse(now.flatMap(_.queryId)),
+          now.map(_.generation).getOrElse(0L),
+          expect = now.map(m => ExpectCommitSeq(m.commitSeq)).getOrElse(ExpectAbsent),
+          partitionBy = now.flatMap(_.partitionBy).orElse(partitionBy),
+          nextFieldId = now.map(_.nextFieldId).getOrElse(nextFieldId))
+        return
+      } catch {
+        case e: java.util.ConcurrentModificationException =>
+          attempt += 1
+          if (attempt >= 16) throw e
+      }
+    }
+  }
+
+  /** Publish a REWRITE (DELETE, REPLACE WHERE, MERGE, compaction, Z-order):
+    * `tiles` become the table's whole tile list in one single-shot CAS on
+    * `m.commitSeq`. The edit was computed FROM `m`, so a moved commit_seq
+    * means its premise is gone and the caller must re-read and redo. The
+    * generation bumps (tile positions moved, so a streaming reader's
+    * offsets fail loudly); the watermark, query id, partition column and
+    * next field id carry over. Replaced tiles stay on disk as orphans for
+    * [[vacuumOrphans]]: a reader holding `m` still resolves every file it
+    * references (snapshot isolation). */
+  def publishRewrite(dir: String, m: ManifestData, tiles: Seq[TileMeta]): Unit =
+    writeManifest(dir, m.schema, tiles, m.lastEpoch, m.queryId, m.generation + 1L,
+      expect = ExpectCommitSeq(m.commitSeq), partitionBy = m.partitionBy,
+      nextFieldId = m.nextFieldId)
+
+  /** The tile bounds a write stages with, as (target_tile_bytes,
+    * target_tile_rows): the per-call value, else the table's TBLPROPERTIES,
+    * else the engine default. A table declares its layout once and every
+    * writer inherits it; a single write can still override. */
+  def tileTargets(props: Map[String, String], bytes: Option[Long] = None,
+                  rows: Option[Long] = None): (Long, Long) =
+    (bytes.orElse(props.get("target_tile_bytes").map(_.toLong)).getOrElse(DefaultTileBytes),
+      rows.orElse(props.get("target_tile_rows").map(_.toLong)).getOrElse(DefaultTileRows))
+
   def versionedManifestName(seq: Long): String = s"_graft_manifest.v$seq.json"
 
   /** Read one committed HISTORY version (the `commit_seq` it was published
@@ -785,14 +865,23 @@ object TileFormat {
     } finally out.close()
   }
 
-  /** Parse a sidecar; None on any problem (prune disabled, never wrong). */
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Parse a sidecar; None when it is missing, foreign or unreadable (the
+    * tile's prune is disabled, never wrong). Each fallback logs the path. */
   def readBloomSidecar(file: File): Option[Map[String, (Int, Array[Long])]] =
     try {
-      if (!file.isFile) return None
+      if (!file.isFile) {
+        log.warn(s"graft-tiles: bloom sidecar $file is missing; tile not bloom-pruned")
+        return None
+      }
       val in = new DataInputStream(new java.io.BufferedInputStream(
         new java.io.FileInputStream(file), 1 << 16))
       try {
-        if (in.readInt() != BloomMagic) return None
+        if (in.readInt() != BloomMagic) {
+          log.warn(s"graft-tiles: bloom sidecar $file has a foreign header; tile not bloom-pruned")
+          return None
+        }
         val n = in.readInt()
         Some((0 until n).map { _ =>
           val len = in.readInt()
@@ -805,7 +894,11 @@ object TileFormat {
           new String(nb, StandardCharsets.UTF_8) -> (k, words)
         }.toMap)
       } finally in.close()
-    } catch { case _: Throwable => None }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        log.warn(s"graft-tiles: bloom sidecar $file is unreadable ($e); tile not bloom-pruned")
+        None
+    }
 
   /** Planning-time bloom prune for one tile. Only equality-shaped filters
     * participate; everything else answers true (zone maps already ran).

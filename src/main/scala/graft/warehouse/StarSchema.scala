@@ -1,7 +1,7 @@
 package graft.warehouse
 
 import graft.Tables
-import graft.Ops.{Entry, Q}
+import graft.Ops.{Entry, Q, scratchDir}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,12 +54,13 @@ object StarSchema {
   }
 
   /** Idempotent append protocol: in-batch natural-key dedup + anti join vs
-    * the existing mart. Returns only the rows that would be appended. */
+    * the existing mart. Returns only the rows that would be appended. The
+    * anti join ignores duplicate keys on its right side, so `existing`
+    * needs no distinct (Spark would keep that aggregate in the plan). */
   def idempotentAppend(batch: DataFrame, existing: DataFrame,
                        naturalKey: Seq[String]): DataFrame =
     batch.dropDuplicates(naturalKey)
-      .join(existing.select(naturalKey.map(col): _*).distinct(),
-        naturalKey, "left_anti")
+      .join(existing.select(naturalKey.map(col): _*), naturalKey, "left_anti")
 
   /** SCD Type-2 apply: version a dimension instead of overwriting it.
     * `current` carries (key, attrs, valid_from, valid_to=NULL for the open
@@ -175,9 +176,7 @@ object StarSchema {
     // the zone-lookup-style CSV, deliberately truncated (keys >= 20 missing)
     // so the null-fallback path is exercised like the reference's unmapped
     // zone ids
-    val out = {
-      val d = new java.io.File("target/tmp/lookup_nation"); d.mkdirs(); d.getAbsolutePath
-    }
+    val out = scratchDir("lookup_nation")
     t.nation.filter(col("n_nationkey") <= 19)
       .select("n_nationkey", "n_name", "n_regionkey")
       .coalesce(1).write.mode("overwrite").option("header", "true").csv(out)

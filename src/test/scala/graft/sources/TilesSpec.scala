@@ -277,7 +277,7 @@ class TilesSpec extends SparkSpec {
     // a SECOND query (new checkpoint ⇒ epochs restart at 0) is NEW WORK:
     // the watermark is keyed by query id (ADVICE r11), so epoch 0 from a
     // different query must append, not be swallowed as a replay
-    val sw2 = new graft.sources.tiles.GraftTileStreamingWrite(dir, back.schema, "unit-q2")
+    val sw2 = new graft.sources.tiles.GraftTileWrite(dir, back.schema, "unit-q2")
     sw2.commit(0L, Array(oneRowMsg(99L)))
     assert(spark.read.format(Fmt).load(dir).count() === 4,
       "a second query's epoch-0 commit was discarded as a replay")
@@ -1301,6 +1301,29 @@ class TilesSpec extends SparkSpec {
     assert(spark.read.format(Fmt).load(dir).count() === 100L)
   }
 
+  test("a truncated bloom sidecar disables its tile's prune; point lookups stay exact") {
+    import spark.implicits._
+    val dir = tmp("tiles_spec_bloom_torn")
+    val rows = (0L until 2000L).map(k => (k, if (k == 1234L) "needle" else s"u-$k"))
+    rows.toDF("k", "tag")
+      .repartitionByRange(4, $"k").sortWithinPartitions("k")
+      .write.format(Fmt).mode("overwrite")
+      .option("bloom_columns", "tag").save(dir)
+    val holder = TileFormat.readManifest(dir).get.tiles.find { t =>
+      val s = t.stats("k")
+      s.min.get.toLong <= 1234L && 1234L <= s.max.get.toLong
+    }.get
+    val side = new java.io.File(dir, TileFormat.bloomSidecarName(holder.file))
+    val raf = new java.io.RandomAccessFile(side, "rw")
+    try raf.setLength(side.length() / 2) finally raf.close()
+    assert(TileFormat.readBloomSidecar(side).isEmpty)
+    assert(spark.read.format(Fmt).load(dir)
+      .filter($"tag" === "needle").as[(Long, String)].collect().toSeq ===
+      Seq((1234L, "needle")))
+    assert(spark.read.format(Fmt).load(dir)
+      .filter($"tag" === "not-there").count() === 0L)
+  }
+
   test("cross-process CAS: a foreign commit token loses the publish; stale pointers roll forward") {
     import spark.implicits._
     val dir = tmp("tiles_spec_cas")
@@ -1373,7 +1396,8 @@ class TilesSpec extends SparkSpec {
     // 1) replay seen ON READ: the restarted driver re-commits epoch 7,
     //    finds it already durable, and ABORTS its staged tmp files
     val msg = stage("replay")
-    val sw = new graft.sources.tiles.GraftTileStreamingWrite(dir, m0.schema, "qreplay")
+    val sw: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+      new graft.sources.tiles.GraftTileWrite(dir, m0.schema, "qreplay")
     sw.commit(7L, Array(msg))
     assert(!new java.io.File(dir, msg.parts.head.tmpName).exists(),
       "replayed epoch left its staged tmp behind")
@@ -1679,6 +1703,42 @@ class TilesSpec extends SparkSpec {
       graft.sources.tiles.GraftTileMaintenance.optimizeZOrder(
         spark, dir, "l_partkey", "l_suppkey", curve = "peano")
     }
+  }
+
+  test("merge and z-order staging honor TBLPROPERTIES target_tile_rows; a per-call bound wins") {
+    val wh = tmp("tiles_spec_tsize_wh")
+    spark.conf.set("spark.sql.catalog.tsize",
+      classOf[graft.sources.tiles.GraftTileCatalog].getName)
+    spark.conf.set("spark.sql.catalog.tsize.warehouse", wh)
+    spark.sql("DROP TABLE IF EXISTS tsize.db.t")
+    spark.sql("""CREATE TABLE tsize.db.t (x BIGINT, y BIGINT, v STRING) USING `graft-tiles`
+                |TBLPROPERTIES ('target_tile_rows'='40')""".stripMargin)
+    val dir = s"$wh/db/t"
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .selectExpr("id AS x", "id % 17 AS y", "CAST(id AS STRING) AS v").coalesce(1)
+    rows(0, 300).writeTo("tsize.db.t").append()
+    val pre = TileFormat.readManifest(dir).get.tiles.map(_.file).toSet
+
+    // merge stages its (single-partition) source under the table's bound
+    graft.sources.tiles.GraftTileMaintenance.mergeUpsert(spark, dir, rows(1000, 1200), Seq("x"))
+    val staged = TileFormat.readManifest(dir).get.tiles.filterNot(t => pre(t.file))
+    assert(staged.map(_.rows).sum === 200L)
+    assert(staged.forall(_.rows <= 40L), s"merge ignored target_tile_rows: ${staged.map(_.rows)}")
+
+    // z-order with no per-call bound uses the table's
+    graft.sources.tiles.GraftTileMaintenance.optimizeZOrder(spark, dir, "x", "y")
+    val z = TileFormat.readManifest(dir).get.tiles
+    assert(z.map(_.rows).sum === 500L)
+    assert(z.forall(_.rows <= 40L), s"z-order ignored target_tile_rows: ${z.map(_.rows)}")
+
+    // a per-call targetRows overrides the table's bound
+    graft.sources.tiles.GraftTileMaintenance.optimizeZOrder(spark, dir, "x", "y",
+      targetRows = 250L)
+    val o = TileFormat.readManifest(dir).get.tiles
+    assert(o.map(_.rows).sum === 500L)
+    assert(o.forall(_.rows <= 250L) && o.exists(_.rows > 40L),
+      s"per-call targetRows did not override the table's: ${o.map(_.rows)}")
+    spark.sql("DROP TABLE tsize.db.t")
   }
 
   test("manifest column stats reach CBO: a join's build side flips with stats on vs off") {
